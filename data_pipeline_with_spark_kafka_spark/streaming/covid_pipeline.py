@@ -15,6 +15,7 @@ End-to-end parity with
 | derived per-million metric | :109-112,126     | DECIMAL(20,4) column |
 | processing_time audit col  | :127             | ``windowed_enrichment(audit=True)`` (sink default) |
 | sink                       | :131-157 (wart)  | idempotent keyed upsert (streaming/sinks.py) |
+| query start + await        | :151-159         | ``run.cmd_consume --kafka-servers`` (cached dim, update mode, 1-minute trigger) |
 
 The event payload mirrors the reference's covid schema
 (``{"date","location","new_cases","total_cases"}``,
@@ -25,7 +26,7 @@ every window to midnight — SURVEY.md §2.8 quirk).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -172,32 +173,3 @@ def file_stream_source(path: str, max_files_per_trigger: int | None = None) -> S
         streaming=True,
     )
 
-
-def run_reference_pipeline(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    dim_df: DataFrame,
-    target_dir: str,
-    checkpoint_dir: str,
-):
-    """Production entry point: Kafka -> windowed enrichment -> idempotent
-    keyed upsert, update mode, 1-minute trigger (parity with the reference
-    DAG's spark-submit semantics, minus the PK-violating append)."""
-    from data_pipeline_with_spark_kafka_spark.streaming.sinks import keyed_upsert_parquet
-
-    pipeline = build_stream_pipeline(
-        kafka_source(bootstrap_servers, topic),
-        # cache(): broadcast rebuilds per micro-batch; without the cache the
-        # dim source is also re-READ per batch (reference parity:
-        # spark_consumer_kafka.py:42).
-        dim_df.cache(),
-        SinkSpec(
-            kind="foreach-batch",
-            foreach_batch=keyed_upsert_parquet(target_dir, ["window_start", "location"]),
-            output_mode="update",
-            trigger={"processingTime": "1 minute"},
-            checkpoint=checkpoint_dir,
-        ),
-    )
-    return pipeline.run(spark)

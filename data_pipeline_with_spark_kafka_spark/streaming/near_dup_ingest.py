@@ -42,6 +42,7 @@ from data_pipeline_with_spark_kafka_spark.operators.incremental import (
     fingerprints,
     incremental_near_dups,
 )
+from data_pipeline_with_spark_kafka_spark.streaming.sinks import materialized
 
 BASE_EPOCH = -1
 
@@ -124,8 +125,12 @@ class NearDupIngest:
 
     # -- the micro-batch hook -----------------------------------------------
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.take(1):  # empty-batch guard (same as sinks.py)
-            return
+        # the fingerprints and the semi-join below both read the batch
+        with materialized(batch_df) as batch:
+            if batch is not None:
+                self._ingest(batch, epoch_id)
+
+    def _ingest(self, batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         known_fps = self._read_index(spark, "fps", epoch_id)
         corpus_bands = self._read_index(spark, "bands", epoch_id)

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from data_pipeline_with_spark_kafka_spark.operators.quality_checks import Check, run_checks
+from data_pipeline_with_spark_kafka_spark.streaming.sinks import materialized
 
 
 def quality_gated_batch_handler(
@@ -33,17 +34,15 @@ def quality_gated_batch_handler(
     (batch_id, passed, {check_name: metric}) tuples for observability."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return  # empty-batch guard (streaming/sinks.py discipline)
-        batch_df.persist()
-        try:
-            results = run_checks(batch_df, checks).collect()
+        # one execution of the batch feeds both the checks and the write
+        with materialized(batch_df) as batch:
+            if batch is None:
+                return
+            results = run_checks(batch, checks).collect()
             ok = all(r.passed for r in results)
             target = accept_path if ok else quarantine_path
-            batch_df.write.mode("append").parquet(target)
+            batch.write.mode("append").parquet(target)
             if audit is not None:
                 audit.append((batch_id, ok, {r.check_name: r.metric for r in results}))
-        finally:
-            batch_df.unpersist()
 
     return handle

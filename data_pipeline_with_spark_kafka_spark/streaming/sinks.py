@@ -3,31 +3,92 @@
 The reference's sink is named "upsert" but does ``mode("append")`` under
 ``outputMode("update")`` (``spark_consumer_kafka.py:131-157``): every
 re-emission of a revised window collides with the MySQL primary key
-``(window_start, location)`` (``README.md:81``). It also pays three
-actions per batch (``isEmpty`` + two ``count()``).
+``(window_start, location)`` (``README.md:81``). It also executes each
+batch three times (``isEmpty`` + two ``count()``).
 
-Here the contract is explicit:
+Every foreachBatch handler in ``streaming/`` follows one rule,
+``materialized``: the micro-batch's plan (source scan, parse, state-store
+restore and commit, dim join) executes exactly once, and an empty batch
+is skipped without a write. The handler persists what it reads more than
+once, probes emptiness on that cache, and always releases it, but never
+a DataFrame its caller had already cached.
 
-- ``keyed_upsert_parquet``: idempotent delete+insert by key into a parquet
-  "table" — re-emitted windows and epoch replays (at-least-once
-  foreachBatch) converge to one row per key. For a JDBC target the same
-  shape becomes staging-table MERGE / DELETE+INSERT in one transaction.
-- single pass per batch: one cached count, not three actions.
+``keyed_upsert_parquet`` adds, per batch:
+
+- idempotent delete+insert by key into a parquet "table": re-emitted
+  windows and epoch replays (at-least-once foreachBatch) converge to one
+  row per key. For a JDBC target the same shape becomes staging-table
+  MERGE / DELETE+INSERT in one transaction;
+- a rewritten target of ``ceil(target bytes / spark.sql.files.
+  maxPartitionBytes)`` files (at least one), so its file count follows
+  its size, not the batch's partitioning;
+- a swap that survives a crash at any step: the old target is renamed
+  aside before the new one is renamed in, and the next call restores it
+  if the target is missing and deletes what crashed epochs left behind.
 
 At scale the upsert target should be a transactional table format
-(Delta/Iceberg MERGE); parquet-swap keeps the exact semantics testable
-here with zero extra dependencies — the swap is atomic-enough per epoch
-(rename), and the contract (idempotency under replay) is what the tests
-pin down.
+(Delta/Iceberg MERGE); the parquet swap keeps the exact semantics
+testable with no extra dependency, and the tests pin the contract down:
+idempotency under replay, no row lost to a crash mid-swap.
 """
 
 from __future__ import annotations
 
+import glob
+import math
 import os
 import shutil
 import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
+
+
+@contextmanager
+def materialized(df: DataFrame) -> Iterator[DataFrame | None]:
+    """Cache ``df`` for the block; yield it, or ``None`` if it is empty.
+
+    The emptiness probe fills the cache the block then reads, so it is
+    the plan's one execution, not an extra one. ``df`` is unpersisted on
+    exit, also when the block raises, unless the caller had cached it
+    already: ``fanout_sink``'s batch stays cached for the sinks after the
+    one that called this."""
+    owned = df.storageLevel == StorageLevel.NONE
+    if owned:
+        df.persist()
+    try:
+        yield None if df.count() == 0 else df
+    finally:
+        if owned:
+            df.unpersist()
+
+
+def _recover_swap(target_dir: str) -> None:
+    """Heal what a crashed ``keyed_upsert_parquet`` swap left: restore the
+    old target if the crash came between its two renames, else drop the
+    stale old copy; delete half-written ``.tmp-*`` outputs either way."""
+    old = f"{target_dir}.old"
+    if os.path.isdir(old):
+        if os.path.isdir(target_dir):
+            shutil.rmtree(old)
+        else:
+            os.rename(old, target_dir)
+    for tmp in glob.glob(glob.escape(target_dir) + ".tmp-*"):
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _target_files(spark, target_dir: str) -> int:
+    """File count for a rewritten target: its parquet bytes on disk over
+    ``spark.sql.files.maxPartitionBytes``, at least one."""
+    size = sum(
+        os.path.getsize(os.path.join(target_dir, f))
+        for f in os.listdir(target_dir)
+        if f.endswith(".parquet")
+    )
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return max(1, math.ceil(size / split))
 
 
 def keyed_upsert_parquet(target_dir: str, key_cols: list[str]):
@@ -36,28 +97,30 @@ def keyed_upsert_parquet(target_dir: str, key_cols: list[str]):
     Keeps exactly one row per key: existing rows whose key collides with
     the incoming batch are replaced; epoch replays are no-ops.
     """
+    target_dir = os.path.normpath(target_dir)
 
     def upsert(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        # Empty-batch short-circuit (ref K3, spark_consumer_kafka.py:132-134)
-        # — availableNow runs routinely end with an empty commit batch.
-        if batch_df.isEmpty():
-            return
-        # One further action total (the write); dedup within the batch first
-        # so a single epoch emitting a key twice (update-mode re-emission
-        # inside one batch window) still lands one row.
-        incoming = batch_df.dropDuplicates(key_cols)
+        _recover_swap(target_dir)
+        # Dedup within the batch first so a single epoch emitting a key
+        # twice (update-mode re-emission inside one batch window) still
+        # lands one row; the anti-join and the union both read its cache.
+        with materialized(batch_df.dropDuplicates(key_cols)) as incoming:
+            if incoming is None:
+                return
+            merged, n_files = incoming, 1
+            if os.path.isdir(target_dir):
+                existing = spark.read.parquet(target_dir)
+                kept = existing.join(incoming.select(*key_cols), key_cols, "left_anti")
+                merged = kept.unionByName(incoming)
+                n_files = _target_files(spark, target_dir)
+            tmp = f"{target_dir}.tmp-{epoch_id}-{uuid.uuid4().hex[:8]}"
+            merged.coalesce(n_files).write.mode("overwrite").parquet(tmp)
+        old = f"{target_dir}.old"
         if os.path.isdir(target_dir):
-            existing = spark.read.parquet(target_dir)
-            kept = existing.join(incoming.select(*key_cols), key_cols, "left_anti")
-            merged = kept.unionByName(incoming)
-        else:
-            merged = incoming
-        tmp = f"{target_dir}.tmp-{epoch_id}-{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.isdir(target_dir):
-            shutil.rmtree(target_dir)
+            os.rename(target_dir, old)
         os.rename(tmp, target_dir)
+        shutil.rmtree(old, ignore_errors=True)
 
     return upsert
 
@@ -111,24 +174,24 @@ def bucketed_keyed_upsert_parquet(
         from pyspark.sql import functions as F
 
         spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        incoming = batch_df.dropDuplicates(key_cols)
         base_dir = os.path.join(target_dir, "base")
         delta_root = os.path.join(target_dir, "delta")
-        os.makedirs(delta_root, exist_ok=True)
-        deltas = sorted(
-            d for d in os.listdir(delta_root) if d.startswith("d-")
-        )
-        token = max(
-            [int(d.split("-", 1)[1]) for d in deltas]
-            + [_base_maxv(base_dir)]
-            + [0]
-        ) + 1
-        tmp = f"{delta_root}/.tmp-{epoch_id}-{uuid.uuid4().hex[:8]}"
-        incoming.withColumn("__v", F.lit(token).cast("long")).write.mode(
-            "overwrite"
-        ).parquet(tmp)
+        with materialized(batch_df.dropDuplicates(key_cols)) as incoming:
+            if incoming is None:
+                return
+            os.makedirs(delta_root, exist_ok=True)
+            deltas = sorted(
+                d for d in os.listdir(delta_root) if d.startswith("d-")
+            )
+            token = max(
+                [int(d.split("-", 1)[1]) for d in deltas]
+                + [_base_maxv(base_dir)]
+                + [0]
+            ) + 1
+            tmp = f"{delta_root}/.tmp-{epoch_id}-{uuid.uuid4().hex[:8]}"
+            incoming.withColumn("__v", F.lit(token).cast("long")).write.mode(
+                "overwrite"
+            ).parquet(tmp)
         os.rename(tmp, os.path.join(delta_root, f"d-{token:012d}"))
         deltas = sorted(
             d for d in os.listdir(delta_root) if d.startswith("d-")
@@ -322,16 +385,6 @@ def read_keyed_ledger(spark, target_dir: str, key_cols: list[str]):
     )
 
 
-def append_parquet(target_dir: str):
-    """Plain append sink — correct ONLY with append output mode + watermark
-    (finalized windows are emitted exactly once)."""
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("append").parquet(target_dir)
-
-    return write
-
-
 def fanout_sink(*sinks):
     """foreachBatch callback that dispatches ONE computed micro-batch to
     several sinks (e.g. parquet archive + JDBC serving table + Kafka
@@ -340,21 +393,18 @@ def fanout_sink(*sinks):
     Spark's writeStream supports one sink per query; the naive
     alternative — N parallel queries over the same source — recomputes
     the whole pipeline N times and triples source read traffic at
-    100 TB. Here the batch is persisted once (first sink's action
-    materializes it, the rest read the cache) and always unpersisted,
-    even when a sink raises: the epoch then fails and replays as a
-    whole, which is why each individual sink must stay idempotent
-    (keyed_upsert_parquet above is; blind appends are not).
+    100 TB. Here the batch is ``materialized`` once (an empty batch
+    reaches no sink) and always unpersisted, even when a sink raises:
+    the epoch then fails and replays as a whole, which is why each
+    individual sink must stay idempotent (keyed_upsert_parquet above is;
+    blind appends are not).
     """
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch_df.persist()
-        try:
+        with materialized(batch_df) as batch:
+            if batch is None:
+                return
             for sink in sinks:
-                sink(batch_df, epoch_id)
-        finally:
-            batch_df.unpersist()
+                sink(batch, epoch_id)
 
     return write

@@ -63,6 +63,33 @@ def test_fanout_delivers_identical_batch_to_every_sink(spark, tmp_path):
     assert seen_cached and all(seen_cached)
 
 
+def test_fanout_batch_stays_cached_after_upsert(spark, tmp_path):
+    """The upsert caches and releases only its own deduplicated batch: the
+    fan-out's batch must still be cached for the sinks after it."""
+    src = tmp_path / "in3"
+    src.mkdir()
+    _write(str(src / "f1.json"), [{"k": "a", "v": 1.0}, {"k": "a", "v": 2.0}])
+    upserted = str(tmp_path / "upsert3")
+    seen_cached = []
+
+    def probe_sink(batch_df, epoch_id):
+        seen_cached.append(batch_df.storageLevel.useMemory)
+
+    stream = spark.readStream.schema("k string, v double").json(str(src))
+    q = (
+        stream.writeStream.foreachBatch(
+            fanout_sink(keyed_upsert_parquet(upserted, ["k"]), probe_sink)
+        )
+        .option("checkpointLocation", str(tmp_path / "ck3"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+
+    assert [r.k for r in spark.read.parquet(upserted).collect()] == ["a"]
+    assert seen_cached == [True]
+
+
 def test_fanout_unpersists_after_failure(spark, tmp_path):
     src = tmp_path / "in2"
     src.mkdir()

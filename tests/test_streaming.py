@@ -195,6 +195,77 @@ def test_keyed_upsert_idempotent_under_replay(spark, tmp_path):
     assert loc_a.total_new_cases_in_window == 90
 
 
+def test_keyed_upsert_runs_each_batch_once_and_sizes_target_by_bytes(spark, tmp_path):
+    """Each micro-batch's stateful plan executes once: a second execution
+    (an emptiness probe, or the anti-join and the union of the merged
+    write each reading the batch) opens one more state store per shuffle
+    partition, so ``numStateStoreInstances`` would be a multiple of
+    ``numShufflePartitions``. The rewritten target holds one file per
+    ``spark.sql.files.maxPartitionBytes`` of data, not one per upstream
+    partition."""
+    src = tmp_path / "once_in"
+    out = tmp_path / "once_out"
+    src.mkdir()
+    locs = [r[0] for r in DIM_ROWS]
+    for i in range(3):
+        path = src / f"f{i}.json"
+        write_file(str(path), [event(i, 10 * j, loc, i + j, 10 * j) for j in range(3) for loc in locs])
+        os.utime(str(path), (100 * (i + 1), 100 * (i + 1)))
+
+    pipeline = build_stream_pipeline(
+        file_stream_source(str(src), max_files_per_trigger=1),
+        make_dim(spark),
+        SinkSpec(
+            kind="foreach-batch",
+            foreach_batch=keyed_upsert_parquet(str(out), ["window_start", "location"]),
+            output_mode="update",
+            trigger={"availableNow": True},
+            checkpoint=str(tmp_path / "once_ck"),
+        ),
+    )
+    query = pipeline.run(spark)
+    run_to_completion(query)
+
+    data_batches = [p for p in query.recentProgress if p.numInputRows > 0]
+    assert len(data_batches) == 3
+    for progress in data_batches:
+        for op in progress.stateOperators:
+            assert op.numStateStoreInstances == op.numShufflePartitions, progress.json
+    assert spark.read.parquet(str(out)).count() == 3 * len(locs)
+    files = [f for f in os.listdir(out) if f.endswith(".parquet")]
+    size = sum(os.path.getsize(os.path.join(out, f)) for f in files)
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    assert len(files) == max(1, -(-size // split)) == 1
+
+
+def test_keyed_upsert_swap_crash_loses_no_rows(spark, tmp_path, monkeypatch):
+    """A crash after the new target is written but before it is renamed
+    in must not lose the old target: the replayed epoch merges into it."""
+    out = tmp_path / "swap_out"
+    upsert = keyed_upsert_parquet(str(out), ["k"])
+    upsert(spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int"), epoch_id=1)
+
+    real_rename = os.rename
+
+    def crash_on_swap_in(src, dst):
+        if ".tmp-" in os.fspath(src):
+            raise OSError("injected crash before the new target is renamed in")
+        real_rename(src, dst)
+
+    batch2 = spark.createDataFrame([("c", 3)], "k string, v int")
+    monkeypatch.setattr(os, "rename", crash_on_swap_in)
+    with pytest.raises(OSError, match="injected"):
+        upsert(batch2, epoch_id=2)
+    monkeypatch.setattr(os, "rename", real_rename)
+
+    upsert(batch2, epoch_id=2)  # replayed epoch
+    assert {(r.k, r.v) for r in spark.read.parquet(str(out)).collect()} == {
+        ("a", 1), ("b", 2), ("c", 3),
+    }
+    leftovers = [d for d in os.listdir(tmp_path) if d.startswith("swap_out.")]
+    assert leftovers == []
+
+
 def test_append_mode_emits_only_finalized_windows(spark, tmp_path):
     """Append mode + watermark: a window is emitted exactly once, and only
     after the watermark passes its end. With the one-batch watermark lag,
