@@ -35,6 +35,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "too
 
 from data_pipeline_with_spark_kafka_spark.queries import all_queries
 from data_pipeline_with_spark_kafka_spark.session import get_spark
+from data_pipeline_with_spark_kafka_spark.sources import memo
 
 # Headline queries reported individually; everything else still runs and
 # counts toward the total unless SPARK_GRAFT_BENCH_ALL=0.
@@ -61,8 +62,10 @@ def main() -> None:
         # sets, minhash signatures) hand ownership of the cache to
         # whoever materializes the plan — that's us; drop the blocks so
         # the corpus doesn't accumulate stale cache in one session (and
-        # so the next run re-computes instead of reading cache).
+        # so the next run re-computes instead of reading cache). The
+        # memo goes too, so each build includes its own training.
         spark.catalog.clearCache()
+        memo.clear(spark)
         return elapsed
 
     OUTLIER_SEC = 5.0

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_pipeline_with_spark_kafka_spark.sources import memo
+
 END_OF_WORD = "</w>"
 
 
@@ -73,6 +75,7 @@ def _merge_pair(table: DataFrame, a: str, b: str) -> DataFrame:
     return table.select("word", "cnt", merged.alias("syms"))
 
 
+@memo.memoized
 def train_bpe(
     docs: DataFrame,
     text_col: str,
@@ -93,7 +96,11 @@ def train_bpe(
     rows the loop runs driver-side (one pass per merge over an in-memory
     dict — no per-iteration job scheduling); a vocabulary beyond the limit
     falls back to the distributed per-iteration loop below. Both paths are
-    merge-for-merge identical (tested)."""
+    merge-for-merge identical (tested).
+
+    Memoized per input content (``sources.memo``): at scale the tokenizer
+    is a small offline artifact handed to every encode job, never
+    retrained inside one."""
     counted = word_symbol_table(docs, text_col).persist()
     if counted.count() <= driver_limit:
         rows = counted.select("word", "cnt").collect()
@@ -162,28 +169,6 @@ def segment_word(word: str, merges: list[tuple[str, str, int]]) -> list[str]:
                 out.append(s)
         syms = out
     return syms
-
-
-def train_bpe_cached(
-    docs: DataFrame,
-    text_col: str,
-    *,
-    cache_key: str,
-    num_merges: int = 20,
-) -> list[tuple[str, str, int]]:
-    """Train-once merge cache (same discipline as the IVF centroid cache,
-    clustering.kmeans_centroids_cached): at scale the tokenizer is a small
-    offline artifact handed to every encode job, never retrained inside
-    one. Deterministic training makes this pure memoization."""
-    key = (cache_key, num_merges)
-    hit = _MERGE_CACHE.get(key)
-    if hit is None:
-        hit = train_bpe(docs, text_col, num_merges=num_merges)
-        _MERGE_CACHE[key] = hit
-    return hit
-
-
-_MERGE_CACHE: dict = {}
 
 
 def encode_word_table(words: DataFrame, merges: list[tuple[str, str, int]]) -> DataFrame:

@@ -38,6 +38,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_pipeline_with_spark_kafka_spark.sources import memo
+
 
 @dataclass(frozen=True)
 class TrainedModel:
@@ -78,6 +80,7 @@ def standardization_stats(
     return means, stds
 
 
+@memo.memoized
 def train_logreg(
     df: DataFrame,
     feature_cols: list[str],
@@ -101,6 +104,11 @@ def train_logreg(
     few doubles per row, so at test scale the input's scan width is pure
     scheduling overhead per iteration; at deployment scale size it to the
     frame's bytes, not the raw corpus's.
+
+    Memoized per input content (``sources.memo``): training is
+    deterministic, so a repeat call on the same data returns the same
+    model. ``loop_partitions`` is part of the key — it changes the float
+    partial-aggregation order, so weights can differ at ULP level.
     """
     means, stds = standardization_stats(df, feature_cols)
     std_cols = [f"z_{c}" for c in feature_cols]
@@ -163,34 +171,6 @@ def score_expr(model: TrainedModel, feature_cols: list[str] | None = None):
     for c, w, m, s in zip(cols, model.weights, model.means, model.stds):
         z = z + ((F.col(c) - F.lit(m)) / F.lit(s)) * F.lit(w)
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-
-
-# Train-once memo (the kmeans_centroids_cached pattern): deterministic
-# given (cache_key, iters, lr), so this is pure memoization, not state.
-_MODEL_CACHE: dict = {}
-
-
-def train_logreg_cached(
-    df: DataFrame,
-    feature_cols: list[str],
-    label_col: str,
-    *,
-    cache_key: str,
-    iters: int = 30,
-    lr: float = 1.0,
-    loop_partitions: int | None = None,
-) -> TrainedModel:
-    # loop_partitions belongs in the key: it changes float partial-
-    # aggregation order, so weights can differ at ULP level between widths.
-    key = (cache_key, tuple(feature_cols), label_col, iters, lr, loop_partitions)
-    hit = _MODEL_CACHE.get(key)
-    if hit is None:
-        hit = train_logreg(
-            df, feature_cols, label_col, iters=iters, lr=lr,
-            loop_partitions=loop_partitions,
-        )
-        _MODEL_CACHE[key] = hit
-    return hit
 
 
 def model_to_json(model: TrainedModel) -> dict:

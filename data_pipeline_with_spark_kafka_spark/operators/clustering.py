@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_pipeline_with_spark_kafka_spark.operators.similarity import as_double
+from data_pipeline_with_spark_kafka_spark.sources import memo
 
 
 def _sq_dist(a: Column, b: Column) -> Column:
@@ -92,36 +93,27 @@ def kmeans(
     return centroids
 
 
-def kmeans_centroids_cached(
+@memo.memoized
+def kmeans_centroid_rows(
     df: DataFrame,
     id_col: str,
     vec_col: str,
     *,
-    cache_key: str,
     k: int = 10,
     iterations: int = 5,
     seed: int = 42,
-):
-    """Train-once centroid cache: at scale the coarse quantizer is trained
+) -> list[tuple[int, list[float]]]:
+    """Train-once coarse quantizer: at scale the quantizer is trained
     OFFLINE and handed to every IVF query; retraining inside each query
     costs ``iterations`` assign+recompute shuffle pairs per run. The
-    centroid table is tiny (k x dim doubles) so it is collected once per
-    (cache_key, k, iterations, seed) and replayed as a local relation —
-    deterministic seeding makes this pure memoization, not state.
-
-    Returns ``(rows, schema)`` suitable for ``spark.createDataFrame``.
-    """
-    key = (cache_key, k, iterations, seed)
-    hit = _CENTROID_CACHE.get(key)
-    if hit is None:
-        trained = kmeans(df, id_col, vec_col, k=k, iterations=iterations, seed=seed)
-        hit = ([(r["cid"], list(r["centroid"])) for r in trained.collect()], "cid int, centroid array<double>")
-        trained.unpersist()
-        _CENTROID_CACHE[key] = hit
-    return hit
-
-
-_CENTROID_CACHE: dict = {}
+    centroid table is tiny (k x dim doubles), so it is collected as
+    ``[(cid, centroid), ...]`` rows and memoized per input content
+    (``sources.memo``) — deterministic seeding makes this pure
+    memoization, not state."""
+    trained = kmeans(df, id_col, vec_col, k=k, iterations=iterations, seed=seed)
+    rows = [(r["cid"], list(r["centroid"])) for r in trained.collect()]
+    trained.unpersist()
+    return rows
 
 
 def fixture_centroid_rows(name: str):
@@ -166,7 +158,7 @@ def cell_multi_assign(
     copies, one per nearest IVF cell.
 
     The k centroids are a tiny offline artifact (k x dim doubles —
-    ``kmeans_centroids_cached`` rows), so instead of a broadcast join they
+    ``kmeans_centroid_rows``), so instead of a broadcast join they
     ship as LITERALS inside one codegen expression: an array of
     (sq_dist, cid) structs, ``array_sort`` (lexicographic: distance, then
     cid tiebreak — deterministic), ``slice`` the ``n_assign`` nearest,
@@ -251,6 +243,7 @@ def ivf_topk(
     )
 
 
+@memo.memoized
 def kmeans_verified(
     df: DataFrame,
     id_col: str,
@@ -290,6 +283,7 @@ def kmeans_verified(
 
     Returns final ``[(cid, dim, centroid_val, cluster_n), ...]`` rows
     (cid 1-based, dim 0-based), cluster_n from the LAST assignment.
+    Memoized per input content (``sources.memo``).
     """
     import numpy as np
 

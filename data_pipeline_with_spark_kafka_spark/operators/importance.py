@@ -24,7 +24,7 @@ Spark-first shape, sized for 100 TB:
   conditional aggregation (no second scan).
 - **The bucket log-weight table is a B-sized array literal**, collected
   driver-side (B doubles — bytes; same bounded-scalar discipline as the
-  IVF centroid cache). Scoring is then a PURE per-row expression:
+  IVF centroid rows). Scoring is then a PURE per-row expression:
   ``aggregate(grams, 0.0, acc + lw[bucket(g)])`` — zero shuffle, no join,
   whole-stage codegen; the token stream never leaves its input partition.
   The only post-scan exchange is the global top-k window.
@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_pipeline_with_spark_kafka_spark.functions.rounding import round_to
+from data_pipeline_with_spark_kafka_spark.sources import memo
 
 DEFAULT_BUCKETS = 256
 
@@ -62,25 +63,19 @@ def unigram_bigram_grams(text: Column) -> Column:
     return F.concat(t, bigrams)
 
 
-_WEIGHT_CACHE: dict = {}
-
-
+@memo.memoized
 def dsir_log_weights(
     base: DataFrame,
     grams_col: str,
     is_target_col: str,
     *,
     n_buckets: int = DEFAULT_BUCKETS,
-    cache_key: str | None = None,
 ) -> np.ndarray:
     """One-pass bucket statistics -> B-sized ln(p_target/p_raw) array.
 
     Add-one smoothing on both distributions keeps empty buckets finite;
     totals are exact integers so the smoothed ratios are bit-identical
-    across engines."""
-    key = (cache_key, n_buckets)
-    if cache_key is not None and key in _WEIGHT_CACHE:
-        return _WEIGHT_CACHE[key]
+    across engines. Memoized per input content (``sources.memo``)."""
     rows = (
         base.select(F.col(is_target_col).alias("_t"), F.explode(grams_col).alias("_g"))
         .groupBy(gram_bucket(F.col("_g"), n_buckets).alias("b"))
@@ -104,8 +99,6 @@ def dsir_log_weights(
         ],
         dtype=np.float64,
     )
-    if cache_key is not None:
-        _WEIGHT_CACHE[key] = lw
     return lw
 
 
@@ -129,7 +122,6 @@ def dsir_topk(
     *,
     k: int = 50,
     n_buckets: int = DEFAULT_BUCKETS,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """Rank raw documents by target-domain importance; keep the top k.
 
@@ -144,7 +136,7 @@ def dsir_topk(
         is_target.alias("_is_tgt"),
         unigram_bigram_grams(F.col(text_col)).alias("_grams"),
     )
-    lw = dsir_log_weights(base, "_grams", "_is_tgt", n_buckets=n_buckets, cache_key=cache_key)
+    lw = dsir_log_weights(base, "_grams", "_is_tgt", n_buckets=n_buckets)
     scored = base.select(
         F.col(id_col), round_to(dsir_score(F.col("_grams"), lw), 6).alias("dsir_weight")
     )

@@ -68,7 +68,7 @@ def fit_pca(emb: DataFrame, vec_col: str, *, dim: int, m: int) -> list[tuple]:
     by eigenvalue descending — ``proj_offset`` is mu . w, so a projection
     score is ``v . w - proj_offset``. Driver-side data volume is the
     reduced sufficient statistics only (d^2 + d + 1 scalars; documented
-    bounded collect, same class as the k-row centroid cache).
+    bounded collect, same class as the k-row IVF centroid rows).
     """
     partials = _gram_partials(emb, vec_col, dim).persist()
     try:

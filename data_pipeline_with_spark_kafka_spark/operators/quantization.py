@@ -16,9 +16,10 @@ Spark-first design:
   (2*dim agg expressions, constant combiner state; a single scan, no
   shuffle beyond the 1-row final agg). The resulting ``dim``-sized codebook
   is collected driver-side (bytes, not data — same bounded-scalar
-  discipline as the IVF centroid cache in ``clustering.py``) and memoized
-  per (cache key, dim), so every SQ8 query after the first reuses it, and
-  at deployment scale it is computed once offline like the IVF quantizer.
+  discipline as the IVF centroid rows in ``clustering.py``) and memoized
+  per input content (``sources.memo``), so every SQ8 query after the first
+  reuses it, and at deployment scale it is computed once offline like the
+  IVF quantizer.
 - **Encode / decode** are pure ``transform`` expressions over the array
   column with the codebook shipped as TWO array literals (single Literal
   nodes — see ``similarity.hyperplane_signs`` for why not per-element
@@ -46,21 +47,18 @@ from pyspark.sql import functions as F
 
 from data_pipeline_with_spark_kafka_spark.functions.rounding import round_to
 from data_pipeline_with_spark_kafka_spark.operators import similarity as sim
+from data_pipeline_with_spark_kafka_spark.sources import memo
 
-_SQ8_CACHE: dict = {}
 
-
-def sq8_train(df: DataFrame, vec_col: str, dim: int, *, cache_key: str | None = None):
+@memo.memoized
+def sq8_train(df: DataFrame, vec_col: str, dim: int):
     """Per-dimension (min, scale) codebook from one aggregate pass.
 
     Returns ``(mins, scales)`` as float64 ndarrays with
     ``scale_d = (max_d - min_d)/255``. Collects exactly one row of
     ``2*dim`` doubles — bounded by the embedding dimensionality, never by
-    corpus size. ``cache_key`` memoizes across queries in a session (the
+    corpus size. Memoized per input content (``sources.memo``; the
     deployment shape trains once offline, like the IVF quantizer)."""
-    key = (cache_key, dim)
-    if cache_key is not None and key in _SQ8_CACHE:
-        return _SQ8_CACHE[key]
     v = sim.as_double(F.col(vec_col))
     aggs = []
     for d in range(dim):
@@ -69,10 +67,7 @@ def sq8_train(df: DataFrame, vec_col: str, dim: int, *, cache_key: str | None = 
     row = df.agg(*aggs).collect()[0]
     mins = np.array([row[f"mn{d}"] for d in range(dim)], dtype=np.float64)
     maxs = np.array([row[f"mx{d}"] for d in range(dim)], dtype=np.float64)
-    out = (mins, (maxs - mins) / 255.0)
-    if cache_key is not None:
-        _SQ8_CACHE[key] = out
-    return out
+    return mins, (maxs - mins) / 255.0
 
 
 def _codebook_lits(mins: np.ndarray, scales: np.ndarray) -> tuple[Column, Column]:
@@ -129,7 +124,6 @@ def sq8_topk(
     k: int = 10,
     pool: int = 50,
     dim: int = 64,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """ADC top-``pool`` over the quantized corpus, exact rerank to top-``k``.
 
@@ -138,7 +132,7 @@ def sq8_topk(
     the structurally-1-row query (``limit(1)`` => GlobalLimit, provably
     bounded); the corpus side never shuffles — scan, per-partition heap,
     ``pool``-row rerank."""
-    mins, scales = sq8_train(df, vec_col, dim, cache_key=cache_key)
+    mins, scales = sq8_train(df, vec_col, dim)
     v = sim.as_double(F.col(vec_col))
     # Query norm hoisted into the broadcast side (similarity.cosine_pre
     # contract): one fold total instead of one 64-wide interpreted fold
@@ -188,7 +182,6 @@ def ivf_sq8_topk(
     pool: int = 50,
     n_probe: int = 3,
     dim: int = 64,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """IVF-SQ8: coarse-quantizer cell probe + int8 ADC scan + exact rerank
     — the composition FAISS ships as ``IVF<n>,SQ8`` and the realistic
@@ -202,7 +195,7 @@ def ivf_sq8_topk(
     decoded and scored."""
     from data_pipeline_with_spark_kafka_spark.operators import clustering
 
-    mins, scales = sq8_train(df, vec_col, dim, cache_key=cache_key)
+    mins, scales = sq8_train(df, vec_col, dim)
     members = clustering.cell_multi_assign(df, vec_col, centroid_rows, n_assign=1)
 
     centroids = query_df.sparkSession.createDataFrame(
@@ -350,13 +343,12 @@ def sq8_reconstruction_error(
     vec_col: str,
     *,
     dim: int = 64,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """Corpus-wide codec audit: mean/max absolute reconstruction error in
     ONE map-only pass + a 1-row global aggregate. The max error is bounded
     by ``max(scale)/2`` by construction (half a quantization step) — the
     property test pins that bound."""
-    mins, scales = sq8_train(df, vec_col, dim, cache_key=cache_key)
+    mins, scales = sq8_train(df, vec_col, dim)
     v = sim.as_double(F.col(vec_col))
     err = F.zip_with(v, sq8_reconstruct(v, mins, scales), lambda a, b: F.abs(a - b))
     return (

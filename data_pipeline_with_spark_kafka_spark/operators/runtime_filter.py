@@ -39,17 +39,17 @@ stays entirely map-side:
     arithmetic, is the cost). Right when the prune guards something
     scan-dominated or laziness is contractual.
   * ``bloom_prune_literal`` — the FAST path the registered query uses:
-    ``bloom_words`` runs the (bounded, memoized) build eagerly, embeds
-    the words as a plain array LITERAL, and the k bit tests stay inside
+    ``bloom_words`` runs the bounded build eagerly, embeds the words as a
+    plain array LITERAL, and the k bit tests stay inside
     WholeStageCodegen (measured ~0.2 s over the 0.10 s plain count —
-    ~8x cheaper than the subquery form). One build job per (sf_dir,
-    key), cached — the same offline-artifact class as the SQ8/PQ
-    codebooks, and allowlisted the same way in the lazy-construction
-    contract. The literal COLUMN itself is also memoized
+    ~8x cheaper than the subquery form). One build job per dim content —
+    the same offline-artifact class as the SQ8/PQ codebooks, and
+    allowlisted the same way in the lazy-construction contract. The
+    built literal COLUMN is what ``sources.memo`` keeps
     (``bloom_literal_column``): ``F.lit`` on a 4096-long Python list
     marshals element-wise over py4j (2.4 s — more than the prune), the
-    ndarray path cuts that ~3x, and the cache makes every construction
-    after the first free.
+    ndarray path cuts that ~3x, and the memo makes every construction
+    of the same dim after the first free.
 
   Neither tier explodes, shuffles, or runs a UDF on the fact side: the
   fact table is touched exactly once, and only surviving rows reach the
@@ -83,9 +83,9 @@ this operator is part of the [EXT] scale surface.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
+
+from data_pipeline_with_spark_kafka_spark.sources import memo
 
 DEFAULT_M_BITS = 1 << 18  # 32 KB of filter; FPR ~1.5% at 30k keys, k=5
 DEFAULT_K = 5
@@ -174,71 +174,20 @@ def bloom_prune(
     return pruned.where(keep).drop("__bloom")
 
 
-_WORDS_CACHE: dict[tuple, object] = {}  # words lists and built literal Columns
-# Cache-key contract (round-12 advice fix): entries are NEVER invalidated,
-# so a key must pin the dim's CONTENT, not just its path — a stale filter
-# has false negatives, which silently drop joinable rows. Callers whose
-# source files can change within a process lifetime fold
-# ``parquet_fingerprint(path)`` into the key; keys without a fingerprint
-# assert the source is immutable for the process (true of /root/testdata
-# fixtures, not of a live warehouse).
-
-
-def parquet_fingerprint(path: str) -> tuple:
-    """Cheap content fingerprint of a parquet file/dir for cache keys:
-    (file count, total bytes, max mtime_ns). Driver-side stat calls —
-    the same metadata IO Spark's own file index performs at planning.
-
-    Directories are walked RECURSIVELY (round-13 advice fix): a
-    partitioned dim has no top-level ``*.parquet``, and the old flat
-    glob fingerprinted every state of such a dim as (0, 0, 0) — silently
-    defeating the content pinning this exists for (a stale Bloom filter
-    has false NEGATIVES, which drop joinable rows). A path that yields
-    no parquet files at all fails loudly instead of fingerprinting
-    empty."""
-    if os.path.isdir(path):
-        paths = sorted(
-            os.path.join(root, f)
-            for root, _dirs, files in os.walk(path)
-            for f in files
-            if f.endswith(".parquet")
-        )
-    else:
-        paths = [path]
-    stats = [os.stat(p) for p in paths if os.path.exists(p)]
-    if not stats:
-        raise FileNotFoundError(
-            f"parquet_fingerprint: no parquet files under {path!r} "
-            "(mis-pointed path would otherwise fingerprint as empty)"
-        )
-    return (
-        len(stats),
-        sum(s.st_size for s in stats),
-        max(s.st_mtime_ns for s in stats),
-    )
-
-
 def bloom_words(
     dim: DataFrame,
     key_col: str,
     *,
     m_bits: int = DEFAULT_M_BITS,
     k: int = DEFAULT_K,
-    cache_key: tuple | None = None,
 ) -> list[int]:
     """Materialize the dense word vector on the driver: ``m_bits/64``
     signed int64s (<= 32 KB at the 2^18 default — bounded by m_bits,
-    never by dim size). One aggregate job; memoized under ``cache_key``
-    so repeated query constructions reuse the built filter, like the
-    quantizer codebooks."""
-    if cache_key is not None and cache_key in _WORDS_CACHE:
-        return _WORDS_CACHE[cache_key]
+    never by dim size). One aggregate job."""
     rows = bloom_relation(dim, key_col, m_bits=m_bits, k=k).collect()
     words = [0] * (m_bits // 64)
     for r in rows:
         words[r["word"]] = r["bits"]
-    if cache_key is not None:
-        _WORDS_CACHE[cache_key] = words
     return words
 
 
@@ -246,12 +195,17 @@ def bloom_literal_column(words: list[int]):
     """``words`` as an ArrayType(Long) literal Column. Goes through a
     numpy int64 array: ``F.lit`` on a plain Python list marshals
     element-by-element over py4j (measured 2.4 s for 4096 longs — more
-    than the prune itself); the ndarray path is ~3x faster cold and the
-    callers memoize the built Column so repeated constructions pay
-    nothing."""
+    than the prune itself); the ndarray path is ~3x faster cold and
+    ``_bloom_literal`` memoizes the built Column so repeated constructions
+    pay nothing."""
     import numpy as np
 
     return F.lit(np.array(words, dtype=np.int64))
+
+
+@memo.memoized
+def _bloom_literal(dim: DataFrame, dim_key: str, m_bits: int, k: int):
+    return bloom_literal_column(bloom_words(dim, dim_key, m_bits=m_bits, k=k))
 
 
 def bloom_prune_literal(
@@ -294,27 +248,20 @@ def bloom_pruned_join(
     how: str = "inner",
     m_bits: int = DEFAULT_M_BITS,
     k: int = DEFAULT_K,
-    literal_cache_key: tuple | None = None,
+    literal: bool = False,
 ) -> DataFrame:
     """``fact JOIN dim`` with the fact side bloom-pruned first. Exact for
     inner/semi joins (no false negatives; false positives die in the
     join). Refuses outer joins — pruning a preserved side changes them.
 
-    With ``literal_cache_key`` set, the filter is built EAGERLY (one
-    bounded job, memoized under that key) and embedded as a literal —
-    the codegen fast path. Without it, the build stays lazy via the
-    scalar-subquery tier (see the module docstring for the trade)."""
+    With ``literal=True`` the filter is built EAGERLY (one bounded job,
+    memoized per dim content) and embedded as a literal — the codegen
+    fast path. Without it, the build stays lazy via the scalar-subquery
+    tier (see the module docstring for the trade)."""
     if how not in ("inner", "semi", "left_semi", "leftsemi"):
         raise ValueError(f"bloom prune is only exact for inner/semi joins, not {how!r}")
-    if literal_cache_key is not None:
-        col_key = (*literal_cache_key, "__lit_column")
-        arr = _WORDS_CACHE.get(col_key)
-        if arr is None:
-            words = bloom_words(
-                dim, dim_key, m_bits=m_bits, k=k, cache_key=literal_cache_key
-            )
-            arr = bloom_literal_column(words)
-            _WORDS_CACHE[col_key] = arr
+    if literal:
+        arr = _bloom_literal(dim, dim_key, m_bits, k)
         pruned = bloom_prune_literal(fact, fact_key, arr, m_bits=m_bits, k=k)
     else:
         vec = bloom_as_vector(bloom_relation(dim, dim_key, m_bits=m_bits, k=k), m_bits=m_bits)

@@ -31,10 +31,6 @@ def tokens(text_col: str | Column) -> Column:
     return F.split(text_col, " ")
 
 
-def token_count(text_col: str | Column) -> Column:
-    return F.size(tokens(text_col))
-
-
 def shingles(tokens_col: Column, k: int = 3, *, distinct: bool = True) -> Column:
     """k-gram shingles over a token array (distinct by default — set
     ``distinct=False`` for frequency counting, where every occurrence

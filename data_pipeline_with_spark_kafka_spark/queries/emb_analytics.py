@@ -158,11 +158,6 @@ FROM c{iterations} c LEFT JOIN (
     return "".join(sql)
 
 
-# Train-once memo (the kmeans_centroids_cached pattern), staleness-guarded
-# by the parquet footprint like the incremental near-dup index.
-_KMEANS_TRAIN_CACHE: dict = {}
-
-
 @register(
     "emb_kmeans_train",
     oracle=_kmeans_train_oracle(),
@@ -182,41 +177,10 @@ def emb_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     path; this is its verified twin, same per-iteration job profile
     (one codegen argmin scan + one (cid,dim) aggregate; k*d doubles to
     the driver, never rows)."""
-    import os
-
     from data_pipeline_with_spark_kafka_spark.operators.clustering import kmeans_verified
 
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    # Staleness stamp must cover directory-style parquet too (round-8
-    # advice): a regenerated directory dataset in the same session would
-    # otherwise reduce the key to the bare path and return stale
-    # centroids. Plain file -> (size, mtime_ns); directory -> the sorted
-    # (relpath, size, mtime_ns) listing of EVERY file under it (round-9
-    # advice: partitioned datasets nest part files in subdirectories, so
-    # a top-level-only scandir could stamp to an empty tuple and miss a
-    # regeneration); anything else -> no memo.
-    if os.path.isfile(path):
-        st = os.stat(path)
-        stamp = (st.st_size, st.st_mtime_ns)
-    elif os.path.isdir(path):
-        entries = []
-        for root, _dirs, files in os.walk(path):
-            for name in files:
-                fp = os.path.join(root, name)
-                st = os.stat(fp)
-                entries.append(
-                    (os.path.relpath(fp, path), st.st_size, st.st_mtime_ns)
-                )
-        stamp = tuple(sorted(entries))
-    else:
-        stamp = None
-    key = (os.path.abspath(sf_dir), stamp, 8, 5, 42)
-    rows = _KMEANS_TRAIN_CACHE.get(key) if stamp is not None else None
-    if rows is None:
-        emb = load_table_fanned(spark, sf_dir, "embeddings")
-        rows = kmeans_verified(emb, "vec_id", "embedding", k=8, iterations=5, seed=42)
-        if stamp is not None:
-            _KMEANS_TRAIN_CACHE[key] = rows
+    emb = load_table_fanned(spark, sf_dir, "embeddings")
+    rows = kmeans_verified(emb, "vec_id", "embedding", k=8, iterations=5, seed=42)
     return spark.createDataFrame(
         rows, "cid int, dim int, centroid double, cluster_n bigint"
     )

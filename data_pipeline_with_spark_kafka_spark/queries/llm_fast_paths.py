@@ -45,15 +45,15 @@ def llm_dedup_embedding_cosine_fast(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-def _quantizer_rows(emb: DataFrame, sf_dir: str, *, fixture: str, k: int, iterations: int):
+def _quantizer_rows(emb: DataFrame, *, fixture: str, k: int, iterations: int):
     """Centroid rows for an IVF query: the committed offline artifact when
     present (``fixtures/<fixture>.parquet`` — the deployment shape, and
     what lets the DuckDB oracle mirror cell assignment in SQL), else
     train-and-memoize in session (scale-curve runs on synthetic dirs)."""
     rows = clustering.fixture_centroid_rows(fixture)
     if rows is None:
-        rows, _schema = clustering.kmeans_centroids_cached(
-            emb, "vec_id", "embedding", cache_key=sf_dir, k=k, iterations=iterations
+        rows = clustering.kmeans_centroid_rows(
+            emb, "vec_id", "embedding", k=k, iterations=iterations
         )
     return rows
 
@@ -108,7 +108,7 @@ def llm_dedup_embedding_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFram
     Recall >= 0.95 vs the label-blocked exact tier is additionally
     pytest-asserted (tests/test_ivf_neardup.py)."""
     emb = load_table_fanned(spark, sf_dir, "embeddings")
-    rows = _quantizer_rows(emb, sf_dir, fixture="ivf_centroids_k10", k=10, iterations=3)
+    rows = _quantizer_rows(emb, fixture="ivf_centroids_k10", k=10, iterations=3)
     # Footer-metadata guard decision (no Spark job); see llm.py twin.
     guard = table_row_count(sf_dir, "embeddings") > 4096
     return dedup.embedding_near_dup_pairs_ivf(
@@ -165,7 +165,7 @@ def llm_knn_join_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_with_spark_kafka_spark.operators import similarity
 
     emb = load_table_fanned(spark, sf_dir, "embeddings")
-    rows = _quantizer_rows(emb, sf_dir, fixture="ivf_centroids_k10", k=10, iterations=3)
+    rows = _quantizer_rows(emb, fixture="ivf_centroids_k10", k=10, iterations=3)
     return similarity.knn_join_ivf(
         emb, "vec_id", "embedding", emb.filter(F.col("vec_id") < 8), rows,
         k=10, n_probe=3, query_limit=8,
@@ -213,7 +213,7 @@ def llm_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     per invocation, which also lets the DuckDB oracle replay cell
     membership + probing + the exact rerank in SQL."""
     emb = load_table_fanned(spark, sf_dir, "embeddings")
-    rows = _quantizer_rows(emb, sf_dir, fixture="ivf_centroids_k8", k=8, iterations=2)
+    rows = _quantizer_rows(emb, fixture="ivf_centroids_k8", k=8, iterations=2)
     centroids = spark.createDataFrame(rows, "cid int, centroid array<double>")
     return clustering.ivf_topk(
         emb, "vec_id", "embedding", emb.filter(F.col("vec_id") == 0), centroids, k=10, n_probe=3
@@ -259,7 +259,7 @@ def llm_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fully oracled: DuckDB replays membership + the NOT EXISTS keep rule
     from the same centroid parquet."""
     emb = load_table_fanned(spark, sf_dir, "embeddings")
-    rows = _quantizer_rows(emb, sf_dir, fixture="ivf_centroids_k10", k=10, iterations=3)
+    rows = _quantizer_rows(emb, fixture="ivf_centroids_k10", k=10, iterations=3)
     guard = table_row_count(sf_dir, "embeddings") > 4096
     kept = dedup.semantic_prune(
         emb, "vec_id", "embedding", centroid_rows=rows, threshold=0.4, guard=guard

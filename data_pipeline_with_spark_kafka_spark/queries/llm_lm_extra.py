@@ -468,15 +468,14 @@ def llm_train_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-scan-aggregate, the same as the IVF quantizer."""
     from data_pipeline_with_spark_kafka_spark.operators.classifier_train import (
         score_expr,
-        train_logreg_cached,
+        train_logreg,
     )
 
     feats = _classifier_feature_frame(spark, sf_dir)
-    model = train_logreg_cached(
+    model = train_logreg(
         feats,
         _TRAIN_FEATURES,
         "label",
-        cache_key=f"gopher-distill:{sf_dir}",
         iters=_TRAIN_ITERS,
         lr=_TRAIN_LR,
         loop_partitions=8,

@@ -379,10 +379,10 @@ def llm_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays all 20 merges as chained CTE stages (_bpe_encode_oracle) —
     token-for-token equality vs the pure-Python reference encoder is
     additionally pytest-pinned (tests/test_bpe.py)."""
-    from data_pipeline_with_spark_kafka_spark.operators.bpe import bpe_encode, train_bpe_cached
+    from data_pipeline_with_spark_kafka_spark.operators.bpe import bpe_encode, train_bpe
 
     docs = load_table_fanned(spark, sf_dir, "documents")
-    merges = train_bpe_cached(docs, "text", cache_key=sf_dir, num_merges=20)
+    merges = train_bpe(docs, "text", num_merges=20)
     return bpe_encode(docs, "doc_id", "text", merges).select(
         "doc_id", "n_words", "n_bpe_tokens"
     )

@@ -65,7 +65,6 @@ def llm_dsir_importance_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         F.col("lang") == "en",
         k=50,
-        cache_key=f"dsir:{sf_dir}",
     )
 
 
@@ -118,7 +117,6 @@ def llm_sim_topk_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=10,
         pool=50,
         dim=64,
-        cache_key=f"sq8:{sf_dir}",
     )
 
 
@@ -184,7 +182,7 @@ def llm_sim_topk_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_with_spark_kafka_spark.queries.llm_fast_paths import _quantizer_rows
 
     emb = load_table_fanned(spark, sf_dir, "embeddings")
-    rows = _quantizer_rows(emb, sf_dir, fixture="ivf_centroids_k8", k=8, iterations=2)
+    rows = _quantizer_rows(emb, fixture="ivf_centroids_k8", k=8, iterations=2)
     return quantization.ivf_sq8_topk(
         emb,
         "vec_id",
@@ -195,7 +193,6 @@ def llm_sim_topk_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
         pool=50,
         n_probe=3,
         dim=64,
-        cache_key=f"sq8:{sf_dir}",
     )
 
 
@@ -442,7 +439,7 @@ def llm_emb_sq8_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     property-tested in tests/test_quantization.py)."""
     emb = load_table_fanned(spark, sf_dir, "embeddings")
     return quantization.sq8_reconstruction_error(
-        emb, "embedding", dim=64, cache_key=f"sq8:{sf_dir}"
+        emb, "embedding", dim=64
     )
 
 
@@ -668,7 +665,7 @@ def llm_sim_topk_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             "missing fixtures/pq_codebooks_m8_k16.parquet — run tools/gen_pq_fixture.py"
         )
     emb = load_table_fanned(spark, sf_dir, "embeddings")
-    rows = _quantizer_rows(emb, sf_dir, fixture="ivf_centroids_k8", k=8, iterations=2)
+    rows = _quantizer_rows(emb, fixture="ivf_centroids_k8", k=8, iterations=2)
     return quantization.ivf_pq_topk(
         emb,
         "vec_id",

@@ -705,16 +705,13 @@ def join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Uses the operator's LITERAL tier: the filter build is one bounded
     aggregate job at construction (output fixed at m_bits/64 = 4096
-    longs regardless of dim size), memoized per sf_dir — the same
+    longs regardless of dim size), memoized per dim content — the same
     offline-artifact class as the SQ8/PQ codebooks, allowlisted the
     same way in the lazy-construction contract. See
     operators/runtime_filter for the measured tier trade and for why
     this beats both key-set broadcast (unbounded) and Spark's injected
     bloom (optimizer-visibility-limited) at 100 TB."""
-    from data_pipeline_with_spark_kafka_spark.operators.runtime_filter import (
-        bloom_pruned_join,
-        parquet_fingerprint,
-    )
+    from data_pipeline_with_spark_kafka_spark.operators.runtime_filter import bloom_pruned_join
 
     lineitem = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
@@ -729,15 +726,7 @@ def join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         urgent,
         "l_orderkey",
         "o_orderkey",
-        # fingerprint in the key (round-12 advice fix): the memo is
-        # process-lifetime, so pin the dim's CONTENT — a stale filter
-        # would silently drop joinable rows (false negatives).
-        literal_cache_key=(
-            sf_dir,
-            "orders",
-            "urgent-bloom",
-            parquet_fingerprint(f"{sf_dir}/orders.parquet"),
-        ),
+        literal=True,
     )
     return joined.groupBy(F.date_trunc("month", "o_orderdate").alias("order_month")).agg(
         F.count(F.lit(1)).alias("n_items"),

@@ -20,6 +20,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_pipeline_with_spark_kafka_spark.sources import memo
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -45,25 +47,39 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     truncate ns -> us here (``ts div 1000``), matching DuckDB's
     ``CAST(ts_ns AS TIMESTAMP)`` truncation semantics exactly.
 
-    The resulting DataFrame is memoized on the session (keyed by
-    (sf_dir, name)) — a lightweight catalog. Besides avoiding repeated
-    setup, this keeps query CONSTRUCTION job-free after the first load:
-    ``spark.read.parquet`` runs one small schema-inference job per call,
-    which would otherwise recur in every plan that touches the table.
-    DataFrames are immutable plans, so sharing one per table is safe.
+    The resulting DataFrame is memoized on the session, keyed by the
+    table path and its ``parquet_fingerprint`` — a lightweight catalog.
+    Besides avoiding repeated setup, this keeps query CONSTRUCTION
+    job-free after the first load: ``spark.read.parquet`` runs one small
+    schema-inference job per call, which would otherwise recur in every
+    plan that touches the table. Rewriting the table's files changes the
+    fingerprint, so the next call reads it afresh instead of returning a
+    plan over the old file listing. DataFrames are immutable plans, so
+    sharing one per table is safe.
     """
-    cache = spark.__dict__.setdefault("_graft_table_cache", {})
-    key = (sf_dir, name)
-    if key not in cache:
-        if name == "events":
-            # The driver may hand us a session without this conf; it is a
-            # runtime-settable SQL conf, so set it defensively pre-scan.
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        cache[key] = df
-    return cache[key]
+    return _read_table(spark, sf_dir, name, parquet_fingerprint(_path(sf_dir, name)))
+
+
+def _path(sf_dir: str, name: str) -> str:
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
+@memo.memoized
+def _read_table(
+    spark: SparkSession, sf_dir: str, name: str, fingerprint: tuple, fanned: bool = False
+) -> DataFrame:
+    if fanned:
+        from data_pipeline_with_spark_kafka_spark.session import default_parallelism
+
+        return _read_table(spark, sf_dir, name, fingerprint).repartition(default_parallelism())
+    if name == "events":
+        # A caller may hand us a session without this conf; it is a
+        # runtime-settable SQL conf, so set it defensively pre-scan.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(_path(sf_dir, name))
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    return df
 
 
 #: Fan-out ceiling: inputs at or under this many bytes scan as a single
@@ -75,33 +91,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 FANOUT_MAX_BYTES = int(os.environ.get("SPARK_GRAFT_FANOUT_MAX_BYTES", 128 << 20))
 
 
-def _table_bytes(sf_dir: str, name: str) -> int:
-    """On-disk size of a fixture table (file or directory of parts).
+def parquet_files(path: str) -> list[str]:
+    """The data files of a parquet table, sorted: ``path`` itself, or every
+    file under it at any depth (partitioned and nested layouts have no
+    top-level part files), skipping the ``_``/``.`` metadata and hidden
+    names Spark skips. A missing path has none."""
+    if not os.path.isdir(path):
+        return [path] if os.path.exists(path) else []
+    found = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        found += [os.path.join(root, f) for f in files if not f.startswith(("_", "."))]
+    return sorted(found)
 
-    Directories are walked RECURSIVELY (round-13 advice fix): a
-    partitioned/nested parquet layout has no top-level ``*.parquet``
-    files, and the old flat glob summed it to 0 bytes — which would have
-    told ``load_table_fanned`` to round-robin-shuffle an arbitrarily
-    large table, the exact opposite of its 'plans unchanged at real
-    scale' contract. An empty walk result is treated like the OSError
-    branch: unknown -> assume big, never fan out."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(path):
-        total = 0
-        seen = False
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                if f.endswith(".parquet"):
-                    seen = True
-                    try:
-                        total += os.path.getsize(os.path.join(root, f))
-                    except OSError:
-                        return FANOUT_MAX_BYTES
-        return total if seen else FANOUT_MAX_BYTES
-    try:
-        return os.path.getsize(path)
-    except OSError:
-        return FANOUT_MAX_BYTES  # unknown -> assume big, never fan out
+
+def parquet_fingerprint(path: str) -> tuple[int, int, int]:
+    """Cheap content fingerprint of a parquet file/dir: (file count, total
+    bytes, max mtime_ns). Driver-side stat calls — the same metadata IO
+    Spark's own file index performs at planning."""
+    return memo.stat_fingerprint(parquet_files(path))
 
 
 def load_table_fanned(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -126,44 +134,30 @@ def load_table_fanned(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     stays on) and row-order-neutral for every consumer: all downstream
     aggregates/windows in this repo order explicitly.
     """
-    df = load_table(spark, sf_dir, name)
-    if _table_bytes(sf_dir, name) >= FANOUT_MAX_BYTES:
-        return df
-    cache = spark.__dict__.setdefault("_graft_table_fanout_cache", {})
-    key = (sf_dir, name)
-    if key not in cache:
-        from data_pipeline_with_spark_kafka_spark.session import default_parallelism
-
-        cache[key] = df.repartition(default_parallelism())
-    return cache[key]
+    fingerprint = parquet_fingerprint(_path(sf_dir, name))
+    count, size, _mtime = fingerprint
+    # No data files: size unknown -> assume big, never fan out.
+    fanned = bool(count) and size < FANOUT_MAX_BYTES
+    return _read_table(spark, sf_dir, name, fingerprint, fanned=fanned)
 
 
 def table_row_count(sf_dir: str, name: str) -> int:
-    """Exact row count of a fixture table from the parquet footer(s).
+    """Exact row count of a fixture table from the parquet footer(s) of
+    every data file, at any depth.
 
     Driver-side metadata read — the same class of IO Spark itself performs
     at planning time (file listing / schema read), NOT a Spark job. Used by
     queries that need a cheap cardinality bound to choose a plan shape
     without breaking the lazy-construction contract (e.g. the embedding
     near-dup guard decision)."""
-    import glob
-
     import pyarrow.parquet as pq
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(path):
-        return sum(
-            pq.read_metadata(p).num_rows
-            for p in glob.glob(os.path.join(path, "*.parquet"))
-        )
-    return pq.read_metadata(path).num_rows
+    path = _path(sf_dir, name)
+    files = parquet_files(path)
+    if not files:
+        raise FileNotFoundError(f"no parquet data files under {path!r}")
+    return sum(pq.read_metadata(p).num_rows for p in files)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in names}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES) -> None:
-    """Expose fixtures as SQL temp views (for spark.sql-surface queries)."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

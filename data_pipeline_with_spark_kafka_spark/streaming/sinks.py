@@ -75,7 +75,13 @@ def _recover_swap(target_dir: str) -> None:
             shutil.rmtree(old)
         else:
             os.rename(old, target_dir)
-    for tmp in glob.glob(glob.escape(target_dir) + ".tmp-*"):
+    _sweep_tmp(target_dir)
+
+
+def _sweep_tmp(prefix: str) -> None:
+    """Delete the half-written ``<prefix>.tmp-*`` outputs a crash left
+    behind; nothing ever reads them."""
+    for tmp in glob.glob(glob.escape(prefix) + ".tmp-*"):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -167,8 +173,10 @@ def bucketed_keyed_upsert_parquet(
     tombstone before the new one renames in, so a crash between the two
     renames preserves the old rows — ``_recover_buckets`` restores them
     at the next compaction and ``read_keyed_ledger`` unions live-less
-    tombstones in the meantime. Latest-write-wins matches the plain
-    sink's delete+insert semantics."""
+    tombstones in the meantime. A crash between writing a delta or a
+    compaction output and renaming it in leaves a ``delta/.tmp-*`` or
+    ``base.tmp-*`` dir; the next call sweeps both before it writes.
+    Latest-write-wins matches the plain sink's delete+insert semantics."""
 
     def upsert(batch_df: DataFrame, epoch_id: int) -> None:
         from pyspark.sql import functions as F
@@ -176,6 +184,8 @@ def bucketed_keyed_upsert_parquet(
         spark = batch_df.sparkSession
         base_dir = os.path.join(target_dir, "base")
         delta_root = os.path.join(target_dir, "delta")
+        _sweep_tmp(os.path.join(delta_root, ""))
+        _sweep_tmp(base_dir)
         with materialized(batch_df.dropDuplicates(key_cols)) as incoming:
             if incoming is None:
                 return

@@ -14,6 +14,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from data_pipeline_with_spark_kafka_spark.streaming.sinks import (
     _base_maxv,
     bucketed_keyed_upsert_parquet,
@@ -232,3 +234,43 @@ def test_ledger_recovery_restores_newest_of_two_tombstones(spark, tmp_path):
     _recover_buckets(str(target))
     assert not os.listdir(_tomb_dir(str(target)))
     assert _snapshot(spark, target)[1] == ("new", 2)
+
+
+def test_ledger_crash_leftovers_are_swept_on_replay(spark, tmp_path, monkeypatch):
+    """A crash after a delta (then a compaction) output is written but
+    before it is renamed in leaves a ``.tmp-*`` dir; replaying the epoch
+    sweeps it and the ledger reads the same rows as a crash-free run."""
+    target, clean = tmp_path / "ledger", tmp_path / "clean"
+    batches = [_df(spark, [(1, "a", 1), (2, "b", 1)]), _df(spark, [(2, "b2", 2), (3, "c", 1)])]
+    sink = bucketed_keyed_upsert_parquet(str(target), ["k"], n_buckets=4, compact_every=2)
+    reference = bucketed_keyed_upsert_parquet(str(clean), ["k"], n_buckets=4, compact_every=2)
+    for epoch, batch in enumerate(batches):
+        reference(batch, epoch)
+    sink(batches[0], 0)
+
+    def leftovers():
+        return sorted(
+            name
+            for _root, dirs, _files in os.walk(str(tmp_path))
+            for name in dirs
+            if ".tmp-" in name
+        )
+
+    real_rename = os.rename
+    for marker in ("delta/.tmp-", "base.tmp-"):  # the delta write, then compaction
+
+        def crash(src, dst, marker=marker):
+            if marker in os.fspath(src):
+                raise OSError("injected crash before the rename")
+            real_rename(src, dst)
+
+        monkeypatch.setattr(os, "rename", crash)
+        with pytest.raises(OSError, match="injected"):
+            sink(batches[1], 1)
+        monkeypatch.setattr(os, "rename", real_rename)
+        assert len(leftovers()) == 1
+    sink(batches[1], 1)  # replayed epoch
+    assert leftovers() == []
+    assert _snapshot(spark, target) == _snapshot(spark, clean) == {
+        1: ("a", 1), 2: ("b2", 2), 3: ("c", 1),
+    }

@@ -12,7 +12,6 @@ from data_pipeline_with_spark_kafka_spark.operators.classifier_train import (
     TrainedModel,
     score_expr,
     train_logreg,
-    train_logreg_cached,
 )
 from data_pipeline_with_spark_kafka_spark.queries.llm_lm_extra import (
     _TRAIN_FEATURES,
@@ -76,20 +75,19 @@ def test_loss_decreases_and_beats_majority(feats):
     assert row["acc"] >= majority, (row["acc"], majority)
 
 
-def test_cache_memoizes(feats):
-    m1 = train_logreg_cached(
-        feats, _TRAIN_FEATURES, "label", cache_key="t", iters=3, lr=LR
-    )
-    m2 = train_logreg_cached(
-        feats, _TRAIN_FEATURES, "label", cache_key="t", iters=3, lr=LR
-    )
-    assert m1 is m2
-    assert isinstance(m1, TrainedModel)
+def test_cache_memoizes(spark, sf_dir, feats):
+    # The same frame, and a frame rebuilt over the same files, are both
+    # memo hits: training runs once per input content.
+    for build in (lambda: feats, lambda: _classifier_feature_frame(spark, sf_dir)):
+        m1 = train_logreg(build(), _TRAIN_FEATURES, "label", iters=3, lr=LR)
+        m2 = train_logreg(build(), _TRAIN_FEATURES, "label", iters=3, lr=LR)
+        assert m1 is m2
+        assert isinstance(m1, TrainedModel)
     # loop_partitions changes float partial-aggregation order, so it must
     # be part of the memo key — a different width is a different model.
-    m3 = train_logreg_cached(
-        feats, _TRAIN_FEATURES, "label", cache_key="t", iters=3, lr=LR,
-        loop_partitions=2,
+    m1 = train_logreg(feats, _TRAIN_FEATURES, "label", iters=3, lr=LR)
+    m3 = train_logreg(
+        feats, _TRAIN_FEATURES, "label", iters=3, lr=LR, loop_partitions=2,
     )
     assert m3 is not m1
 

@@ -28,12 +28,12 @@ ITERATIVE_BUILDERS = {
     "llm_cluster_aware_split",  # composes the same CC loop
     "llm_curated_corpus",  # composes the CC-based dedup stage
     "llm_bpe_vocab",       # BPE merge loop (adaptive driver/distributed)
-    "llm_bpe_encode",      # trains via the same loop (memoized per sf_dir)
-    "llm_sim_topk_ivf",    # k-means quantizer training (memoized per sf_dir)
+    "llm_bpe_encode",      # trains via the same loop (memoized per input)
+    "llm_sim_topk_ivf",    # k-means quantizer training (memoized per input)
     "llm_dedup_embedding_cosine_ivf",  # same quantizer training path
     "llm_knn_join_ivf",                # same quantizer training path
     # round-6 learned-artifact stats passes, one aggregate scan each,
-    # memoized per sf_dir (offline-training class, like the quantizer):
+    # memoized per input (offline-training class, like the quantizer):
     "llm_dsir_importance_topk",  # 256-bucket n-gram distribution estimate
     "llm_sim_topk_sq8",          # SQ8 per-dim min/max codebook
     "llm_sim_topk_ivf_sq8",      # same codebook (+ fixture quantizer cells)
@@ -51,7 +51,7 @@ ITERATIVE_BUILDERS = {
     "events_session_ids_auto",
     "events_markov_transitions_auto",
     # round-11 bloom join prune, literal tier: ONE bounded aggregate job
-    # (output fixed at m_bits/64 words) memoized per sf_dir — the same
+    # (output fixed at m_bits/64 words) memoized per input — the same
     # offline-artifact class as the SQ8/PQ codebooks above. The lazy
     # scalar-subquery tier stays job-free; the query uses the literal
     # tier because a Filter with a subquery expression drops to the

@@ -122,29 +122,43 @@ def test_ivf_topk_includes_query_and_overlaps_brute_force(spark, sf_dir):
     assert recall >= 0.1, f"IVF recall collapsed: {recall} (ivf={ivf}, brute={brute})"
 
 
-def test_max_block_cache_is_bounded(spark):
-    """The build-time probe memo must not grow without bound across many
-    distinct plans (session-lifetime leak in a long-running service)."""
+def test_max_block_cache_is_bounded(spark, tmp_path):
+    """The session memo holding the build-time probe must not grow without
+    bound across many distinct plans (session-lifetime leak in a
+    long-running service), must hit for a rebuilt plan over the same input,
+    and must miss once the files under that input are rewritten."""
     from data_pipeline_with_spark_kafka_spark.operators import dedup
+    from data_pipeline_with_spark_kafka_spark.sources import memo
 
-    saved = dict(dedup._MAX_BLOCK_CACHE)
-    dedup._MAX_BLOCK_CACHE.clear()
+    store = memo._store(spark)
+    saved = dict(store)
+    store.clear()
     try:
-        for i in range(dedup._MAX_BLOCK_CACHE_CAP + 10):
+        for i in range(memo.CAPACITY + 10):
             # Distinct literal → distinct semantic plan hash per iteration.
             df = spark.range(2).withColumn("blk", F.lit(i) % 2)
             n = dedup._max_block_size(df, "blk")
             assert n == 2 if i % 2 == 0 else n >= 1
-            assert len(dedup._MAX_BLOCK_CACHE) <= dedup._MAX_BLOCK_CACHE_CAP
-        # Repeated probe of a cached plan does not grow the cache.
-        df = spark.range(2).withColumn("blk", F.lit(0))
-        dedup._max_block_size(df, "blk")
-        size = len(dedup._MAX_BLOCK_CACHE)
-        dedup._max_block_size(df, "blk")
-        assert len(dedup._MAX_BLOCK_CACHE) == size
+            assert len(store) <= memo.CAPACITY
+        # Repeated probes of a rebuilt plan (in memory, then over a file)
+        # do not grow the memo.
+        path = str(tmp_path / "blocks.parquet")
+        spark.createDataFrame([(0,), (0,), (1,)], "blk int").write.parquet(path)
+        for build in (
+            lambda: spark.range(2).withColumn("blk", F.lit(0)),
+            lambda: spark.read.parquet(path),
+        ):
+            dedup._max_block_size(build(), "blk")
+            size = len(store)
+            dedup._max_block_size(build(), "blk")
+            assert len(store) == size
+        assert dedup._max_block_size(spark.read.parquet(path), "blk") == 2
+        # Rewriting the files under the same path is a miss, not a stale hit.
+        spark.createDataFrame([(5,)] * 3, "blk int").write.mode("overwrite").parquet(path)
+        assert dedup._max_block_size(spark.read.parquet(path), "blk") == 3
     finally:
-        dedup._MAX_BLOCK_CACHE.clear()
-        dedup._MAX_BLOCK_CACHE.update(saved)
+        store.clear()
+        store.update(saved)
 
 
 def test_dominant_key_share_measures_skew(spark):

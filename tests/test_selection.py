@@ -344,15 +344,14 @@ class TestSQ8:
 
         emb = load_table(spark, sf_dir, "embeddings")
         q = emb.filter(F.col("vec_id") == 0)
-        rows, schema = clustering.kmeans_centroids_cached(
-            emb, "vec_id", "embedding", cache_key=f"test:{sf_dir}", k=8, iterations=2
+        rows = clustering.kmeans_centroid_rows(
+            emb, "vec_id", "embedding", k=8, iterations=2
         )
         sq = quantization.ivf_sq8_topk(
             emb, "vec_id", "embedding", q, rows, k=10, pool=50, n_probe=3, dim=64
         )
-        exact = clustering.ivf_topk(
-            emb, "vec_id", "embedding", q, spark.createDataFrame(rows, schema), k=10, n_probe=3
-        )
+        centroids = spark.createDataFrame(rows, "cid int, centroid array<double>")
+        exact = clustering.ivf_topk(emb, "vec_id", "embedding", q, centroids, k=10, n_probe=3)
         sq_ids = {r["vec_id"] for r in sq.collect()}
         ex_ids = {r["vec_id"] for r in exact.collect()}
         assert len(sq_ids & ex_ids) / 10 >= 0.9
@@ -504,7 +503,7 @@ class TestIVFPQ:
         cb = quantization.fixture_pq_codebooks()
         emb = load_table(spark, sf_dir, "embeddings")
         q = emb.filter(F.col("vec_id") == 0)
-        rows = _quantizer_rows(emb, sf_dir, fixture="ivf_centroids_k8", k=8, iterations=2)
+        rows = _quantizer_rows(emb, fixture="ivf_centroids_k8", k=8, iterations=2)
         ivf = quantization.ivf_pq_topk(
             emb, "vec_id", "embedding", q, rows, cb, k=10, pool=50, n_probe=3
         ).collect()

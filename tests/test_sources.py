@@ -3,6 +3,8 @@ payload serialize/parse inverse property, producer-style row validation."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,7 +17,7 @@ from data_pipeline_with_spark_kafka_spark.sources.readers import (
     validate_rows,
     write_batch,
 )
-from data_pipeline_with_spark_kafka_spark.sources.tables import load_table
+from data_pipeline_with_spark_kafka_spark.sources.tables import load_table, table_row_count
 
 
 def test_csv_round_trip(spark, sf_dir, tmp_path):
@@ -194,3 +196,46 @@ def test_media_ingest_audit_is_metadata_only(spark):
     for line in scan_lines:
         assert "content" not in line, line
         assert "path" in line and "length" in line, line
+
+
+def test_table_row_count_reads_partitioned_layout(spark, sf_dir, tmp_path):
+    """A partitionBy table has no top-level part files; the footer count
+    must still see every row (it drives the > 4096 guard decision)."""
+    docs = load_table(spark, sf_dir, "documents")
+    docs.write.partitionBy("lang").parquet(str(tmp_path / "documents.parquet"))
+    assert table_row_count(str(tmp_path), "documents") == docs.count()
+    assert load_table(spark, str(tmp_path), "documents").count() == docs.count()
+
+
+def test_rewritten_table_rebuilds_memoized_artifacts(spark, sf_dir, tmp_path):
+    """Memo keys pin content, not paths: after documents.parquet is
+    rewritten in place, the same session must re-read the table and
+    retrain the BPE merges, matching a build from an empty memo."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from data_pipeline_with_spark_kafka_spark.queries import all_queries
+    from data_pipeline_with_spark_kafka_spark.sources import memo
+
+    corpus = str(tmp_path)
+    path = os.path.join(corpus, "documents.parquet")
+    docs = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+    pq.write_table(docs, path)
+    encode = all_queries()["llm_bpe_encode"].builder
+
+    def build():
+        return (
+            sorted(encode(spark, corpus).collect()),
+            load_table(spark, corpus, "documents").count(),
+        )
+
+    before = build()
+    # Reversed text: different pair statistics, so different merges.
+    text = docs.column_names.index("text")
+    docs = docs.set_column(text, "text", pc.utf8_reverse(docs.column("text")))
+    pq.write_table(docs.slice(0, docs.num_rows - 1), path)
+    after = build()
+    memo.clear(spark)
+    assert after == build()
+    assert after != before
+    assert after[1] == docs.num_rows - 1

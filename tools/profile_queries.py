@@ -34,6 +34,7 @@ def main() -> None:
 
     from data_pipeline_with_spark_kafka_spark.queries import all_queries
     from data_pipeline_with_spark_kafka_spark.session import get_spark
+    from data_pipeline_with_spark_kafka_spark.sources import memo
 
     spark = get_spark("profile")
     queries = all_queries()
@@ -45,6 +46,7 @@ def main() -> None:
         "noop"
     ).mode("overwrite").save()
     spark.catalog.clearCache()
+    memo.clear(spark)
 
     tracker = spark.sparkContext.statusTracker()
     out = {}
@@ -69,8 +71,8 @@ def main() -> None:
         jobs_per_run = []
         for _ in range(args.runs):
             before_jobs = len(tracker.getJobIdsForGroup(None) or [])
-            # Rebuild per run like bench.py does (probe caches make the
-            # second build cheap; plan is re-planned each run like bench).
+            # Rebuild per run like bench.py does (the first rebuild reuses
+            # the memo the timed build filled; each run clears it after).
             df_run = queries[name].builder(spark, args.sf_dir)
             t0 = time.perf_counter()
             df_run.write.format("noop").mode("overwrite").save()
@@ -78,6 +80,7 @@ def main() -> None:
             after_jobs = len(tracker.getJobIdsForGroup(None) or [])
             jobs_per_run.append(after_jobs - before_jobs)
             spark.catalog.clearCache()
+            memo.clear(spark)
         n_exchanges = plan.count("Exchange")
         out[name] = {
             "build_s": round(t_build, 3),
