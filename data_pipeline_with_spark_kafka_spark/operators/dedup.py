@@ -4,24 +4,40 @@ Four tiers, all built from public DataFrame APIs:
 
 1. **Exact** — hash group-by on content (or md5 fingerprint), keep the
    deterministic min-id representative. One shuffle on the content hash.
-2. **N-gram Jaccard (exact near-dup)** — inverted-index self-join on
-   distinct k-gram shingles -> per-pair intersection counts -> Jaccard
-   filter. SQL-expressible, so it doubles as the DuckDB-oracle ground
-   truth for the probabilistic tiers.
-3. **MinHash + LSH (scalable near-dup)** — per-doc minhash signature
-   (xxhash64 under NUM_HASHES seeds), banded into buckets; only docs
-   sharing a band bucket become candidate pairs, then candidates are
-   verified with exact Jaccard. At 100 TB the band join touches only
-   bucket collisions — never all pairs.
-4. **SimHash** — 64-bit sign-aggregated token-hash fingerprint; near-dups
-   are pairs within Hamming distance d, blocked on the top 16 bits.
+2. **N-gram Jaccard / containment (exact near-dup)** — prefix-filtered
+   inverted-index self-join on distinct k-gram shingles, then exact
+   verification of each candidate pair. SQL-expressible, so it doubles
+   as the DuckDB-oracle ground truth for the probabilistic tiers.
+3. **MinHash + LSH (scalable near-dup)** — per-doc minhash signature,
+   banded into buckets; only docs sharing a band bucket become candidate
+   pairs, then candidates are verified with exact Jaccard. At 100 TB the
+   band join touches only bucket collisions — never all pairs.
+4. **SimHash** — sign-aggregated token-hash fingerprint; near-dups are
+   pairs within Hamming distance d, blocked on the top 16 bits.
+
+Every near-dup operator is assembled from one copy of each stage:
+
+- ``_prefix_index`` — the persisted hashed-shingle sets, the shingle
+  frequency table and the rarest-first prefix (tier 2, both measures);
+- ``band_buckets`` + ``_band_self_join`` — the LSH band index and its
+  candidate self-join (tier 3, both hash families; the band index is
+  also the persisted corpus index of ``operators/incremental.py``);
+- ``verified_pairs`` — joins both shingle-set arrays back onto candidate
+  pairs and keeps ``ROUND(measure, 4) >= threshold`` (tiers 2 and 3 and
+  the incremental probe).
+
+Tiers 3 and 4 take ``family="xxhash64" | "md5"``. xxhash64 is the fast
+default; md5 is the one string hash every SQL engine computes
+identically, so the md5 family's intermediate values (signatures,
+fingerprints) are reproducible in plain SQL. Both families are
+DuckDB-oracled (xxhash64 through ``queries/xxh64_sql.py``).
 
 Design notes for 1000-executor scale:
 - every self-join is preceded by an explode on a key that distributes
   (shingle / band bucket / simhash prefix) — no cartesian anywhere;
-- hub shingles (stopword-ish grams shared by thousands of docs) are the
-  skew risk in tier 2: the ``max_shingle_freq`` guard drops shingles more
-  frequent than the cap (standard df-cut), bounding bucket fan-out;
+- hub shingles (stopword-ish grams shared by thousands of docs) never
+  drive candidate generation: the prefix holds each doc's rarest
+  shingles, so fan-out is bounded by rare-shingle frequencies;
 - signatures are fixed-width arrays, never per-row Python.
 
 Cache contract: tiers 2 and 3 ``persist()`` the relation that feeds both
@@ -33,7 +49,7 @@ bench.py does, or unpersist via the plan's cached ancestors).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_pipeline_with_spark_kafka_spark.operators.text import (
@@ -53,6 +69,13 @@ NUM_HASHES = 32
 BANDS = 16
 ROWS_PER_BAND = NUM_HASHES // BANDS
 
+# Verification compares the measure rounded to DIGITS decimals (the
+# oracles' ROUND(x, 4)). A pair whose exact measure sits up to
+# ROUNDING_SLACK below the threshold still rounds up to it, so exact
+# pre-filters derived from the threshold must be slacked by that much.
+DIGITS = 4
+ROUNDING_SLACK = 0.5 * 10 ** -DIGITS
+
 
 def exact_dedup(df: DataFrame, id_col: str, content_col: str) -> DataFrame:
     """Exact dedup: one row per distinct content, keeping the min id.
@@ -68,18 +91,100 @@ def exact_dedup(df: DataFrame, id_col: str, content_col: str) -> DataFrame:
     )
 
 
-def shingle_sets(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
-    """(doc, shingle_hash) exploded distinct k-gram shingle relation.
+def _hashed_sets(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
+    """(doc, sh): each doc's distinct k-gram shingles as xxhash64 longs,
+    docs without a shingle dropped.
 
-    Shingles are xxhash64-hashed to longs immediately: the self-join then
-    shuffles/compares 8-byte keys instead of ~20-byte strings, and set
-    intersections run on long arrays. Exactness is preserved up to 64-bit
-    hash collisions (~1e-11 for this corpus — the oracle still matches).
-    """
+    Fused hashed-shingle build (round 13, guide §4.1): one interpreted
+    lambda pass, distinct on 8-byte longs instead of strings, and NO array
+    sort — nothing downstream reads the order (freq counts, the rarity
+    window orders by (df_count, shingle), array_intersect is order-blind,
+    the minhash seeds take array minima). The old
+    array_sort(transform(shingles(...), xxhash64)) form cost ~0.3 s more
+    per corpus scan at sf0.1."""
+    return df.select(
+        F.col(id_col).alias("doc"),
+        hashed_shingles(tokens(F.col(text_col)), k).alias("sh"),
+    ).filter(F.size("sh") > 0)
+
+
+def _prefix_index(
+    df: DataFrame, id_col: str, text_col: str, *, k: int, threshold: float
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The PPJoin-family inverted index: (sets, index, prefix).
+
+    - ``sets`` (doc, sh): the persisted hashed-shingle arrays;
+    - ``index`` (doc, n_sh, shingle): every shingle occurrence;
+    - ``prefix`` (doc, n_sh, shingle): each doc's first
+      ``|d| - ceil(t*|d|) + 1`` shingles in rarest-first order (ties on
+      the shingle hash). Any pair whose overlap measure relative to |d|
+      reaches t must share a shingle of d's prefix, so candidate
+      generation joins only prefixes — the low-frequency tail — and never
+      joins through the hottest keys.
+
+    At 100 TB the frequency table (one row per distinct shingle) shuffles
+    on the same key the index already shuffles on, and the prefix index is
+    ~(1-t) of the full index."""
+    sets = _hashed_sets(df, id_col, text_col, k).persist()
+    index = sets.select("doc", F.size("sh").alias("n_sh"), F.explode("sh").alias("shingle"))
+    freq = index.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_count"))
+
+    rarity = Window.partitionBy("doc").orderBy("df_count", "shingle")
+    prefix_len = F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
+    # No broadcast hint on freq: it has one row per DISTINCT shingle, which
+    # scales with the corpus (billions at 100 TB). AQE will still broadcast
+    # it at runtime when it is actually small.
+    prefix = (
+        index.join(freq, "shingle")
+        .withColumn("rn", F.row_number().over(rarity))
+        .filter(F.col("rn") <= prefix_len)
+        .select("doc", "n_sh", "shingle")
+    )
+    return sets, index, prefix
+
+
+def _jaccard(a: Column, b: Column) -> Column:
+    inter = F.size(F.array_intersect(a, b))
+    return inter / (F.size(a) + F.size(b) - inter)
+
+
+def _containment(a: Column, b: Column) -> Column:
+    return F.size(F.array_intersect(a, b)) / F.size(a)
+
+
+# measure name -> exact measure over two shingle-set array columns
+MEASURES = {"jaccard": _jaccard, "containment": _containment}
+
+
+def verified_pairs(
+    candidates: DataFrame,
+    sets_a: DataFrame,
+    sets_b: DataFrame,
+    *,
+    threshold: float,
+    measure: str = "jaccard",
+) -> DataFrame:
+    """Exact verification of candidate pairs: (left, right, measure) for
+    the pairs whose measure, rounded to DIGITS decimals, is >= threshold.
+
+    ``candidates`` has two doc-id columns (left, right); ``sets_a`` /
+    ``sets_b`` are (doc, sh) shingle-set relations for the left and right
+    ids. The arrays are joined back AFTER candidate dedup, so wide rows
+    never shuffle through the candidate explosion.
+
+    Plain shuffle joins on the two id columns: a (doc, sh) relation is the
+    FULL corpus and must never be broadcast — at 100 TB a broadcast here
+    is an executor OOM by construction. AQE may still elect a broadcast at
+    toy scale; that's its call, not a hint we bake in."""
+    left, right = candidates.columns
+    pairs = candidates.join(
+        sets_a.select(F.col("doc").alias(left), F.col("sh").alias("sh_a")), left
+    ).join(sets_b.select(F.col("doc").alias(right), F.col("sh").alias("sh_b")), right)
+    value = MEASURES[measure](F.col("sh_a"), F.col("sh_b"))
     return (
-        df.select(F.col(id_col).alias("doc"), shingles(tokens(F.col(text_col)), k).alias("sh"))
-        .select("doc", F.explode("sh").alias("shingle"))
-        .select("doc", F.xxhash64("shingle").alias("shingle"))
+        pairs.withColumn(measure, round_to(value, DIGITS))
+        .filter(F.col(measure) >= threshold)
+        .select(left, right, measure)
     )
 
 
@@ -98,47 +203,14 @@ def ngram_jaccard_pairs(
     squared document frequencies). Prefix filtering keeps exactness while
     skipping the hubs: for J(a,b) >= t it holds that
     ``|a ∩ b| >= t * max(|a|, |b|)``, so two qualifying docs MUST share a
-    shingle among each doc's first ``|d| - ceil(t*|d|) + 1`` shingles in a
-    global canonical order. Ordering shingles rarest-first makes that
-    prefix the low-frequency tail — candidate generation then never joins
-    through the hottest keys. Candidates are verified with the full
-    (hashed) shingle arrays; results are identical to the naive join.
+    shingle among each doc's prefix (``_prefix_index``). Candidates are
+    verified with the full (hashed) shingle arrays; results are identical
+    to the naive join. Nothing in this operator is broadcast by hint; AQE
+    may still elect broadcasts at small scale.
 
-    At 100 TB: the frequency table (one row per distinct shingle) shuffles
-    on the same key the index already shuffles on, the prefix index is
-    ~(1-t) of the full index, and candidate fan-out is bounded by
-    rare-shingle frequencies — no skew-join mitigation needed. Nothing in
-    this operator is broadcast by hint; AQE may still elect broadcasts at
-    small scale.
+    Returns (doc_a, doc_b, jaccard) with doc_a < doc_b.
     """
-    # Fused hashed-shingle build (round 13, guide §4.1): one interpreted
-    # lambda pass instead of two, distinct on 8-byte longs instead of
-    # strings, and NO array sort — nothing downstream reads the order
-    # (freq counts, the rarity window orders by (df_count, shingle), and
-    # array_intersect is order-blind). The old
-    # array_sort(transform(shingles(...), xxhash64)) form cost ~0.3 s
-    # more per corpus scan at sf0.1.
-    base = df.select(
-        F.col(id_col).alias("doc"),
-        hashed_shingles(tokens(F.col(text_col)), k).alias("sh"),
-    ).filter(F.size("sh") > 0).persist()
-
-    sh = base.select("doc", F.size("sh").alias("n_sh"), F.explode("sh").alias("shingle"))
-    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_count"))
-
-    from pyspark.sql import Window
-
-    rarity = Window.partitionBy("doc").orderBy("df_count", "shingle")
-    prefix_len = F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
-    # No broadcast hint on freq: it has one row per DISTINCT shingle, which
-    # scales with the corpus (billions at 100 TB). AQE will still broadcast
-    # it at runtime when it is actually small.
-    prefix = (
-        sh.join(freq, "shingle")
-        .withColumn("rn", F.row_number().over(rarity))
-        .filter(F.col("rn") <= prefix_len)
-        .select("doc", "n_sh", "shingle")
-    )
+    sets, _, prefix = _prefix_index(df, id_col, text_col, k=k, threshold=threshold)
 
     # PPJoin length filter fused into candidate generation (round 13,
     # guide §2.3 — shuffle fewer bytes into the verification joins):
@@ -146,9 +218,8 @@ def ngram_jaccard_pairs(
     # of incompatible sizes never leave the join. EXACT — a necessary
     # condition of the threshold, verified unchanged-results on the
     # fixture corpus (118,649 -> 43,440 candidate pairs at sf0.1; the
-    # final 256-pair result is identical). The threshold is slacked by
-    # 5e-5 because the final filter compares ROUND(j, 4) >= t.
-    tp = threshold - 0.00005
+    # final 256-pair result is identical).
+    tp = threshold - ROUNDING_SLACK
     a, b = prefix.alias("a"), prefix.alias("b")
     candidates = (
         a.join(
@@ -161,24 +232,7 @@ def ngram_jaccard_pairs(
         .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
     )
-
-    # Verification joins are plain shuffle joins on doc_a/doc_b (same shape
-    # as the minhash tier below): the (doc, shingle-array) relation is the
-    # FULL corpus and must never be broadcast — at 100 TB a broadcast here
-    # is an executor OOM by construction. AQE may still elect a broadcast
-    # at toy scale; that's its call, not a hint we bake in.
-    sets = base.select("doc", "sh")
-    pairs = (
-        candidates.join(sets.withColumnRenamed("doc", "doc_a").withColumnRenamed("sh", "sh_a"), "doc_a")
-        .join(sets.withColumnRenamed("doc", "doc_b").withColumnRenamed("sh", "sh_b"), "doc_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        pairs.withColumn("jaccard", round_to(inter / union, 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return verified_pairs(candidates, sets, sets, threshold=threshold)
 
 
 def containment_pairs(
@@ -199,96 +253,116 @@ def containment_pairs(
     needs and symmetric tiers can't see.
 
     Prefix filter (one-sided): C(a->b) >= t requires a and b to share a
-    shingle among the CONTAINED doc's first ``|Sa| - ceil(t*|Sa|) + 1``
-    shingles in rarest-first order — the container side has no such bound
-    (any superset qualifies), so a's prefix joins b's FULL index.
-    Candidate fan-out is bounded by the document frequency of a's rarest
-    shingles, the same hub-avoidance as ``ngram_jaccard_pairs``; the
-    verification join uses the full hashed shingle arrays, so results are
-    identical to the naive ordered all-pairs definition
+    shingle among the CONTAINED doc's prefix — the container side has no
+    such bound (any superset qualifies), so a's prefix joins b's FULL
+    index. Candidate fan-out is bounded by the document frequency of a's
+    rarest shingles, the same hub-avoidance as ``ngram_jaccard_pairs``;
+    the verification join uses the full hashed shingle arrays, so results
+    are identical to the naive ordered all-pairs definition
     (tests/test_dedup_adversarial.py pins this).
 
     Returns (doc_contained, doc_container, containment).
     """
-    # Fused hashed-shingle build, no sort (round 13 — same rationale as
-    # ngram_jaccard_pairs: nothing downstream is order-sensitive).
-    base = df.select(
-        F.col(id_col).alias("doc"),
-        hashed_shingles(tokens(F.col(text_col)), k).alias("sh"),
-    ).filter(F.size("sh") > 0).persist()
-
-    sh = base.select("doc", F.size("sh").alias("n_sh"), F.explode("sh").alias("shingle"))
-    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_count"))
-
-    from pyspark.sql import Window
-
-    rarity = Window.partitionBy("doc").orderBy("df_count", "shingle")
-    prefix_len = F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
-    prefix = (
-        sh.join(freq, "shingle")
-        .withColumn("rn", F.row_number().over(rarity))
-        .filter(F.col("rn") <= prefix_len)
-        .select("doc", "n_sh", "shingle")
-    )
+    sets, index, prefix = _prefix_index(df, id_col, text_col, k=k, threshold=threshold)
 
     # Size filter fused into candidate generation: n_inter <= |Sb|, so
     # C(a->b) >= t forces |Sb| >= t*|Sa| — a container can't be (much)
     # smaller than what it contains. On size-varied corpora this halves
     # the candidate set before any array is shuffled.
-    full_index = sh.select("doc", "n_sh", "shingle")
     candidates = (
         prefix.alias("a")
-        .join(full_index.alias("b"),
+        .join(index.alias("b"),
               (F.col("a.shingle") == F.col("b.shingle"))
               & (F.col("a.doc") != F.col("b.doc"))
               & (F.col("b.n_sh") >= F.lit(threshold) * F.col("a.n_sh")))
         .select(F.col("a.doc").alias("doc_contained"), F.col("b.doc").alias("doc_container"))
         .dropDuplicates(["doc_contained", "doc_container"])
     )
-
-    sets = base.select("doc", "sh")
-    pairs = (
-        candidates.join(
-            sets.withColumnRenamed("doc", "doc_contained").withColumnRenamed("sh", "sh_a"),
-            "doc_contained",
-        ).join(
-            sets.withColumnRenamed("doc", "doc_container").withColumnRenamed("sh", "sh_b"),
-            "doc_container",
-        )
-    )
-    containment = F.size(F.array_intersect("sh_a", "sh_b")) / F.size("sh_a")
-    return (
-        pairs.withColumn("containment", round_to(containment, 4))
-        .filter(F.col("containment") >= threshold)
-        .select("doc_contained", "doc_container", "containment")
-    )
+    return verified_pairs(candidates, sets, sets, threshold=threshold, measure="containment")
 
 
-def minhash_signatures(df: DataFrame, id_col: str, text_col: str, *, k: int = 3) -> DataFrame:
-    """Per-doc minhash signature: NUM_HASHES seeded xxhash64 minima over the
-    shingle set. Pure expression tree — evaluated in codegen, no UDF.
-
-    Shingle strings are hashed to longs ONCE; the NUM_HASHES per-seed
-    re-hashes then operate on 8-byte values (NUM_HASHES x cheaper than
-    re-hashing strings)."""
-    # Fused hashed-shingle build (round 13): one lambda pass, distinct on
-    # longs — see operators/text.hashed_shingles.
-    base = df.select(
-        F.col(id_col).alias("doc"),
-        hashed_shingles(tokens(F.col(text_col)), k).alias("sh"),
-    ).filter(F.size("sh") > 0)
+def _xxhash64_signatures(
+    df: DataFrame, id_col: str, text_col: str, k: int
+) -> tuple[DataFrame, DataFrame]:
+    """NUM_HASHES seeded xxhash64 minima over the hashed shingle set. Pure
+    expression tree — evaluated in codegen, no UDF. Shingle strings are
+    hashed to longs ONCE; the per-seed re-hashes then operate on 8-byte
+    values (NUM_HASHES x cheaper than re-hashing strings)."""
     sig = F.transform(
         F.sequence(F.lit(0), F.lit(NUM_HASHES - 1)),
         lambda seed: F.array_min(F.transform(F.col("sh"), lambda h: F.xxhash64(h, seed))),
     )
-    return base.select("doc", "sh", sig.alias("sig"))
+    sigs = _hashed_sets(df, id_col, text_col, k).select("doc", "sh", sig.alias("sig")).persist()
+    return sigs.select("doc", "sh"), sigs
+
+
+def _md5_signatures(
+    df: DataFrame, id_col: str, text_col: str, k: int
+) -> tuple[DataFrame, DataFrame]:
+    """Kirsch-Mitzenmacher double hashing over md5: h1/h2 are the first
+    two 32-bit words of md5(shingle) and ``h_i = (h1 + i*h2) mod 2^32``
+    (Kirsch & Mitzenmacher, ESA 2006: two hashes generate a family with
+    the same asymptotics). ``(h1 + 31*h2) < 2^37``, so the arithmetic is
+    overflow-exact in any engine's 64-bit integers. The sets are the
+    string shingles themselves.
+
+    DISTINCT-SHINGLE-SPACE form (round 6): md5+conv is the expensive
+    per-shingle step, and template-duplicated corpora — the whole reason
+    a dedup pass exists — repeat shingles heavily across docs (sf0.1
+    fixture: 260k occurrences over 27k distinct). Hash once per DISTINCT
+    shingle, equi-join the (h1, h2) pair back to the occurrence stream,
+    and fold the family as NUM_HASHES map-side-combined min aggregates per
+    doc. Measured 3.8 -> 2.1 s at sf0.1 with an identical verified pair
+    set; the per-occurrence expression form had to persist mid-pipeline
+    anyway (seed lambdas re-inline their input), so the persisted sets
+    replace that materialization."""
+    sets = (
+        df.select(F.col(id_col).alias("doc"), shingles(tokens(F.col(text_col)), k).alias("sh"))
+        .filter(F.size("sh") > 0)
+        .persist()
+    )
+    occ = sets.select("doc", F.explode("sh").alias("s"))
+    digest = F.md5(F.col("s"))
+    dist = occ.select("s").distinct().select(
+        "s",
+        F.conv(F.substring(digest, 1, 8), 16, 10).cast("long").alias("h1"),
+        F.conv(F.substring(digest, 9, 8), 16, 10).cast("long").alias("h2"),
+    )
+    mod = F.lit(4294967296)
+    sigs = (
+        occ.join(dist, "s")
+        .groupBy("doc")
+        .agg(
+            *[
+                F.min((F.col("h1") + F.lit(i) * F.col("h2")) % mod).alias(f"_m{i}")
+                for i in range(NUM_HASHES)
+            ]
+        )
+        .select("doc", F.array(*[f"_m{i}" for i in range(NUM_HASHES)]).alias("sig"))
+    )
+    return sets, sigs
+
+
+# hash family -> signature builder
+MINHASH_FAMILIES = {"xxhash64": _xxhash64_signatures, "md5": _md5_signatures}
+
+
+def minhash_signatures(
+    df: DataFrame, id_col: str, text_col: str, *, k: int = 3, family: str = "xxhash64"
+) -> tuple[DataFrame, DataFrame]:
+    """(sets, sigs): the per-doc shingle sets (doc, sh) that verification
+    reads, and the NUM_HASHES-wide minhash signatures (doc, sig, ...)
+    under ``family``. One relation feeding both is persisted (cache
+    contract above), so the corpus is tokenized once."""
+    return MINHASH_FAMILIES[family](df, id_col, text_col, k)
 
 
 def band_buckets(sigs: DataFrame) -> DataFrame:
-    """(doc, band, bucket) LSH band index from a (doc, sh, sig) signature
+    """(doc, band, bucket) LSH band index from a (doc, sig) signature
     relation: each signature is sliced into BANDS bands of ROWS_PER_BAND
     values, each slice hashed to one bucket id. Two docs collide in a band
-    iff that slice of their signatures is identical.
+    iff that slice of their signatures is identical (or, for a different
+    slice, on a 64-bit hash collision — verification drops any such pair).
 
     This narrow 3-column relation IS the persistable corpus index for
     batch-vs-corpus incremental near-dup (operators/incremental.py): write
@@ -308,6 +382,23 @@ def band_buckets(sigs: DataFrame) -> DataFrame:
     )
 
 
+def _band_self_join(banded: DataFrame) -> DataFrame:
+    """(doc_a, doc_b) candidate pairs, doc_a < doc_b: docs sharing at least
+    one (band, bucket). Narrow relation only — shingle arrays are joined
+    back after pair-dedup (``verified_pairs``)."""
+    a, b = banded.alias("a"), banded.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.doc") < F.col("b.doc")),
+        )
+        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
+        .dropDuplicates(["doc_a", "doc_b"])
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -315,6 +406,7 @@ def minhash_lsh_pairs(
     *,
     k: int = 3,
     threshold: float = 0.8,
+    family: str = "xxhash64",
 ) -> DataFrame:
     """MinHash-LSH candidate generation + exact-Jaccard verification.
 
@@ -322,153 +414,13 @@ def minhash_lsh_pairs(
     iff that slice of their signatures is identical -> candidate. With
     NUM_HASHES=32 hashes / BANDS=16 bands (2 rows per band) the S-curve
     puts P(candidate) = 1-(1-J^2)^16 — ~0.9997 at J>=0.8 (our default
-    threshold), ~50% at J~0.2.
+    threshold), ~50% at J~0.2. Both families verify with the same exact
+    Jaccard, so where the S-curve saturates they return the same pairs
+    (pinned in tests/test_llm_ops.py).
     """
-    # Persist: the signature relation feeds both sides of the band self-join
-    # and the verification lookups.
-    sigs = minhash_signatures(df, id_col, text_col, k=k).persist()
-
-    # Narrow relation for the self-join: (doc, band, bucket) only — shingle
-    # arrays are joined back AFTER pair-dedup so wide rows never shuffle
-    # through the candidate explosion.
-    banded = band_buckets(sigs)
-
-    a = banded.alias("a")
-    b = banded.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-
-    sets = sigs.select("doc", "sh")
-    pairs = (
-        candidates.join(sets.withColumnRenamed("doc", "doc_a").withColumnRenamed("sh", "sh_a"), "doc_a")
-        .join(sets.withColumnRenamed("doc", "doc_b").withColumnRenamed("sh", "sh_b"), "doc_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        pairs.withColumn("jaccard", round_to(inter / union, 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-
-
-def minhash_lsh_pairs_md5(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    k: int = 3,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """MinHash-LSH near-dup with a CROSS-ENGINE hash family — the fully
-    DuckDB-oracled twin of ``minhash_lsh_pairs``.
-
-    The xxhash64 tier is faster but engine-specific (seeds differ between
-    engines), so it can only be rows-only + pytest-pinned. This tier
-    derives the NUM_HASHES hash family from md5 — the one string hash
-    both engines compute identically — via Kirsch-Mitzenmacher double
-    hashing: h1/h2 are the first two 32-bit words of md5(shingle) and
-    ``h_i = (h1 + i*h2) mod 2^32`` (Kirsch & Mitzenmacher, ESA 2006:
-    two hashes generate a family with the same asymptotics). One md5 per
-    distinct shingle, then NUM_HASHES cheap integer ops — same cost
-    structure as the xxhash64 tier (one string hash + cheap rehashes).
-    ``(h1 + 31*h2) < 2^37`` so the arithmetic is overflow-exact in both
-    engines' 64-bit integers.
-
-    Banding/verification mirror ``minhash_lsh_pairs``: BANDS buckets per
-    doc (bucket = the band's minima joined as a string — identical
-    decimal rendering on both engines), candidates from bucket
-    collisions only, exact-Jaccard verification over the string shingle
-    sets. On corpora where the S-curve saturates (J >= threshold =>
-    P(candidate) ~ 1), both tiers return the same verified pair set —
-    pinned in tests/test_llm_ops.py.
-    """
-    sh = shingles(tokens(F.col(text_col)), k)
-    # The (doc, sh) relation is persisted: it feeds the occurrence explode
-    # AND the verification joins (like the signature persist in
-    # ``minhash_lsh_pairs``).
-    base = (
-        df.select(F.col(id_col).alias("doc"), sh.alias("sh"))
-        .filter(F.size("sh") > 0)
-        .persist()
-    )
-    # DISTINCT-SHINGLE-SPACE rewrite (round 6; the same trade that won 4x
-    # on fuzzy linkage): md5+conv is the expensive per-shingle step, and
-    # template-duplicated corpora — the whole reason a dedup pass exists —
-    # repeat shingles heavily across docs (sf0.1 fixture: 260k occurrences
-    # over 27k distinct). Hash once per DISTINCT shingle, equi-join the
-    # (h1, h2) pair back to the occurrence stream, and fold the
-    # Kirsch-Mitzenmacher family as NUM_HASHES map-side-combined min
-    # aggregates per doc. Measured 3.8 -> 2.1 s at sf0.1 with an
-    # identical verified pair set; the earlier per-occurrence expression
-    # form also had to persist mid-pipeline anyway (seed lambdas
-    # re-inline their input: 21-27 s unpersisted), so this replaces that
-    # materialization, not a zero-cost pipeline. An earlier round's
-    # history note: staged projections alone do NOT survive Catalyst's
-    # collapsing across lambda boundaries.
-    occ = base.select("doc", F.explode("sh").alias("s"))
-    digest = F.md5(F.col("s"))
-    dist = occ.select("s").distinct().select(
-        "s",
-        F.conv(F.substring(digest, 1, 8), 16, 10).cast("long").alias("h1"),
-        F.conv(F.substring(digest, 9, 8), 16, 10).cast("long").alias("h2"),
-    )
-    mod = F.lit(4294967296)
-    sigs = (
-        occ.join(dist, "s")
-        .groupBy("doc")
-        .agg(
-            *[
-                F.min((F.col("h1") + F.lit(i) * F.col("h2")) % mod).alias(f"_m{i}")
-                for i in range(NUM_HASHES)
-            ]
-        )
-        .select("doc", F.array(*[f"_m{i}" for i in range(NUM_HASHES)]).alias("sig"))
-    )
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                ":",
-                *[F.element_at("sig", b * ROWS_PER_BAND + r + 1) for r in range(ROWS_PER_BAND)],
-            ).alias("bucket"),
-        )
-        for b in range(BANDS)
-    ]
-    banded = sigs.select("doc", F.explode(F.array(*band_cols)).alias("bb")).select(
-        "doc", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    sets = base.select("doc", "sh")
-    pairs = (
-        candidates.join(sets.withColumnRenamed("doc", "doc_a").withColumnRenamed("sh", "sh_a"), "doc_a")
-        .join(sets.withColumnRenamed("doc", "doc_b").withColumnRenamed("sh", "sh_b"), "doc_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        pairs.withColumn("jaccard", round_to(inter / union, 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    sets, sigs = minhash_signatures(df, id_col, text_col, k=k, family=family)
+    candidates = _band_self_join(band_buckets(sigs))
+    return verified_pairs(candidates, sets, sets, threshold=threshold)
 
 
 def connected_components(
@@ -548,26 +500,40 @@ def connected_components(
     return labels.select("doc", F.col("label").alias("cluster_id"))
 
 
-def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """64-bit SimHash fingerprint per doc, fully in expression land:
-    bit_i = sign( sum_tokens (token_hash bit_i ? +1 : -1) ).
+# hash family -> (per-token hash as a SQL expression over token t,
+# fingerprint width in bits). md5's token hash is the first 15 hex digits
+# parsed as an integer: 60 bits, always positive — the same cross-engine
+# hash the winnowing fingerprint uses (queries/text_extra.py).
+SIMHASH_FAMILIES = {
+    "xxhash64": ("xxhash64(t)", 64),
+    "md5": ("CAST(conv(substr(md5(t), 1, 15), 16, 10) AS BIGINT)", 60),
+}
+
+
+def simhash(df: DataFrame, id_col: str, text_col: str, *, family: str = "xxhash64") -> DataFrame:
+    """SimHash fingerprint per doc, fully in expression land:
+    bit_i = sign( sum_tokens (token_hash bit_i ? +1 : -1) ), with the
+    token hash and width from ``SIMHASH_FAMILIES`` (64 bits for xxhash64,
+    60 for md5). Token-hash bit i lands on fingerprint bit
+    (width - 1 - i), which the DuckDB oracles mirror exactly.
 
     Written as a SQL lambda because the bit index is itself a lambda
     variable (the Python ``shiftright`` API only takes a literal count).
     Single pass over the tokens: each token is hashed ONCE and unpacked
-    into a +-1 bit vector folded into a 64-wide count accumulator (the
-    naive per-bit formulation re-hashes every token 64 times).
+    into a +-1 bit vector folded into a width-wide count accumulator (the
+    naive per-bit formulation re-hashes every token once per bit).
     """
+    token_hash, bits = SIMHASH_FAMILIES[family]
     fingerprint = F.expr(
         f"""
         aggregate(
           transform(
             aggregate(
-              transform(split({text_col}, ' '), t -> xxhash64(t)),
-              array_repeat(0, 64),
+              transform(split({text_col}, ' '), t -> {token_hash}),
+              array_repeat(0, {bits}),
               (acc, h) -> zip_with(
                 acc,
-                transform(sequence(0, 63), i ->
+                transform(sequence(0, {bits - 1}), i ->
                   CASE WHEN (shiftright(h, CAST(i AS INT)) & 1L) = 1L THEN 1 ELSE -1 END),
                 (a, b) -> a + b)),
             c -> CASE WHEN c > 0 THEN 1L ELSE 0L END),
@@ -578,65 +544,17 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def simhash_pairs(
-    df: DataFrame, id_col: str, text_col: str, *, max_hamming: int = 6
+    df: DataFrame, id_col: str, text_col: str, *, max_hamming: int = 6, family: str = "xxhash64"
 ) -> DataFrame:
     """SimHash near-dup pairs within a Hamming radius, blocked on the top
     16 bits (docs differing there cannot be near at small radii ~always;
     standard multi-probe tradeoff, recall tested against exact Jaccard)."""
+    _, bits = SIMHASH_FAMILIES[family]
     # Persist (cache contract above): both sides of the self-join read the
-    # fingerprint relation — the 64-wide aggregate is the expensive part
+    # fingerprint relation — the bit-wide aggregate is the expensive part
     # and must not run twice.
-    sh = simhash(df, id_col, text_col).withColumn(
-        "block", F.shiftright("simhash", 48)
-    ).persist()
-    a, b = sh.alias("a"), sh.alias("b")
-    xor = F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-    return (
-        a.join(b, (F.col("a.block") == F.col("b.block")) & (F.col("a.doc") < F.col("b.doc")))
-        .withColumn("hamming", F.bit_count(xor))
-        .filter(F.col("hamming") <= max_hamming)
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"), "hamming")
-    )
-
-
-def simhash_md5(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """60-bit SimHash with a CROSS-ENGINE token hash — the oracled twin of
-    ``simhash`` (xxhash64 is engine-specific, so that tier is rows-only).
-
-    The token hash is the first 15 hex digits of md5 parsed as an integer
-    (60 bits, always positive — the same cross-engine hash the winnowing
-    fingerprint uses, queries/text_extra.py). Same single-pass fold as
-    the xxhash64 tier; the fold maps token-hash bit i to fingerprint bit
-    (59 - i), which the DuckDB oracle mirrors exactly.
-    """
-    fingerprint = F.expr(
-        f"""
-        aggregate(
-          transform(
-            aggregate(
-              transform(split({text_col}, ' '),
-                        t -> CAST(conv(substr(md5(t), 1, 15), 16, 10) AS BIGINT)),
-              array_repeat(0, 60),
-              (acc, h) -> zip_with(
-                acc,
-                transform(sequence(0, 59), i ->
-                  CASE WHEN (shiftright(h, CAST(i AS INT)) & 1L) = 1L THEN 1 ELSE -1 END),
-                (a, b) -> a + b)),
-            c -> CASE WHEN c > 0 THEN 1L ELSE 0L END),
-          0L, (acc, b) -> shiftleft(acc, 1) | b)
-        """
-    )
-    return df.select(F.col(id_col).alias("doc"), fingerprint.alias("simhash"))
-
-
-def simhash_pairs_md5(
-    df: DataFrame, id_col: str, text_col: str, *, max_hamming: int = 6
-) -> DataFrame:
-    """Cross-engine simhash near-dup pairs: same top-16-bit blocking and
-    Hamming filter as ``simhash_pairs``, over the md5-derived 60-bit
-    fingerprints (block = bits 59..44)."""
-    sh = simhash_md5(df, id_col, text_col).withColumn(
-        "block", F.shiftright("simhash", 44)
+    sh = simhash(df, id_col, text_col, family=family).withColumn(
+        "block", F.shiftright("simhash", bits - 16)
     ).persist()
     a, b = sh.alias("a"), sh.alias("b")
     xor = F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))

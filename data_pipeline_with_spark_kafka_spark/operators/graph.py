@@ -126,34 +126,6 @@ def _pagerank_loop(edges: DataFrame, *, damping: float, iterations: int) -> Data
     return ranks
 
 
-def pagerank_reference(
-    edge_list: list[tuple], *, damping: float = 0.85, iterations: int = 10
-) -> dict:
-    """Pure-Python reference (tests): same init, dangling handling, and
-    update order as the DataFrame loop."""
-    edges = sorted(set(edge_list))
-    nodes = sorted({s for s, _ in edges} | {d for _, d in edges})
-    n = len(nodes)
-    if n == 0:
-        return {}
-    out: dict = {}
-    for s, d in edges:
-        out.setdefault(s, []).append(d)
-    ranks = {v: 1.0 / n for v in nodes}
-    base = (1.0 - damping) / n
-    for _ in range(iterations):
-        dangling = sum(r for v, r in ranks.items() if v not in out)
-        contrib: dict = {v: 0.0 for v in nodes}
-        for s, ds in out.items():
-            share = ranks[s] / len(ds)
-            for d in ds:
-                contrib[d] += share
-        ranks = {
-            v: base + damping * (contrib[v] + dangling / n) for v in nodes
-        }
-    return ranks
-
-
 def bfs_levels(
     edges: DataFrame,
     source,
@@ -225,26 +197,6 @@ def _bfs_loop(edges: DataFrame, source, *, directed: bool, max_iterations: int) 
         # dropping the edge cache never invalidates the returned result
         hops.unpersist()
     return visited
-
-
-def bfs_reference(edge_list, source, *, directed: bool = True):
-    """Pure-python BFS for test oracles: {node: level}."""
-    from collections import deque
-
-    adj: dict = {}
-    for s, d in edge_list:
-        adj.setdefault(s, []).append(d)
-        if not directed:
-            adj.setdefault(d, []).append(s)
-    seen = {source: 0}
-    q = deque([source])
-    while q:
-        u = q.popleft()
-        for v in adj.get(u, []):
-            if v not in seen:
-                seen[v] = seen[u] + 1
-                q.append(v)
-    return seen
 
 
 # --------------------------------------------------------------------------
@@ -332,30 +284,6 @@ def _lpa_loop(edges: DataFrame, *, iterations: int) -> DataFrame:
     finally:
         sym.unpersist()
         nodes.unpersist()
-    return labels
-
-
-def label_propagation_reference(edge_list, iterations: int = 10):
-    """Pure-Python mirror of ``label_propagation`` for pytest pinning."""
-    from collections import Counter, defaultdict
-
-    adj = defaultdict(set)
-    nodes = set()
-    for s, d in edge_list:
-        adj[s].add(d)
-        adj[d].add(s)
-        nodes.update((s, d))
-    labels = {n: n for n in nodes}
-    for _ in range(iterations):
-        new = {}
-        for n in sorted(nodes):
-            c = Counter(labels[m] for m in adj[n])
-            c[labels[n]] += 1  # self-vote
-            best = max(c.items(), key=lambda kv: (kv[1], -kv[0]))[0]
-            new[n] = best
-        if new == labels:
-            return new
-        labels = new
     return labels
 
 

@@ -34,6 +34,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_pipeline_with_spark_kafka_spark.operators.dedup import (
+    band_buckets,
+    minhash_signatures,
+    verified_pairs,
+)
+
 
 def fingerprints(df: DataFrame, id_col: str, content_col: str) -> DataFrame:
     """(id, fp, fp2) — 128-bit content fingerprint as two independently
@@ -125,17 +131,8 @@ def corpus_near_index(
     here depends on the batch. Callers that persist them to disk get the
     probe below without ever re-scanning the corpus text.
     """
-    from data_pipeline_with_spark_kafka_spark.operators.dedup import (
-        band_buckets,
-        minhash_signatures,
-    )
-
-    # Cache contract (same as dedup.py): the signature relation feeds both
-    # returned index relations; persisting it keeps corpus tokenization +
-    # hashing to one pass when the index is built in-session. (Persisted-
-    # to-parquet indexes never hit this path at all.)
-    sigs = minhash_signatures(corpus, id_col, content_col, k=k).persist()
-    return band_buckets(sigs), sigs.select("doc", "sh")
+    sets, sigs = minhash_signatures(corpus, id_col, content_col, k=k)
+    return band_buckets(sigs), sets
 
 
 def incremental_near_dups(
@@ -166,38 +163,14 @@ def incremental_near_dups(
     at J >= 0.8 — and verification is exact, so false candidates cost
     only a bounded array intersection.
     """
-    from data_pipeline_with_spark_kafka_spark.operators.dedup import (
-        band_buckets,
-        minhash_signatures,
-    )
-    from data_pipeline_with_spark_kafka_spark.functions.rounding import round_to
-
-    batch_sigs = minhash_signatures(batch, id_col, content_col, k=k).persist()
-    batch_bands = band_buckets(batch_sigs)
-
+    batch_sets, batch_sigs = minhash_signatures(batch, id_col, content_col, k=k)
     candidates = (
-        batch_bands.withColumnRenamed("doc", "batch_doc")
+        band_buckets(batch_sigs).withColumnRenamed("doc", "batch_doc")
         .join(corpus_bands.withColumnRenamed("doc", "corpus_doc"), ["band", "bucket"])
         .select("batch_doc", "corpus_doc")
         .dropDuplicates(["batch_doc", "corpus_doc"])
     )
-    pairs = (
-        candidates.join(
-            batch_sigs.select(F.col("doc").alias("batch_doc"), F.col("sh").alias("sh_a")),
-            "batch_doc",
-        )
-        .join(
-            corpus_sets.select(F.col("doc").alias("corpus_doc"), F.col("sh").alias("sh_b")),
-            "corpus_doc",
-        )
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        pairs.withColumn("jaccard", round_to(inter / union, 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("batch_doc", "corpus_doc", "jaccard")
-    )
+    return verified_pairs(candidates, batch_sets, corpus_sets, threshold=threshold)
 
 
 def incremental_novel_near(

@@ -63,8 +63,7 @@ def hashed_shingles(tokens_col: Column, k: int = 3) -> Column:
     deduplicating the LONGS does one walk and compares 8-byte values
     (measured ~0.63 -> 0.53 s median on the sf0.1 corpus scan, identical
     output arrays). Set semantics are preserved up to 64-bit collisions
-    (~1e-11 on this corpus), the same tolerance ``shingle_sets`` has
-    always documented — the DuckDB oracles (string sets) stay the
+    (~1e-11 on this corpus) — the DuckDB oracles (string sets) stay the
     arbiter. Output order is the shingle positional order; consumers
     that need a sort apply their own."""
     n = F.size(tokens_col)

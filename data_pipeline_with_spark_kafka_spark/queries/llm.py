@@ -2,9 +2,10 @@
 MinHash-LSH / SimHash / embedding-cosine), similarity search (brute-force
 and LSH ANN), text analysis, multimodal plumbing.
 
-SQL-expressible tiers carry a DuckDB oracle; the probabilistic tiers
-(xxhash64-based minhash/simhash, LSH ANN) are rows-only here and
-recall-tested against the exact tiers in tests/test_llm_ops.py.
+SQL-expressible tiers carry a DuckDB oracle, the xxhash64 minhash /
+simhash tiers included (queries/xxh64_sql.py); the remaining
+probabilistic tiers (LSH ANN) are rows-only here and recall-tested
+against the exact tiers in tests/test_llm_ops.py.
 """
 
 from __future__ import annotations
@@ -180,8 +181,7 @@ def llm_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     xxhash64 (XXH64, seed 42) bit-for-bit in pure SQL
     (queries/xxh64_sql.py), mirroring the shingle hash, all 32 seeded
     rehashes, the band-bucket hash chain, AND the exact-Jaccard
-    verification — the production tier is hash-verified, not just its
-    md5 twin."""
+    verification."""
     docs = load_table_fanned(spark, sf_dir, "documents")
     return dedup.minhash_lsh_pairs(docs, "doc_id", "text", k=3, threshold=0.8)
 
@@ -231,14 +231,15 @@ WHERE ROUND(n_inter * 1.0 / (sa.n_sh + sb.n_sh - n_inter), 4) >= 0.8
 
 @register("llm_dedup_minhash_lsh_md5", oracle=MINHASH_MD5_ORACLE, tags=("llm", "dedup"))
 def llm_dedup_minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH with a cross-engine md5-derived hash family
-    (Kirsch-Mitzenmacher double hashing) — the fully-oracled twin of the
-    xxhash64 tier: DuckDB mirrors signature minima, band buckets,
-    candidate collisions, AND the exact-Jaccard verification, end to
-    end. Proves the LSH pipeline itself cross-engine, not just its
-    verified output."""
+    """``llm_dedup_minhash_lsh`` under the md5 hash family
+    (Kirsch-Mitzenmacher double hashing over md5, verified on the string
+    shingle sets). The oracle computes the signature minima in plain SQL,
+    without an xxhash64 port, and bands them by the minima themselves; the
+    engine buckets the same minima by their xxhash64, which collides only
+    when the minima do (up to 64-bit hash collisions, which the exact
+    Jaccard check drops), so both produce the same verified pairs."""
     docs = load_table_fanned(spark, sf_dir, "documents")
-    return dedup.minhash_lsh_pairs_md5(docs, "doc_id", "text", k=3, threshold=0.8)
+    return dedup.minhash_lsh_pairs(docs, "doc_id", "text", k=3, threshold=0.8, family="md5")
 
 
 @register("llm_dedup_simhash", oracle=simhash_xxh64_oracle(), tags=("llm", "dedup"))
@@ -247,8 +248,7 @@ def llm_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Fully oracled since round 8: the DuckDB oracle hashes every token
     occurrence with a pure-SQL XXH64 (queries/xxh64_sql.py) and replays
-    the same sign-fold into bit (63 - i) — the production fingerprints
-    are hash-verified against DuckDB, not just the md5 twin."""
+    the same sign-fold into bit (63 - i)."""
     return dedup.simhash(load_table_fanned(spark, sf_dir, "documents"), "doc_id", "text")
 
 
@@ -279,12 +279,12 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 6
 
 @register("llm_dedup_simhash_md5", oracle=SIMHASH_MD5_ORACLE, tags=("llm", "dedup"))
 def llm_dedup_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs with a cross-engine md5-derived 60-bit
-    fingerprint — the fully-oracled twin of the xxhash64 tier: DuckDB
-    mirrors the sign-aggregated fingerprint bit-for-bit, the top-16-bit
+    """SimHash near-dup PAIRS under the md5 hash family (60-bit
+    fingerprint from md5 token hashes): the oracle mirrors the
+    sign-aggregated fingerprint bit-for-bit in plain SQL, the top-16-bit
     blocking, and the Hamming filter."""
     docs = load_table_fanned(spark, sf_dir, "documents")
-    return dedup.simhash_pairs_md5(docs, "doc_id", "text", max_hamming=6)
+    return dedup.simhash_pairs(docs, "doc_id", "text", max_hamming=6, family="md5")
 
 
 EMB_NEARDUP_ORACLE = """
@@ -578,12 +578,11 @@ LIMIT 10
 
 @register("llm_sim_topk_lsh_md5", oracle=SIM_LSH_MD5_ORACLE, tags=("llm", "similarity"))
 def llm_sim_topk_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-probe hyperplane-LSH top-10 with a cross-engine md5-derived
-    Rademacher family (`similarity.make_planes_md5`) — the fully-oracled
-    twin of `llm_sim_topk_lsh`: DuckDB mirrors the sign projections, the
-    bucket fold (plane 0 = MSB), the radius-1 probe, and the exact
-    cosine rerank. Completes the cross-engine proof set for every
-    hash-based pipeline (MinHash, SimHash, hyperplane LSH)."""
+    """``llm_sim_topk_lsh`` with an md5-derived Rademacher family
+    (`similarity.make_planes_md5`) instead of seeded-numpy planes: the
+    oracle derives the planes itself in SQL rather than embedding them as
+    literals, then mirrors the sign projections, the bucket fold (plane 0
+    = MSB), the radius-1 probe, and the exact cosine rerank."""
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.lsh_topk(
         emb,

@@ -9,7 +9,12 @@ from pyspark.sql import functions as F
 
 from data_pipeline_with_spark_kafka_spark.operators import clustering, dedup
 from data_pipeline_with_spark_kafka_spark.queries.registry import register
-from data_pipeline_with_spark_kafka_spark.sources.tables import load_table, load_table_fanned, table_row_count
+from data_pipeline_with_spark_kafka_spark.sources.tables import (
+    load_table,
+    load_table_fanned,
+    parquet_fingerprint,
+    table_row_count,
+)
 
 
 # Same oracle as the exact expression tier (queries/llm.py): the BLAS
@@ -426,27 +431,17 @@ def llm_dedup_incremental_near_probe(spark: SparkSession, sf_dir: str) -> DataFr
     batch = with_half.filter(F.col("doc_id") >= F.col("half")).drop("half")
     known = with_half.filter(F.col("doc_id") < F.col("half")).drop("half")
 
-    # Key the persisted index by a CONTENT fingerprint, not just the
-    # path: a regenerated fixture at the same sf_dir (new seed, changed
-    # generator) must invalidate the index, or the probe would silently
-    # join a stale corpus's bands against fresh data. Parquet footer
-    # (size, mtime_ns) of the documents file is a cheap content proxy
-    # that changes on any rewrite; distinct corpora therefore get
-    # distinct index trees (growth bounded by corpora actually used).
+    # Key the persisted index by the documents table's content
+    # fingerprint, not just the path: a regenerated fixture at the same
+    # sf_dir must invalidate the index, or the probe would silently join a
+    # stale corpus's bands against fresh data. Same staleness rule as the
+    # session memo's table reads (``tables.parquet_fingerprint``); distinct
+    # corpora get distinct index trees.
     doc_path = os.path.join(sf_dir, "documents.parquet")
-    if os.path.isdir(doc_path):
-        stat_sig = ",".join(
-            f"{f}:{os.stat(os.path.join(doc_path, f)).st_size}:"
-            f"{os.stat(os.path.join(doc_path, f)).st_mtime_ns}"
-            for f in sorted(os.listdir(doc_path))
-        )
-    else:
-        st = os.stat(doc_path)
-        stat_sig = f"{st.st_size}:{st.st_mtime_ns}"
     root = os.path.join(
         tempfile.gettempdir(),
         "spark_graft_near_index",
-        hashlib.md5(f"{sf_dir}|{stat_sig}".encode()).hexdigest()[:16],
+        hashlib.md5(f"{doc_path}|{parquet_fingerprint(doc_path)}".encode()).hexdigest()[:16],
     )
     bands_p = os.path.join(root, "bands")
     sets_p = os.path.join(root, "sets")

@@ -2,10 +2,9 @@
 
 Spark's production dedup tiers (MinHash-LSH, SimHash) hash with
 ``xxhash64`` — deterministic XXH64 (seed 42, type-tagged byte layouts) —
-which no other engine exposes, so those queries were "rows-only" with
-fully-oracled md5 twins. This module removes that gap: it emits DuckDB
-SQL that reproduces XXH64 bit-for-bit using HUGEINT arithmetic mod 2^64
-(64-bit multiply via 32-bit limb splitting, rotates as shift-or, xor on
+which no other engine exposes. This module emits DuckDB SQL that
+reproduces XXH64 bit-for-bit using HUGEINT arithmetic mod 2^64 (64-bit
+multiply via 32-bit limb splitting, rotates as shift-or, xor on
 HUGEINT), so the *production* tiers themselves are hash-verified against
 the oracle.
 

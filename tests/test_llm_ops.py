@@ -41,26 +41,25 @@ def test_minhash_lsh_recall_vs_exact(docs):
 
 
 def test_minhash_md5_twin_matches_xxhash_tier(docs):
-    """The md5/Kirsch-Mitzenmacher tier (cross-engine oracled) and the
-    xxhash64 tier verify candidates with the same exact Jaccard, so on a
-    corpus where the S-curve saturates both return the SAME pair set —
-    this binds the rows-only tier to the oracled one."""
+    """The md5 (Kirsch-Mitzenmacher) and xxhash64 hash families verify
+    candidates with the same exact Jaccard, so on a corpus where the
+    S-curve saturates both return the SAME pair set."""
     xx = {
         (r.doc_a, r.doc_b, r.jaccard)
         for r in dedup.minhash_lsh_pairs(docs, "doc_id", "text", k=3, threshold=0.8).collect()
     }
     md = {
         (r.doc_a, r.doc_b, r.jaccard)
-        for r in dedup.minhash_lsh_pairs_md5(docs, "doc_id", "text", k=3, threshold=0.8).collect()
+        for r in dedup.minhash_lsh_pairs(docs, "doc_id", "text", k=3, threshold=0.8, family="md5").collect()
     }
     assert xx == md
     assert md, "fixture should contain planted near-duplicates"
 
 
 def test_simhash_md5_matches_pure_python(spark):
-    """The md5/60-bit fingerprint (cross-engine oracled tier) equals a
-    direct hashlib reference, including the bit-i -> position-(59-i)
-    fold mapping the DuckDB oracle mirrors."""
+    """The md5-family 60-bit fingerprint equals a direct hashlib
+    reference, including the bit-i -> position-(59-i) fold mapping the
+    DuckDB oracle mirrors."""
     import hashlib
 
     texts = ["spark row batch spark", "a", "join join join hash"]
@@ -77,7 +76,7 @@ def test_simhash_md5_matches_pure_python(spark):
         return fp
 
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
-    got = {r.doc: r.simhash for r in dedup.simhash_md5(df, "doc_id", "text").collect()}
+    got = {r.doc: r.simhash for r in dedup.simhash(df, "doc_id", "text", family="md5").collect()}
     for i, t in enumerate(texts):
         assert got[i] == ref(t), t
 
@@ -88,7 +87,7 @@ def test_simhash_md5_pairs_dup_invariance(docs):
     both = docs.select("doc_id", "text").unionAll(dup)
     pairs = {
         (r.doc_a, r.doc_b)
-        for r in dedup.simhash_pairs_md5(both, "doc_id", "text", max_hamming=0).collect()
+        for r in dedup.simhash_pairs(both, "doc_id", "text", max_hamming=0, family="md5").collect()
     }
     n = docs.count()
     assert all((i, i + 1_000_000) in pairs for i in {r.doc_id for r in docs.select("doc_id").collect()})
@@ -112,10 +111,11 @@ def test_simhash_pairs_find_planted_duplicates(spark, docs):
     sample = docs.filter(F.col("doc_id") < 50).select("doc_id", "text")
     dup = sample.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
     both = sample.unionByName(dup)
-    pairs = dedup.simhash_pairs(both, "doc_id", "text", max_hamming=0)
-    found = {(r.doc_a, r.doc_b) for r in pairs.collect()}
     expected = {(i, i + 1_000_000) for i in range(50)}
-    assert expected <= found
+    for family in dedup.SIMHASH_FAMILIES:
+        pairs = dedup.simhash_pairs(both, "doc_id", "text", max_hamming=0, family=family)
+        found = {(r.doc_a, r.doc_b) for r in pairs.collect()}
+        assert expected <= found, family
 
 
 def test_exact_dedup_counts_duplicates(docs):
