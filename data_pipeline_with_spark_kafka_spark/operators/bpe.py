@@ -10,8 +10,7 @@ corpus count. One merge iteration is:
    tail, exploded, count weighted by word frequency — one map-side-
    combined aggregate;
 2. argmax pair (deterministic: ties break lexicographically) — one tiny
-   collect, same driver-loop discipline as k-means / connected
-   components;
+   collect;
 3. merge the winning pair inside every word's symbol array — a pure
    ``aggregate`` lambda (pop-last formulation: walking left to right, if
    the accumulator's last symbol is ``a`` and the current is ``b``,
@@ -27,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_pipeline_with_spark_kafka_spark.operators.iterate import iterate
 from data_pipeline_with_spark_kafka_spark.sources import memo
 
 END_OF_WORD = "</w>"
@@ -95,8 +95,10 @@ def train_bpe(
     scale even at 100 TB of corpus). When it fits under ``driver_limit``
     rows the loop runs driver-side (one pass per merge over an in-memory
     dict — no per-iteration job scheduling); a vocabulary beyond the limit
-    falls back to the distributed per-iteration loop below. Both paths are
-    merge-for-merge identical (tested).
+    falls back to the distributed loop on the shared driver
+    (operators/iterate.py): one checkpointed generation per merge, the
+    argmax pair collected inside the step. Both paths are merge-for-merge
+    identical (tested).
 
     Memoized per input content (``sources.memo``): at scale the tokenizer
     is a small offline artifact handed to every encode job, never
@@ -106,24 +108,17 @@ def train_bpe(
         rows = counted.select("word", "cnt").collect()
         counted.unpersist()
         return _train_driver_side({r["word"]: int(r["cnt"]) for r in rows}, num_merges)
-    table = counted
     merges: list[tuple[str, str, int]] = []
-    for _ in range(num_merges):
-        top = (
-            _pair_counts(table)
-            .orderBy(F.col("n").desc(), "a", "b")
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
+
+    def merge_top_pair(table: DataFrame) -> DataFrame:
+        top = _pair_counts(table).orderBy(F.col("n").desc(), "a", "b").limit(1).collect()
+        if not top:  # every word is one symbol: nothing left to merge
+            return table
         a, b, n = top[0]["a"], top[0]["b"], int(top[0]["n"])
         merges.append((a, b, n))
-        new_table = _merge_pair(table, a, b).persist()
-        new_table.count()  # materialize before dropping the old generation
-        table.unpersist()
-        table = new_table
-    table.unpersist()
+        return _merge_pair(table, a, b)
+
+    iterate(counted, merge_top_pair, iterations=num_merges, name="train_bpe", release=(counted,))
     return merges
 
 
@@ -154,21 +149,6 @@ def _train_driver_side(
                     out.append(s)
             table[w] = out
     return merges
-
-
-def segment_word(word: str, merges: list[tuple[str, str, int]]) -> list[str]:
-    """Apply learned merges to one word (driver-side reference
-    implementation, used by tests and for spot-checking a vocabulary)."""
-    syms = list(word) + [END_OF_WORD]
-    for a, b, _ in merges:
-        out: list[str] = []
-        for s in syms:
-            if out and out[-1] == a and s == b:
-                out[-1] = a + b
-            else:
-                out.append(s)
-        syms = out
-    return syms
 
 
 def encode_word_table(words: DataFrame, merges: list[tuple[str, str, int]]) -> DataFrame:

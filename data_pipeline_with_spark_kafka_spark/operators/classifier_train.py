@@ -40,6 +40,11 @@ from pyspark.sql import functions as F
 
 from data_pipeline_with_spark_kafka_spark.sources import memo
 
+# Width of the frame the GD loop re-aggregates. Fixed, not a knob: it sets
+# the float partial-aggregation order, so a different width is a model
+# that differs at ULP level.
+LOOP_PARTITIONS = 8
+
 
 @dataclass(frozen=True)
 class TrainedModel:
@@ -88,7 +93,6 @@ def train_logreg(
     *,
     iters: int = 30,
     lr: float = 1.0,
-    loop_partitions: int | None = None,
 ) -> TrainedModel:
     """Full-batch logistic regression via gradient descent.
 
@@ -99,16 +103,13 @@ def train_logreg(
     the mean log-loss — k+2 scalars to the driver per step (bounded by
     the feature count; the dataset itself never leaves the executors).
 
-    ``loop_partitions`` sizes the cached (k+1)-column frame the loop
-    re-aggregates (the graph.py lineage-discipline knob): the frame is a
-    few doubles per row, so at test scale the input's scan width is pure
-    scheduling overhead per iteration; at deployment scale size it to the
-    frame's bytes, not the raw corpus's.
+    The cached (k+1)-column frame the loop re-aggregates is
+    ``LOOP_PARTITIONS`` wide: it is a few doubles per row, so the input's
+    scan width would be pure scheduling overhead per iteration.
 
     Memoized per input content (``sources.memo``): training is
     deterministic, so a repeat call on the same data returns the same
-    model. ``loop_partitions`` is part of the key — it changes the float
-    partial-aggregation order, so weights can differ at ULP level.
+    model.
     """
     means, stds = standardization_stats(df, feature_cols)
     std_cols = [f"z_{c}" for c in feature_cols]
@@ -118,10 +119,7 @@ def train_logreg(
             ((F.col(c) - F.lit(m)) / F.lit(s)).alias(zc)
             for c, m, s, zc in zip(feature_cols, means, stds, std_cols)
         ],
-    )
-    if loop_partitions:
-        zdf = zdf.repartition(loop_partitions)
-    zdf = zdf.persist()
+    ).repartition(LOOP_PARTITIONS).persist()
     try:
         n_rows = zdf.count()  # materializes the persist once
         weights = [0.0] * len(std_cols)

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_pipeline_with_spark_kafka_spark.operators.iterate import iterate
 from data_pipeline_with_spark_kafka_spark.operators.similarity import as_double
 from data_pipeline_with_spark_kafka_spark.sources import memo
 
@@ -68,7 +69,10 @@ def kmeans(
     iterations: int = 5,
     seed: int = 42,
 ) -> DataFrame:
-    """Lloyd's k-means; returns (cid, centroid array<double>)."""
+    """Lloyd's k-means; returns (cid, centroid array<double>). A
+    fixed-count loop on the shared driver (operators/iterate.py): each
+    generation's centroids are checkpointed, so its plan never chains the
+    lineage of earlier iterations."""
     init = (
         df.withColumn("__h", F.xxhash64(F.col(id_col), F.lit(seed)))
         .orderBy("__h", id_col)
@@ -78,19 +82,12 @@ def kmeans(
             as_double(F.col(vec_col)).alias("centroid"),
         )
     )
-    centroids = init
-    prev = None
-    for _ in range(iterations):
-        assigned = _assign(df, id_col, vec_col, centroids)
-        centroids = _recompute(df, id_col, vec_col, assigned).persist()
-        # Materialize eagerly: each generation's plan otherwise chains the
-        # full lineage of every previous iteration (and the stale persist
-        # handles pin executor memory for relations nothing will read again).
-        centroids.count()
-        if prev is not None:
-            prev.unpersist()
-        prev = centroids
-    return centroids
+    return iterate(
+        init,
+        lambda centroids: _recompute(df, id_col, vec_col, _assign(df, id_col, vec_col, centroids)),
+        iterations=iterations,
+        name="kmeans",
+    )
 
 
 @memo.memoized
@@ -111,9 +108,7 @@ def kmeans_centroid_rows(
     (``sources.memo``) — deterministic seeding makes this pure
     memoization, not state."""
     trained = kmeans(df, id_col, vec_col, k=k, iterations=iterations, seed=seed)
-    rows = [(r["cid"], list(r["centroid"])) for r in trained.collect()]
-    trained.unpersist()
-    return rows
+    return [(r["cid"], list(r["centroid"])) for r in trained.collect()]
 
 
 def fixture_centroid_rows(name: str):

@@ -52,6 +52,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_pipeline_with_spark_kafka_spark.operators.iterate import changed, iterate
 from data_pipeline_with_spark_kafka_spark.operators.text import (
     hashed_shingles,
     shingles,
@@ -438,13 +439,15 @@ def connected_components(
 
     Iterative min-label propagation, pure DataFrame ops: every doc starts
     labeled with its own id; each round every doc takes the min of its own
-    label and its neighbors' labels; converged when the global label sum
-    stops falling (labels only ever decrease, so the sum is a convergence
-    metric that costs one aggregate — no change-detection join). Rounds
-    needed = graph diameter, which for dedup graphs is small (duplicate
-    groups are near-cliques). Each round is one shuffle join + one
-    aggregate; generations are persisted eagerly and the previous one
-    unpersisted (same discipline as kmeans).
+    label and its neighbors' labels. A doc whose neighbor offered a smaller
+    label is a changed row, and the loop stops at the first round with none
+    (labels only ever decrease). Rounds needed = graph diameter, which for
+    dedup graphs is small (duplicate groups are near-cliques). Each round
+    is one shuffle join + one aggregate, run by the shared driver in
+    operators/iterate.py: the changed count rides the round's checkpoint
+    job, and a graph whose diameter exceeds ``max_iterations`` raises
+    instead of returning fragments (dedup would then keep one doc per
+    FRAGMENT).
 
     ``edges``: (doc_a, doc_b) pairs. ``ids``: one row per doc (singletons
     come out as their own component). Returns (doc, cluster_id).
@@ -454,49 +457,26 @@ def connected_components(
         .unionByName(edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
         .persist()
     )
-    labels = ids.select(F.col(id_col).alias("doc"), F.col(id_col).alias("label")).localCheckpoint()
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    for _ in range(max_iterations):
+
+    def relabel(labels: DataFrame) -> DataFrame:
         msgs = (
             sym.join(labels, sym["src"] == labels["doc"])
             .groupBy(F.col("dst").alias("doc2"))
             .agg(F.min("label").alias("nbr_min"))
         )
-        new_labels = (
-            labels.join(msgs, labels["doc"] == msgs["doc2"], "left")
-            .select(
-                "doc",
-                F.least(F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label"))).alias("label"),
-            )
-            # localCheckpoint (eager), not persist: each generation
-            # references the previous one TWICE (message source + join
-            # base), so without lineage truncation the logical plan
-            # doubles per round — the same exponential-analysis trap
-            # fixed in graph.py's pagerank/bfs loops. Checkpointing also
-            # collapses the query's static plan (the Exchange-ledger
-            # entry for llm_dedup_clusters was 394 plan-string hits of
-            # repeated subtrees before this).
-            .localCheckpoint()
+        # Each generation references the previous one TWICE (message
+        # source + join base); the driver's lineage cut keeps the plan from
+        # doubling per round.
+        return labels.join(msgs, labels["doc"] == msgs["doc2"], "left").select(
+            "doc",
+            F.least(F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label"))).alias("label"),
+            changed(F.col("nbr_min") < F.col("label")),
         )
-        new_sum = new_labels.agg(F.sum("label")).collect()[0][0]
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    else:
-        # The label sum was still falling after max_iterations: the graph's
-        # diameter exceeds the round budget (plausible for long boilerplate
-        # near-dup chains at corpus scale). Returning the partial labels
-        # would silently split one component into several "clusters" — and
-        # dedup would then keep one doc per FRAGMENT. Fail loudly instead.
-        sym.unpersist()
-        labels.unpersist()
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iterations} "
-            "iterations (label sum still decreasing); raise max_iterations "
-            "— rounds needed equal the component graph's diameter"
-        )
-    sym.unpersist()
+
+    labels = ids.select(F.col(id_col).alias("doc"), F.col(id_col).alias("label")).localCheckpoint()
+    labels = iterate(
+        labels, relabel, iterations=max_iterations, name="connected_components", release=(sym,)
+    )
     return labels.select("doc", F.col("label").alias("cluster_id"))
 
 

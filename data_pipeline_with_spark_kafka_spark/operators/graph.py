@@ -1,8 +1,8 @@
-"""PageRank over a DataFrame edge list — the fourth iterative-algorithm
-family member (connected components, k-means, BPE are the others), same
-driver-loop discipline: each generation is bounded DataFrame algebra, the
-only driver-side values are 1-row scalars, generations persist/materialize
-eagerly and unpersist their predecessor.
+"""PageRank, BFS and label propagation over DataFrame edge lists — the
+graph members of the iterative-algorithm family (connected components,
+k-means and BPE are the others). Each generation is bounded DataFrame
+algebra; the loop itself (lineage cut, convergence count, non-convergence
+error, cache release) is the shared driver in operators/iterate.py.
 
 Training-data use: centrality over the near-dup similarity graph surfaces
 TEMPLATE HUBS — documents whose text is stitched from spans shared with
@@ -18,17 +18,15 @@ driver.
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_pipeline_with_spark_kafka_spark.operators.iterate import changed, iterate
 
-def pagerank(
-    edges: DataFrame,
-    *,
-    damping: float = 0.85,
-    iterations: int = 10,
-    loop_partitions: int | None = None,
-) -> DataFrame:
+
+def pagerank(edges: DataFrame, *, damping: float = 0.85, iterations: int = 10) -> DataFrame:
     """(node, rank) for a directed edge list (src, dst).
 
     Standard damped PageRank with dangling-mass redistribution: nodes
@@ -36,33 +34,9 @@ def pagerank(
     this the total mass leaks and ranks are incomparable across graphs).
     Deterministic: initialization is uniform and every aggregate is
     order-insensitive up to float addition (callers should round emitted
-    ranks; see functions/rounding.py).
-
-    ``loop_partitions``: shuffle width for the per-iteration joins. The
-    iteration cost is STAGE COUNT x scheduling latency, not data volume —
-    on a small or medium graph, 32-wide exchanges per generation are pure
-    overhead (measured 18 s/iteration at width 32 vs ~1 s at width 4 on a
-    toy graph). Size it to the edge count (edges/partition ~ a few
-    million); None inherits the session default, which is right when the
-    graph itself is 100-TB-scale.
+    ranks; see functions/rounding.py). A fixed-count loop: exactly
+    ``iterations`` generations.
     """
-    spark = edges.sparkSession
-    old_width = spark.conf.get("spark.sql.shuffle.partitions")
-    if loop_partitions is not None:
-        # Session conf, not input partitioning, sets exchange width — and
-        # AQE's coalescing keeps default parallelism for tiny shuffles
-        # (parallelismFirst), so a narrow loop must pin it explicitly.
-        # Every materialization happens inside this function (eager
-        # counts), so the try/finally below restores the session before
-        # any caller-side action runs.
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_partitions))
-    try:
-        return _pagerank_loop(edges, damping=damping, iterations=iterations)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_width)
-
-
-def _pagerank_loop(edges: DataFrame, *, damping: float, iterations: int) -> DataFrame:
     # Cache hash(src)-partitioned (round 10): the per-iteration contribs
     # join keys on src (and outdeg groups by src) — the cached
     # partitioning satisfies both, saving an edge shuffle per iteration.
@@ -76,13 +50,13 @@ def _pagerank_loop(edges: DataFrame, *, damping: float, iterations: int) -> Data
     n_nodes = nodes.count()  # 1 scalar; also materializes the persists
     if n_nodes == 0:
         e.unpersist()
+        nodes.unpersist()
         return nodes.select("node", F.lit(0.0).alias("rank"))
 
     outdeg = e.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("deg")).persist()
-    ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank")).localCheckpoint()
-
     base = (1.0 - damping) / n_nodes
-    for _ in range(iterations):
+
+    def step(ranks: DataFrame) -> DataFrame:
         with_deg = ranks.join(outdeg, "node", "left")
         # dangling mass: rank held by nodes with no out-edges (1-row scalar)
         dangling = with_deg.filter(F.col("deg").isNull()).agg(
@@ -98,7 +72,10 @@ def _pagerank_loop(edges: DataFrame, *, damping: float, iterations: int) -> Data
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("share").alias("contrib"))
         )
-        ranks = (
+        # The new ranks reference the previous generation TWICE (dangling
+        # scalar + contributions); the driver's lineage cut keeps that from
+        # doubling the plan per iteration.
+        return (
             nodes.join(contribs, "node", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
@@ -109,21 +86,10 @@ def _pagerank_loop(edges: DataFrame, *, damping: float, iterations: int) -> Data
                     * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.col("dm") / n_nodes)
                 ).alias("rank"),
             )
-            # localCheckpoint (eager), NOT persist+count: the new ranks
-            # reference the previous generation TWICE (dangling scalar +
-            # contributions), so without lineage truncation the LOGICAL
-            # plan doubles per iteration and Catalyst analysis goes
-            # exponential even with warm caches — measured 18 s for 5
-            # iterations, minutes for 10, vs ~1 s/iteration after the
-            # cut. Old generations' checkpoint blocks are freed by the
-            # ContextCleaner once unreferenced.
-            .localCheckpoint()
         )
 
-    e.unpersist()
-    outdeg.unpersist()
-    nodes.unpersist()
-    return ranks
+    ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank")).localCheckpoint()
+    return iterate(ranks, step, iterations=iterations, name="pagerank", release=(e, outdeg, nodes))
 
 
 def bfs_levels(
@@ -132,83 +98,45 @@ def bfs_levels(
     *,
     directed: bool = True,
     max_iterations: int = 30,
-    loop_partitions: int | None = None,
 ) -> DataFrame:
     """(node, level) single-source shortest-path levels by frontier BFS.
 
-    Each generation expands the frontier one hop (edge join), drops
-    already-visited nodes (anti-join against the accumulated levels),
-    and stops when the frontier empties — the per-round driver scalar
-    is a 1-row count, the same bounded-convergence contract as the
-    connected-components loop in operators/dedup.py. Unreachable nodes
-    are absent from the result (callers outer-join if they want nulls).
-
-    ``loop_partitions`` follows pagerank's discipline above: BFS cost
-    on small graphs is stage latency, not data volume.
+    Each generation is the visited set plus one hop: the frontier (the
+    rows at the newest level) joins the edge list, already-visited nodes
+    drop out by an anti-join, and the new level's rows are the
+    generation's changed rows. The loop stops when a hop adds no node and
+    raises if the frontier is still growing after ``max_iterations`` hops.
+    Unreachable nodes are absent from the result (callers outer-join if
+    they want nulls).
     """
-    spark = edges.sparkSession
-    old_width = spark.conf.get("spark.sql.shuffle.partitions")
-    if loop_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_partitions))
-    try:
-        return _bfs_loop(edges, source, directed=directed, max_iterations=max_iterations)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_width)
-
-
-def _bfs_loop(edges: DataFrame, source, *, directed: bool, max_iterations: int) -> DataFrame:
-    spark = edges.sparkSession
     hops = edges.select(F.col("src"), F.col("dst"))
     if not directed:
         hops = hops.unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     hops = hops.persist()
+    levels = itertools.count(1)
 
-    # Each generation is localCheckpoint-ed (eager): persist() alone is
-    # NOT enough here, because nxt's LOGICAL plan embeds the previous
-    # generation twice (as the frontier join arm and inside the visited
-    # union), so plan size doubles per level and Catalyst analysis time
-    # goes exponential even with every cache warm (measured: level 6 of
-    # a 30-node toy graph took minutes). Checkpointing truncates each
-    # generation to a leaf; the visited union then grows by ONE leaf per
-    # level — linear plans, constant per-level cost.
-    visited = spark.createDataFrame([(source, 0)], ["node", "level"]).localCheckpoint()
-    frontier = visited
-    try:
-        for level in range(1, max_iterations + 1):
-            nxt = (
-                frontier.join(hops, frontier.node == hops.src)
-                .select(F.col("dst").alias("node"))
-                .distinct()
-                .join(visited, "node", "left_anti")
-                .withColumn("level", F.lit(level))
-                .localCheckpoint()  # eager: materializes and cuts lineage
-            )
-            if nxt.isEmpty():
-                break
-            visited = visited.unionByName(nxt)
-            frontier = nxt
-        else:
-            raise RuntimeError(
-                f"BFS did not exhaust its frontier within {max_iterations} hops — "
-                "raise max_iterations for deeper graphs"
-            )
-    finally:
-        # unpersist on the error path too — visited is checkpointed, so
-        # dropping the edge cache never invalidates the returned result
-        hops.unpersist()
-    return visited
+    def expand(visited: DataFrame) -> DataFrame:
+        level = next(levels)
+        frontier = visited.filter(F.col("level") == level - 1)
+        reached = (
+            frontier.join(hops, frontier.node == hops.src)
+            .select(F.col("dst").alias("node"))
+            .distinct()
+            .join(visited, "node", "left_anti")
+            .withColumn("level", F.lit(level))
+        )
+        grown = visited.unionByName(reached)
+        return grown.select("*", changed(F.col("level") == level))
+
+    visited = edges.sparkSession.createDataFrame([(source, 0)], ["node", "level"]).localCheckpoint()
+    return iterate(visited, expand, iterations=max_iterations, name="bfs_levels", release=(hops,))
 
 
 # --------------------------------------------------------------------------
 # Label propagation communities (Raghavan et al., Phys. Rev. E 2007)
 # --------------------------------------------------------------------------
 
-def label_propagation(
-    edges: DataFrame,
-    *,
-    iterations: int = 10,
-    loop_partitions: int | None = None,
-) -> DataFrame:
+def label_propagation(edges: DataFrame, *, iterations: int = 10) -> DataFrame:
     """(node, label) community assignment for an undirected edge list
     (src, dst) — synchronous LPA, made deterministic: every node votes
     its own current label once alongside its neighbors' labels (the
@@ -218,21 +146,11 @@ def label_propagation(
     a pure function of the edge set.
 
     Scale shape mirrors ``pagerank``: per iteration one join of the edge
-    list against the label relation (shuffle on node key, map-side
-    combinable count aggregate), a bounded convergence scalar, and a
-    ``localCheckpoint`` lineage cut per generation. Stops early when no
-    label changes."""
-    spark = edges.sparkSession
-    old_width = spark.conf.get("spark.sql.shuffle.partitions")
-    if loop_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_partitions))
-    try:
-        return _lpa_loop(edges, iterations=iterations)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_width)
-
-
-def _lpa_loop(edges: DataFrame, *, iterations: int) -> DataFrame:
+    list against the label relation (shuffle on node key) and a two-stage
+    map-side-combinable vote aggregate. The changed flag (new label !=
+    old) comes out of that same aggregate: the self-vote marks the node's
+    old label. Stops when no label changes; raises when labels are still
+    changing after ``iterations`` rounds."""
     sym = (
         edges.select("src", "dst")
         .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -246,45 +164,28 @@ def _lpa_loop(edges: DataFrame, *, iterations: int) -> DataFrame:
         .persist()
     )
     nodes = sym.select(F.col("src").alias("node")).distinct().persist()
-    n_nodes = nodes.count()
-    if n_nodes == 0:
+    if nodes.count() == 0:
         sym.unpersist()
         nodes.unpersist()
         return nodes.select("node", F.col("node").alias("label"))
 
+    def vote(labels: DataFrame) -> DataFrame:
+        neighbor_votes = sym.join(
+            labels.select(F.col("node").alias("dst"), "label"), "dst"
+        ).select(F.col("src").alias("node"), "label", F.lit(False).alias("own"))
+        votes = neighbor_votes.unionByName(labels.withColumn("own", F.lit(True)))
+        counts = votes.groupBy("node", "label").agg(
+            F.count(F.lit(1)).alias("cnt"), F.max("own").alias("own")
+        )
+        winner = F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))
+        return counts.groupBy("node").agg(
+            F.max_by("label", winner).alias("label"), F.max_by("label", "own").alias("old")
+        ).select("node", "label", changed(F.col("label") != F.col("old")))
+
     labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint()
-    try:
-        for _ in range(iterations):
-            neighbor_votes = sym.join(
-                labels.select(F.col("node").alias("dst"), "label"), "dst"
-            ).select(F.col("src").alias("node"), "label")
-            votes = neighbor_votes.unionByName(labels)  # self-vote
-            counts = votes.groupBy("node", "label").agg(F.count(F.lit(1)).alias("cnt"))
-            new_labels = counts.groupBy("node").agg(
-                F.max_by(
-                    "label", F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))
-                ).alias("label")
-            # Checkpoint BEFORE the convergence count (round 10): counting
-            # changed labels off the un-materialized plan executed the
-            # whole generation (edge join + two-stage vote aggregate) and
-            # then localCheckpoint re-executed it — every iteration paid
-            # the generation twice (the round-9 graph-bench 3x-PageRank
-            # anomaly). Checkpoint-first computes it once; the changed
-            # count is then a node-sized join of two MATERIALIZED label
-            # relations.
-            ).localCheckpoint()
-            changed = (
-                new_labels.join(labels.withColumnRenamed("label", "old"), "node")
-                .filter(F.col("label") != F.col("old"))
-                .count()
-            )  # bounded convergence scalar (the CC-loop contract)
-            labels = new_labels
-            if changed == 0:
-                break
-    finally:
-        sym.unpersist()
-        nodes.unpersist()
-    return labels
+    return iterate(
+        labels, vote, iterations=iterations, name="label_propagation", release=(sym, nodes)
+    )
 
 
 def co_occurrence_pairs(

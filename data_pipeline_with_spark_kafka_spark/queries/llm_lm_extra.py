@@ -478,7 +478,6 @@ def llm_train_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         iters=_TRAIN_ITERS,
         lr=_TRAIN_LR,
-        loop_partitions=8,
     )
     acc_row = (
         feats.select(

@@ -205,10 +205,7 @@ def cmd_train_quality(spark: SparkSession, args: argparse.Namespace) -> None:
 
     docs = spark.read.parquet(args.input)
     feats = classifier_features(gopher_metrics(docs))
-    model = train_logreg(
-        feats, _TRAIN_FEATURES, "label",
-        iters=args.iters, lr=args.lr, loop_partitions=8,
-    )
+    model = train_logreg(feats, _TRAIN_FEATURES, "label", iters=args.iters, lr=args.lr)
     with open(args.model_out, "w") as f:
         _json.dump(model_to_json(model), f, indent=1, sort_keys=True)
         f.write("\n")

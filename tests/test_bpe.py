@@ -33,6 +33,21 @@ def python_bpe(word_counts: dict[str, int], num_merges: int):
     return merges
 
 
+def segment_word(word: str, merges: list[tuple[str, str, int]]) -> list[str]:
+    """Apply learned merges to one word (driver-side reference for the
+    distributed encoder)."""
+    syms = list(word) + [bpe.END_OF_WORD]
+    for a, b, _ in merges:
+        out: list[str] = []
+        for s in syms:
+            if out and out[-1] == a and s == b:
+                out[-1] = a + b
+            else:
+                out.append(s)
+        syms = out
+    return syms
+
+
 def test_bpe_matches_python_reference(spark):
     corpus = [
         "low lower lowest low low",
@@ -56,7 +71,7 @@ def test_bpe_segmentation_is_consistent(spark):
     )
     merges = bpe.train_bpe(docs, "text", num_merges=8)
     assert merges
-    seg = bpe.segment_word("banana", merges)
+    seg = segment_word("banana", merges)
     # re-joining the segmentation reproduces the word (+ end marker)
     assert "".join(seg) == "banana" + bpe.END_OF_WORD
     # the most frequent word compresses below character length
@@ -89,7 +104,7 @@ def test_bpe_encode_matches_reference_per_doc(spark, sf_dir):
     }
     for row in docs.select("doc_id", "text").collect():
         words = [w for w in row.text.split(" ") if w]
-        expect = [p for w in words for p in bpe.segment_word(w, merges)]
+        expect = [p for w in words for p in segment_word(w, merges)]
         tokens_got, n_words, n_bpe = got[row.doc_id]
         assert tokens_got == expect, row.doc_id
         assert n_words == len(words)

@@ -83,12 +83,10 @@ def test_cache_memoizes(spark, sf_dir, feats):
         m2 = train_logreg(build(), _TRAIN_FEATURES, "label", iters=3, lr=LR)
         assert m1 is m2
         assert isinstance(m1, TrainedModel)
-    # loop_partitions changes float partial-aggregation order, so it must
-    # be part of the memo key — a different width is a different model.
+    # Every hyperparameter is part of the memo key: a different step count
+    # on the same frame is a different model.
     m1 = train_logreg(feats, _TRAIN_FEATURES, "label", iters=3, lr=LR)
-    m3 = train_logreg(
-        feats, _TRAIN_FEATURES, "label", iters=3, lr=LR, loop_partitions=2,
-    )
+    m3 = train_logreg(feats, _TRAIN_FEATURES, "label", iters=4, lr=LR)
     assert m3 is not m1
 
 

@@ -3,7 +3,7 @@ must not execute Spark jobs (round-2 verdict item 2 — a plan-build-time
 job breaks composability and re-runs on every construction).
 
 The one documented exception class is iterative/training algorithms whose
-driver loop is the algorithm (connected components' convergence scalar,
+driver loop is the algorithm (connected components' per-generation checkpoints,
 BPE's merge loop, the IVF k-means quantizer): their per-iteration jobs are
 small-by-construction and the artifacts are memoized, so they behave like
 offline model training, not like query construction. They are allowlisted
@@ -24,7 +24,7 @@ QUERIES = all_queries()
 # Queries whose BUILD legitimately runs an iterative driver loop
 # (documented in the operator docstrings; artifacts memoized per input).
 ITERATIVE_BUILDERS = {
-    "llm_dedup_clusters",  # connected components: per-generation convergence scalar
+    "llm_dedup_clusters",  # connected components: per-generation checkpoint jobs
     "llm_cluster_aware_split",  # composes the same CC loop
     "llm_curated_corpus",  # composes the CC-based dedup stage
     "llm_bpe_vocab",       # BPE merge loop (adaptive driver/distributed)

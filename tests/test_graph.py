@@ -93,7 +93,7 @@ def label_propagation_reference(edge_list, iterations: int = 10):
 @pytest.fixture(scope="module")
 def ranks(spark):
     e = spark.createDataFrame(EDGES, "src long, dst long")
-    return {r.node: r.rank for r in graph.pagerank(e, iterations=5, loop_partitions=2).collect()}
+    return {r.node: r.rank for r in graph.pagerank(e, iterations=5).collect()}
 
 
 def test_matches_pure_python_reference(ranks):
@@ -114,7 +114,7 @@ def test_cycle_members_outrank_feeder(ranks):
 
 def test_empty_graph(spark):
     e = spark.createDataFrame([], "src long, dst long")
-    assert graph.pagerank(e, iterations=3, loop_partitions=2).count() == 0
+    assert graph.pagerank(e, iterations=3).count() == 0
 
 
 def test_neardup_graph_query_ranks_template_hub(spark):
@@ -135,7 +135,7 @@ def test_neardup_graph_query_ranks_template_hub(spark):
     edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).unionByName(
         pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     )
-    ranks = {r.node: r.rank for r in graph.pagerank(edges, iterations=3, loop_partitions=2).collect()}
+    ranks = {r.node: r.rank for r in graph.pagerank(edges, iterations=3).collect()}
     assert ranks, "fixture must produce near-dup edges"
     assert 0 in ranks, "hub doc must appear in the graph"
     # the hub participates in every pair — top rank
@@ -152,7 +152,7 @@ def test_bfs_line_cycle_and_unreachable(spark):
         # line 1-2-3-4, a back-edge closing a cycle, and an island.
         [(1, 2), (2, 3), (3, 4), (4, 1), (9, 10)], ["src", "dst"]
     )
-    got = {r.node: r.level for r in bfs_levels(edges, 1, loop_partitions=1).collect()}
+    got = {r.node: r.level for r in bfs_levels(edges, 1).collect()}
     assert got == {1: 0, 2: 1, 3: 2, 4: 3}  # cycle terminates; 9/10 absent
 
 
@@ -160,10 +160,10 @@ def test_bfs_undirected_reaches_backwards(spark):
     from data_pipeline_with_spark_kafka_spark.operators.graph import bfs_levels
 
     edges = spark.createDataFrame([(2, 1), (2, 3)], ["src", "dst"])
-    directed = {r.node: r.level for r in bfs_levels(edges, 1, loop_partitions=1).collect()}
+    directed = {r.node: r.level for r in bfs_levels(edges, 1).collect()}
     undirected = {
         r.node: r.level
-        for r in bfs_levels(edges, 1, directed=False, loop_partitions=1).collect()
+        for r in bfs_levels(edges, 1, directed=False).collect()
     }
     assert directed == {1: 0}
     assert undirected == {1: 0, 2: 1, 3: 2}
@@ -177,7 +177,7 @@ def test_bfs_matches_python_reference_on_random_graph(spark):
     rng = random.Random(7)
     edge_list = [(rng.randrange(30), rng.randrange(30)) for _ in range(80)]
     edges = spark.createDataFrame(edge_list, ["src", "dst"])
-    got = {r.node: r.level for r in bfs_levels(edges, 0, loop_partitions=1).collect()}
+    got = {r.node: r.level for r in bfs_levels(edges, 0).collect()}
     assert got == bfs_reference(edge_list, 0)
 
 
@@ -198,10 +198,10 @@ def test_iterative_generations_keep_linear_plans(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (6, 7)], ["src", "dst"]
     )
-    pr = pagerank(edges, iterations=8, loop_partitions=2)
+    pr = pagerank(edges, iterations=8)
     assert len(pr._jdf.queryExecution().logical().toString()) < 20_000
 
-    bfs = bfs_levels(edges, 1, loop_partitions=2)
+    bfs = bfs_levels(edges, 1)
     assert len(bfs._jdf.queryExecution().logical().toString()) < 20_000
 
     pair_edges = edges.selectExpr("src as doc_a", "dst as doc_b")
@@ -215,9 +215,7 @@ class TestLabelPropagation:
         df = spark.createDataFrame(edge_list, "src long, dst long")
         got = {
             r["node"]: r["label"]
-            for r in graph.label_propagation(
-                df, iterations=iterations, loop_partitions=4
-            ).collect()
+            for r in graph.label_propagation(df, iterations=iterations).collect()
         }
         want = label_propagation_reference(edge_list, iterations=iterations)
         return got, want
@@ -258,5 +256,5 @@ class TestLabelPropagation:
         # a triangle converges in <= 2 iterations; asking for 50 must not
         # run 50 generations (early-stop on changed == 0)
         df = spark.createDataFrame([(1, 2), (2, 3), (1, 3)], "src long, dst long")
-        got = {r["node"]: r["label"] for r in graph.label_propagation(df, iterations=50, loop_partitions=2).collect()}
+        got = {r["node"]: r["label"] for r in graph.label_propagation(df, iterations=50).collect()}
         assert got == {1: 1, 2: 1, 3: 1}

@@ -266,21 +266,6 @@ def test_connected_components_chain_and_singletons(spark):
     assert comps == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20}
 
 
-def test_connected_components_raises_on_non_convergence(spark):
-    """A chain longer than the round budget must fail loudly: partial
-    labels would split one component into fragments and dedup would keep
-    one doc per FRAGMENT (silent under-deduplication)."""
-    import pytest
-
-    chain = list(range(12))
-    edges = spark.createDataFrame(
-        [(a, b) for a, b in zip(chain, chain[1:])], "doc_a long, doc_b long"
-    )
-    ids = spark.createDataFrame([(i,) for i in chain], "doc_id long")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(edges, ids, "doc_id", max_iterations=2)
-
-
 def test_multimodal_resize_and_frame_sample(docs):
     with_media = multimodal.attach_blob(docs.limit(20), "doc_id", "text")
     resized = multimodal.fake_resize(with_media, "doc_id", width=8, height=8).collect()

@@ -46,7 +46,6 @@ def main() -> None:
         rows = sorted(
             ((int(r["cid"]), [float(x) for x in r["centroid"]]) for r in trained.collect())
         )
-        trained.unpersist()
         table = pa.table(
             {
                 "cid": pa.array([c for c, _ in rows], pa.int32()),
