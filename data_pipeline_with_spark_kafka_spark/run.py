@@ -43,7 +43,11 @@ from data_pipeline_with_spark_kafka_spark.streaming.covid_pipeline import (
     file_stream_source,
     kafka_source,
 )
-from data_pipeline_with_spark_kafka_spark.streaming.sinks import keyed_upsert_parquet
+from data_pipeline_with_spark_kafka_spark.streaming.sinks import (
+    keyed_upsert_parquet,
+    recover,
+    replace,
+)
 
 # The producer-side wire schema: everything arrives as strings (the
 # reference reads csv.DictReader rows) and is validated/coerced as one
@@ -258,83 +262,20 @@ def cmd_cluster(spark: SparkSession, args: argparse.Namespace) -> None:
     )
 
 
-def _two_phase_swap(out, target: str) -> None:
-    """Materialize ``out`` to a tmp dir, then swap it into ``target``
-    without a destroy-first window: move the old snapshot ASIDE, rename
-    tmp into place, and only then delete the backup. If the second
-    rename fails (cross-mount, permissions), the old snapshot is
-    restored — the target is never left missing."""
-    import os
-    import shutil
-    import uuid
-
-    tag = uuid.uuid4().hex[:8]
-    tmp = f"{target}.tmp-{tag}"
-    out.write.mode("overwrite").parquet(tmp)
-    backup = f"{target}.old-{tag}"
-    # The target may be a parquet DIRECTORY (our own writes) or a single
-    # parquet FILE (the driver's fixture layout): os.path.exists covers
-    # both — a file target left in place would make the tmp-dir rename
-    # fail with NotADirectoryError (round-7 erase-CLI finding).
-    had_old = os.path.exists(target)
-    if had_old:
-        os.rename(target, backup)
-    try:
-        os.rename(tmp, target)
-    except OSError:
-        if had_old:
-            os.rename(backup, target)
-        raise
-    if had_old:
-        shutil.rmtree(backup) if os.path.isdir(backup) else os.remove(backup)
-
-
-def _recover_two_phase_leftovers(target: str) -> list[str]:
-    """Repair the aftermath of a hard crash inside :func:`_two_phase_swap`.
-
-    Crash windows and their signatures:
-    - mid tmp write (target intact, ``.tmp-*`` sibling): delete the partial
-      tmp;
-    - between the two renames (target ABSENT, ``.old-*`` backup present):
-      restore the backup — without this a re-run would silently skip the
-      missing table while reporting success for the others (round-8 advice);
-    - after the second rename, before backup cleanup (target intact,
-      ``.old-*`` sibling): delete the stale backup.
-
-    Returns human-readable notes of the actions taken; raises if the target
-    is missing and no backup exists to restore (manual recovery needed).
-    """
-    import glob
-    import os
-    import shutil
-
-    notes: list[str] = []
-    olds = sorted(glob.glob(glob.escape(target) + ".old-*"))
-    tmps = sorted(glob.glob(glob.escape(target) + ".tmp-*"))
-    if not os.path.exists(target):
-        if olds:
-            os.rename(olds[0], target)
-            notes.append(f"restored {target} from interrupted-swap backup {olds[0]}")
-            olds = olds[1:]
-        elif tmps:
-            raise RuntimeError(
-                f"{target} is missing and only tmp sibling(s) {tmps} remain "
-                f"from an interrupted swap; refusing to guess — inspect and "
-                f"rename the completed tmp into place manually"
-            )
-    for leftover in olds + tmps:
-        shutil.rmtree(leftover) if os.path.isdir(leftover) else os.remove(leftover)
-        notes.append(f"removed interrupted-swap leftover {leftover}")
-    return notes
+def _recover_noting(target: str, prefix: str = "") -> None:
+    for note in recover(target):
+        print(f"{prefix}{note}")
 
 
 def cmd_maintain(spark: SparkSession, args: argparse.Namespace) -> None:
     """Dimension maintenance: apply an update batch (scd2 mode: versioned
     type-2 history) or a CDC I/U/D feed (cdc mode) to a parquet snapshot,
-    writing the next snapshot two-phase (tmp dir + rename — the same
-    never-in-place discipline as the keyed-upsert sink)."""
+    writing the next snapshot with ``sinks.replace``, the keyed-upsert
+    sink's crash-safe swap; a swap an earlier run left half done is
+    ``sinks.recover``ed before the snapshot is read."""
     from data_pipeline_with_spark_kafka_spark.operators.scd import cdc_apply, scd2_apply
 
+    _recover_noting(args.snapshot)
     snapshot = spark.read.parquet(args.snapshot)
     batch = spark.read.parquet(args.batch)
     attrs = args.attrs.split(",")
@@ -344,7 +285,7 @@ def cmd_maintain(spark: SparkSession, args: argparse.Namespace) -> None:
         out = scd2_apply(snapshot, batch, args.key, attrs, F.lit(args.effective).cast("timestamp"))
     else:
         out = cdc_apply(snapshot, batch, args.key, attrs, op_col=args.op_col, seq_col=args.seq_col)
-    _two_phase_swap(out, args.target)
+    replace(out, args.target)
     print(f"{args.mode} maintain: {args.snapshot} + {args.batch} -> {args.target}")
 
 
@@ -361,7 +302,9 @@ def cmd_maintain_incremental(spark: SparkSession, args: argparse.Namespace) -> N
        applies partitions in order, each partition's value as its
        effective timestamp (a day's updates become versions effective
        that day).
-    3. Two-phase swap the snapshot (rename-aside, never destroy-first).
+    3. ``sinks.replace`` the snapshot (rename-aside, never destroy-first);
+       a swap an earlier run left half done is ``sinks.recover``ed before
+       anything is read.
     4. Append the ledger ONLY after the swap — so every crash window
        replays, and replay CONVERGES: scd2_apply/cdc_apply are
        idempotent under re-application (tested), and a crash between
@@ -378,6 +321,7 @@ def cmd_maintain_incremental(spark: SparkSession, args: argparse.Namespace) -> N
     )
 
     attrs = args.attrs.split(",")
+    _recover_noting(args.snapshot)
 
     def process(feed, partitions) -> None:
         snapshot = spark.read.parquet(args.snapshot)
@@ -392,7 +336,7 @@ def cmd_maintain_incremental(spark: SparkSession, args: argparse.Namespace) -> N
             for p in sorted(partitions):
                 batch = feed.filter(pcol == p).drop(args.partition_col)
                 out = scd2_apply(out, batch, args.key, attrs, F.lit(p).cast("timestamp"))
-        _two_phase_swap(out, args.snapshot)
+        replace(out, args.snapshot)
         if getattr(args, "crash_after_swap", False):
             raise RuntimeError("injected crash between swap and ledger append")
 
@@ -411,7 +355,7 @@ def cmd_erase(spark: SparkSession, args: argparse.Namespace) -> None:
     ``privacy_erasure_cascade`` audit query: delete the given data
     subjects from every referencing table (customer/orders/events by
     subject key, lineitem transitively via the subjects' orders), each
-    table rewritten two-phase (never a destroy-first window).
+    table rewritten by ``sinks.replace`` (never a destroy-first window).
 
     Discipline:
     - the tombstone relations are request-bounded and BROADCAST, so each
@@ -437,12 +381,11 @@ def cmd_erase(spark: SparkSession, args: argparse.Namespace) -> None:
         for t in ("customer", "orders", "lineitem", "events")
     }
     # Before reading anything, repair any interrupted prior run: a crash
-    # between _two_phase_swap's two renames leaves a table absent with only
+    # between replace's two renames leaves a table absent with only
     # .old-/.tmp- siblings, and the os.path.exists() skips below would then
     # silently report success with one table missing (round-8 advice).
     for t, p in paths.items():
-        for note in _recover_two_phase_leftovers(p):
-            print(f"{t}: {note}")
+        _recover_noting(p, f"{t}: ")
     orders_pre = (
         spark.read.parquet(paths["orders"]) if os.path.exists(paths["orders"]) else None
     )
@@ -468,7 +411,7 @@ def cmd_erase(spark: SparkSession, args: argparse.Namespace) -> None:
         before = table_row_count(args.data_dir, name)
         survivors = df.join(tomb, df[key] == tomb["subject"], "anti")
         # One count() against the broadcast anti-join is cheap relative to
-        # a full two-phase rewrite — so a zero-match table (e.g. the
+        # a full rewrite — so a zero-match table (e.g. the
         # idempotent second run) skips the rewrite entirely, which also
         # preserves single-file parquet fixtures instead of converting
         # them into directories as a side effect (round-8 advice).
@@ -478,7 +421,7 @@ def cmd_erase(spark: SparkSession, args: argparse.Namespace) -> None:
         elif after == before:
             note = " (no matches — rewrite skipped)"
         else:
-            _two_phase_swap(survivors, path)
+            replace(survivors, path)
             after = table_row_count(args.data_dir, name)
             note = ""
         print(f"{name}: {before - after} erased, {after} surviving{note}")
@@ -620,7 +563,7 @@ def make_parser() -> argparse.ArgumentParser:
     mnt.add_argument("--mode", choices=["scd2", "cdc"], required=True)
     mnt.add_argument("--snapshot", required=True, help="current snapshot parquet dir")
     mnt.add_argument("--batch", required=True, help="update batch / change feed parquet dir")
-    mnt.add_argument("--target", required=True, help="next-snapshot output dir (two-phase swap)")
+    mnt.add_argument("--target", required=True, help="next-snapshot output dir (crash-safe swap)")
     mnt.add_argument("--key", required=True)
     mnt.add_argument("--attrs", required=True, help="comma-separated tracked attribute columns")
     mnt.add_argument("--effective", help="scd2: effective timestamp, e.g. 2024-01-01")

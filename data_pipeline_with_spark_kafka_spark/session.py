@@ -28,6 +28,18 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+def driver_memory() -> str:
+    """Driver heap ceiling: ``SPARK_GRAFT_DRIVER_MEM`` if set, else half
+    the host's physical memory in whole GiB, at least 1g and at most 48g.
+    A ceiling above physical memory lets the heap grow until the host
+    kills the JVM instead of collecting garbage."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48, max(1, phys // 2**31))}g"
+
+
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
@@ -85,13 +97,13 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         # Long many-query sessions (bench runs the whole 190+ corpus in
         # one JVM) accumulate ContextCleaner-tracked garbage — broadcast
         # blocks, localCheckpoint RDDs, shuffle files — because cleanup
-        # piggybacks on driver GC and a 48g heap may never collect on its
+        # piggybacks on driver GC and a large heap may never collect on its
         # own (Spark's default periodic GC is 30 min, longer than the
         # whole run). A 90 s cadence keeps per-query times flat from the
         # first query to the 193rd.

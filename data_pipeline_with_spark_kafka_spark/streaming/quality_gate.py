@@ -11,11 +11,17 @@ scalars, never rows), so the gate adds one scan per micro-batch.
 
 foreachBatch is the right surface: the routing decision needs the
 CHECK RESULTS before any write happens, which no declarative sink can
-express. Replay-safe: both sinks append parquet under epoch-unique file
-names, and a re-delivered epoch re-runs the same deterministic checks.
+express. Replay-safe: each batch is written to ``<sink>/epoch=<id>``
+with overwrite, so a re-delivered epoch re-runs the same deterministic
+checks and replaces its own earlier output instead of adding a copy.
+Reading a sink directory yields the ``epoch`` partition column. A sink
+directory belongs to one checkpoint: a query started on a fresh
+checkpoint numbers its epochs from 0 again and would overwrite them.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame
 
@@ -41,7 +47,7 @@ def quality_gated_batch_handler(
             results = run_checks(batch, checks).collect()
             ok = all(r.passed for r in results)
             target = accept_path if ok else quarantine_path
-            batch.write.mode("append").parquet(target)
+            batch.write.mode("overwrite").parquet(os.path.join(target, f"epoch={batch_id}"))
             if audit is not None:
                 audit.append((batch_id, ok, {r.check_name: r.metric for r in results}))
 

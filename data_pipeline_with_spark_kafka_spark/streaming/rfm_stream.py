@@ -1,7 +1,5 @@
 """Streaming RFM maintenance: the incremental twin of the batch
-``stats_rfm_segments`` query (the round-8 stretch pairing — Markov got
-its streaming twin in ``markov_stream.py``; RFM is the other natural
-incremental form the round-7 verdict named).
+``stats_rfm_segments`` query.
 
 The RFM BASE is a per-customer running aggregate, all three dimensions
 additive or max-monotone:
@@ -25,12 +23,14 @@ Design notes:
   bounds come from lookback/idle windows).
 - monetary accumulates in INTEGER CENTS (each order's 2-dp price is
   exact in cents), so replay/batch-boundary reordering can never move a
-  float sum across the 2-dp rounding boundary the batch query rounds
-  at — the round-8 RFM money-rounding fix carried into the stream.
+  float sum across the 2-dp rounding boundary the batch query rounds at.
 - emitted rows are ABSOLUTE per-customer aggregates (not deltas), so
-  the foreachBatch ledger upsert is idempotent under checkpoint replay
-  with no epoch bookkeeping (contrast: the Markov ledger folds additive
-  pair rows and must dedupe epochs).
+  the ledger fold is idempotent under checkpoint replay with no epoch
+  bookkeeping (contrast: the Markov ledger folds additive pair rows and
+  must dedupe epochs). Two folds are provided: ``run_rfm_ledger`` into
+  a Python dict (tests), and ``run_rfm_ledger_parquet`` into a plain
+  parquet table through the package's one keyed-upsert sink,
+  ``sinks.keyed_upsert_parquet``.
 - under any delivery order the final ledger equals the batch aggregate
   over the same orders (max/sum/count are order-insensitive) — stronger
   than the attribution/Markov twins, whose at-event-time semantics
@@ -94,10 +94,10 @@ def rfm_base_stream(orders: DataFrame) -> DataFrame:
 
 
 def run_rfm_ledger(stream: DataFrame, checkpoint: str, ledger: dict) -> None:
-    """TEST-FOLD foreachBatch upsert of the absolute per-customer rows
+    """Test fold: foreachBatch upsert of the absolute per-customer rows
     into a Python dict — idempotent under epoch replay because values
     are absolute. The dict collect is per-batch CHANGED customers only,
-    but it is still a driver-side fold: deployments should use
+    but it is still a driver-side fold: deployments use
     ``run_rfm_ledger_parquet`` (below) or compose
     ``sources.readers.jdbc_keyed_upsert`` — same absolute-row
     idempotence, no driver data path."""
@@ -120,44 +120,23 @@ def run_rfm_ledger(stream: DataFrame, checkpoint: str, ledger: dict) -> None:
     q.awaitTermination()
 
 
-def run_rfm_ledger_parquet(
-    stream: DataFrame,
-    checkpoint: str,
-    target_dir: str,
-    *,
-    n_buckets: int = 64,
-    compact_every: int = 16,
-) -> None:
-    """DURABLE ledger fold (round 9): MERGE each batch's absolute
-    per-customer rows into a parquet ledger keyed by ``o_custkey`` —
-    the deployment-shaped twin of ``run_rfm_ledger`` with no
-    driver-side data path. Absolute rows + keyed merge =
-    replay-idempotent with zero epoch bookkeeping; for a JDBC serving
-    table swap in ``sources.readers.jdbc_keyed_upsert`` (same contract,
-    transactional MERGE).
+def run_rfm_ledger_parquet(stream: DataFrame, checkpoint: str, target_dir: str) -> None:
+    """Durable ledger fold: MERGE each batch's absolute per-customer rows
+    into a parquet ledger keyed by ``o_custkey`` through
+    ``sinks.keyed_upsert_parquet`` — the deployment-shaped twin of
+    ``run_rfm_ledger`` with no driver-side data path. Absolute rows +
+    keyed merge = replay-idempotent with zero epoch bookkeeping; for a
+    JDBC serving table swap in ``sources.readers.jdbc_keyed_upsert``
+    (same contract, transactional MERGE).
 
-    Round 11: the sink is ``sinks.bucketed_keyed_upsert_parquet``
-    (delta append + hash-bucketed threshold compaction) — the plain
-    delete+insert sink rewrote the WHOLE ledger every batch (~40% of
-    the trigger at 50k customers, O(ledger) at any size), so at a
-    100M-customer ledger every trigger would pay a 100M-row rewrite.
-    Now a trigger pays O(batch) (one delta write) plus amortized
-    O(touched-buckets/compact_every) compaction. Read the ledger with
-    ``segments_from_parquet_ledger`` / ``sinks.read_keyed_ledger``."""
-    from data_pipeline_with_spark_kafka_spark.streaming.sinks import (
-        bucketed_keyed_upsert_parquet,
-    )
+    Each trigger rewrites the whole ledger, so its cost is
+    O(customers), not O(batch). The ledger is plain parquet: read it
+    with ``segments_from_parquet_ledger`` or ``spark.read.parquet``."""
+    from data_pipeline_with_spark_kafka_spark.streaming.sinks import keyed_upsert_parquet
 
     q = (
         stream.writeStream.outputMode("update")
-        .foreachBatch(
-            bucketed_keyed_upsert_parquet(
-                target_dir,
-                ["o_custkey"],
-                n_buckets=n_buckets,
-                compact_every=compact_every,
-            )
-        )
+        .foreachBatch(keyed_upsert_parquet(target_dir, ["o_custkey"]))
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
@@ -178,13 +157,10 @@ def segments_from_ledger(spark, ledger: dict) -> DataFrame:
 
 
 def segments_from_parquet_ledger(spark, target_dir: str) -> DataFrame:
-    """Quartile-code the DURABLE parquet ledger: merge-on-read the
-    bucketed base + pending deltas (``sinks.read_keyed_ledger``) and
-    delegate to ``segments_from_base`` — end-to-end distributed, no
+    """Quartile-code the durable parquet ledger (one row per customer)
+    and delegate to ``segments_from_base`` — end-to-end distributed, no
     dict materialization."""
-    from data_pipeline_with_spark_kafka_spark.streaming.sinks import read_keyed_ledger
-
-    base = read_keyed_ledger(spark, target_dir, ["o_custkey"]).select(
+    base = spark.read.parquet(target_dir).select(
         "o_custkey",
         F.col("last_order_days").alias("last_days"),
         "frequency",

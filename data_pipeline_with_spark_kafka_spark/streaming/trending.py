@@ -39,6 +39,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from data_pipeline_with_spark_kafka_spark.streaming.attribution_stream import (
+    _duration_ms,
+)
+
 STATE_SCHEMA = "items array<string>, counts array<long>, n long"
 OUTPUT_SCHEMA = (
     "window_start timestamp, item string, est_cnt long, rank int, is_final boolean"
@@ -99,14 +103,6 @@ def _make_update(k: int, top: int, window_ms: int, grace_ms: int):
     return update
 
 
-_UNIT_MS = {"second": 1_000, "minute": 60_000, "hour": 3_600_000, "day": 86_400_000}
-
-
-def _duration_ms(spec: str) -> int:
-    qty, unit = spec.strip().split()
-    return int(qty) * _UNIT_MS[unit.rstrip("s")]
-
-
 def trending_items(
     events: DataFrame,
     *,
@@ -122,6 +118,7 @@ def trending_items(
     items. ``grace_ms`` pads the eviction timestamp past the window close;
     the timeout fires once the watermark advances beyond it (late rows
     inside the watermark still land first)."""
+    window_ms = _duration_ms(window)
     k = k if k is not None else max(2 * top, 2)
     keyed = (
         events.withWatermark(time_col, watermark)
@@ -137,7 +134,7 @@ def trending_items(
         .groupBy("window_start")
     )
     return keyed.applyInPandasWithState(
-        _make_update(k, top, _duration_ms(window), grace_ms),
+        _make_update(k, top, window_ms, grace_ms),
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="update",

@@ -34,13 +34,6 @@ SLOW_TESTS = {
     ("test_attribution_stream.py", "test_attribution_survives_restart"),
     ("test_bpe.py", "test_bpe_distributed_path_equals_driver_path"),
     ("test_bpe.py", "test_bpe_encode_matches_reference_per_doc"),
-    ("test_bucketed_ledger.py", "test_ledger_compaction_rewrites_only_touched_buckets"),
-    ("test_bucketed_ledger.py", "test_ledger_merge_latest_wins_and_compacts"),
-    ("test_bucketed_ledger.py", "test_ledger_newer_write_beats_folded_base"),
-    ("test_bucketed_ledger.py", "test_ledger_replay_and_fresh_run_converge"),
-    ("test_bucketed_ledger.py", "test_ledger_swap_crash_between_renames_loses_nothing"),
-    ("test_bucketed_ledger.py", "test_ledger_swap_stale_tombstone_is_dropped"),
-    ("test_bucketed_ledger.py", "test_ledger_recovery_restores_newest_of_two_tombstones"),
     ("test_cli_e2e.py", "test_cli_e2e_matches_batch_golden"),
     ("test_construction.py", "test_construction_launches_no_jobs"),
     ("test_curation_stream.py", "test_stream_curation_matches_batch_on_same_log"),

@@ -284,6 +284,89 @@ def test_cli_maintain_incremental_with_crash_resume(spark, tmp_path):
     assert spark.read.parquet(ledger).count() == 2
 
 
+def _crash_between_renames(snap: str) -> None:
+    """Leave ``snap`` the way a process killed between ``replace``'s two
+    renames leaves it: the old snapshot moved to ``.old-<tag>`` and a
+    partial ``.tmp-<tag>`` output, with no snapshot in place."""
+    import os
+
+    os.rename(snap, f"{snap}.old-ab12cd34")
+    os.makedirs(f"{snap}.tmp-ab12cd34")
+    with open(f"{snap}.tmp-ab12cd34/part-00000.parquet", "wb") as f:
+        f.write(b"PAR1")
+
+
+def _siblings(snap: str) -> list[str]:
+    import glob
+
+    return glob.glob(glob.escape(snap) + ".*-*")
+
+
+def test_cli_maintain_incremental_resumes_after_crash_between_renames(spark, tmp_path, capsys):
+    """A tick killed between the snapshot swap's two renames: the rerun
+    restores the old snapshot before reading it, applies the unledgered
+    partition once and ledgers it."""
+    from data_pipeline_with_spark_kafka_spark.run import main
+
+    snap = str(tmp_path / "snap")
+    changes = str(tmp_path / "changes")
+    ledger = str(tmp_path / "ledger")
+    spark.createDataFrame([(1, "a"), (2, "b")], "k int, attr string").write.parquet(snap)
+    spark.createDataFrame(
+        [(1, "a2", "U", 1, "2024-06-01"), (3, "c", "I", 2, "2024-06-01")],
+        "k int, attr string, op string, seq int, dt string",
+    ).write.partitionBy("dt").parquet(changes)
+    _crash_between_renames(snap)
+
+    main(
+        [
+            "maintain-incremental", "--mode", "cdc", "--snapshot", snap,
+            "--changes", changes, "--partition-col", "dt", "--ledger", ledger,
+            "--key", "k", "--attrs", "attr", "--seq-col", "seq",
+        ],
+        spark=spark,
+    )
+    assert "restored" in capsys.readouterr().out
+    assert sorted((r.k, r.attr) for r in spark.read.parquet(snap).collect()) == [
+        (1, "a2"), (2, "b"), (3, "c"),
+    ]
+    assert [r.partition_value for r in spark.read.parquet(ledger).collect()] == ["2024-06-01"]
+    assert _siblings(snap) == []
+
+
+def test_cli_maintain_resumes_after_crash_between_renames(spark, tmp_path, capsys):
+    """``maintain`` rewriting its snapshot in place, rerun after a kill
+    between the two renames: the old snapshot is restored, then the
+    update batch is applied to it once. The path is given with a
+    trailing slash, so the swap's siblings must still land next to the
+    snapshot, not inside it."""
+    import datetime
+
+    from data_pipeline_with_spark_kafka_spark.run import main
+
+    snap = str(tmp_path / "snap")
+    batch = str(tmp_path / "batch")
+    spark.createDataFrame(
+        [(1, "a", datetime.datetime(2020, 1, 1), None, True)],
+        "k int, attr string, valid_from timestamp, valid_to timestamp, is_current boolean",
+    ).write.parquet(snap)
+    spark.createDataFrame([(1, "a2"), (2, "b")], "k int, attr string").write.parquet(batch)
+    _crash_between_renames(snap)
+
+    main(
+        [
+            "maintain", "--mode", "scd2", "--snapshot", f"{snap}/", "--batch", batch,
+            "--target", f"{snap}/", "--key", "k", "--attrs", "attr",
+            "--effective", "2024-06-01",
+        ],
+        spark=spark,
+    )
+    assert "restored" in capsys.readouterr().out
+    rows = sorted((r.k, r.attr, r.is_current) for r in spark.read.parquet(snap).collect())
+    assert rows == [(1, "a", False), (1, "a2", True), (2, "b", True)]
+    assert _siblings(snap) == []
+
+
 def test_cli_maintain_incremental_scd2_partition_order(spark, tmp_path):
     """scd2 mode applies new partitions in order, each partition value as
     its effective timestamp — two days arriving at once produce a
@@ -330,7 +413,7 @@ def test_two_phase_swap_restores_old_snapshot_on_rename_failure(spark, tmp_path,
     implementation is gone."""
     import os
 
-    from data_pipeline_with_spark_kafka_spark.run import _two_phase_swap
+    from data_pipeline_with_spark_kafka_spark.streaming.sinks import replace
 
     target = str(tmp_path / "snap")
     spark.createDataFrame([(1, "v1")], "k int, attr string").write.parquet(target)
@@ -347,12 +430,12 @@ def test_two_phase_swap_restores_old_snapshot_on_rename_failure(spark, tmp_path,
     import pytest
 
     with pytest.raises(OSError, match="injected"):
-        _two_phase_swap(out, target)
+        replace(out, target)
     # old snapshot restored, still readable
     assert [(r.k, r.attr) for r in spark.read.parquet(target).collect()] == [(1, "v1")]
     monkeypatch.undo()
     # and a clean retry succeeds
-    _two_phase_swap(out, target)
+    replace(out, target)
     assert [(r.k, r.attr) for r in spark.read.parquet(target).collect()] == [(1, "v2")]
 
 

@@ -63,15 +63,19 @@ def test_connected_components_runs_only_checkpoint_jobs(spark):
     finally:
         sc.setJobGroup(None, None)
     tracker = sc.statusTracker()
-    sites = {}  # job id -> call sites of its stages ("collect", "localCheckpoint", ...)
+    # A job's call site ("collect", "localCheckpoint", ...) is the name of
+    # its result stage, the highest stage id of the job. Its other stages
+    # can be skipped (shuffle output reused), and the status store evicts
+    # skipped stages first once a long session passes
+    # spark.ui.retainedStages, so only the result stage is looked up.
+    sites = {}  # job id -> call site
     for job in tracker.getJobIdsForGroup(group):
-        stages = [tracker.getStageInfo(s) for s in tracker.getJobInfo(job).stageIds]
-        sites[job] = {s.name.split(" at ")[0] if s else "?" for s in stages}
-    checkpoints = [j for j, names in sites.items() if "localCheckpoint" in names]
+        result = tracker.getStageInfo(max(tracker.getJobInfo(job).stageIds))
+        sites[job] = result.name.split(" at ")[0] if result else "?"
+    checkpoints = [j for j, site in sites.items() if site == "localCheckpoint"]
     others = {
         site
-        for names in sites.values()
-        for site in names
+        for site in sites.values()
         if site != "localCheckpoint" and "withThreadLocalCaptured" not in site
     }
     assert not others, f"jobs other than checkpoint jobs: {others}"

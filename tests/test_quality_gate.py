@@ -64,3 +64,15 @@ def test_streaming_gate_routes_batches(spark, tmp_path):
     assert by_pass[False]["not_null(k)"] == 1
     assert by_pass[False]["in_range(v)"] == 1
     assert all(m == 0 for m in by_pass[True].values())
+
+
+def test_gate_replayed_epoch_lands_once(spark, tmp_path):
+    """At-least-once foreachBatch delivers an epoch again after a crash
+    before its commit: the replay replaces that epoch's output instead
+    of appending a second copy."""
+    accept = str(tmp_path / "accept")
+    handler = quality_gated_batch_handler(CHECKS, accept, str(tmp_path / "quarantine"))
+    batch = spark.createDataFrame([(i, float(i)) for i in range(5)], "k long, v double")
+    handler(batch, 7)
+    handler(batch, 7)  # replayed epoch
+    assert spark.read.parquet(accept).count() == 5

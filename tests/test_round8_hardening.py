@@ -1,6 +1,6 @@
 """Round-8 hardening tests for the advice findings: erase-CLI crash
-recovery + zero-match rewrite skip, two-phase-swap leftover repair, and
-attribution-stream duration-spec validation."""
+recovery + zero-match rewrite skip, swap-leftover repair
+(``sinks.recover``), and duration-spec validation."""
 
 from __future__ import annotations
 
@@ -12,10 +12,10 @@ from tests.test_round7_queries import _write_erasure_universe
 
 
 def test_recover_two_phase_leftovers_restores_missing_target(tmp_path):
-    """Crash between _two_phase_swap's two renames: target absent, .old-
+    """Crash between replace's two renames: target absent, .old-
     backup present, completed .tmp sibling present -> the backup is
     restored and the tmp removed."""
-    from data_pipeline_with_spark_kafka_spark.run import _recover_two_phase_leftovers
+    from data_pipeline_with_spark_kafka_spark.streaming.sinks import recover
 
     target = tmp_path / "t.parquet"
     backup = tmp_path / "t.parquet.old-deadbeef"
@@ -24,7 +24,7 @@ def test_recover_two_phase_leftovers_restores_missing_target(tmp_path):
     tmp.mkdir()
     (tmp / "part-0.parquet").write_bytes(b"new")
 
-    notes = _recover_two_phase_leftovers(str(target))
+    notes = recover(str(target))
     assert target.read_bytes() == b"old snapshot"
     assert not backup.exists() and not tmp.exists()
     assert any("restored" in n for n in notes)
@@ -33,7 +33,7 @@ def test_recover_two_phase_leftovers_restores_missing_target(tmp_path):
 def test_recover_two_phase_leftovers_cleans_stale_siblings(tmp_path):
     """Crash after the second rename (target intact): stale .old-/.tmp-
     siblings are deleted, the target untouched."""
-    from data_pipeline_with_spark_kafka_spark.run import _recover_two_phase_leftovers
+    from data_pipeline_with_spark_kafka_spark.streaming.sinks import recover
 
     target = tmp_path / "t.parquet"
     target.write_bytes(b"current")
@@ -41,7 +41,7 @@ def test_recover_two_phase_leftovers_cleans_stale_siblings(tmp_path):
     stale_tmp = tmp_path / "t.parquet.tmp-bb"
     stale_tmp.mkdir()
 
-    notes = _recover_two_phase_leftovers(str(target))
+    notes = recover(str(target))
     assert target.read_bytes() == b"current"
     assert not (tmp_path / "t.parquet.old-aa").exists()
     assert not stale_tmp.exists()
@@ -51,19 +51,19 @@ def test_recover_two_phase_leftovers_cleans_stale_siblings(tmp_path):
 def test_recover_two_phase_leftovers_refuses_tmp_only_gap(tmp_path):
     """Target missing with ONLY a tmp sibling (no backup to restore):
     refuse loudly instead of guessing."""
-    from data_pipeline_with_spark_kafka_spark.run import _recover_two_phase_leftovers
+    from data_pipeline_with_spark_kafka_spark.streaming.sinks import recover
 
     (tmp_path / "t.parquet.tmp-cc").mkdir()
     with pytest.raises(RuntimeError, match="interrupted swap"):
-        _recover_two_phase_leftovers(str(tmp_path / "t.parquet"))
+        recover(str(tmp_path / "t.parquet"))
 
 
 def test_recover_two_phase_leftovers_noop_when_clean(tmp_path):
-    from data_pipeline_with_spark_kafka_spark.run import _recover_two_phase_leftovers
+    from data_pipeline_with_spark_kafka_spark.streaming.sinks import recover
 
     target = tmp_path / "t.parquet"
     target.write_bytes(b"current")
-    assert _recover_two_phase_leftovers(str(target)) == []
+    assert recover(str(target)) == []
 
 
 def test_erase_cli_resumes_after_crash_between_renames(spark, tmp_path, capsys):
@@ -133,15 +133,22 @@ def test_duration_ms_valid_specs(spec, ms):
         ("0 days", "positive integer"),
         ("-5 days", "positive integer"),
         ("1.5 hours", "positive integer"),
+        ("10 weeks", "unsupported unit"),
     ],
 )
-def test_duration_ms_invalid_specs_raise_descriptive(spec, msg):
+def test_duration_ms_invalid_specs_raise_descriptive(spark, spec, msg):
+    """The one parser rejects a bad spec with a descriptive error, also
+    when it arrives through ``trending_items``'s window."""
     from data_pipeline_with_spark_kafka_spark.streaming.attribution_stream import (
         _duration_ms,
     )
+    from data_pipeline_with_spark_kafka_spark.streaming.trending import trending_items
 
     with pytest.raises(ValueError, match=msg):
         _duration_ms(spec)
+    events = spark.createDataFrame([], "item string, ts timestamp")
+    with pytest.raises(ValueError, match=msg):
+        trending_items(events, item_col="item", time_col="ts", window=spec)
 
 
 def test_dow_group_key_exemption_is_query_scoped():

@@ -194,6 +194,36 @@ def test_keyed_upsert_idempotent_under_replay(spark, tmp_path):
     loc_a = final.filter(F.col("location") == "LOC_A").collect()[0]
     assert loc_a.total_new_cases_in_window == 90
 
+    # Ledger-shaped inputs: the latest write of a key wins, in-batch
+    # duplicate keys collapse to one row, an empty batch rewrites
+    # nothing, and replaying every epoch (a fresh checkpoint over the
+    # same target) converges to the same rows.
+    ledger_dir = str(tmp_path / "ledger")
+    ledger = keyed_upsert_parquet(ledger_dir, ["k"])
+    schema = "k long, val string, n long"
+    batches = [
+        [(1, "a", 1), (2, "b", 1)],
+        [(1, "a2", 2), (3, "c", 1)],
+        [(2, "b2", 2)],
+        [(4, "d", 1), (4, "d", 1)],
+    ]
+
+    def snapshot():
+        rows = spark.read.parquet(ledger_dir).collect()
+        assert len(rows) == len({r.k for r in rows})
+        return {r.k: (r.val, r.n) for r in rows}
+
+    for epoch, rows in enumerate(batches):
+        ledger(spark.createDataFrame(rows, schema), epoch)
+    want = {1: ("a2", 2), 2: ("b2", 2), 3: ("c", 1), 4: ("d", 1)}
+    assert snapshot() == want
+    files = sorted(os.listdir(ledger_dir))
+    ledger(spark.createDataFrame([], schema), len(batches))
+    assert sorted(os.listdir(ledger_dir)) == files
+    for epoch, rows in enumerate(batches):
+        ledger(spark.createDataFrame(rows, schema), epoch)
+    assert snapshot() == want
+
 
 def test_keyed_upsert_runs_each_batch_once_and_sizes_target_by_bytes(spark, tmp_path):
     """Each micro-batch's stateful plan executes once: a second execution
@@ -240,10 +270,13 @@ def test_keyed_upsert_runs_each_batch_once_and_sizes_target_by_bytes(spark, tmp_
 
 def test_keyed_upsert_swap_crash_loses_no_rows(spark, tmp_path, monkeypatch):
     """A crash after the new target is written but before it is renamed
-    in must not lose the old target: the replayed epoch merges into it."""
+    in must not lose the old target: the replayed epoch merges into it.
+    On the first epoch, with no target yet, the crash leaves only the
+    tmp output, and the replay still lands the batch. Every later write
+    sweeps what a crash left."""
     out = tmp_path / "swap_out"
     upsert = keyed_upsert_parquet(str(out), ["k"])
-    upsert(spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int"), epoch_id=1)
+    batch1 = spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int")
 
     real_rename = os.rename
 
@@ -252,18 +285,40 @@ def test_keyed_upsert_swap_crash_loses_no_rows(spark, tmp_path, monkeypatch):
             raise OSError("injected crash before the new target is renamed in")
         real_rename(src, dst)
 
+    def leftovers():
+        return [d for d in os.listdir(tmp_path) if d.startswith("swap_out.")]
+
+    monkeypatch.setattr(os, "rename", crash_on_swap_in)
+    with pytest.raises(OSError, match="injected"):
+        upsert(batch1, epoch_id=1)
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert not out.exists() and len(leftovers()) == 1
+    upsert(batch1, epoch_id=1)  # replayed first epoch
+    assert {(r.k, r.v) for r in spark.read.parquet(str(out)).collect()} == {("a", 1), ("b", 2)}
+
     batch2 = spark.createDataFrame([("c", 3)], "k string, v int")
     monkeypatch.setattr(os, "rename", crash_on_swap_in)
     with pytest.raises(OSError, match="injected"):
         upsert(batch2, epoch_id=2)
     monkeypatch.setattr(os, "rename", real_rename)
+    assert len(leftovers()) == 1
 
     upsert(batch2, epoch_id=2)  # replayed epoch
     assert {(r.k, r.v) for r in spark.read.parquet(str(out)).collect()} == {
         ("a", 1), ("b", 2), ("c", 3),
     }
-    leftovers = [d for d in os.listdir(tmp_path) if d.startswith("swap_out.")]
-    assert leftovers == []
+    assert leftovers() == []
+
+    # A process killed between the two renames leaves no target, only the
+    # backup and the tmp output: the next epoch restores the backup before
+    # it merges, so no earlier row is lost.
+    os.rename(out, f"{out}.old-ab12cd34")
+    os.makedirs(f"{out}.tmp-ab12cd34")
+    upsert(spark.createDataFrame([("d", 4)], "k string, v int"), epoch_id=3)
+    assert {(r.k, r.v) for r in spark.read.parquet(str(out)).collect()} == {
+        ("a", 1), ("b", 2), ("c", 3), ("d", 4),
+    }
+    assert leftovers() == []
 
 
 def test_append_mode_emits_only_finalized_windows(spark, tmp_path):

@@ -1,22 +1,17 @@
-"""Measure the durable-ledger MERGE cost vs ledger size (round-11
-verdict task: prove the per-trigger cost now scales with the BATCH, not
-the ledger).
+"""Measure the keyed-upsert MERGE cost against ledger size.
 
-For each ledger size, seed a per-customer ledger, then time ONE
-fixed-size batch upsert (10k keys) through:
-
-- ``keyed_upsert_parquet`` (round 9): anti-join + full rewrite — the
-  baseline O(ledger) cost;
-- ``bucketed_keyed_upsert_parquet`` (round 11): delta append — the
-  steady-state per-trigger cost (compaction amortizes across
-  ``compact_every`` triggers and is reported separately as the
-  worst-case trigger).
+For each ledger size, seed a per-customer ledger through
+``sinks.keyed_upsert_parquet``, then time ONE fixed-size batch upsert
+(10k keys spread across the whole key domain) into it. The sink
+anti-joins the batch against the ledger and rewrites the whole ledger,
+so the per-trigger cost is O(ledger): these numbers are the baseline a
+copy-on-write sink that rewrites only the touched files must beat.
 
     python tools/ledger_bench.py [batch_keys] [ledger_size ...]
     # default: 10_000 keys against 50k / 500k / 2M ledgers
 
-Each timing is min-of-2 (co-tenant host). Results land in BASELINE.md
-("bucketed ledger MERGE bound").
+Each timing is min-of-2 (co-tenant host). Prints one JSON line per
+ledger size, then a summary line {"metric": "ledger_merge_bound", ...}.
 """
 
 from __future__ import annotations
@@ -33,11 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from data_pipeline_with_spark_kafka_spark.session import get_spark
-from data_pipeline_with_spark_kafka_spark.streaming.sinks import (
-    bucketed_keyed_upsert_parquet,
-    keyed_upsert_parquet,
-    read_keyed_ledger,
-)
+from data_pipeline_with_spark_kafka_spark.streaming.sinks import keyed_upsert_parquet
 
 
 def _ledger_rows(spark, n: int):
@@ -50,8 +41,7 @@ def _ledger_rows(spark, n: int):
 
 
 def _batch_rows(spark, n_keys: int, ledger_n: int):
-    # keys spread across the whole ledger domain (worst case for
-    # bucketing: touches ~all buckets), absolute replacement rows
+    # keys spread across the whole ledger domain, absolute replacement rows
     step = max(1, ledger_n // n_keys)
     return spark.range(n_keys).select(
         (F.col("id") * step % ledger_n).alias("o_custkey"),
@@ -70,6 +60,14 @@ def _timed(fn) -> float:
     return round(best, 3)
 
 
+def _dir_bytes(path: str) -> int:
+    return sum(
+        os.path.getsize(os.path.join(path, f))
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    )
+
+
 def main() -> None:
     args = [int(a) for a in sys.argv[1:]]
     batch_keys = args[0] if args else 10_000
@@ -80,41 +78,18 @@ def main() -> None:
     results = []
     try:
         for n in sizes:
-            seed = _ledger_rows(spark, n)
             batch = _batch_rows(spark, batch_keys, n).cache()
             batch.count()
-            row: dict = {"ledger_rows": n, "batch_keys": batch_keys}
-
-            # round-9 plain sink: seed via one upsert, then time a batch
-            plain_dir = os.path.join(root, f"plain{n}")
-
-            def plain_once(d=plain_dir):
-                keyed_upsert_parquet(d, ["o_custkey"])(batch, 1)
-
-            keyed_upsert_parquet(plain_dir, ["o_custkey"])(seed, 0)
-            row["plain_full_rewrite_sec"] = _timed(plain_once)
-
-            # round-11 bucketed sink: seed + compact so the base is
-            # folded, then time (a) the steady-state delta append and
-            # (b) the worst-case trigger that runs a compaction
-            bdir = os.path.join(root, f"bucketed{n}")
-            seed_sink = bucketed_keyed_upsert_parquet(
-                bdir, ["o_custkey"], n_buckets=64, compact_every=1
-            )
-            seed_sink(seed, 0)  # folds into the base immediately
-            steady = bucketed_keyed_upsert_parquet(
-                bdir, ["o_custkey"], n_buckets=64, compact_every=1_000_000
-            )
-            row["bucketed_delta_append_sec"] = _timed(lambda: steady(batch, 1))
-            compacting = bucketed_keyed_upsert_parquet(
-                bdir, ["o_custkey"], n_buckets=64, compact_every=1
-            )
-            t0 = time.monotonic()
-            compacting(batch, 2)
-            row["bucketed_compaction_trigger_sec"] = round(time.monotonic() - t0, 3)
-            row["ledger_rows_after"] = read_keyed_ledger(
-                spark, bdir, ["o_custkey"]
-            ).count()
+            target = os.path.join(root, f"ledger{n}")
+            sink = keyed_upsert_parquet(target, ["o_custkey"])
+            sink(_ledger_rows(spark, n), 0)
+            row = {
+                "ledger_rows": n,
+                "batch_keys": batch_keys,
+                "upsert_sec": _timed(lambda: sink(batch, 1)),
+                "ledger_bytes": _dir_bytes(target),
+                "ledger_rows_after": spark.read.parquet(target).count(),
+            }
             batch.unpersist()
             results.append(row)
             print(json.dumps(row), flush=True)

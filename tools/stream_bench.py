@@ -253,8 +253,7 @@ def measure_stateful_attribution(spark, rate: int = 200_000, run_seconds: int = 
 
 def measure_stateful_rfm(spark, rate: int = 200_000, run_seconds: int = 90) -> dict:
     """Throughput + state profile of the streaming RFM maintainer WITH the
-    durable parquet-ledger fold (round-9 verdict task #3: the per-batch
-    MERGE cost was unmeasured). Rate-source orders over a 50k-customer
+    durable parquet-ledger fold. Rate-source orders over a 50k-customer
     domain flow through ``streaming.rfm_stream.rfm_base_stream`` into
     ``streaming.sinks.keyed_upsert_parquet`` — so every trigger duration
     INCLUDES the ledger merge (anti-join + rewrite of the accumulating
@@ -262,10 +261,7 @@ def measure_stateful_rfm(spark, rate: int = 200_000, run_seconds: int = 90) -> d
     to |customers| (lifetime aggregates, no eviction horizon); the
     artifact also reports the final ledger row count."""
     from data_pipeline_with_spark_kafka_spark.streaming.rfm_stream import rfm_base_stream
-    from data_pipeline_with_spark_kafka_spark.streaming.sinks import (
-        bucketed_keyed_upsert_parquet,
-        read_keyed_ledger,
-    )
+    from data_pipeline_with_spark_kafka_spark.streaming.sinks import keyed_upsert_parquet
 
     orders = (
         spark.readStream.format("rate")
@@ -282,7 +278,7 @@ def measure_stateful_rfm(spark, rate: int = 200_000, run_seconds: int = 90) -> d
     query = (
         rfm_base_stream(orders)
         .writeStream.outputMode("update")
-        .foreachBatch(bucketed_keyed_upsert_parquet(ledger_dir, ["o_custkey"]))
+        .foreachBatch(keyed_upsert_parquet(ledger_dir, ["o_custkey"]))
         .option("checkpointLocation", tempfile.mkdtemp(prefix="rfmb-ckpt-"))
         .start()
     )
@@ -290,14 +286,14 @@ def measure_stateful_rfm(spark, rate: int = 200_000, run_seconds: int = 90) -> d
     rows_per_sec, total_rows, state = _batch_metrics(data_batches)
     ledger_rows = 0
     if os.path.isdir(ledger_dir):
-        ledger_rows = read_keyed_ledger(spark, ledger_dir, ["o_custkey"]).count()
+        ledger_rows = spark.read.parquet(ledger_dir).count()
     return {
         "metric": "rfm_stream_rows_per_sec",
         "value": rows_per_sec,
         "unit": "rows/sec",
-        "operator": "rfm_base_stream + bucketed_keyed_upsert_parquet ledger "
-                    "(trigger durations include the per-batch delta append "
-                    "+ amortized touched-bucket compaction)",
+        "operator": "rfm_base_stream + keyed_upsert_parquet ledger "
+                    "(trigger durations include the per-batch anti-join "
+                    "+ full ledger rewrite)",
         "offered_rate": rate,
         "run_seconds": run_seconds,
         "n_batches": len(data_batches),
