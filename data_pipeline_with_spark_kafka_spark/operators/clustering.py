@@ -1,114 +1,40 @@
 """Distributed k-means over embedding columns + IVF similarity search.
 
 Pure DataFrame/built-in-function implementation (no MLlib dependency, no
-RDDs): Lloyd iterations are assign (crossJoin-broadcast centroids, argmin
-distance) -> recompute (groupBy cluster, element-wise mean via
-``posexplode`` + pivot-free re-aggregation). Deterministic seeding: initial
-centroids are the k rows with the smallest ``xxhash64(id, seed)`` — stable
-across runs and partitionings.
+RDDs). One Lloyd's trainer, ``kmeans_verified``: hash-seeded init (the k
+rows with the smallest ``xxhash64(id, seed)`` — stable across runs and
+partitionings), then per iteration one literal-centroid argmin scan
+(``cell_multi_assign``) and one per-(cid, dim) mean aggregate, with the
+centroids rounded to 6 dp on the driver so the DuckDB oracle replays the
+loop bit for bit.
 
 IVF (inverted-file) search: assign every vector to its nearest centroid
 offline; a query probes only the ``n_probe`` nearest cells. Same
 probe/rerank plumbing as the LSH variant (operators/similarity.py) with a
 learned coarse quantizer instead of random hyperplanes.
 
-Scale: each Lloyd iteration is one broadcast (k x dim floats — tiny), one
-narrow map (distance argmin), and one shuffle keyed by cluster id (k keys
--> use salting or a higher-k if k << cores). The fact table never
-self-joins.
+Every nearest-centroid argmin in the package is ``cell_multi_assign``:
+the k centroids ship as expression literals, so assignment is a narrow
+map over the scan, ranked by ``(distance, cid)``. The fact table never
+self-joins and never joins the centroids.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from data_pipeline_with_spark_kafka_spark.operators.iterate import iterate
 from data_pipeline_with_spark_kafka_spark.operators.similarity import as_double
 from data_pipeline_with_spark_kafka_spark.sources import memo
+
+#: Centroid quantization after every mean recomputation (decimal places).
+_ROUND_DP = 6
 
 
 def _sq_dist(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda acc, x: acc + x
     )
-
-
-def _assign(df: DataFrame, id_col: str, vec_col: str, centroids: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment: broadcast the k centroids, argmin by
-    (distance, cid) — the cid tiebreak keeps assignment deterministic."""
-    with_c = df.crossJoin(F.broadcast(centroids))
-    dist = _sq_dist(as_double(F.col(vec_col)), F.col("centroid"))
-    w = F.struct(dist.alias("d"), F.col("cid").alias("cid"))
-    return (
-        with_c.groupBy(id_col)
-        .agg(F.min(w).alias("best"))
-        .select(id_col, F.col("best.cid").alias("cid"), F.col("best.d").alias("dist"))
-    )
-
-
-def _recompute(df: DataFrame, id_col: str, vec_col: str, assigned: DataFrame) -> DataFrame:
-    """New centroid = element-wise mean per cluster: posexplode the vectors
-    (dim rows per vector), average per (cid, pos), re-collect ordered."""
-    joined = df.join(assigned, id_col).select("cid", F.posexplode(as_double(F.col(vec_col))))
-    return (
-        joined.groupBy("cid", "pos")
-        .agg(F.avg("col").alias("m"))
-        .groupBy("cid")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-        .select("cid", F.transform("pm", lambda s: s["m"]).alias("centroid"))
-    )
-
-
-def kmeans(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    *,
-    k: int = 10,
-    iterations: int = 5,
-    seed: int = 42,
-) -> DataFrame:
-    """Lloyd's k-means; returns (cid, centroid array<double>). A
-    fixed-count loop on the shared driver (operators/iterate.py): each
-    generation's centroids are checkpointed, so its plan never chains the
-    lineage of earlier iterations."""
-    init = (
-        df.withColumn("__h", F.xxhash64(F.col(id_col), F.lit(seed)))
-        .orderBy("__h", id_col)
-        .limit(k)
-        .select(
-            F.row_number().over(Window.orderBy("__h", id_col)).alias("cid"),
-            as_double(F.col(vec_col)).alias("centroid"),
-        )
-    )
-    return iterate(
-        init,
-        lambda centroids: _recompute(df, id_col, vec_col, _assign(df, id_col, vec_col, centroids)),
-        iterations=iterations,
-        name="kmeans",
-    )
-
-
-@memo.memoized
-def kmeans_centroid_rows(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    *,
-    k: int = 10,
-    iterations: int = 5,
-    seed: int = 42,
-) -> list[tuple[int, list[float]]]:
-    """Train-once coarse quantizer: at scale the quantizer is trained
-    OFFLINE and handed to every IVF query; retraining inside each query
-    costs ``iterations`` assign+recompute shuffle pairs per run. The
-    centroid table is tiny (k x dim doubles), so it is collected as
-    ``[(cid, centroid), ...]`` rows and memoized per input content
-    (``sources.memo``) — deterministic seeding makes this pure
-    memoization, not state."""
-    trained = kmeans(df, id_col, vec_col, k=k, iterations=iterations, seed=seed)
-    return [(r["cid"], list(r["centroid"])) for r in trained.collect()]
 
 
 def fixture_centroid_rows(name: str):
@@ -152,12 +78,12 @@ def cell_multi_assign(
     """SHUFFLE-FREE multi-cell assignment: each row gains ``n_assign``
     copies, one per nearest IVF cell.
 
-    The k centroids are a tiny offline artifact (k x dim doubles —
-    ``kmeans_centroid_rows``), so instead of a broadcast join they
-    ship as LITERALS inside one codegen expression: an array of
-    (sq_dist, cid) structs, ``array_sort`` (lexicographic: distance, then
-    cid tiebreak — deterministic), ``slice`` the ``n_assign`` nearest,
-    explode. Zero Exchange, zero Python — assignment is a narrow map over
+    The k centroids are a tiny artifact (k x dim doubles — a committed
+    fixture or ``to_centroid_rows(kmeans_verified(...))``), so instead of
+    a broadcast join they ship as LITERALS inside one codegen expression:
+    an array of (sq_dist, cid) structs, ``array_sort`` (lexicographic:
+    distance, then cid tiebreak — deterministic), ``slice`` the
+    ``n_assign`` nearest, explode. Zero Exchange, zero Python — assignment is a narrow map over
     the scan, which is the shape that matters when the fact side is 100 TB.
 
     Each centroid vector is ONE ndarray Literal (see
@@ -190,41 +116,38 @@ def ivf_topk(
     id_col: str,
     vec_col: str,
     query_df: DataFrame,
-    centroids: DataFrame,
+    centroid_rows: list,
     *,
     k: int = 10,
     n_probe: int = 2,
 ) -> DataFrame:
     """IVF approximate top-k cosine: probe the n_probe cells nearest to the
-    query, exact-rerank only their members."""
+    query (``query_df`` holds one query row), exact-rerank only their
+    members. Members and the query take their cells from the same
+    literal-centroid argmin (``cell_multi_assign``), so no join touches
+    the centroids."""
     from data_pipeline_with_spark_kafka_spark.functions.rounding import round_to
     from data_pipeline_with_spark_kafka_spark.operators.similarity import (
         cosine_pre,
         l2_norm,
     )
 
-    assigned = _assign(df, id_col, vec_col, centroids).select(id_col, "cid")
-    members = df.join(assigned, id_col)
-
+    # limit(1): the broadcast probe side is n_probe rows by construction,
+    # however large the relation the query row is filtered from.
     qcells = (
-        query_df.crossJoin(F.broadcast(centroids))
-        .select(
-            _sq_dist(as_double(F.col(vec_col)), F.col("centroid")).alias("d"),
-            F.col("cid"),
-            as_double(F.col(vec_col)).alias("qvec"),
-        )
-        .orderBy("d", "cid")
-        .limit(n_probe)
-        .select("cid", "qvec")
+        cell_multi_assign(query_df.limit(1), vec_col, centroid_rows, n_assign=n_probe, out_col="cid")
+        .select("cid", as_double(F.col(vec_col)).alias("qvec"))
         .withColumn("qn", l2_norm(F.col("qvec")))
     )
 
     # Norm hoist (similarity.cosine_pre contract): the query norm is a
     # broadcast-side column instead of a 64-wide interpreted fold per
     # member row; the member cast + norm bind once per row.
-    fact = members.select(
-        "cid", F.col(id_col), as_double(F.col(vec_col)).alias("_v")
-    ).withColumn("_n", l2_norm(F.col("_v")))
+    fact = (
+        cell_multi_assign(df, vec_col, centroid_rows, n_assign=1, out_col="cid")
+        .select("cid", F.col(id_col), as_double(F.col(vec_col)).alias("_v"))
+        .withColumn("_n", l2_norm(F.col("_v")))
+    )
     return (
         fact.join(F.broadcast(qcells), "cid")
         .select(
@@ -247,48 +170,45 @@ def kmeans_verified(
     k: int = 8,
     iterations: int = 5,
     seed: int = 42,
-    round_dp: int = 6,
 ) -> list[tuple[int, int, float, int]]:
-    """Lloyd's k-means with per-iteration centroid QUANTIZATION — the
-    cross-engine-verifiable twin of ``kmeans()`` (which trains the IVF
-    quantizer and stays unrounded).
+    """Lloyd's k-means with per-iteration centroid QUANTIZATION: the
+    package's one k-means, serving the ``emb_kmeans_train`` query,
+    ``run.py cluster``, the in-session IVF quantizer and
+    tools/gen_centroid_fixture.py.
 
-    Differences that make the training loop itself oracle-able in DuckDB
+    The training loop is oracle-able in DuckDB
     (queries/emb_analytics.py unrolls the iterations as chained
     MATERIALIZED CTE stages, the BPE/GD pattern):
 
     - init: the k vectors with the smallest ``(xxhash64(id, seed), id)``
-      — mirrorable since round 8 via the pure-SQL XXH64
-      (queries/xxh64_sql.py);
+      — mirrorable via the pure-SQL XXH64 (queries/xxh64_sql.py);
     - after every mean recomputation the centroids are ROUNDED to
-      ``round_dp`` decimals on the DRIVER, so both engines enter the
+      ``_ROUND_DP`` decimals on the DRIVER, so both engines enter the
       next assignment with bit-identical centroid literals. Residual
       risk is only a vector sitting within ~1e-15 of an exact
       two-centroid tie (the discrete analogue of the GD trainer's
       contractive-map argument; distances to distinct centroids on this
       corpus differ at >=1e-3);
-    - empty clusters keep their previous centroid (COALESCE in SQL).
+    - empty clusters keep their previous centroid (COALESCE in SQL);
+    - rows with a NULL vector are excluded.
 
-    Scale shape: identical to ``kmeans()`` — each iteration is ONE
-    argmin-assignment scan + ONE per-(cid,dim) mean aggregate; k*d
-    doubles travel to the driver per iteration, never rows. The argmin
-    runs over k literal arrays (single Literal nodes), so assignment
-    stays in whole-stage codegen with no join at all — one fewer
-    shuffle per iteration than the crossJoin form.
+    Scale shape: each iteration is ONE argmin-assignment scan
+    (``cell_multi_assign``, ``n_assign=1``: k literal arrays, no join)
+    + ONE per-(cid,dim) mean aggregate; k*d doubles travel to the
+    driver per iteration, never rows.
 
     Returns final ``[(cid, dim, centroid_val, cluster_n), ...]`` rows
-    (cid 1-based, dim 0-based), cluster_n from the LAST assignment.
+    (cid 1-based, dim 0-based, cid-major), cluster_n from the LAST
+    assignment; ``to_centroid_rows`` reshapes them for the IVF operators.
     Memoized per input content (``sources.memo``).
     """
-    import numpy as np
+    import math
 
-    q = 10**round_dp
+    q = 10**_ROUND_DP
 
     def rnd(x: float) -> float:
         # DuckDB ROUND = half-away-from-zero on the scaled product (the
         # functions/rounding contract, applied driver-side).
-        import math
-
         return math.copysign(math.floor(abs(x) * q + 0.5), x) / q
 
     # NULL-vector contract (the NULL-text rule from the edge sweep):
@@ -310,31 +230,12 @@ def kmeans_verified(
     base = base.persist()
     try:
         for _ in range(iterations):
-            # Two projections: F.struct silently renames fields to
-            # col1/col2 when a field is a higher-order-function
-            # expression (the F.aggregate distance fold), so distances
-            # land as named columns first and the argmin struct is
-            # built over plain column refs.
-            dists = base.select(
-                "_v",
-                *[
-                    _sq_dist(F.col("_v"), F.lit(np.asarray(c, dtype=np.float64))).alias(
-                        f"_d{j}"
-                    )
-                    for j, c in enumerate(cents)
-                ],
-            )
-            choices = F.array(
-                *[
-                    F.struct(F.col(f"_d{j}").alias("d"), F.lit(j + 1).alias("cid"))
-                    for j in range(len(cents))
-                ]
-            )
-            assigned = dists.select(
-                F.array_min(choices)["cid"].alias("cid"), F.posexplode("_v")
+            assigned = cell_multi_assign(
+                base, "_v", list(enumerate(cents, 1)), n_assign=1, out_col="cid"
             )
             rows = (
-                assigned.groupBy("cid", "pos")
+                assigned.select("cid", F.posexplode("_v"))
+                .groupBy("cid", "pos")
                 .agg(F.avg("col").alias("m"), F.count("*").alias("n"))
                 .collect()
             )  # k*d scalars — feature-bounded, never row-bounded
@@ -357,3 +258,13 @@ def kmeans_verified(
         for j in range(len(cents))
         for p in range(dim)
     ]
+
+
+def to_centroid_rows(trained: list) -> list[tuple[int, list[float]]]:
+    """``kmeans_verified`` rows as ``[(cid, centroid), ...]``: the shape
+    ``cell_multi_assign``, ``ivf_topk`` and the committed quantizer
+    fixtures (``fixture_centroid_rows``) share."""
+    cents: dict[int, list[float]] = {}
+    for cid, _dim, x, _n in trained:  # cid-major, dim-ascending
+        cents.setdefault(cid, []).append(x)
+    return list(cents.items())

@@ -779,8 +779,8 @@ def embedding_near_dup_pairs_ivf(
     ``embedding_near_dup_pairs`` / ``..._vectorized`` take the block
     column as given, which on the fixtures means the ``label`` column — a
     luxury a real corpus doesn't have. This tier derives the block from
-    the data itself: a k-means coarse quantizer (trained offline,
-    ``clustering.kmeans_centroid_rows``) assigns every vector to its
+    the data itself: a k-means coarse quantizer (trained offline by
+    ``clustering.kmeans_verified``) assigns every vector to its
     ``n_assign`` nearest cells via a zero-shuffle literal-centroid
     expression (``clustering.cell_multi_assign``), the BLAS pair kernel
     runs per cell with the same triangle-task guard for dense cells, and

@@ -1,7 +1,6 @@
 """One driver for every loop whose state is a DataFrame generation:
 connected components (operators/dedup.py), PageRank, BFS and label
-propagation (operators/graph.py), Lloyd's k-means
-(operators/clustering.py) and the distributed BPE merge loop
+propagation (operators/graph.py) and the distributed BPE merge loop
 (operators/bpe.py).
 
 Each loop supplies a ``step`` that maps one generation to the next as

@@ -172,11 +172,11 @@ def emb_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirrored by the pure-SQL XXH64 compiler (queries/xxh64_sql.py), and
     per-iteration 6dp centroid quantization keeps the two engines'
     assignment inputs bit-identical — the clustering counterpart of the
-    oracled GD trainer (llm_train_quality_classifier). The unrounded
-    production quantizer (operators/clustering.kmeans) remains the IVF
-    path; this is its verified twin, same per-iteration job profile
-    (one codegen argmin scan + one (cid,dim) aggregate; k*d doubles to
-    the driver, never rows)."""
+    oracled GD trainer (llm_train_quality_classifier). The trainer
+    (operators/clustering.kmeans_verified) is the package's one k-means,
+    so this query also pins the in-session IVF quantizer and
+    ``run.py cluster``: per iteration one codegen argmin scan + one
+    (cid,dim) aggregate; k*d doubles to the driver, never rows."""
     from data_pipeline_with_spark_kafka_spark.operators.clustering import kmeans_verified
 
     emb = load_table_fanned(spark, sf_dir, "embeddings")

@@ -54,11 +54,12 @@ def _quantizer_rows(emb: DataFrame, *, fixture: str, k: int, iterations: int):
     """Centroid rows for an IVF query: the committed offline artifact when
     present (``fixtures/<fixture>.parquet`` — the deployment shape, and
     what lets the DuckDB oracle mirror cell assignment in SQL), else
-    train-and-memoize in session (scale-curve runs on synthetic dirs)."""
+    train-and-memoize in session with the package's one k-means (the
+    centroids ``run.py cluster`` writes for the same k and iterations)."""
     rows = clustering.fixture_centroid_rows(fixture)
     if rows is None:
-        rows = clustering.kmeans_centroid_rows(
-            emb, "vec_id", "embedding", k=k, iterations=iterations
+        rows = clustering.to_centroid_rows(
+            clustering.kmeans_verified(emb, "vec_id", "embedding", k=k, iterations=iterations)
         )
     return rows
 
@@ -219,9 +220,8 @@ def llm_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership + probing + the exact rerank in SQL."""
     emb = load_table_fanned(spark, sf_dir, "embeddings")
     rows = _quantizer_rows(emb, fixture="ivf_centroids_k8", k=8, iterations=2)
-    centroids = spark.createDataFrame(rows, "cid int, centroid array<double>")
     return clustering.ivf_topk(
-        emb, "vec_id", "embedding", emb.filter(F.col("vec_id") == 0), centroids, k=10, n_probe=3
+        emb, "vec_id", "embedding", emb.filter(F.col("vec_id") == 0), rows, k=10, n_probe=3
     )
 
 

@@ -220,16 +220,18 @@ def cmd_train_quality(spark: SparkSession, args: argparse.Namespace) -> None:
 
 
 def cmd_cluster(spark: SparkSession, args: argparse.Namespace) -> None:
-    """Train the VERIFIED k-means (per-iteration quantized Lloyd's,
-    operators/clustering.kmeans_verified — the same loop the
-    emb_kmeans_train oracle replays) on an embeddings parquet and
-    persist centroids + cluster sizes as a versioned JSON artifact: the
-    offline-quantizer half of the IVF/SemDeDup deployment story, like
-    train-quality is for the scorer."""
+    """Train the package's k-means (per-iteration quantized Lloyd's,
+    operators/clustering.kmeans_verified — the loop the emb_kmeans_train
+    oracle replays and the in-session IVF quantizer runs) on an
+    embeddings parquet and persist centroids + cluster sizes as a
+    versioned JSON artifact: the offline-quantizer half of the
+    IVF/SemDeDup deployment story, like train-quality is for the
+    scorer."""
     import json as _json
 
     from data_pipeline_with_spark_kafka_spark.operators.clustering import (
         kmeans_verified,
+        to_centroid_rows,
     )
 
     emb = spark.read.parquet(args.input)
@@ -239,11 +241,8 @@ def cmd_cluster(spark: SparkSession, args: argparse.Namespace) -> None:
     if not rows:
         raise SystemExit("no vectors to cluster (empty or all-NULL input)")
     dim = max(r[1] for r in rows) + 1
-    cents: dict[int, list[float]] = {}
-    counts: dict[int, int] = {}
-    for cid, d, v, n in rows:
-        cents.setdefault(cid, [0.0] * dim)[d] = v
-        counts[cid] = n
+    cents = dict(to_centroid_rows(rows))
+    counts = {cid: n for cid, _d, _v, n in rows}
     artifact = {
         "k": len(cents),
         "dim": dim,
@@ -550,7 +549,7 @@ def make_parser() -> argparse.ArgumentParser:
     trq.add_argument("--iters", type=int, default=30)
     trq.add_argument("--lr", type=float, default=1.0)
 
-    clu = sub.add_parser("cluster", help="train the verified k-means quantizer -> centroids JSON")
+    clu = sub.add_parser("cluster", help="train the k-means quantizer -> centroids JSON")
     clu.add_argument("--input", required=True, help="embeddings parquet path/dir")
     clu.add_argument("--centroids-out", required=True, help="where to write the centroids JSON")
     clu.add_argument("--id-col", default="vec_id")

@@ -67,9 +67,9 @@ def _read_table(
     spark: SparkSession, sf_dir: str, name: str, fingerprint: tuple, fanned: bool = False
 ) -> DataFrame:
     if fanned:
-        from data_pipeline_with_spark_kafka_spark.session import default_parallelism
-
-        return _read_table(spark, sf_dir, name, fingerprint).repartition(default_parallelism())
+        return _read_table(spark, sf_dir, name, fingerprint).repartition(
+            spark.sparkContext.defaultParallelism
+        )
     if name == "events":
         # A caller may hand us a session without this conf; it is a
         # runtime-settable SQL conf, so set it defensively pre-scan.
@@ -78,15 +78,6 @@ def _read_table(
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return df
-
-
-#: Fan-out ceiling: inputs at or under this many bytes scan as a single
-#: task (one parquet row group under the default 128 MB
-#: ``spark.sql.files.maxPartitionBytes``), serializing every downstream
-#: per-row transform behind one core. Tunable per deployment; at real
-#: scale the scan itself yields >= cluster parallelism partitions and the
-#: fan-out never fires, so plans are unchanged.
-FANOUT_MAX_BYTES = int(os.environ.get("SPARK_GRAFT_FANOUT_MAX_BYTES", 128 << 20))
 
 
 def parquet_files(path: str) -> list[str]:
@@ -125,9 +116,11 @@ def load_table_fanned(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     map work lands on every core. Measured at sf0.1: simhash fingerprints
     1.64 -> 0.33 s, bare tokenize+explode 1.15 -> 0.22 s.
 
-    Scale-adaptive by construction: inputs over ``FANOUT_MAX_BYTES``
-    (env ``SPARK_GRAFT_FANOUT_MAX_BYTES``) pass through untouched, so at
-    100 TB the plan is identical to ``load_table``'s. The round-robin
+    Scale-adaptive by construction: only inputs under the session's
+    ``spark.sql.files.maxPartitionBytes`` (one scan split) fan out, to
+    ``defaultParallelism`` partitions; larger inputs already scan as
+    several tasks and pass through untouched, so at 100 TB the plan is
+    identical to ``load_table``'s. The round-robin
     repartition is retry-safe (``spark.sql.execution.sortBeforeRepartition``
     stays on) and row-order-neutral for every consumer: all downstream
     aggregates/windows in this repo order explicitly.
@@ -135,7 +128,8 @@ def load_table_fanned(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     fingerprint = parquet_fingerprint(_path(sf_dir, name))
     count, size, _mtime = fingerprint
     # No data files: size unknown -> assume big, never fan out.
-    fanned = bool(count) and size < FANOUT_MAX_BYTES
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    fanned = bool(count) and size < split
     return _read_table(spark, sf_dir, name, fingerprint, fanned=fanned)
 
 

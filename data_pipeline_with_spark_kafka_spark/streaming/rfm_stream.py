@@ -27,10 +27,10 @@ Design notes:
 - emitted rows are ABSOLUTE per-customer aggregates (not deltas), so
   the ledger fold is idempotent under checkpoint replay with no epoch
   bookkeeping (contrast: the Markov ledger folds additive pair rows and
-  must dedupe epochs). Two folds are provided: ``run_rfm_ledger`` into
-  a Python dict (tests), and ``run_rfm_ledger_parquet`` into a plain
-  parquet table through the package's one keyed-upsert sink,
-  ``sinks.keyed_upsert_parquet``.
+  must dedupe epochs). ``run_rfm_ledger_parquet`` folds them into a
+  plain parquet table through the package's one keyed-upsert sink,
+  ``sinks.keyed_upsert_parquet`` (tests/test_rfm_stream.py keeps a
+  Python-dict fold as an independent check).
 - under any delivery order the final ledger equals the batch aggregate
   over the same orders (max/sum/count are order-insensitive) — stronger
   than the attribution/Markov twins, whose at-event-time semantics
@@ -93,38 +93,10 @@ def rfm_base_stream(orders: DataFrame) -> DataFrame:
     )
 
 
-def run_rfm_ledger(stream: DataFrame, checkpoint: str, ledger: dict) -> None:
-    """Test fold: foreachBatch upsert of the absolute per-customer rows
-    into a Python dict — idempotent under epoch replay because values
-    are absolute. The dict collect is per-batch CHANGED customers only,
-    but it is still a driver-side fold: deployments use
-    ``run_rfm_ledger_parquet`` (below) or compose
-    ``sources.readers.jdbc_keyed_upsert`` — same absolute-row
-    idempotence, no driver data path."""
-
-    def upsert(df: DataFrame, epoch: int) -> None:
-        for r in df.collect():
-            ledger[int(r.o_custkey)] = (
-                int(r.last_order_days),
-                int(r.frequency),
-                int(r.monetary_cents),
-            )
-
-    q = (
-        stream.writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def run_rfm_ledger_parquet(stream: DataFrame, checkpoint: str, target_dir: str) -> None:
     """Durable ledger fold: MERGE each batch's absolute per-customer rows
     into a parquet ledger keyed by ``o_custkey`` through
-    ``sinks.keyed_upsert_parquet`` — the deployment-shaped twin of
-    ``run_rfm_ledger`` with no driver-side data path. Absolute rows +
+    ``sinks.keyed_upsert_parquet``, with no driver-side data path. Absolute rows +
     keyed merge = replay-idempotent with zero epoch bookkeeping; for a
     JDBC serving table swap in ``sources.readers.jdbc_keyed_upsert``
     (same contract, transactional MERGE).
@@ -142,18 +114,6 @@ def run_rfm_ledger_parquet(stream: DataFrame, checkpoint: str, target_dir: str) 
         .start()
     )
     q.awaitTermination()
-
-
-def segments_from_ledger(spark, ledger: dict) -> DataFrame:
-    """Quartile-code the maintained dict ledger (test fold): adapt to the
-    shared base relation and delegate to ``segments_from_base``."""
-    rows = [
-        (int(k), int(d), int(f), round(c / 100.0, 2)) for k, (d, f, c) in ledger.items()
-    ]
-    base = spark.createDataFrame(
-        rows, "o_custkey long, last_days long, frequency long, monetary double"
-    )
-    return segments_from_base(base)
 
 
 def segments_from_parquet_ledger(spark, target_dir: str) -> DataFrame:

@@ -507,3 +507,22 @@ def test_cluster_cli_writes_verified_centroids(spark, sf_dir, tmp_path):
     main(["cluster", "--input", emb_path, "--centroids-out", out2, "--k", "4",
           "--iters", "3"], spark=spark)
     assert open(out1).read() == open(out2).read()
+
+
+def test_in_session_ivf_quantizer_matches_cluster_cli(spark, sf_dir, tmp_path):
+    """With no committed quantizer fixture, an IVF query trains its cells
+    in session with the same k-means ``run.py cluster`` ships: for the
+    same k, iterations and seed the centroids are identical, empty cells
+    included."""
+    import json
+
+    from data_pipeline_with_spark_kafka_spark.queries.llm_fast_paths import _quantizer_rows
+    from data_pipeline_with_spark_kafka_spark.sources.tables import load_table_fanned
+
+    out = str(tmp_path / "centroids.json")
+    main(["cluster", "--input", f"{sf_dir}/embeddings.parquet", "--centroids-out", out,
+          "--k", "8", "--iters", "2", "--seed", "42"], spark=spark)
+    emb = load_table_fanned(spark, sf_dir, "embeddings")
+    rows = _quantizer_rows(emb, fixture="no_such_quantizer", k=8, iterations=2)
+    assert {str(cid): c for cid, c in rows} == json.load(open(out))["centroids"]
+    assert [cid for cid, _ in rows] == list(range(1, 9))

@@ -56,8 +56,8 @@ def _truth_pairs(vecs: np.ndarray, labels: np.ndarray, same_label_only: bool) ->
 @pytest.fixture(scope="module")
 def ivf_result(clustered):
     df, _, _ = clustered
-    rows = clustering.kmeans_centroid_rows(
-        df, "vec_id", "embedding", k=K_CLUSTERS, iterations=3
+    rows = clustering.to_centroid_rows(
+        clustering.kmeans_verified(df, "vec_id", "embedding", k=K_CLUSTERS, iterations=3)
     )
     out = dedup.embedding_near_dup_pairs_ivf(
         df, "vec_id", "embedding",

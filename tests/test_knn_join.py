@@ -71,8 +71,8 @@ def test_ivf_knn_recall_isotropic_floor(spark, emb, exact):
     IVF (true neighbors are barely-similar vectors scattered across
     cells). Probing 3 of 10 cells still must beat the 3/10 random-cell
     baseline, and every returned cosine must equal the exact tier's."""
-    rows = clustering.kmeans_centroid_rows(
-        emb, "vec_id", "embedding", k=10, iterations=3
+    rows = clustering.to_centroid_rows(
+        clustering.kmeans_verified(emb, "vec_id", "embedding", k=10, iterations=3)
     )
     approx = similarity.knn_join_ivf(
         emb, "vec_id", "embedding", emb.filter(F.col("vec_id") < N_QUERIES), rows,
@@ -101,8 +101,8 @@ def test_ivf_knn_recall_clustered(spark):
         [(int(i), [float(x) for x in vecs[i]]) for i in range(n)],
         "vec_id long, embedding array<double>",
     )
-    rows = clustering.kmeans_centroid_rows(
-        df, "vec_id", "embedding", k=kc, iterations=3
+    rows = clustering.to_centroid_rows(
+        clustering.kmeans_verified(df, "vec_id", "embedding", k=kc, iterations=3)
     )
     queries = df.filter(F.col("vec_id") < N_QUERIES)
     exact = similarity.knn_join_exact(
@@ -120,8 +120,8 @@ def test_ivf_knn_recall_clustered(spark):
 def test_ivf_candidate_set_is_cell_bounded(spark, emb):
     """The IVF join must score only cell collisions — strictly fewer
     scored pairs than the exact tier's queries x corpus fan-out."""
-    rows = clustering.kmeans_centroid_rows(
-        emb, "vec_id", "embedding", k=10, iterations=3
+    rows = clustering.to_centroid_rows(
+        clustering.kmeans_verified(emb, "vec_id", "embedding", k=10, iterations=3)
     )
     members = clustering.cell_multi_assign(emb, "embedding", rows, n_assign=1, out_col="cell")
     cell_sizes = {r.cell: r.n for r in members.groupBy("cell").agg(F.count("*").alias("n")).collect()}

@@ -12,15 +12,49 @@ from pyspark.sql import functions as F
 
 from data_pipeline_with_spark_kafka_spark.streaming.rfm_stream import (
     rfm_base_stream,
-    run_rfm_ledger,
     run_rfm_ledger_parquet,
-    segments_from_ledger,
+    segments_from_base,
     segments_from_parquet_ledger,
 )
 from data_pipeline_with_spark_kafka_spark.queries.stats_extra import stats_rfm_segments
 from data_pipeline_with_spark_kafka_spark.sources.tables import load_table
 
 SCHEMA = "o_orderkey long, o_orderdate timestamp, o_custkey long, o_totalprice double"
+
+
+def run_rfm_ledger(stream, checkpoint: str, ledger: dict) -> None:
+    """Dict fold: foreachBatch upsert of the absolute per-customer rows
+    into a Python dict — idempotent under epoch replay because values
+    are absolute. An independent check on the parquet fold."""
+
+    def upsert(df, epoch: int) -> None:
+        for r in df.collect():
+            ledger[int(r.o_custkey)] = (
+                int(r.last_order_days),
+                int(r.frequency),
+                int(r.monetary_cents),
+            )
+
+    q = (
+        stream.writeStream.outputMode("update")
+        .foreachBatch(upsert)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
+def segments_from_ledger(spark, ledger: dict):
+    """Quartile-code the dict ledger: adapt to the shared base relation
+    and delegate to ``segments_from_base``."""
+    rows = [
+        (int(k), int(d), int(f), round(c / 100.0, 2)) for k, (d, f, c) in ledger.items()
+    ]
+    base = spark.createDataFrame(
+        rows, "o_custkey long, last_days long, frequency long, monetary double"
+    )
+    return segments_from_base(base)
 
 
 def _line(key, date, cust, price):

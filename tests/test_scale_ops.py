@@ -13,6 +13,7 @@ from data_pipeline_with_spark_kafka_spark.operators.skew import (
     salted_join,
     two_stage_agg,
 )
+from data_pipeline_with_spark_kafka_spark.sources import memo
 from data_pipeline_with_spark_kafka_spark.sources.tables import load_table
 
 
@@ -101,25 +102,43 @@ def test_bucketed_range_join_rejects_outer_modes(spark):
 
 def test_kmeans_deterministic_and_partitions_data(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
-    c1 = clustering.kmeans(emb, "vec_id", "embedding", k=8, iterations=3)
-    c2 = clustering.kmeans(emb, "vec_id", "embedding", k=8, iterations=3)
-    r1 = sorted((r.cid, tuple(round(x, 6) for x in r.centroid)) for r in c1.collect())
-    r2 = sorted((r.cid, tuple(round(x, 6) for x in r.centroid)) for r in c2.collect())
-    assert r1 == r2
-    assert 1 < len(r1) <= 8
-    dims = {len(c) for _, c in r1}
-    assert dims == {64}
+    c1 = clustering.kmeans_verified(emb, "vec_id", "embedding", k=8, iterations=3)
+    memo.clear(spark)  # retrain, not a memo hit
+    c2 = clustering.kmeans_verified(emb, "vec_id", "embedding", k=8, iterations=3)
+    r1 = clustering.to_centroid_rows(c1)
+    assert r1 == clustering.to_centroid_rows(c2)
+    assert [cid for cid, _ in r1] == list(range(1, 9))  # empty cells are kept
+    assert {len(c) for _, c in r1} == {64}
+    # every vector lands in exactly one cell
+    sizes = {cid: n for cid, _d, _x, n in c1}
+    assert sum(sizes.values()) == emb.count()
 
 
 def test_ivf_topk_includes_query_and_overlaps_brute_force(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     query = emb.filter(F.col("vec_id") == 0)
-    centroids = clustering.kmeans(emb, "vec_id", "embedding", k=8, iterations=3)
-    ivf = [r.vec_id for r in clustering.ivf_topk(emb, "vec_id", "embedding", query, centroids, k=10, n_probe=3).collect()]
+    rows = clustering.to_centroid_rows(
+        clustering.kmeans_verified(emb, "vec_id", "embedding", k=8, iterations=3)
+    )
+    ivf = [r.vec_id for r in clustering.ivf_topk(emb, "vec_id", "embedding", query, rows, k=10, n_probe=3).collect()]
     brute = [r.vec_id for r in similarity.brute_force_topk(emb, "vec_id", "embedding", query, k=10).collect()]
     assert 0 in ivf  # the query's own vector is always in its own cell
     recall = len(set(ivf) & set(brute)) / 10
     assert recall >= 0.1, f"IVF recall collapsed: {recall} (ivf={ivf}, brute={brute})"
+
+
+def test_ivf_topk_plans_no_nested_loop_join(spark, sf_dir):
+    """Members and the query take their cells from the literal-centroid
+    argmin, so the only join is the cell-id equi-join with the probes."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    rows = clustering.fixture_centroid_rows("ivf_centroids_k8")
+    out = clustering.ivf_topk(
+        emb, "vec_id", "embedding", emb.filter(F.col("vec_id") == 0), rows, k=10, n_probe=3
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert "CartesianProduct" not in plan, plan
+    assert "BroadcastHashJoin" in plan, plan
 
 
 def test_max_block_cache_is_bounded(spark, tmp_path):

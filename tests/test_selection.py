@@ -344,14 +344,13 @@ class TestSQ8:
 
         emb = load_table(spark, sf_dir, "embeddings")
         q = emb.filter(F.col("vec_id") == 0)
-        rows = clustering.kmeans_centroid_rows(
-            emb, "vec_id", "embedding", k=8, iterations=2
+        rows = clustering.to_centroid_rows(
+            clustering.kmeans_verified(emb, "vec_id", "embedding", k=8, iterations=2)
         )
         sq = quantization.ivf_sq8_topk(
             emb, "vec_id", "embedding", q, rows, k=10, pool=50, n_probe=3, dim=64
         )
-        centroids = spark.createDataFrame(rows, "cid int, centroid array<double>")
-        exact = clustering.ivf_topk(emb, "vec_id", "embedding", q, centroids, k=10, n_probe=3)
+        exact = clustering.ivf_topk(emb, "vec_id", "embedding", q, rows, k=10, n_probe=3)
         sq_ids = {r["vec_id"] for r in sq.collect()}
         ex_ids = {r["vec_id"] for r in exact.collect()}
         assert len(sq_ids & ex_ids) / 10 >= 0.9

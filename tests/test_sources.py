@@ -198,6 +198,28 @@ def test_media_ingest_audit_is_metadata_only(spark):
         assert "path" in line and "length" in line, line
 
 
+def test_fanout_only_below_one_scan_split(spark, sf_dir):
+    """load_table_fanned round-robins a table that fits in one scan split
+    (``spark.sql.files.maxPartitionBytes``) to ``defaultParallelism``
+    partitions, and leaves a table larger than the split as scanned."""
+    from data_pipeline_with_spark_kafka_spark.sources.tables import load_table_fanned
+
+    def plan() -> str:
+        df = load_table_fanned(spark, sf_dir, "documents")
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    n = spark.sparkContext.defaultParallelism
+    assert f"RoundRobinPartitioning({n})" in plan()
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    size = os.path.getsize(os.path.join(sf_dir, "documents.parquet"))
+    spark.conf.set(key, str(size - 1))
+    try:
+        assert "RoundRobinPartitioning" not in plan()
+    finally:
+        spark.conf.set(key, saved)
+
+
 def test_table_row_count_reads_partitioned_layout(spark, sf_dir, tmp_path):
     """A partitionBy table has no top-level part files; the footer count
     must still see every row (it drives the > 4096 guard decision)."""

@@ -61,8 +61,8 @@ def _ivf_sparse_builder(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     n = table_row_count(sf_dir, "embeddings")
     k = max(10, n // 1000)
-    rows = clustering.kmeans_centroid_rows(
-        emb, "vec_id", "embedding", k=k, iterations=3
+    rows = clustering.to_centroid_rows(
+        clustering.kmeans_verified(emb, "vec_id", "embedding", k=k, iterations=3)
     )
     return dedup.embedding_near_dup_pairs_ivf(
         emb, "vec_id", "embedding",
