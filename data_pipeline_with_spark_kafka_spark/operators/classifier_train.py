@@ -14,8 +14,9 @@ per-doc shape features, which is how real pipelines turn a slow
 heuristic stack into one broadcastable weight vector.
 
 Scale notes (100 TB design):
-- the feature frame is computed once and persisted; every GD iteration
-  reuses it (no re-tokenization per step),
+- the standardized feature frame is computed once and
+  ``localCheckpoint()``-ed; every GD iteration aggregates that leaf, so a
+  step neither re-tokenizes nor re-plans the feature pipeline,
 - each iteration moves exactly k+2 doubles to the driver (gradient,
   bias gradient, loss) — bounded by the feature count, never by rows,
 - standardization stats come from one aggregate pass (k means + k
@@ -35,7 +36,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from data_pipeline_with_spark_kafka_spark.sources import memo
@@ -103,7 +104,11 @@ def train_logreg(
     the mean log-loss — k+2 scalars to the driver per step (bounded by
     the feature count; the dataset itself never leaves the executors).
 
-    The cached (k+1)-column frame the loop re-aggregates is
+    The loop re-aggregates a local checkpoint of the (k+1)-column
+    standardized frame, the lineage cut ``operators/iterate.py`` makes per
+    generation: each step plans against a leaf, not the feature pipeline,
+    and the checkpoint job also counts the rows. It holds no cache entry,
+    so nothing needs releasing, on the error path either. The checkpoint is
     ``LOOP_PARTITIONS`` wide: it is a few doubles per row, so the input's
     scan width would be pure scheduling overhead per iteration.
 
@@ -113,39 +118,42 @@ def train_logreg(
     """
     means, stds = standardization_stats(df, feature_cols)
     std_cols = [f"z_{c}" for c in feature_cols]
-    zdf = df.select(
-        F.col(label_col).cast("double").alias("_y"),
-        *[
-            ((F.col(c) - F.lit(m)) / F.lit(s)).alias(zc)
-            for c, m, s, zc in zip(feature_cols, means, stds, std_cols)
-        ],
-    ).repartition(LOOP_PARTITIONS).persist()
-    try:
-        n_rows = zdf.count()  # materializes the persist once
-        weights = [0.0] * len(std_cols)
-        bias = 0.0
-        losses: list[float] = []
-        eps = F.lit(1e-12)
-        for _ in range(iters):
-            z = _margin(std_cols, weights, bias)
-            p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-            resid = p - F.col("_y")
-            aggs = [F.avg(resid * F.col(c)).alias(c) for c in std_cols]
-            aggs.append(F.avg(resid).alias("_gb"))
-            aggs.append(
-                F.avg(
-                    -(
-                        F.col("_y") * F.log(p + eps)
-                        + (F.lit(1.0) - F.col("_y")) * F.log(F.lit(1.0) - p + eps)
-                    )
-                ).alias("_loss")
-            )
-            row = zdf.agg(*aggs).collect()[0]  # k+2 scalars per iteration
-            losses.append(float(row["_loss"]))
-            weights = [w - lr * float(row[c]) for w, c in zip(weights, std_cols)]
-            bias -= lr * float(row["_gb"])
-    finally:
-        zdf.unpersist()
+    rows_seen = Observation()
+    zdf = (
+        df.select(
+            F.col(label_col).cast("double").alias("_y"),
+            *[
+                ((F.col(c) - F.lit(m)) / F.lit(s)).alias(zc)
+                for c, m, s, zc in zip(feature_cols, means, stds, std_cols)
+            ],
+        )
+        .repartition(LOOP_PARTITIONS)
+        .observe(rows_seen, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
+    n_rows = rows_seen.get["n"]  # counted by the checkpoint job itself
+    weights = [0.0] * len(std_cols)
+    bias = 0.0
+    losses: list[float] = []
+    eps = F.lit(1e-12)
+    for _ in range(iters):
+        z = _margin(std_cols, weights, bias)
+        p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
+        resid = p - F.col("_y")
+        aggs = [F.avg(resid * F.col(c)).alias(c) for c in std_cols]
+        aggs.append(F.avg(resid).alias("_gb"))
+        aggs.append(
+            F.avg(
+                -(
+                    F.col("_y") * F.log(p + eps)
+                    + (F.lit(1.0) - F.col("_y")) * F.log(F.lit(1.0) - p + eps)
+                )
+            ).alias("_loss")
+        )
+        row = zdf.agg(*aggs).collect()[0]  # k+2 scalars per iteration
+        losses.append(float(row["_loss"]))
+        weights = [w - lr * float(row[c]) for w, c in zip(weights, std_cols)]
+        bias -= lr * float(row["_gb"])
     for w in weights + [bias]:
         if not math.isfinite(w):
             raise RuntimeError(f"logistic-regression training diverged: {weights}, {bias}")

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from data_pipeline_with_spark_kafka_spark.operators.similarity import as_double
 from data_pipeline_with_spark_kafka_spark.sources import memo
+from data_pipeline_with_spark_kafka_spark.sources.tables import FIXTURES_DIR
 
 #: Centroid quantization after every mean recomputation (decimal places).
 _ROUND_DP = 6
@@ -53,11 +54,7 @@ def fixture_centroid_rows(name: str):
 
     import pyarrow.parquet as pq
 
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "fixtures",
-        f"{name}.parquet",
-    )
+    path = os.path.join(FIXTURES_DIR, f"{name}.parquet")
     if not os.path.exists(path):
         return None
     t = pq.read_table(path)
@@ -192,10 +189,13 @@ def kmeans_verified(
     - empty clusters keep their previous centroid (COALESCE in SQL);
     - rows with a NULL vector are excluded.
 
-    Scale shape: each iteration is ONE argmin-assignment scan
-    (``cell_multi_assign``, ``n_assign=1``: k literal arrays, no join)
-    + ONE per-(cid,dim) mean aggregate; k*d doubles travel to the
-    driver per iteration, never rows.
+    Scale shape: the NULL-filtered input is ``localCheckpoint()``-ed
+    once (the lineage cut ``operators/iterate.py`` makes per generation,
+    holding no cache entry to release); the init reads that leaf, then
+    each iteration is ONE argmin-assignment scan of it (``cell_multi_assign``,
+    ``n_assign=1``: k literal arrays, no join) + ONE per-(cid,dim) mean
+    aggregate; k*d doubles travel to the driver per iteration, never
+    rows.
 
     Returns final ``[(cid, dim, centroid_val, cluster_n), ...]`` rows
     (cid 1-based, dim 0-based, cid-major), cluster_n from the LAST
@@ -213,8 +213,10 @@ def kmeans_verified(
 
     # NULL-vector contract (the NULL-text rule from the edge sweep):
     # rows without an embedding are excluded explicitly on BOTH engines.
-    base = df.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("_id"), as_double(F.col(vec_col)).alias("_v")
+    base = (
+        df.filter(F.col(vec_col).isNotNull())
+        .select(F.col(id_col).alias("_id"), as_double(F.col(vec_col)).alias("_v"))
+        .localCheckpoint()
     )
     init_rows = (
         base.withColumn("_h", F.xxhash64(F.col("_id"), F.lit(seed)))
@@ -227,32 +229,28 @@ def kmeans_verified(
     cents = [[rnd(float(x)) for x in r["_v"]] for r in init_rows]
     dim = len(cents[0])
     counts = {c: 0 for c in range(1, len(cents) + 1)}
-    base = base.persist()
-    try:
-        for _ in range(iterations):
-            assigned = cell_multi_assign(
-                base, "_v", list(enumerate(cents, 1)), n_assign=1, out_col="cid"
-            )
-            rows = (
-                assigned.select("cid", F.posexplode("_v"))
-                .groupBy("cid", "pos")
-                .agg(F.avg("col").alias("m"), F.count("*").alias("n"))
-                .collect()
-            )  # k*d scalars — feature-bounded, never row-bounded
-            means = {(r["cid"], r["pos"]): float(r["m"]) for r in rows}
-            counts = {c: 0 for c in range(1, len(cents) + 1)}
-            for r in rows:
-                if r["pos"] == 0:
-                    counts[r["cid"]] = int(r["n"])
-            cents = [
-                [
-                    rnd(means[(j + 1, p)]) if (j + 1, p) in means else cents[j][p]
-                    for p in range(dim)
-                ]
-                for j in range(len(cents))
+    for _ in range(iterations):
+        assigned = cell_multi_assign(
+            base, "_v", list(enumerate(cents, 1)), n_assign=1, out_col="cid"
+        )
+        rows = (
+            assigned.select("cid", F.posexplode("_v"))
+            .groupBy("cid", "pos")
+            .agg(F.avg("col").alias("m"), F.count("*").alias("n"))
+            .collect()
+        )  # k*d scalars — feature-bounded, never row-bounded
+        means = {(r["cid"], r["pos"]): float(r["m"]) for r in rows}
+        counts = {c: 0 for c in range(1, len(cents) + 1)}
+        for r in rows:
+            if r["pos"] == 0:
+                counts[r["cid"]] = int(r["n"])
+        cents = [
+            [
+                rnd(means[(j + 1, p)]) if (j + 1, p) in means else cents[j][p]
+                for p in range(dim)
             ]
-    finally:
-        base.unpersist()
+            for j in range(len(cents))
+        ]
     return [
         (j + 1, p, cents[j][p], counts[j + 1])
         for j in range(len(cents))

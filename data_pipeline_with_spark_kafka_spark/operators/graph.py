@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_pipeline_with_spark_kafka_spark.operators.iterate import changed, iterate
+from data_pipeline_with_spark_kafka_spark.sources.tables import local_rows
 
 
 def pagerank(edges: DataFrame, *, damping: float = 0.85, iterations: int = 10) -> DataFrame:
@@ -128,7 +129,9 @@ def bfs_levels(
         grown = visited.unionByName(reached)
         return grown.select("*", changed(F.col("level") == level))
 
-    visited = edges.sparkSession.createDataFrame([(source, 0)], ["node", "level"]).localCheckpoint()
+    visited = local_rows(
+        edges.sparkSession, [(source, 0)], "node bigint, level bigint"
+    ).localCheckpoint()
     return iterate(visited, expand, iterations=max_iterations, name="bfs_levels", release=(hops,))
 
 

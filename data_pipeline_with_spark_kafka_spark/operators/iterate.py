@@ -26,7 +26,10 @@ lazy DataFrame algebra. ``iterate`` owns the rest, once:
 A step that adds no ``changed`` column is a fixed-count loop: it runs
 exactly ``iterations`` generations and never raises. Loops whose state
 is driver-side scalars (``train_logreg``, ``kmeans_verified``, the
-driver-side BPE path) do not come here.
+driver-side BPE path) do not come here. The two trainers make the same
+lineage cut once: they ``localCheckpoint()`` their loop-invariant input
+and aggregate that leaf every step, so a step never re-plans the
+pipeline that built it and no cache entry is left to release.
 """
 
 from __future__ import annotations

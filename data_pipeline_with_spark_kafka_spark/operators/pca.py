@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_pipeline_with_spark_kafka_spark.functions.rounding import round_to
+from data_pipeline_with_spark_kafka_spark.sources.tables import FIXTURES_DIR
 
 _PARTIAL_SCHEMA = "n long, s array<double>, g array<double>"
 
@@ -116,11 +117,7 @@ def fixture_component_rows(name: str):
 
     import pyarrow.parquet as pq
 
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "fixtures",
-        f"{name}.parquet",
-    )
+    path = os.path.join(FIXTURES_DIR, f"{name}.parquet")
     if not os.path.exists(path):
         return None
     t = pq.read_table(path)

@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from data_pipeline_with_spark_kafka_spark.functions.rounding import round_to
 from data_pipeline_with_spark_kafka_spark.operators import similarity as sim
 from data_pipeline_with_spark_kafka_spark.sources import memo
+from data_pipeline_with_spark_kafka_spark.sources.tables import FIXTURES_DIR, local_rows
 
 
 @memo.memoized
@@ -198,8 +199,8 @@ def ivf_sq8_topk(
     mins, scales = sq8_train(df, vec_col, dim)
     members = clustering.cell_multi_assign(df, vec_col, centroid_rows, n_assign=1)
 
-    centroids = query_df.sparkSession.createDataFrame(
-        centroid_rows, "cid int, centroid array<double>"
+    centroids = local_rows(
+        query_df.sparkSession, centroid_rows, "cid int, centroid array<double>"
     )
     qcells = (
         query_df.crossJoin(F.broadcast(centroids))
@@ -379,11 +380,7 @@ def fixture_pq_codebooks(name: str = "pq_codebooks_m8_k16"):
 
     import pyarrow.parquet as pq
 
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "fixtures",
-        f"{name}.parquet",
-    )
+    path = os.path.join(FIXTURES_DIR, f"{name}.parquet")
     if not os.path.exists(path):
         return None
     t = pq.read_table(path)
@@ -523,8 +520,8 @@ def ivf_pq_topk(
     from data_pipeline_with_spark_kafka_spark.operators import clustering
 
     members = clustering.cell_multi_assign(df, vec_col, centroid_rows, n_assign=1)
-    centroids = query_df.sparkSession.createDataFrame(
-        centroid_rows, "cid int, centroid array<double>"
+    centroids = local_rows(
+        query_df.sparkSession, centroid_rows, "cid int, centroid array<double>"
     )
     qcells = (
         query_df.crossJoin(F.broadcast(centroids))

@@ -24,6 +24,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_pipeline_with_spark_kafka_spark.sources.tables import local_rows
+
 
 def list_partitions(spark: SparkSession, path: str, partition_col: str) -> list:
     """Current partition values, from the catalog listing only (a scan of
@@ -67,8 +69,8 @@ def run_incremental(
     )
     process(df, todo)
     next_id = batch_id if batch_id is not None else len(done)
-    ledger_rows = spark.createDataFrame(
-        [(str(p), int(next_id)) for p in todo], "partition_value string, batch_id long"
+    ledger_rows = local_rows(
+        spark, [(str(p), int(next_id)) for p in todo], "partition_value string, batch_id long"
     )
     ledger_rows.write.mode("append").parquet(ledger_path)
     return todo

@@ -27,7 +27,11 @@ from pyspark.sql import functions as F
 
 from data_pipeline_with_spark_kafka_spark.functions.rounding import round_to
 from data_pipeline_with_spark_kafka_spark.queries.registry import register
-from data_pipeline_with_spark_kafka_spark.sources.tables import load_table, load_table_fanned
+from data_pipeline_with_spark_kafka_spark.sources.tables import (
+    load_table,
+    load_table_fanned,
+    local_rows,
+)
 
 EMB_CENTROID_ORACLE = """
 WITH idx AS (SELECT unnest(generate_series(1, 64)) AS i),
@@ -181,6 +185,4 @@ def emb_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table_fanned(spark, sf_dir, "embeddings")
     rows = kmeans_verified(emb, "vec_id", "embedding", k=8, iterations=5, seed=42)
-    return spark.createDataFrame(
-        rows, "cid int, dim int, centroid double, cluster_n bigint"
-    )
+    return local_rows(spark, rows, "cid int, dim int, centroid double, cluster_n bigint")

@@ -18,10 +18,13 @@ from pyspark.sql import functions as F
 from data_pipeline_with_spark_kafka_spark.functions.rounding import round_to
 from data_pipeline_with_spark_kafka_spark.operators import pca
 from data_pipeline_with_spark_kafka_spark.queries.registry import register
-from data_pipeline_with_spark_kafka_spark.sources.tables import load_table, load_table_fanned
+from data_pipeline_with_spark_kafka_spark.sources.tables import (
+    FIXTURES_DIR,
+    load_table,
+    load_table_fanned,
+)
 
 _FIXTURE = "pca_components_m8"
-_FIXTURES_DIR = "/root/repo/fixtures"
 _DIM, _M = 64, 8
 
 
@@ -37,7 +40,7 @@ def _components(emb: DataFrame, sf_dir: str):
 PCA_PROJECT_ORACLE = f"""
 WITH comps AS (
     SELECT comp_id, weights, proj_offset
-    FROM read_parquet('{_FIXTURES_DIR}/pca_components_m8.parquet')
+    FROM read_parquet('{FIXTURES_DIR}/pca_components_m8.parquet')
 ), e AS (
     SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 )
@@ -58,7 +61,7 @@ def emb_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 PCA_VARIANCE_ORACLE = f"""
 WITH comps AS (
     SELECT comp_id, weights, proj_offset
-    FROM read_parquet('{_FIXTURES_DIR}/pca_components_m8.parquet')
+    FROM read_parquet('{FIXTURES_DIR}/pca_components_m8.parquet')
 ), e AS (
     SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ), sc AS (

@@ -12,6 +12,7 @@ from data_pipeline_with_spark_kafka_spark.queries.registry import register
 from data_pipeline_with_spark_kafka_spark.sources.tables import (
     load_table,
     load_table_fanned,
+    FIXTURES_DIR,
     parquet_fingerprint,
     table_row_count,
 )
@@ -70,11 +71,10 @@ def _quantizer_rows(emb: DataFrame, *, fixture: str, k: int, iterations: int):
 # cells per vector by (distance, cid) — list_distance is sqrt of the
 # operator's squared distance, so the ranking is identical — then exact
 # cosine + threshold/top-k over cell collisions only.
-_FIXTURES_DIR = "/root/repo/fixtures"
 
 EMB_IVF_ORACLE = f"""
 WITH cents AS (
-    SELECT cid, centroid FROM read_parquet('{_FIXTURES_DIR}/ivf_centroids_k10.parquet')
+    SELECT cid, centroid FROM read_parquet('{FIXTURES_DIR}/ivf_centroids_k10.parquet')
 ), e AS (
     SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ), assign AS (
@@ -124,7 +124,7 @@ def llm_dedup_embedding_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFram
 
 KNN_IVF_ORACLE = f"""
 WITH cents AS (
-    SELECT cid, centroid FROM read_parquet('{_FIXTURES_DIR}/ivf_centroids_k10.parquet')
+    SELECT cid, centroid FROM read_parquet('{FIXTURES_DIR}/ivf_centroids_k10.parquet')
 ), e AS (
     SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ), members AS (
@@ -180,7 +180,7 @@ def llm_knn_join_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SIM_TOPK_IVF_ORACLE = f"""
 WITH cents AS (
-    SELECT cid, centroid FROM read_parquet('{_FIXTURES_DIR}/ivf_centroids_k8.parquet')
+    SELECT cid, centroid FROM read_parquet('{FIXTURES_DIR}/ivf_centroids_k8.parquet')
 ), e AS (
     SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ), members AS (
@@ -227,7 +227,7 @@ def llm_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SEMDEDUP_ORACLE = f"""
 WITH cents AS (
-    SELECT cid, centroid FROM read_parquet('{_FIXTURES_DIR}/ivf_centroids_k10.parquet')
+    SELECT cid, centroid FROM read_parquet('{FIXTURES_DIR}/ivf_centroids_k10.parquet')
 ), e AS (
     SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ), members AS (

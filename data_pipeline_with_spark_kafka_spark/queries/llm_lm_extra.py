@@ -26,7 +26,7 @@ from data_pipeline_with_spark_kafka_spark.functions.rounding import round_to
 from data_pipeline_with_spark_kafka_spark.operators import similarity
 from data_pipeline_with_spark_kafka_spark.operators.text import shingles, tokens
 from data_pipeline_with_spark_kafka_spark.queries.registry import register
-from data_pipeline_with_spark_kafka_spark.sources.tables import load_table
+from data_pipeline_with_spark_kafka_spark.sources.tables import load_table, local_rows
 
 # --------------------------------------------------------------------------
 # Trigram LM with stupid backoff (Brants et al. 2007), held-out scoring
@@ -496,4 +496,4 @@ def llm_train_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows.append(("final_log_loss", _round4_half_away(model.losses[-1])))
     rows.append(("train_accuracy", _round4_half_away(float(acc_row["acc"]))))
     rows.append(("n_rows", float(model.n_rows)))
-    return spark.createDataFrame(rows, "term string, value double").orderBy("term")
+    return local_rows(spark, rows, "term string, value double").orderBy("term")

@@ -81,12 +81,11 @@ _WORKLOAD_TERMS = sorted({term for _qid, text in PROBE_QUERIES for term in text.
 
 
 def _qterms_df(spark: SparkSession) -> DataFrame:
-    """The probe workload as a SIZED LocalRelation (r13, verdict #3):
-    ``VALUES`` gives the planner exact statistics, so the final
-    query-id attachment join broadcasts the 12-row side at PLAN time —
-    ``createDataFrame`` over a list builds a stats-less
-    ``Scan ExistingRDD`` that r12's plan could only size via AQE (and
-    Catalyst broadcast the corpus side instead)."""
+    """The probe workload as a SIZED LocalRelation: the planner has exact
+    statistics, so the final query-id attachment join broadcasts the
+    12-row side at PLAN time. ``sources.tables.local_rows`` plans the
+    same way; the ``VALUES`` text is kept because the DuckDB oracle
+    (``BM25_ORACLE``) reads the very same literal."""
     return spark.sql(
         f"SELECT query_id, term FROM VALUES {_QT_VALUES} AS t(query_id, term)"
     ).select(F.col("query_id").cast("int").alias("query_id"), "term")

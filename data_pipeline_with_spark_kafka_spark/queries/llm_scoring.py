@@ -19,7 +19,11 @@ from pyspark.sql import functions as F
 from data_pipeline_with_spark_kafka_spark.functions.rounding import round_to
 from data_pipeline_with_spark_kafka_spark.operators.text import shingles, tokens
 from data_pipeline_with_spark_kafka_spark.queries.registry import register
-from data_pipeline_with_spark_kafka_spark.sources.tables import load_table, load_table_fanned
+from data_pipeline_with_spark_kafka_spark.sources.tables import (
+    load_table,
+    load_table_fanned,
+    local_rows,
+)
 
 # Add-k smoothing constant for the bigram model.
 _K = 0.5
@@ -361,7 +365,8 @@ def llm_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     merges = train_bpe(docs, "text", num_merges=10)
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(i, a, b, a + b, n) for i, (a, b, n) in enumerate(merges)],
         "rank int, left string, right string, merged string, weighted_count long",
     )

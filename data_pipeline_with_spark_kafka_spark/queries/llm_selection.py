@@ -14,7 +14,11 @@ from pyspark.sql import functions as F
 
 from data_pipeline_with_spark_kafka_spark.operators import importance, mmr, quantization
 from data_pipeline_with_spark_kafka_spark.queries.registry import register
-from data_pipeline_with_spark_kafka_spark.sources.tables import load_table, load_table_fanned
+from data_pipeline_with_spark_kafka_spark.sources.tables import (
+    FIXTURES_DIR,
+    load_table,
+    load_table_fanned,
+)
 
 DSIR_ORACLE = """
 WITH toks AS (
@@ -120,9 +124,9 @@ def llm_sim_topk_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-IVF_SQ8_ORACLE = """
+IVF_SQ8_ORACLE = f"""
 WITH cents AS (
-    SELECT cid, centroid FROM read_parquet('/root/repo/fixtures/ivf_centroids_k8.parquet')
+    SELECT cid, centroid FROM read_parquet('{FIXTURES_DIR}/ivf_centroids_k8.parquet')
 ), e AS (
     SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ), dims AS (
@@ -524,12 +528,10 @@ def llm_retrieval_label_precision(spark: SparkSession, sf_dir: str) -> DataFrame
 # lowest-cid tie-break), reconstruction, ADC scoring, and the exact rerank
 # are all mirrored bit-for-bit before the 1e-6 rounding.
 
-_PQ_FIXTURES_DIR = "/root/repo/fixtures"
-
 PQ_TOPK_ORACLE = f"""
 WITH cb AS (
     SELECT subspace, cid, centroid
-    FROM read_parquet('{_PQ_FIXTURES_DIR}/pq_codebooks_m8_k16.parquet')
+    FROM read_parquet('{FIXTURES_DIR}/pq_codebooks_m8_k16.parquet')
 ), e AS (
     SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ), sub AS (
@@ -593,10 +595,10 @@ def llm_sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 IVF_PQ_ORACLE = f"""
 WITH cents AS (
-    SELECT cid, centroid FROM read_parquet('{_PQ_FIXTURES_DIR}/ivf_centroids_k8.parquet')
+    SELECT cid, centroid FROM read_parquet('{FIXTURES_DIR}/ivf_centroids_k8.parquet')
 ), cb AS (
     SELECT subspace, cid AS pcid, centroid AS pcent
-    FROM read_parquet('{_PQ_FIXTURES_DIR}/pq_codebooks_m8_k16.parquet')
+    FROM read_parquet('{FIXTURES_DIR}/pq_codebooks_m8_k16.parquet')
 ), e AS (
     SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ), members AS (

@@ -28,9 +28,9 @@ from pyspark.sql import functions as F
 
 from data_pipeline_with_spark_kafka_spark.queries.registry import register
 from data_pipeline_with_spark_kafka_spark.sources.readers import binary_file_source
+from data_pipeline_with_spark_kafka_spark.sources.tables import FIXTURES_DIR
 
-_FIXTURES_DIR = "/root/repo/fixtures"
-_MEDIA_DIR = os.path.join(_FIXTURES_DIR, "media")
+_MEDIA_DIR = os.path.join(FIXTURES_DIR, "media")
 # The status-level skip limit used by the ingest audit: media larger than
 # this would be excluded from decode by binary_file_source(max_bytes=...)
 # before any byte is read (fixtures/media contains one 3126-byte BMP so the
@@ -45,7 +45,7 @@ SELECT
   CAST(MAX(length) AS BIGINT) AS max_bytes,
   CAST(SUM(CASE WHEN length <= {MEDIA_MAX_BYTES} THEN 1 ELSE 0 END) AS BIGINT)
     AS ingestible_files
-FROM read_parquet('{_FIXTURES_DIR}/media_listing.parquet')
+FROM read_parquet('{FIXTURES_DIR}/media_listing.parquet')
 GROUP BY ext
 ORDER BY ext
 """

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_pipeline_with_spark_kafka_spark.queries.registry import register
-from data_pipeline_with_spark_kafka_spark.sources.tables import load_table
+from data_pipeline_with_spark_kafka_spark.sources.tables import load_table, local_rows
 from data_pipeline_with_spark_kafka_spark.functions.rounding import round_to
 
 
@@ -154,7 +154,8 @@ def join_range_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact table streams through once; at 100 TB this stays a map-side op.
     """
     orders = load_table(spark, sf_dir, "orders")
-    tiers = spark.createDataFrame(
+    tiers = local_rows(
+        spark,
         [(0.0, 100000.0, "low"), (100000.0, 250000.0, "mid"), (250000.0, 1e12, "high")],
         "lo double, hi double, tier_name string",
     )

@@ -367,14 +367,12 @@ def cmd_erase(spark: SparkSession, args: argparse.Namespace) -> None:
       rows. --dry-run prints the audit counts without rewriting."""
     import os
 
-    from data_pipeline_with_spark_kafka_spark.sources.tables import table_row_count
+    from data_pipeline_with_spark_kafka_spark.sources.tables import local_rows, table_row_count
 
     subjects = [int(s) for s in args.subject_ids.split(",") if s.strip()]
     if not subjects:
         raise SystemExit("erase: --subject-ids is empty")
-    sdf = F.broadcast(
-        spark.createDataFrame([(s,) for s in subjects], "subject bigint")
-    )
+    sdf = F.broadcast(local_rows(spark, [(s,) for s in subjects], "subject bigint"))
     paths = {
         t: os.path.join(args.data_dir, f"{t}.parquet")
         for t in ("customer", "orders", "lineitem", "events")

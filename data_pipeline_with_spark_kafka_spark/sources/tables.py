@@ -35,6 +35,36 @@ TABLE_NAMES = (
     "embeddings",
 )
 
+#: The committed artifacts (quantizers, codebooks, PCA components, media),
+#: found next to the package so every checkout reads its own.
+FIXTURES_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), "fixtures"
+)
+
+
+def local_rows(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
+    """A frame over driver-side ``rows`` (tuples in ``ddl`` column order),
+    typed exactly by the ``ddl`` schema.
+
+    The rows go to the JVM as a ``pyarrow.Table``, so the plan is a sized
+    ``LocalRelation``: no Python RDD, no Python worker, and the planner
+    can broadcast it. A plain list would plan as a stats-less
+    ``Scan ExistingRDD`` whose first action starts the Python workers.
+    The table is built from columns, never through pandas, which turns an
+    int column with a NULL into float64 and rounds bigints above 2^53."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table, normalizing types.

@@ -99,3 +99,31 @@ def test_constant_feature_gets_zero_weight(spark):
     model = train_logreg(df, ["f", "c"], "label", iters=5, lr=0.5)
     assert model.weights[1] == 0.0
     assert all(np.isfinite(model.weights)) and np.isfinite(model.bias)
+
+
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _toy_frame(spark, n: int = 40):
+    return spark.createDataFrame(
+        [(float(i % 2), float(i % 7) + (i % 2)) for i in range(n)], "label double, f double"
+    )
+
+
+def test_training_leaves_no_cache_entry(spark):
+    """The loop iterates over a local checkpoint, not a persisted frame:
+    after a normal return and after either raise the session's
+    CacheManager holds nothing the trainer put there."""
+    spark.catalog.clearCache()
+    model = train_logreg(_toy_frame(spark), ["f"], "label", iters=3, lr=0.5)
+    assert model.n_rows == 40
+    assert _cache_is_empty(spark)
+
+    with pytest.raises(ValueError, match="empty"):
+        train_logreg(_toy_frame(spark, 0), ["f"], "label", iters=3, lr=0.5)
+    assert _cache_is_empty(spark)
+
+    with pytest.raises(RuntimeError, match="diverged"):
+        train_logreg(_toy_frame(spark), ["f"], "label", iters=3, lr=float("inf"))
+    assert _cache_is_empty(spark)

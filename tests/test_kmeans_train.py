@@ -126,3 +126,35 @@ def test_kmv_estimate_tracks_exact_distinct(spark, sf_dir):
             assert r["sketch_size"] == ex  # unsaturated sketch is exact
         else:
             assert abs(r["kmv_distinct_est"] - ex) / ex <= tol, (r, ex)
+
+
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_kmeans_verified_leaves_no_cache_entry(spark, sf_dir, monkeypatch):
+    """The Lloyd loop iterates over a local checkpoint, not a persisted
+    frame: the session's CacheManager stays empty after a normal return
+    and after a raise in the middle of the loop."""
+    from data_pipeline_with_spark_kafka_spark.operators import clustering
+
+    spark.catalog.clearCache()
+    emb = load_table(spark, sf_dir, "embeddings")
+    rows = kmeans_verified(emb, "vec_id", "embedding", k=3, iterations=2, seed=11)
+    assert len(rows) == 3 * 64
+    assert _cache_is_empty(spark)
+
+    calls = []
+    assign = clustering.cell_multi_assign
+
+    def failing_second_assign(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("assignment failed")
+        return assign(*args, **kwargs)
+
+    monkeypatch.setattr(clustering, "cell_multi_assign", failing_second_assign)
+    with pytest.raises(RuntimeError, match="assignment failed"):
+        kmeans_verified(emb, "vec_id", "embedding", k=3, iterations=3, seed=12)
+    assert len(calls) == 2
+    assert _cache_is_empty(spark)

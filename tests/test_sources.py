@@ -17,7 +17,11 @@ from data_pipeline_with_spark_kafka_spark.sources.readers import (
     validate_rows,
     write_batch,
 )
-from data_pipeline_with_spark_kafka_spark.sources.tables import load_table, table_row_count
+from data_pipeline_with_spark_kafka_spark.sources.tables import (
+    FIXTURES_DIR,
+    load_table,
+    table_row_count,
+)
 
 
 def test_csv_round_trip(spark, sf_dir, tmp_path):
@@ -162,10 +166,7 @@ def test_media_fixture_snapshot_matches_directory(spark):
     fixtures/media — name, extension, and byte length per file. If either
     side is regenerated without the other, this fails instead of the
     correctness gate silently comparing different bytes."""
-    from data_pipeline_with_spark_kafka_spark.queries.media_ingest import (
-        _MEDIA_DIR,
-        _FIXTURES_DIR,
-    )
+    from data_pipeline_with_spark_kafka_spark.queries.media_ingest import _MEDIA_DIR
     from data_pipeline_with_spark_kafka_spark.sources.readers import (
         binary_file_source,
     )
@@ -174,7 +175,7 @@ def test_media_fixture_snapshot_matches_directory(spark):
         r.path.rsplit("/", 1)[1]: r.length
         for r in binary_file_source(spark, _MEDIA_DIR).select("path", "length").collect()
     }
-    snap = spark.read.parquet(f"{_FIXTURES_DIR}/media_listing.parquet").collect()
+    snap = spark.read.parquet(f"{FIXTURES_DIR}/media_listing.parquet").collect()
     assert {r.file_name: r.length for r in snap} == fresh
     assert all(r.ext == r.file_name.rsplit(".", 1)[1] for r in snap)
     assert len(fresh) == 10

@@ -9,10 +9,11 @@ Writes one line per query to stdout and a summary; exit 1 on any failure.
 
 from __future__ import annotations
 
+import os
 import sys
 import traceback
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",

@@ -11,9 +11,10 @@ Usage: python tools/gen_pca_fixture.py [sf_dir] [m]
 
 from __future__ import annotations
 
+import os
 import sys
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> int:
