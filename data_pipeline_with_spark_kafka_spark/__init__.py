@@ -16,7 +16,16 @@ Everything is public PySpark DataFrame / Structured Streaming API; no
 custom Catalyst rules, no RDDs in the hot path.
 """
 
-from data_pipeline_with_spark_kafka_spark.session import get_spark
+import sys
+
+from pyspark import cloudpickle
+
+# UDF closures travel by value, so a Python worker never imports this
+# package: the queries run from any working directory, with no
+# PYTHONPATH and no files shipped to the executors.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+from data_pipeline_with_spark_kafka_spark.session import get_spark  # noqa: E402
 
 __all__ = ["get_spark"]
 __version__ = "0.1.0"

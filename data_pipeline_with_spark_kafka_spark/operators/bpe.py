@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_pipeline_with_spark_kafka_spark.operators.iterate import iterate
+from data_pipeline_with_spark_kafka_spark.operators.iterate import collect_if_fits, iterate
 from data_pipeline_with_spark_kafka_spark.sources import memo
 
 END_OF_WORD = "</w>"
@@ -81,7 +81,6 @@ def train_bpe(
     text_col: str,
     *,
     num_merges: int = 20,
-    driver_limit: int = 1_000_000,
 ) -> list[tuple[str, str, int]]:
     """Learn ``num_merges`` BPE merges; returns [(left, right, weighted
     count)] in merge order. Deterministic: the argmax pair breaks ties on
@@ -91,23 +90,26 @@ def train_bpe(
     Adaptive execution (the same trade real tokenizer trainers make): the
     corpus-sized work — word counting — is ALWAYS distributed; the merge
     loop only touches the distinct-word table, which for natural language
-    is vocabulary-sized (millions of rows, ~100 bytes each — driver-RAM
-    scale even at 100 TB of corpus). When it fits under ``driver_limit``
-    rows the loop runs driver-side (one pass per merge over an in-memory
-    dict — no per-iteration job scheduling); a vocabulary beyond the limit
-    falls back to the distributed loop on the shared driver
-    (operators/iterate.py): one checkpointed generation per merge, the
-    argmax pair collected inside the step. Both paths are merge-for-merge
-    identical (tested).
+    is vocabulary-sized. The tier is ``iterate.collect_if_fits`` on that
+    table's (word, cnt) rows, a bound on the distinct-word count (the
+    table's plan estimate follows the corpus scan under the aggregate, not
+    the vocabulary). When it fits, the rows come back from that one
+    collect and the loop runs driver-side (one pass per merge over an
+    in-memory dict — no per-iteration job scheduling); a larger table
+    runs the distributed loop on the shared driver (operators/iterate.py)
+    over the table the collect already cached: one checkpointed
+    generation per merge, the argmax pair collected inside the step. Both
+    tiers are merge-for-merge identical (tested).
 
     Memoized per input content (``sources.memo``): at scale the tokenizer
     is a small offline artifact handed to every encode job, never
     retrained inside one."""
     counted = word_symbol_table(docs, text_col).persist()
-    if counted.count() <= driver_limit:
-        rows = counted.select("word", "cnt").collect()
+    table = collect_if_fits(counted.select("word", "cnt"))
+    if table is not None:
         counted.unpersist()
-        return _train_driver_side({r["word"]: int(r["cnt"]) for r in rows}, num_merges)
+        word_counts = dict(zip(table.column("word").to_pylist(), table.column("cnt").to_pylist()))
+        return _train_driver_side(word_counts, num_merges)
     merges: list[tuple[str, str, int]] = []
 
     def merge_top_pair(table: DataFrame) -> DataFrame:

@@ -3,10 +3,11 @@
 Pure DataFrame/built-in-function implementation (no MLlib dependency, no
 RDDs). One Lloyd's trainer, ``kmeans_verified``: hash-seeded init (the k
 rows with the smallest ``xxhash64(id, seed)`` — stable across runs and
-partitionings), then per iteration one literal-centroid argmin scan
-(``cell_multi_assign``) and one per-(cid, dim) mean aggregate, with the
-centroids rounded to 6 dp on the driver so the DuckDB oracle replays the
-loop bit for bit.
+partitionings), then per iteration one argmin assignment and one
+per-(cid, dim) mean, with the centroids rounded to 6 dp on the driver so
+the DuckDB oracle replays the loop bit for bit. A small input runs the
+loop in numpy on the driver; a large one runs each iteration as one
+literal-centroid argmin scan (``cell_multi_assign``) plus one aggregate.
 
 IVF (inverted-file) search: assign every vector to its nearest centroid
 offline; a query probes only the ``n_probe`` nearest cells. Same
@@ -21,15 +22,25 @@ self-joins and never joins the centroids.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_pipeline_with_spark_kafka_spark.operators.iterate import fits_driver
 from data_pipeline_with_spark_kafka_spark.operators.similarity import as_double
 from data_pipeline_with_spark_kafka_spark.sources import memo
 from data_pipeline_with_spark_kafka_spark.sources.tables import FIXTURES_DIR
 
 #: Centroid quantization after every mean recomputation (decimal places).
 _ROUND_DP = 6
+
+
+def _round_dp(x: float) -> float:
+    """DuckDB ROUND to ``_ROUND_DP`` places: half-away-from-zero on the
+    scaled product (the functions/rounding contract, applied driver-side)."""
+    q = 10**_ROUND_DP
+    return math.copysign(math.floor(abs(x) * q + 0.5), x) / q
 
 
 def _sq_dist(a: Column, b: Column) -> Column:
@@ -189,44 +200,48 @@ def kmeans_verified(
     - empty clusters keep their previous centroid (COALESCE in SQL);
     - rows with a NULL vector are excluded.
 
-    Scale shape: the NULL-filtered input is ``localCheckpoint()``-ed
-    once (the lineage cut ``operators/iterate.py`` makes per generation,
-    holding no cache entry to release); the init reads that leaf, then
-    each iteration is ONE argmin-assignment scan of it (``cell_multi_assign``,
-    ``n_assign=1``: k literal arrays, no join) + ONE per-(cid,dim) mean
-    aggregate; k*d doubles travel to the driver per iteration, never
-    rows.
+    Two tiers, chosen once by ``iterate.fits_driver`` on the
+    NULL-filtered ``(id, vector, init hash)`` frame:
+
+    - driver tier: that frame is collected once with ``toArrow()`` and
+      the loop runs in numpy (``_lloyd_on_driver``), one job in all;
+    - distributed tier: the frame is ``localCheckpoint()``-ed once (the
+      lineage cut ``operators/iterate.py`` makes per generation, holding
+      no cache entry to release); the init reads that leaf, then each
+      iteration is ONE argmin-assignment scan of it
+      (``cell_multi_assign``, ``n_assign=1``: k literal arrays, no join)
+      + ONE per-(cid,dim) mean aggregate; k*d doubles travel to the
+      driver per iteration, never rows.
+
+    The distances agree exactly between the tiers (see
+    ``_lloyd_on_driver``); the per-cell sums do not always, because
+    Spark adds in partial-aggregation order and numpy in row order, so
+    they can differ by an ULP. The 6-dp rounding hides that difference
+    unless a mean falls within an ULP of a 6-dp half-way point: there
+    the tiers round one coordinate apart and the following iterations
+    can diverge. The tier-equality test and the sf0.01-sf1 comparisons
+    in CHANGES.md sample a few (k, seed) cases and hit no such point;
+    that does not rule one out.
 
     Returns final ``[(cid, dim, centroid_val, cluster_n), ...]`` rows
     (cid 1-based, dim 0-based, cid-major), cluster_n from the LAST
     assignment; ``to_centroid_rows`` reshapes them for the IVF operators.
     Memoized per input content (``sources.memo``).
     """
-    import math
-
-    q = 10**_ROUND_DP
-
-    def rnd(x: float) -> float:
-        # DuckDB ROUND = half-away-from-zero on the scaled product (the
-        # functions/rounding contract, applied driver-side).
-        return math.copysign(math.floor(abs(x) * q + 0.5), x) / q
-
     # NULL-vector contract (the NULL-text rule from the edge sweep):
     # rows without an embedding are excluded explicitly on BOTH engines.
-    base = (
-        df.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("_id"), as_double(F.col(vec_col)).alias("_v"))
-        .localCheckpoint()
+    loop_input = df.filter(F.col(vec_col).isNotNull()).select(
+        F.col(id_col).alias("_id"),
+        as_double(F.col(vec_col)).alias("_v"),
+        F.xxhash64(F.col(id_col), F.lit(seed)).alias("_h"),
     )
-    init_rows = (
-        base.withColumn("_h", F.xxhash64(F.col("_id"), F.lit(seed)))
-        .orderBy("_h", "_id")
-        .limit(k)
-        .collect()
-    )
+    if fits_driver(loop_input):
+        return _lloyd_on_driver(loop_input.toArrow(), k, iterations)
+    base = loop_input.localCheckpoint()
+    init_rows = base.orderBy("_h", "_id").limit(k).collect()
     if not init_rows:
         return []
-    cents = [[rnd(float(x)) for x in r["_v"]] for r in init_rows]
+    cents = [[_round_dp(float(x)) for x in r["_v"]] for r in init_rows]
     dim = len(cents[0])
     counts = {c: 0 for c in range(1, len(cents) + 1)}
     for _ in range(iterations):
@@ -246,13 +261,59 @@ def kmeans_verified(
                 counts[r["cid"]] = int(r["n"])
         cents = [
             [
-                rnd(means[(j + 1, p)]) if (j + 1, p) in means else cents[j][p]
+                _round_dp(means[(j + 1, p)]) if (j + 1, p) in means else cents[j][p]
                 for p in range(dim)
             ]
             for j in range(len(cents))
         ]
     return [
         (j + 1, p, cents[j][p], counts[j + 1])
+        for j in range(len(cents))
+        for p in range(dim)
+    ]
+
+
+def _lloyd_on_driver(table, k: int, iterations: int) -> list[tuple[int, int, float, int]]:
+    """The driver tier of ``kmeans_verified`` over one collected
+    ``pyarrow.Table`` (``_id``, ``_v``, ``_h``), step for step the
+    distributed loop:
+
+    - init: the k rows smallest by ``(_h, _id)``;
+    - distance: ``cell_multi_assign`` folds the squared differences left
+      to right from 0.0 (Spark's ``aggregate``), so the sum here is the
+      last element of a ``cumsum``, not numpy's pairwise ``sum``: the two
+      tiers compare identical doubles;
+    - argmin ties go to the lowest cid, as the ``(d, cid)`` sort does;
+    - the per-cell sums run in row order (``np.add.at``), and the means
+      are rounded to 6 dp; an empty cell keeps its centroid.
+
+    The vectors are equal-length with no NULL element, as in every
+    embedding table here."""
+    import numpy as np
+
+    if table.num_rows == 0:
+        return []
+    ids = table.column("_id").to_pylist()
+    hashes = table.column("_h").to_pylist()
+    vecs = np.asarray(table.column("_v").to_pylist(), dtype=np.float64)
+    init = sorted(range(len(ids)), key=lambda i: (hashes[i], ids[i]))[:k]
+    cents = np.array([[_round_dp(float(x)) for x in vecs[i]] for i in init])
+    counts = np.zeros(len(cents), dtype=np.int64)
+    for _ in range(iterations):
+        dist = np.empty((len(vecs), len(cents)))
+        for j, c in enumerate(cents):  # one (n, dim) temporary at a time
+            diff = vecs - c
+            dist[:, j] = np.cumsum(diff * diff, axis=1)[:, -1]
+        cell = np.argmin(dist, axis=1)  # first minimum: the lowest cid
+        sums = np.zeros_like(cents)
+        np.add.at(sums, cell, vecs)
+        counts = np.bincount(cell, minlength=len(cents))
+        filled = counts > 0
+        means = sums[filled] / counts[filled][:, None]
+        cents[filled] = [[_round_dp(float(x)) for x in row] for row in means]
+    dim = cents.shape[1]
+    return [
+        (j + 1, p, float(cents[j][p]), int(counts[j]))
         for j in range(len(cents))
         for p in range(dim)
     ]

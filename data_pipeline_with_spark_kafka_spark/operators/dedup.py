@@ -52,7 +52,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from data_pipeline_with_spark_kafka_spark.operators.iterate import changed, iterate
+from data_pipeline_with_spark_kafka_spark.operators.iterate import (
+    changed,
+    collect_if_fits,
+    iterate,
+)
 from data_pipeline_with_spark_kafka_spark.operators.text import (
     hashed_shingles,
     shingles,
@@ -60,6 +64,7 @@ from data_pipeline_with_spark_kafka_spark.operators.text import (
 )
 from data_pipeline_with_spark_kafka_spark.functions.rounding import round_to
 from data_pipeline_with_spark_kafka_spark.sources import memo
+from data_pipeline_with_spark_kafka_spark.sources.tables import local_rows
 
 # 32 hashes in 16 bands of 2: the S-curve at J>=0.8 gives
 # P(candidate) = 1-(1-J^2)^16 ~ 0.9997 — empirically identical pairs to a
@@ -437,26 +442,45 @@ def connected_components(
     duplicate GROUP, so the standard pipeline clusters the pair graph and
     keeps the minimum id of each component.
 
-    Iterative min-label propagation, pure DataFrame ops: every doc starts
-    labeled with its own id; each round every doc takes the min of its own
-    label and its neighbors' labels. A doc whose neighbor offered a smaller
-    label is a changed row, and the loop stops at the first round with none
-    (labels only ever decrease). Rounds needed = graph diameter, which for
-    dedup graphs is small (duplicate groups are near-cliques). Each round
-    is one shuffle join + one aggregate, run by the shared driver in
-    operators/iterate.py: the changed count rides the round's checkpoint
-    job, and a graph whose diameter exceeds ``max_iterations`` raises
-    instead of returning fragments (dedup would then keep one doc per
-    FRAGMENT).
+    ``edges``: (doc_a, doc_b) pairs whose endpoints are all rows of
+    ``ids``. ``ids``: one row per doc (singletons come out as their own
+    component). Returns (doc, cluster_id).
 
-    ``edges``: (doc_a, doc_b) pairs. ``ids``: one row per doc (singletons
-    come out as their own component). Returns (doc, cluster_id).
+    Two tiers, chosen once by ``iterate.collect_if_fits`` on the
+    symmetric edge list itself (the pair graph's plan estimate is a
+    self-join's product and says nothing; a near-duplicate clique of m
+    docs is m(m-1)/2 edges, so the vertex count does not bound it
+    either):
+
+    - driver tier: ``_component_labels`` runs the same propagation in
+      numpy over the collected edge list; ``ids`` is left-joined to
+      those labels as a broadcast ``local_rows`` frame, a doc with no
+      label labelled by itself, so ``ids`` is never collected;
+    - distributed tier: iterative min-label propagation, pure DataFrame
+      ops. Every doc starts labeled with its own id; each round every doc
+      takes the min of its own label and its neighbors' labels. A doc
+      whose neighbor offered a smaller label is a changed row, and the
+      loop stops at the first round with none (labels only ever
+      decrease). Rounds needed = graph diameter, which for dedup graphs is
+      small (duplicate groups are near-cliques). Each round is one shuffle
+      join + one aggregate, run by the shared driver in
+      operators/iterate.py: the changed count rides the round's checkpoint
+      job, and a graph whose diameter exceeds ``max_iterations`` raises
+      instead of returning fragments (dedup would then keep one doc per
+      FRAGMENT).
+
+    The symmetric edge list is persisted before the bounded collect, so a
+    graph past the bound is built once and its rounds read that cache.
+    Both tiers return a local checkpoint, so a caller's plan over the
+    components is a leaf, whichever tier built it.
     """
-    sym = (
-        edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionByName(edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .persist()
+    # Both directions of each edge from one pass over ``edges`` (a union
+    # of two projections would build the pair graph twice).
+    both = F.array(
+        F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+        F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")),
     )
+    sym = edges.select(F.explode(both).alias("e")).select("e.src", "e.dst").persist()
 
     def relabel(labels: DataFrame) -> DataFrame:
         msgs = (
@@ -473,11 +497,63 @@ def connected_components(
             changed(F.col("nbr_min") < F.col("label")),
         )
 
-    labels = ids.select(F.col(id_col).alias("doc"), F.col(id_col).alias("label")).localCheckpoint()
-    labels = iterate(
-        labels, relabel, iterations=max_iterations, name="connected_components", release=(sym,)
-    )
+    try:
+        known = _component_labels(sym)
+        if known is not None:
+            id_type = ids.schema[id_col].dataType.simpleString()
+            label_rows = local_rows(ids.sparkSession, known, f"doc {id_type}, label {id_type}")
+            return (
+                ids.select(F.col(id_col).alias("doc"))
+                .join(F.broadcast(label_rows), "doc", "left")
+                .select("doc", F.coalesce(F.col("label"), F.col("doc")).alias("cluster_id"))
+                .localCheckpoint()
+            )
+        seed = ids.select(F.col(id_col).alias("doc"), F.col(id_col).alias("label"))
+        labels = iterate(
+            seed.localCheckpoint(), relabel, iterations=max_iterations, name="connected_components"
+        )
+    finally:
+        sym.unpersist()
     return labels.select("doc", F.col("label").alias("cluster_id"))
+
+
+@memo.memoized
+def _component_labels(sym: DataFrame) -> list[tuple] | None:
+    """``(doc, min doc of its component)`` for every endpoint of the
+    symmetric edge list ``sym`` (src, dst) that is not that minimum
+    itself, or None when the list does not fit on the driver
+    (``iterate.collect_if_fits``).
+
+    The same min-label propagation as the distributed tier, in numpy over
+    doc indices (``np.unique`` sorts, so a smaller index is a smaller
+    doc): each round every doc takes its neighbors' minimum label, then
+    jumps to its label's label, until a round changes nothing. A label is
+    always a doc of the same component and the component's minimum keeps
+    its own, so the fixpoint labels every doc with that minimum. Memoized
+    on the edge frame, whose plan is content (``ids`` is not), so a query
+    that rebuilds the same pair graph reuses the labels, or the answer
+    that they do not fit, without running it."""
+    import numpy as np
+
+    table = collect_if_fits(sym)
+    if table is None:
+        return None
+    table = table.drop_null()  # a NULL endpoint joins no label either
+    docs, index = np.unique(
+        np.concatenate([table.column("src").to_numpy(), table.column("dst").to_numpy()]),
+        return_inverse=True,
+    )
+    src, dst = index[: table.num_rows], index[table.num_rows :]
+    label = np.arange(len(docs))
+    while True:
+        nxt = label.copy()
+        np.minimum.at(nxt, src, label[dst])  # sym holds both directions
+        nxt = nxt[nxt]
+        if np.array_equal(nxt, label):
+            break
+        label = nxt
+    moved = label != np.arange(len(docs))
+    return list(zip(docs[moved].tolist(), docs[label[moved]].tolist()))
 
 
 # hash family -> (per-token hash as a SQL expression over token t,

@@ -24,22 +24,80 @@ lazy DataFrame algebra. ``iterate`` owns the rest, once:
    ContextCleaner frees checkpoint blocks once nothing references them.
 
 A step that adds no ``changed`` column is a fixed-count loop: it runs
-exactly ``iterations`` generations and never raises. Loops whose state
-is driver-side scalars (``train_logreg``, ``kmeans_verified``, the
-driver-side BPE path) do not come here. The two trainers make the same
-lineage cut once: they ``localCheckpoint()`` their loop-invariant input
-and aggregate that leaf every step, so a step never re-plans the
-pipeline that built it and no cache entry is left to release.
+exactly ``iterations`` generations and never raises.
+
+**Size tier.** Every iterative operator (``classifier_train.train_logreg``,
+``clustering.kmeans_verified``, ``dedup.connected_components``,
+``bpe.train_bpe``) makes one tier decision, against one bound:
+``spark.sql.autoBroadcastJoinThreshold``. The trainers, whose loop input
+is a projection of a scan, ask ``fits_driver`` (the plan's size
+estimate, no job); connected components and BPE, whose loop input is a
+self-join's or an aggregate's output, where the estimate does not track
+the rows, ask ``collect_if_fits`` (a collect bounded in rows). A small
+input is collected once with ``toArrow()`` and the same loop runs in
+numpy or Python on the driver: a Spark job per step costs about 0.2 s
+of fixed overhead, which dwarfs the step itself over a few hundred
+rows. A large input takes the distributed tier, the 100 TB path: the
+trainers ``localCheckpoint()`` their loop-invariant input once and
+aggregate that leaf every step, and connected components and BPE run
+their generations through ``iterate``. The bound is the broadcast
+setting because a relation Spark would ship to every executor is one
+the driver can hold; where the two tiers' run times cross is measured
+per operator in CHANGES.md, not implied by it. So a session that raises
+the threshold to broadcast bigger tables also loops over bigger inputs
+on the driver, and one that sets -1 turns the driver tier off.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Iterable
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 _CHANGED = "__changed"
+
+
+def _threshold(df: DataFrame) -> int:
+    return df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+
+
+def fits_driver(df: DataFrame) -> bool:
+    """The tier rule for a frame whose plan estimate tracks its rows (a
+    projection of a scan): True when ``df`` is small enough to loop over
+    on the driver. No job runs.
+
+    The size is the one Spark already knows, the optimized plan's
+    ``sizeInBytes``. A ``localCheckpoint()`` carries its origin plan's
+    figure onto its ``LogicalRDD``, so the answer is the same before and
+    after the checkpoint, and the driver tier skips it. The bound is
+    ``spark.sql.autoBroadcastJoinThreshold``: a relation Spark would
+    broadcast to every executor is small enough to iterate over on the
+    driver. A threshold of -1 switches broadcasts off and forces the
+    distributed tier; so does a plan with no size estimate (a frame over
+    a Python list is sized at ``spark.sql.defaultSizeInBytes``)."""
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return 0 <= size <= _threshold(df)
+
+
+def collect_if_fits(df: DataFrame) -> pa.Table | None:
+    """The same rule for a frame whose plan estimate does not track its
+    rows: ``df`` collected with ``toArrow()`` when it fits, else None.
+
+    At most ``threshold // row width + 1`` rows are collected (a
+    ``limit``), so a frame past the bound never lands on the driver
+    whole. The row width is Spark's own per-row estimate, 8 bytes plus
+    each column type's default size, so ``n`` rows fit here exactly when
+    Spark would size ``n`` such rows under the threshold. A threshold of
+    -1 returns None and runs no job."""
+    threshold = _threshold(df)
+    if threshold < 0:
+        return None
+    width = 8 + sum(f.dataType().defaultSize() for f in df._jdf.schema().fields())
+    n_max = threshold // width
+    table = df.limit(n_max + 1).toArrow()
+    return table if table.num_rows <= n_max else None
 
 
 def changed(cond: Column) -> Column:

@@ -301,74 +301,6 @@ def decode_media(media_type: str, data: bytes):
     )
 
 
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("pixels", T.BinaryType()),
-    ]
-)
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame", T.BinaryType()),
-    ]
-)
-
-
-def fake_resize(df_with_media: DataFrame, id_col: str, *, width: int = 8, height: int = 8) -> DataFrame:
-    """Resize stand-in over ``mapInPandas``: deterministic stride-sampling
-    of the raw bytes down to width*height 'pixels'. A real implementation
-    swaps the inner function for PIL/opencv; the Spark contract (Arrow
-    batches in, fixed-shape binary out) is identical."""
-    flat = df_with_media.select(F.col(id_col).alias("doc_id"), F.col("media.data").alias("data"))
-    target = width * height
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pixels = []
-            for b in pdf["data"]:
-                if len(b) == 0:
-                    pixels.append(bytes(target))
-                    continue
-                step = max(len(b) // target, 1)
-                sampled = bytes(b[min(i * step, len(b) - 1)] for i in range(target))
-                pixels.append(sampled)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": width,
-                    "height": height,
-                    "pixels": pixels,
-                }
-            )
-
-    return flat.mapInPandas(batches, RESIZE_SCHEMA)
-
-
-def fake_frame_sample(df_with_media: DataFrame, id_col: str, *, frame_bytes: int = 16, every_n: int = 4) -> DataFrame:
-    """Frame-sampling stand-in: treat the blob as a 'video' of fixed-size
-    frames, emit every n-th frame as its own row (one-to-many mapInPandas —
-    the same shape as real video keyframe extraction)."""
-    flat = df_with_media.select(F.col(id_col).alias("doc_id"), F.col("media.data").alias("data"))
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, frames = [], [], []
-            for doc_id, b in zip(pdf["doc_id"], pdf["data"]):
-                n_frames = max(len(b) // frame_bytes, 1)
-                for fi in range(0, n_frames, every_n):
-                    ids.append(doc_id)
-                    idxs.append(fi)
-                    frames.append(bytes(b[fi * frame_bytes : (fi + 1) * frame_bytes]))
-            yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs, "frame": frames})
-
-    return flat.mapInPandas(batches, FRAME_SCHEMA)
-
-
 def fake_decode_features(df_with_media: DataFrame, id_col: str) -> DataFrame:
     """Deterministic stand-in decoder over ``mapInPandas``.
 

@@ -20,11 +20,12 @@ Spark-first design:
   per input content (``sources.memo``), so every SQ8 query after the first
   reuses it, and at deployment scale it is computed once offline like the
   IVF quantizer.
-- **Encode / decode** are pure ``transform`` expressions over the array
-  column with the codebook shipped as TWO array literals (single Literal
-  nodes — see ``similarity.hyperplane_signs`` for why not per-element
-  lists): map-only, whole-stage codegen, zero shuffle, so encoding 100 TB
-  is an embarrassingly parallel scan.
+- **Encode / decode**, fused in ``sq8_reconstruct``, are one
+  ``transform`` over the array column with the codebook shipped as TWO
+  array literals (single Literal nodes — see
+  ``similarity.hyperplane_signs`` for why not per-element lists):
+  map-only, whole-stage codegen, zero shuffle, so encoding 100 TB is an
+  embarrassingly parallel scan.
 - **Search** — ADC cosine of the full-precision query against the DECODED
   corpus vector, global top-``pool`` via orderBy+limit
   (TakeOrderedAndProject: per-partition heaps, no full sort), then an
@@ -74,31 +75,6 @@ def sq8_train(df: DataFrame, vec_col: str, dim: int):
 def _codebook_lits(mins: np.ndarray, scales: np.ndarray) -> tuple[Column, Column]:
     return F.lit(np.asarray(mins, dtype=np.float64)), F.lit(
         np.asarray(scales, dtype=np.float64)
-    )
-
-
-def sq8_encode(vec: Column, mins: np.ndarray, scales: np.ndarray) -> Column:
-    """array<double> -> array<smallint> of codes in [0, 255] (stored
-    small; 255 fits a byte — smallint is the narrowest Spark array
-    element type with headroom for the unsigned range)."""
-    mn_lit, sc_lit = _codebook_lits(mins, scales)
-
-    def code(x, i):
-        mn = F.element_at(mn_lit, (i + 1).cast("int"))
-        sc = F.element_at(sc_lit, (i + 1).cast("int"))
-        c = F.least(F.greatest(F.floor((x - mn) / sc + F.lit(0.5)), F.lit(0)), F.lit(255))
-        return F.when(sc == 0, F.lit(0)).otherwise(c).cast("smallint")
-
-    return F.transform(vec, code)
-
-
-def sq8_decode(codes: Column, mins: np.ndarray, scales: np.ndarray) -> Column:
-    """array<smallint> codes -> reconstructed array<double>."""
-    mn_lit, sc_lit = _codebook_lits(mins, scales)
-    return F.transform(
-        codes,
-        lambda c, i: F.element_at(mn_lit, (i + 1).cast("int"))
-        + c.cast("double") * F.element_at(sc_lit, (i + 1).cast("int")),
     )
 
 

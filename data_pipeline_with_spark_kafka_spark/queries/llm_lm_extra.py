@@ -456,20 +456,19 @@ def llm_train_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train the linear quality classifier IN Spark (full-batch logistic
     regression, operators/classifier_train.py): distill the Gopher rule
     stack into a 4-weight linear model, then report the learned weights
-    and the training-set accuracy/loss from one final scoring aggregate.
+    and the training-set accuracy/loss the trainer returns with them.
 
     FULLY ORACLED since round 7: the 30 deterministic GD iterations
     replay in DuckDB as chained 1-row CTE stages (_train_logreg_oracle —
     the BPE/MMR unrolling pattern applied to a training loop). The loop
     is additionally pinned iteration-for-iteration against a numpy
-    reference in tests/test_classifier_train.py. Each iteration is ONE
-    aggregate returning k+2 doubles — the dataset never leaves the
-    executors, so the loop's cost profile is iterations x
-    one-scan-aggregate, the same as the IVF quantizer."""
-    from data_pipeline_with_spark_kafka_spark.operators.classifier_train import (
-        score_expr,
-        train_logreg,
-    )
+    reference in tests/test_classifier_train.py. The feature frame is a
+    few hundred rows x 5 doubles here, so ``train_logreg`` takes its
+    driver tier: the Gopher pipeline runs once, in the one collect that
+    feeds the stats, all 30 iterations and the accuracy. A corpus past
+    the broadcast threshold runs one aggregate job per iteration instead
+    (the distributed tier)."""
+    from data_pipeline_with_spark_kafka_spark.operators.classifier_train import train_logreg
 
     feats = _classifier_feature_frame(spark, sf_dir)
     model = train_logreg(
@@ -479,21 +478,12 @@ def llm_train_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         iters=_TRAIN_ITERS,
         lr=_TRAIN_LR,
     )
-    acc_row = (
-        feats.select(
-            ((score_expr(model) >= 0.5).cast("double") == F.col("label"))
-            .cast("double")
-            .alias("hit")
-        )
-        .agg(F.avg("hit").alias("acc"))
-        .collect()[0]
-    )
     rows = [
         (f"weight:{name}", _round4_half_away(w))
         for name, w in zip(model.features, model.weights)
     ]
     rows.append(("bias", _round4_half_away(model.bias)))
     rows.append(("final_log_loss", _round4_half_away(model.losses[-1])))
-    rows.append(("train_accuracy", _round4_half_away(float(acc_row["acc"]))))
+    rows.append(("train_accuracy", _round4_half_away(model.accuracy)))
     rows.append(("n_rows", float(model.n_rows)))
     return local_rows(spark, rows, "term string, value double").orderBy("term")

@@ -212,57 +212,3 @@ def repartition_for_output(df: DataFrame, *, target_partitions: int) -> DataFram
     if target_partitions > current:
         return df.repartition(target_partitions)
     return df
-
-
-def compact_parquet_dir(
-    spark: SparkSession,
-    path: str,
-    out_path: str,
-    *,
-    target_file_bytes: int = 128 << 20,
-) -> dict:
-    """Small-file compaction: rewrite a parquet directory into
-    ``ceil(total_bytes / target_file_bytes)`` right-sized files.
-
-    The operational op every long-running ingest needs — streaming
-    micro-batches and fine-grained partitions accrete thousands of
-    KB-scale files, and at 100 TB the scan cost becomes task-scheduling
-    overhead + footer reads instead of IO. Sizing uses the Hadoop
-    FileSystem API (portable across HDFS/S3A/local, and the same listing
-    a real lakehouse compactor uses), so the byte count is the on-disk
-    parquet size, not a row estimate.
-
-    Writes to ``out_path`` (never in place: a failed in-place rewrite
-    would destroy the source; callers swap directories after success —
-    the same two-phase discipline as the JDBC staging upsert). Returns
-    {files_before, bytes_before, files_after}.
-    """
-    import math
-
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    statuses = [
-        s for s in fs.listStatus(p)
-        if s.isFile() and not s.getPath().getName().startswith("_")
-    ]
-    files_before = len(statuses)
-    bytes_before = sum(s.getLen() for s in statuses)
-    n_out = max(1, math.ceil(bytes_before / target_file_bytes))
-
-    df = spark.read.parquet(path)
-    # coalesce, not repartition: shrinking file count needs no shuffle —
-    # tasks read several source files each and write one output.
-    df.coalesce(n_out).write.mode("overwrite").parquet(out_path)
-
-    out_p = jvm.org.apache.hadoop.fs.Path(out_path)
-    files_after = len([
-        s for s in fs.listStatus(out_p)
-        if s.isFile() and s.getPath().getName().endswith(".parquet")
-    ])
-    return {
-        "files_before": files_before,
-        "bytes_before": int(bytes_before),
-        "files_after": files_after,
-    }

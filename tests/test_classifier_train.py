@@ -13,6 +13,7 @@ from data_pipeline_with_spark_kafka_spark.operators.classifier_train import (
     score_expr,
     train_logreg,
 )
+from data_pipeline_with_spark_kafka_spark.operators.iterate import fits_driver
 from data_pipeline_with_spark_kafka_spark.queries.llm_lm_extra import (
     _TRAIN_FEATURES,
     _classifier_feature_frame,
@@ -48,8 +49,7 @@ def feats(spark, sf_dir):
     df.unpersist()
 
 
-def test_gd_matches_numpy_reference(feats):
-    model = train_logreg(feats, _TRAIN_FEATURES, "label", iters=ITERS, lr=LR)
+def _assert_matches_numpy_reference(model, feats):
     pdf = feats.select("label", *_TRAIN_FEATURES).toPandas()
     X = pdf[_TRAIN_FEATURES].to_numpy(dtype=float)
     y = pdf["label"].to_numpy(dtype=float)
@@ -59,6 +59,52 @@ def test_gd_matches_numpy_reference(feats):
     np.testing.assert_allclose(model.weights, w_ref, rtol=1e-6, atol=1e-9)
     assert model.bias == pytest.approx(b_ref, rel=1e-6, abs=1e-9)
     np.testing.assert_allclose(model.losses, losses_ref, rtol=1e-6)
+
+
+def _spark_accuracy(feats, model) -> float:
+    hit = ((score_expr(model) >= 0.5).cast("double") == F.col("label")).cast("double")
+    return feats.agg(F.avg(hit)).collect()[0][0]
+
+
+def test_gd_matches_numpy_reference(feats):
+    """The fixture frame is persisted and small: the driver tier."""
+    assert fits_driver(feats.select("label", *_TRAIN_FEATURES))
+    model = train_logreg(feats, _TRAIN_FEATURES, "label", iters=ITERS, lr=LR)
+    _assert_matches_numpy_reference(model, feats)
+
+
+def test_gd_distributed_tier_matches_numpy_reference(feats, distributed_tier):
+    """Both tiers meet the same reference, and their training accuracies
+    equal the one a Spark scoring pass over the raw features measures."""
+    with distributed_tier():
+        model = train_logreg(feats, _TRAIN_FEATURES, "label", iters=ITERS, lr=LR)
+    _assert_matches_numpy_reference(model, feats)
+    driver = train_logreg(feats, _TRAIN_FEATURES, "label", iters=ITERS, lr=LR)
+    assert driver is not model
+    assert driver.n_rows == model.n_rows == feats.count()
+    assert driver.accuracy == model.accuracy == _spark_accuracy(feats, model)
+
+
+def test_driver_tier_follows_sql_null_semantics(spark, distributed_tier):
+    """A NULL feature drops out of that feature's stats, and its row out of
+    every GD and accuracy average, on both tiers alike."""
+    from data_pipeline_with_spark_kafka_spark.sources.tables import local_rows
+
+    rows = [
+        (float(i % 2), None if i % 5 == 0 else float(i % 7) + (i % 2), float(i % 3))
+        for i in range(40)
+    ]
+    rows.append((None, 1.0, 2.0))
+    df = local_rows(spark, rows, "label double, f double, g double")
+    driver = train_logreg(df, ["f", "g"], "label", iters=5, lr=0.5)
+    with distributed_tier():
+        distributed = train_logreg(df, ["f", "g"], "label", iters=5, lr=0.5)
+    assert driver.n_rows == distributed.n_rows == 41
+    np.testing.assert_allclose(driver.means, distributed.means, rtol=1e-12)
+    np.testing.assert_allclose(driver.stds, distributed.stds, rtol=1e-12)
+    np.testing.assert_allclose(driver.weights, distributed.weights, rtol=1e-9)
+    np.testing.assert_allclose(driver.losses, distributed.losses, rtol=1e-9)
+    assert driver.accuracy == distributed.accuracy
 
 
 def test_loss_decreases_and_beats_majority(feats):

