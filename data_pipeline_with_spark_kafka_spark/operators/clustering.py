@@ -1,4 +1,4 @@
-"""Distributed k-means over embedding columns + IVF similarity search.
+"""Distributed k-means over embedding columns: the IVF coarse quantizer.
 
 Pure DataFrame/built-in-function implementation (no MLlib dependency, no
 RDDs). One Lloyd's trainer, ``kmeans_verified``: hash-seeded init (the k
@@ -9,15 +9,18 @@ the DuckDB oracle replays the loop bit for bit. A small input runs the
 loop in numpy on the driver; a large one runs each iteration as one
 literal-centroid argmin scan (``cell_multi_assign``) plus one aggregate.
 
-IVF (inverted-file) search: assign every vector to its nearest centroid
-offline; a query probes only the ``n_probe`` nearest cells. Same
-probe/rerank plumbing as the LSH variant (operators/similarity.py) with a
-learned coarse quantizer instead of random hyperplanes.
+IVF (inverted-file) search assigns every vector to its nearest centroid
+and lets a query probe only its ``n_probe`` nearest cells; it is the
+``Ivf`` probe of ``similarity.vector_topk`` (one query) and
+``similarity.knn_join_ivf`` (a query set), fed by the centroid rows
+here (``fixture_centroid_rows`` or ``to_centroid_rows``).
 
-Every nearest-centroid argmin in the package is ``cell_multi_assign``:
-the k centroids ship as expression literals, so assignment is a narrow
-map over the scan, ranked by ``(distance, cid)``. The fact table never
-self-joins and never joins the centroids.
+Every nearest-centroid argmin in the package is ``cell_multi_assign``,
+for the members and for the query alike: the k centroids ship as
+expression literals, so assignment is a narrow map over the scan, ranked
+by ``(distance, cid)``. The fact table never self-joins, and no join
+touches the centroids (``tests/test_scale_ops.py`` checks the IVF, IVF-SQ8
+and IVF-PQ plans for a nested-loop join).
 """
 
 from __future__ import annotations
@@ -117,56 +120,6 @@ def cell_multi_assign(
     )
     top = F.slice(F.array_sort(scored), 1, n_assign)
     return df.withColumn(out_col, F.explode(F.transform(top, lambda s: s["cid"])))
-
-
-def ivf_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_df: DataFrame,
-    centroid_rows: list,
-    *,
-    k: int = 10,
-    n_probe: int = 2,
-) -> DataFrame:
-    """IVF approximate top-k cosine: probe the n_probe cells nearest to the
-    query (``query_df`` holds one query row), exact-rerank only their
-    members. Members and the query take their cells from the same
-    literal-centroid argmin (``cell_multi_assign``), so no join touches
-    the centroids."""
-    from data_pipeline_with_spark_kafka_spark.functions.rounding import round_to
-    from data_pipeline_with_spark_kafka_spark.operators.similarity import (
-        cosine_pre,
-        l2_norm,
-    )
-
-    # limit(1): the broadcast probe side is n_probe rows by construction,
-    # however large the relation the query row is filtered from.
-    qcells = (
-        cell_multi_assign(query_df.limit(1), vec_col, centroid_rows, n_assign=n_probe, out_col="cid")
-        .select("cid", as_double(F.col(vec_col)).alias("qvec"))
-        .withColumn("qn", l2_norm(F.col("qvec")))
-    )
-
-    # Norm hoist (similarity.cosine_pre contract): the query norm is a
-    # broadcast-side column instead of a 64-wide interpreted fold per
-    # member row; the member cast + norm bind once per row.
-    fact = (
-        cell_multi_assign(df, vec_col, centroid_rows, n_assign=1, out_col="cid")
-        .select("cid", F.col(id_col), as_double(F.col(vec_col)).alias("_v"))
-        .withColumn("_n", l2_norm(F.col("_v")))
-    )
-    return (
-        fact.join(F.broadcast(qcells), "cid")
-        .select(
-            F.col(id_col),
-            round_to(
-                cosine_pre(F.col("_v"), F.col("_n"), F.col("qvec"), F.col("qn")), 6
-            ).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
 
 
 @memo.memoized
@@ -321,7 +274,7 @@ def _lloyd_on_driver(table, k: int, iterations: int) -> list[tuple[int, int, flo
 
 def to_centroid_rows(trained: list) -> list[tuple[int, list[float]]]:
     """``kmeans_verified`` rows as ``[(cid, centroid), ...]``: the shape
-    ``cell_multi_assign``, ``ivf_topk`` and the committed quantizer
+    ``cell_multi_assign``, ``similarity.Ivf`` and the committed quantizer
     fixtures (``fixture_centroid_rows``) share."""
     cents: dict[int, list[float]] = {}
     for cid, _dim, x, _n in trained:  # cid-major, dim-ascending

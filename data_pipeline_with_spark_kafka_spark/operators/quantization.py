@@ -26,12 +26,13 @@ Spark-first design:
   ``similarity.hyperplane_signs`` for why not per-element lists):
   map-only, whole-stage codegen, zero shuffle, so encoding 100 TB is an
   embarrassingly parallel scan.
-- **Search** — ADC cosine of the full-precision query against the DECODED
-  corpus vector, global top-``pool`` via orderBy+limit
-  (TakeOrderedAndProject: per-partition heaps, no full sort), then an
-  exact re-rank of the tiny candidate pool with the true vectors. This is
-  the standard quantized-scan + rerank shape; composing it with the IVF
-  cell filter (``clustering.assign_cells``) gives IVF-SQ8.
+- **Search** is not here: ``similarity.vector_topk`` with
+  ``prerank=Adc(reconstruct)`` scores the full-precision query against
+  the DECODED corpus vector, keeps the top ``pool`` and reranks that
+  pool exactly; its IVF probe gives IVF-SQ8 / IVF-PQ, and
+  ``prerank=Hamming`` runs the 1-bit ``sign_words`` codec. This module
+  holds the codecs: SQ8 (``sq8_train`` + ``sq8_reconstruct``), PQ
+  (``fixture_pq_codebooks`` + ``pq_reconstruct``) and sign packing.
 
 Cross-engine determinism (what makes the oracle exact): codes are
 ``clamp(floor((x - mn)/scale + 0.5), 0, 255)`` — floor arithmetic on
@@ -49,7 +50,7 @@ from pyspark.sql import functions as F
 from data_pipeline_with_spark_kafka_spark.functions.rounding import round_to
 from data_pipeline_with_spark_kafka_spark.operators import similarity as sim
 from data_pipeline_with_spark_kafka_spark.sources import memo
-from data_pipeline_with_spark_kafka_spark.sources.tables import FIXTURES_DIR, local_rows
+from data_pipeline_with_spark_kafka_spark.sources.tables import FIXTURES_DIR
 
 
 @memo.memoized
@@ -92,151 +93,6 @@ def sq8_reconstruct(vec: Column, mins: np.ndarray, scales: np.ndarray) -> Column
     return F.transform(vec, rec)
 
 
-def sq8_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_df: DataFrame,
-    *,
-    k: int = 10,
-    pool: int = 50,
-    dim: int = 64,
-) -> DataFrame:
-    """ADC top-``pool`` over the quantized corpus, exact rerank to top-``k``.
-
-    Output columns: (id, adc_cosine, cosine) — the quantized score is kept
-    so recall/error audits read straight off the result. The broadcast is
-    the structurally-1-row query (``limit(1)`` => GlobalLimit, provably
-    bounded); the corpus side never shuffles — scan, per-partition heap,
-    ``pool``-row rerank."""
-    mins, scales = sq8_train(df, vec_col, dim)
-    v = sim.as_double(F.col(vec_col))
-    # Query norm hoisted into the broadcast side (similarity.cosine_pre
-    # contract): one fold total instead of one 64-wide interpreted fold
-    # per scanned row. FP-identical.
-    q = (
-        query_df.select(sim.as_double(F.col(vec_col)).alias("qv"))
-        .limit(1)
-        .withColumn("qn", sim.l2_norm(F.col("qv")))
-    )
-    adc = (
-        df.select(F.col(id_col), v.alias("_v"))
-        .withColumn("_rv", sq8_reconstruct(F.col("_v"), mins, scales))
-        .crossJoin(F.broadcast(q))
-        .select(
-            F.col(id_col),
-            F.col("_v"),
-            F.col("qv"),
-            round_to(
-                sim.cosine_pre(
-                    F.col("_rv"), sim.l2_norm(F.col("_rv")), F.col("qv"), F.col("qn")
-                ),
-                6,
-            ).alias("adc_cosine"),
-        )
-        .orderBy(F.col("adc_cosine").desc(), F.col(id_col))
-        .limit(pool)
-    )
-    return (
-        adc.select(
-            F.col(id_col),
-            F.col("adc_cosine"),
-            round_to(sim.cosine(F.col("_v"), F.col("qv")), 6).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
-def ivf_sq8_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_df: DataFrame,
-    centroid_rows: list,
-    *,
-    k: int = 10,
-    pool: int = 50,
-    n_probe: int = 3,
-    dim: int = 64,
-) -> DataFrame:
-    """IVF-SQ8: coarse-quantizer cell probe + int8 ADC scan + exact rerank
-    — the composition FAISS ships as ``IVF<n>,SQ8`` and the realistic
-    billion-vector layout (cells bound the candidates, codes bound the
-    bytes).
-
-    Corpus cell assignment is the zero-shuffle literal-centroid map
-    (``clustering.cell_multi_assign``, n_assign=1 — at rest each vector
-    lives in exactly one inverted list); the query probes its ``n_probe``
-    nearest cells via the tiny centroid relation. Only probed members are
-    decoded and scored."""
-    from data_pipeline_with_spark_kafka_spark.operators import clustering
-
-    mins, scales = sq8_train(df, vec_col, dim)
-    members = clustering.cell_multi_assign(df, vec_col, centroid_rows, n_assign=1)
-
-    centroids = local_rows(
-        query_df.sparkSession, centroid_rows, "cid int, centroid array<double>"
-    )
-    qcells = (
-        query_df.crossJoin(F.broadcast(centroids))
-        .select(
-            F.aggregate(
-                F.zip_with(
-                    sim.as_double(F.col(vec_col)),
-                    F.col("centroid"),
-                    lambda a, b: (a - b) * (a - b),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("d"),
-            F.col("cid"),
-            sim.as_double(F.col(vec_col)).alias("qv"),
-        )
-        .orderBy("d", "cid")
-        .limit(n_probe)
-        .select(F.col("cid").alias("cell"), "qv")
-        .withColumn("qn", sim.l2_norm(F.col("qv")))
-    )
-
-    v = sim.as_double(F.col(vec_col))
-    # Query norm from the broadcast side (cosine_pre contract) — the
-    # reconstructed vector is bound to an attribute first so its norm and
-    # dot don't re-evaluate the codec tree (the pq_topk lesson below).
-    adc = (
-        members.join(F.broadcast(qcells), "cell")
-        .select(
-            F.col(id_col),
-            v.alias("_v"),
-            F.col("qv"),
-            F.col("qn"),
-            sq8_reconstruct(v, mins, scales).alias("_rv"),
-        )
-        .select(
-            F.col(id_col),
-            F.col("_v"),
-            F.col("qv"),
-            round_to(
-                sim.cosine_pre(
-                    F.col("_rv"), sim.l2_norm(F.col("_rv")), F.col("qv"), F.col("qn")
-                ),
-                6,
-            ).alias("adc_cosine"),
-        )
-        .orderBy(F.col("adc_cosine").desc(), F.col(id_col))
-        .limit(pool)
-    )
-    return (
-        adc.select(
-            F.col(id_col),
-            F.col("adc_cosine"),
-            round_to(sim.cosine(F.col("_v"), F.col("qv")), 6).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
 def sign_words(vec: Column, dim: int) -> list[Column]:
     """Pack the vector's sign bits into 32-bit words (one long per 32
     dims, MSB-first) — the 1-bit binarization codec (32x smaller than
@@ -253,66 +109,6 @@ def sign_words(vec: Column, dim: int) -> list[Column]:
         )
         for lo in range(0, dim, 32)
     ]
-
-
-def binary_sign_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_df: DataFrame,
-    *,
-    k: int = 10,
-    pool: int = 100,
-    dim: int = 64,
-) -> DataFrame:
-    """1-bit ANN: Hamming distance between packed sign words pre-ranks the
-    corpus (bit_count(xor) — a handful of ALU ops per candidate, the
-    cheapest possible scan), exact cosine reranks the top-``pool``.
-
-    sign(x)·sign(y) Hamming distance estimates the angle (Charikar 2002:
-    P[bits differ] = theta/pi), so the pre-rank is angle-consistent; the
-    1-bit codec is the floor of the quantization ladder (float64 exact →
-    SQ8 ADC → sign bits). No training pass at all — the codec is
-    data-independent, so construction is fully lazy. Recall is bought
-    with ``pool`` (recall@10 = 1.0 at pool=100 on the fixture corpus,
-    pytest-pinned ≥ 0.8)."""
-    v = sim.as_double(F.col(vec_col))
-    words = sign_words(v, dim)
-    base = df.select(
-        F.col(id_col),
-        v.alias("_v"),
-        *[w.alias(f"_w{i}") for i, w in enumerate(words)],
-    )
-    n_words = len(words)
-    qv = sim.as_double(F.col(vec_col))
-    q = query_df.select(
-        qv.alias("_qv"),
-        *[w.alias(f"_qw{i}") for i, w in enumerate(sign_words(qv, dim))],
-    ).limit(1)
-    ham = None
-    for i in range(n_words):
-        term = F.bit_count(F.col(f"_w{i}").bitwiseXOR(F.col(f"_qw{i}")))
-        ham = term if ham is None else ham + term
-    pooled = (
-        base.crossJoin(F.broadcast(q))
-        .select(
-            F.col(id_col),
-            F.col("_v"),
-            F.col("_qv"),
-            ham.cast("int").alias("hamming"),
-        )
-        .orderBy(F.col("hamming").asc(), F.col(id_col))
-        .limit(pool)
-    )
-    return (
-        pooled.select(
-            F.col(id_col),
-            F.col("hamming"),
-            round_to(sim.cosine(F.col("_v"), F.col("_qv")), 6).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
 
 
 def sq8_reconstruction_error(
@@ -420,139 +216,3 @@ def pq_reconstruct(vec: Column, codebooks: np.ndarray) -> Column:
         idx = F.array_position(dists, F.array_min(dists))
         recon_subs.append(F.element_at(cents, idx.cast("int")))
     return F.concat(*recon_subs)
-
-
-def pq_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_df: DataFrame,
-    codebooks: np.ndarray,
-    *,
-    k: int = 10,
-    pool: int = 50,
-) -> DataFrame:
-    """PQ-ADC top-``pool`` + exact rerank to top-``k`` — identical search
-    shape to ``sq8_topk`` with the PQ codec swapped in: scan evaluates the
-    reconstructed vector from the codebook literals, per-partition heaps
-    take the pool, the tiny pool reranks exactly. The corpus never
-    shuffles; the only broadcast is the structurally-1-row query."""
-    v = sim.as_double(F.col(vec_col))
-    # Query norm hoisted into the broadcast side (cosine_pre contract).
-    q = (
-        query_df.select(sim.as_double(F.col(vec_col)).alias("qv"))
-        .limit(1)
-        .withColumn("qn", sim.l2_norm(F.col("qv")))
-    )
-    staged = df.select(F.col(id_col), v.alias("_v")).withColumn(
-        "_rv", pq_reconstruct(F.col("_v"), codebooks)
-    )
-    adc = (
-        staged.crossJoin(F.broadcast(q))
-        .select(
-            F.col(id_col),
-            F.col("_v"),
-            F.col("qv"),
-            round_to(
-                sim.cosine_pre(
-                    F.col("_rv"), sim.l2_norm(F.col("_rv")), F.col("qv"), F.col("qn")
-                ),
-                6,
-            ).alias("adc_cosine"),
-        )
-        .orderBy(F.col("adc_cosine").desc(), F.col(id_col))
-        .limit(pool)
-    )
-    return (
-        adc.select(
-            F.col(id_col),
-            F.col("adc_cosine"),
-            round_to(sim.cosine(F.col("_v"), F.col("qv")), 6).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
-def ivf_pq_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_df: DataFrame,
-    centroid_rows: list,
-    codebooks: np.ndarray,
-    *,
-    k: int = 10,
-    pool: int = 50,
-    n_probe: int = 3,
-) -> DataFrame:
-    """IVF-PQ: coarse-quantizer cell probe + PQ-ADC scan + exact rerank —
-    FAISS's ``IVF<n>,PQ<m>`` composition, THE billion-vector index layout
-    (cells bound candidates, 4-bit codes bound bytes: 4 B/vector here).
-    Both learned artifacts are committed fixtures (ivf_centroids_k8 +
-    pq_codebooks_m8_k16), so the whole pipeline stays cross-engine
-    oracled. Structure mirrors ``ivf_sq8_topk`` with the PQ codec swapped
-    into the ADC stage."""
-    from data_pipeline_with_spark_kafka_spark.operators import clustering
-
-    members = clustering.cell_multi_assign(df, vec_col, centroid_rows, n_assign=1)
-    centroids = local_rows(
-        query_df.sparkSession, centroid_rows, "cid int, centroid array<double>"
-    )
-    qcells = (
-        query_df.crossJoin(F.broadcast(centroids))
-        .select(
-            F.aggregate(
-                F.zip_with(
-                    sim.as_double(F.col(vec_col)),
-                    F.col("centroid"),
-                    lambda a, b: (a - b) * (a - b),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("d"),
-            F.col("cid"),
-            sim.as_double(F.col(vec_col)).alias("qv"),
-        )
-        .orderBy("d", "cid")
-        .limit(n_probe)
-        .select(F.col("cid").alias("cell"), "qv")
-        .withColumn("qn", sim.l2_norm(F.col("qv")))
-    )
-    v = sim.as_double(F.col(vec_col))
-    adc = (
-        members.join(F.broadcast(qcells), "cell")
-        # Bind the reconstructed vector to an attribute BEFORE the cosine
-        # fold consumes it (the winnowing lambda-inlining lesson): inlined,
-        # the whole codebook-argmin tree re-evaluates per zip element —
-        # measured 2.7 s vs 1.3 s warm on the sf0.1 corpus.
-        .select(
-            F.col(id_col),
-            v.alias("_v"),
-            F.col("qv"),
-            F.col("qn"),
-            pq_reconstruct(v, codebooks).alias("_rv"),
-        )
-        .select(
-            F.col(id_col),
-            F.col("_v"),
-            F.col("qv"),
-            round_to(
-                sim.cosine_pre(
-                    F.col("_rv"), sim.l2_norm(F.col("_rv")), F.col("qv"), F.col("qn")
-                ),
-                6,
-            ).alias("adc_cosine"),
-        )
-        .orderBy(F.col("adc_cosine").desc(), F.col(id_col))
-        .limit(pool)
-    )
-    return (
-        adc.select(
-            F.col(id_col),
-            F.col("adc_cosine"),
-            round_to(sim.cosine(F.col("_v"), F.col("qv")), 6).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )

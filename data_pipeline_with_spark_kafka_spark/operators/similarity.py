@@ -1,22 +1,29 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two tiers:
-- **Brute-force cosine top-k** — exact; dot products via
-  ``zip_with``/``aggregate`` (JVM codegen, no Python), global top-k via
-  orderBy+limit (TakeOrderedAndProject: per-partition heap, no full sort).
-  At 100 TB this is the per-partition scan baseline every ANN variant is
-  recall-tested against.
-- **Random-hyperplane LSH ANN** — deterministic signed projections
-  (seeded NumPy planes shipped as a broadcast literal), bucket on the sign
-  bits, search only the query's bucket (optionally multi-probe neighbors).
-  Candidate set shrinks ~2^n_planes-fold; recall is tested, not assumed.
+Cosine arithmetic is JVM expressions (``zip_with``/``aggregate``: codegen,
+no Python). Single-query search is one filter-and-refine top-k,
+``vector_topk``, with two parameters:
 
-An IVF variant would swap the hash bucket for a nearest-centroid
-assignment (k-means trained offline); the probe/bucket plumbing here is
-identical, so only the bucket expression changes.
+- **probe** (which rows are candidates): every row, the exact baseline
+  every ANN variant is recall-tested against; random-hyperplane **LSH**,
+  deterministic sign projections (``make_planes`` / ``make_planes_md5``
+  as array literals) with the query's bucket and its neighbours within a
+  sign-bit radius; or **IVF** cells, a learned coarse quantizer (k-means
+  centroid rows) whose assignment is ``clustering.cell_multi_assign``.
+- **pre-rank** (how candidates are cut before the exact rerank): none;
+  ADC cosine over a codec's reconstruction (SQ8 / PQ,
+  ``operators/quantization.py``); or Hamming over packed sign words.
+
+The multi-query form is the k-NN join (``knn_join_exact`` /
+``knn_join_ivf``): a per-query window top-k instead of one global heap.
 """
 
 from __future__ import annotations
+
+import operator
+from collections.abc import Callable
+from functools import reduce
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import Column, DataFrame
@@ -53,38 +60,6 @@ def cosine_pre(v: Column, n: Column, qvec: Column, qn: Column) -> Column:
     attributes first (measured 0.81 -> 0.61 s median on the hybrid
     dense branch at sf0.1)."""
     return dot(v, qvec) / (n * qn)
-
-
-def brute_force_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_df: DataFrame,
-    *,
-    k: int = 10,
-) -> DataFrame:
-    """Exact cosine top-k of every row against a single-row query relation
-    (broadcast — the fact side never shuffles)."""
-    # limit(1) makes the 1-row contract structural (GlobalLimit in the
-    # plan), so the broadcast hint is provably bounded regardless of scale.
-    q = (
-        query_df.select(as_double(F.col(vec_col)).alias("qvec"))
-        .limit(1)
-        .withColumn("qn", l2_norm(F.col("qvec")))
-    )
-    return (
-        df.select(F.col(id_col), as_double(F.col(vec_col)).alias("_v"))
-        .withColumn("_n", l2_norm(F.col("_v")))
-        .crossJoin(F.broadcast(q))
-        .select(
-            F.col(id_col),
-            round_to(
-                cosine_pre(F.col("_v"), F.col("_n"), F.col("qvec"), F.col("qn")), 6
-            ).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
 
 
 def hyperplane_signs(vec_col: Column, planes: np.ndarray) -> Column:
@@ -132,50 +107,133 @@ def make_planes_md5(dim: int, n_planes: int, prefix: str = "hp") -> np.ndarray:
     )
 
 
-def lsh_topk(
+class Lsh(NamedTuple):
+    """Probe: the rows whose ``hyperplane_signs`` bucket is within
+    ``radius`` sign-bit flips of the query's (multi-probe LSH: the
+    recall/candidate tradeoff is the radius, not a rebuild)."""
+
+    planes: np.ndarray
+    radius: int = 1
+
+
+class Ivf(NamedTuple):
+    """Probe: the members of the ``n_probe`` cells nearest the query, each
+    row living in its one nearest cell."""
+
+    centroid_rows: list
+    n_probe: int
+
+
+class Adc(NamedTuple):
+    """Pre-rank: asymmetric (ADC) cosine of the full-precision query
+    against ``reconstruct(v)``, a codec's decoded vector
+    (``quantization.sq8_reconstruct`` / ``pq_reconstruct``)."""
+
+    reconstruct: Callable[[Column], Column]
+    pool: int
+
+
+class Hamming(NamedTuple):
+    """Pre-rank: Hamming distance between packed sign words
+    (``quantization.sign_words``, ``dim`` a multiple of 32)."""
+
+    dim: int
+    pool: int
+
+
+def vector_topk(
     df: DataFrame,
     id_col: str,
     vec_col: str,
     query_df: DataFrame,
     *,
     k: int = 10,
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-    probe_radius: int = 1,
-    planes: np.ndarray | None = None,
+    probe: Lsh | Ivf | None = None,
+    prerank: Adc | Hamming | None = None,
 ) -> DataFrame:
-    """Approximate top-k: exact rerank restricted to buckets within
-    ``probe_radius`` sign-bit flips of the query's bucket (multi-probe LSH —
-    recall/candidate tradeoff is the probe radius, not a rebuild).
-    ``planes`` overrides the seeded-RNG family (e.g. ``make_planes_md5``
-    for the cross-engine-oracled variant)."""
-    planes = planes if planes is not None else make_planes(dim, n_planes, seed)
-    # Norms hoisted into the projections (cosine_pre contract above):
-    # the fact-side cast + norm run once per row instead of per join
-    # match, the query norm once instead of per row.
-    bucketed = df.select(
-        F.col(id_col),
-        as_double(F.col(vec_col)).alias("_v"),
-        hyperplane_signs(F.col(vec_col), planes).alias("bucket"),
-    ).withColumn("_n", l2_norm(F.col("_v")))
-    q = query_df.select(
-        as_double(F.col(vec_col)).alias("qvec"),
-        hyperplane_signs(F.col(vec_col), planes).alias("qbucket"),
-    ).limit(1).withColumn("qn", l2_norm(F.col("qvec")))
-    # structural 1-row bound -> broadcast hint is scale-safe
-    probe = F.bit_count(F.col("bucket").bitwiseXOR(F.col("qbucket"))) <= probe_radius
-    return (
-        bucketed.join(F.broadcast(q), probe)
-        .select(
-            F.col(id_col),
-            round_to(
-                cosine_pre(F.col("_v"), F.col("_n"), F.col("qvec"), F.col("qn")), 6
-            ).alias("cosine"),
+    """Cosine top-``k`` of the rows of ``df`` against the first row of
+    ``query_df``: filter, optionally pre-rank, refine exactly.
+
+    - ``probe`` picks the candidates: every row (None), an LSH bucket
+      radius, or IVF cells. Members and the query take their cells from
+      the same literal-centroid argmin (``clustering.cell_multi_assign``),
+      so no join touches the centroids.
+    - ``prerank`` None ranks the candidates by exact cosine. Otherwise the
+      candidates are cut to ``prerank.pool`` by the cheap score (ADC cosine
+      descending, Hamming ascending), and only that pool is reranked by
+      exact cosine to ``k``. The accepted pairs are none, ADC or Hamming
+      over every row, and ADC over IVF cells.
+
+    Returns ``(id, cosine)``, or ``(id, adc_cosine | hamming, cosine)``
+    when pre-ranked; scores are rounded to 6 dp and ties go to the lower
+    id, so the order is reproducible across engines.
+
+    Plan shape: the query is ``limit(1)`` (GlobalLimit: the broadcast is
+    bounded at any scale) and carries its norm and probe key, so each
+    candidate pays one dot fold (``cosine_pre``). The corpus side is a
+    narrow scan into per-partition top-n heaps (TakeOrderedAndProject),
+    with no Exchange. A codec decodes only candidate rows (after the cell
+    join), bound to an attribute before the cosine fold reads it twice:
+    inlined, the whole codec tree re-evaluates per element (measured
+    2.7 s vs 1.3 s warm for IVF-PQ on the sf0.1 corpus).
+    """
+    from data_pipeline_with_spark_kafka_spark.operators.clustering import cell_multi_assign
+    from data_pipeline_with_spark_kafka_spark.operators.quantization import sign_words
+
+    if probe is not None and prerank is not None and not (
+        isinstance(probe, Ivf) and isinstance(prerank, Adc)
+    ):
+        raise ValueError(
+            f"no {type(prerank).__name__} pre-rank over a {type(probe).__name__} probe"
         )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
+    v = as_double(F.col(vec_col))
+    q = query_df.limit(1)
+    fact_keys, query_keys, on = [], [], None
+    if isinstance(probe, Ivf):
+        df = cell_multi_assign(df, vec_col, probe.centroid_rows, n_assign=1, out_col="_cell")
+        q = cell_multi_assign(
+            q, vec_col, probe.centroid_rows, n_assign=probe.n_probe, out_col="_cell"
+        )
+        fact_keys, query_keys, on = ["_cell"], ["_cell"], "_cell"
+    elif isinstance(probe, Lsh):
+        bucket = hyperplane_signs(F.col(vec_col), probe.planes)
+        fact_keys, query_keys = [bucket.alias("_bucket")], [bucket.alias("_qbucket")]
+        on = F.bit_count(F.col("_bucket").bitwiseXOR(F.col("_qbucket"))) <= probe.radius
+    if isinstance(prerank, Hamming):
+        words = sign_words(v, prerank.dim)
+        fact_keys += [w.alias(f"_w{i}") for i, w in enumerate(words)]
+        query_keys += [w.alias(f"_qw{i}") for i, w in enumerate(words)]
+
+    fact = df.select(F.col(id_col), v.alias("_v"), *fact_keys)
+    q = q.select(v.alias("qvec"), *query_keys).withColumn("qn", l2_norm(F.col("qvec")))
+    cand = fact.join(F.broadcast(q), on)
+
+    def top(frame: DataFrame, key: Column, n: int) -> DataFrame:
+        return frame.orderBy(key, F.col(id_col)).limit(n)
+
+    exact = round_to(
+        cosine_pre(F.col("_v"), l2_norm(F.col("_v")), F.col("qvec"), F.col("qn")), 6
+    ).alias("cosine")
+    if prerank is None:
+        return top(cand.select(F.col(id_col), exact), F.col("cosine").desc(), k)
+    if isinstance(prerank, Adc):
+        cand = cand.withColumn("_rv", prerank.reconstruct(F.col("_v")))
+        name = "adc_cosine"
+        score = round_to(
+            cosine_pre(F.col("_rv"), l2_norm(F.col("_rv")), F.col("qvec"), F.col("qn")), 6
+        )
+        key = F.col(name).desc()
+    else:
+        name = "hamming"
+        score = reduce(
+            operator.add,
+            [F.bit_count(F.col(f"_w{i}").bitwiseXOR(F.col(f"_qw{i}"))) for i in range(len(words))],
+        ).cast("int")
+        key = F.col(name).asc()
+    pooled = top(
+        cand.select(F.col(id_col), "_v", "qvec", "qn", score.alias(name)), key, prerank.pool
     )
+    return top(pooled.select(F.col(id_col), name, exact), F.col("cosine").desc(), k)
 
 
 def knn_join_exact(
@@ -188,7 +246,7 @@ def knn_join_exact(
     query_limit: int = 16,
 ) -> DataFrame:
     """Exact k-NN JOIN: top-k cosine neighbors for EVERY query vector (the
-    batch form of ``brute_force_topk``, which answers one query).
+    batch form of ``vector_topk``, which answers one query).
 
     Shape: the query set is the small side (``limit(query_limit)`` makes
     that structural, so the broadcast is provably bounded); the corpus

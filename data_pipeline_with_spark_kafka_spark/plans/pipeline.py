@@ -15,7 +15,8 @@ idempotent sinks) golden-testable without a broker.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterator, Sequence
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -23,6 +24,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 Transform = Callable[[DataFrame], DataFrame]
+
+
+@contextmanager
+def kafka_connector_hint(spark: SparkSession, alternative: str) -> Iterator[None]:
+    """Turn a missing-Kafka-connector failure (AnalysisException
+    DATA_SOURCE_NOT_FOUND) inside the block into a RuntimeError naming the
+    ``--packages`` coordinate for this Spark and Scala version, followed by
+    ``alternative``; any other error propagates unchanged."""
+    try:
+        yield
+    except Exception as exc:
+        if "kafka" in str(exc).lower() or "DATA_SOURCE" in str(exc):
+            scala = spark.sparkContext._jvm.scala.util.Properties.versionNumberString()
+            scala_bin = ".".join(scala.split(".")[:2])
+            raise RuntimeError(
+                "Kafka connector not on the classpath. Launch with "
+                f"--packages org.apache.spark:spark-sql-kafka-0-10_{scala_bin}:"
+                f"{spark.version}, or {alternative}"
+            ) from exc
+        raise
 
 
 @dataclass(frozen=True)
@@ -48,19 +69,10 @@ class SourceSpec:
             # environment the plan is constructed but only exercised via the
             # file-stream stand-in (same downstream pipeline).
             reader = spark.readStream if self.streaming else spark.read
-            try:
+            with kafka_connector_hint(
+                spark, "use file_stream_source() as a test stand-in (same downstream pipeline)."
+            ):
                 return reader.format("kafka").options(**self.options).load()
-            except Exception as exc:  # AnalysisException: DATA_SOURCE_NOT_FOUND
-                if "kafka" in str(exc).lower() or "DATA_SOURCE" in str(exc):
-                    scala = spark.sparkContext._jvm.scala.util.Properties.versionNumberString()
-                    scala_bin = ".".join(scala.split(".")[:2])
-                    raise RuntimeError(
-                        "Kafka connector not on the classpath. Launch with "
-                        f"--packages org.apache.spark:spark-sql-kafka-0-10_{scala_bin}:"
-                        f"{spark.version}, or use file_stream_source() as a "
-                        "test stand-in (same downstream pipeline)."
-                    ) from exc
-                raise
         if self.kind == "rate":
             return spark.readStream.format("rate").options(**self.options).load()
         if self.kind == "file-stream":

@@ -449,7 +449,7 @@ LIMIT 10
 def llm_sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-10 vs the vec_id=0 query embedding."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.brute_force_topk(
+    return similarity.vector_topk(
         emb, "vec_id", "embedding", emb.filter(F.col("vec_id") == 0), k=10
     )
 
@@ -540,8 +540,13 @@ def llm_sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical literals (committed-fixture pattern) and mirrors the
     projection/bucket/probe/rerank end to end."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.lsh_topk(
-        emb, "vec_id", "embedding", emb.filter(F.col("vec_id") == 0), k=10, n_planes=6
+    return similarity.vector_topk(
+        emb,
+        "vec_id",
+        "embedding",
+        emb.filter(F.col("vec_id") == 0),
+        k=10,
+        probe=similarity.Lsh(similarity.make_planes(64, 6)),
     )
 
 
@@ -584,14 +589,13 @@ def llm_sim_topk_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     literals, then mirrors the sign projections, the bucket fold (plane 0
     = MSB), the radius-1 probe, and the exact cosine rerank."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.lsh_topk(
+    return similarity.vector_topk(
         emb,
         "vec_id",
         "embedding",
         emb.filter(F.col("vec_id") == 0),
         k=10,
-        n_planes=6,
-        planes=similarity.make_planes_md5(64, 6),
+        probe=similarity.Lsh(similarity.make_planes_md5(64, 6)),
     )
 
 

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_with_spark_kafka_spark.operators import clustering, dedup
+from data_pipeline_with_spark_kafka_spark.operators import clustering, dedup, similarity
 from data_pipeline_with_spark_kafka_spark.queries.registry import register
 from data_pipeline_with_spark_kafka_spark.sources.tables import (
     load_table,
@@ -168,8 +168,6 @@ def llm_knn_join_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL replays single-cell membership, 3-cell probing, and the exact
     rerank); recall vs the exact tier is additionally pytest-pinned
     (tests/test_knn_join.py)."""
-    from data_pipeline_with_spark_kafka_spark.operators import similarity
-
     emb = load_table_fanned(spark, sf_dir, "embeddings")
     rows = _quantizer_rows(emb, fixture="ivf_centroids_k10", k=10, iterations=3)
     return similarity.knn_join_ivf(
@@ -220,8 +218,13 @@ def llm_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership + probing + the exact rerank in SQL."""
     emb = load_table_fanned(spark, sf_dir, "embeddings")
     rows = _quantizer_rows(emb, fixture="ivf_centroids_k8", k=8, iterations=2)
-    return clustering.ivf_topk(
-        emb, "vec_id", "embedding", emb.filter(F.col("vec_id") == 0), rows, k=10, n_probe=3
+    return similarity.vector_topk(
+        emb,
+        "vec_id",
+        "embedding",
+        emb.filter(F.col("vec_id") == 0),
+        k=10,
+        probe=similarity.Ivf(rows, n_probe=3),
     )
 
 

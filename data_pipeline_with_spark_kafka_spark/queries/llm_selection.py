@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_with_spark_kafka_spark.operators import importance, mmr, quantization
+from data_pipeline_with_spark_kafka_spark.operators import importance, mmr, quantization, similarity
 from data_pipeline_with_spark_kafka_spark.queries.registry import register
 from data_pipeline_with_spark_kafka_spark.sources.tables import (
     FIXTURES_DIR,
@@ -113,14 +113,14 @@ def llm_sim_topk_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor arithmetic exactly, so both the ADC scores and the reranked
     cosines hash-match."""
     emb = load_table_fanned(spark, sf_dir, "embeddings")
-    return quantization.sq8_topk(
+    mins, scales = quantization.sq8_train(emb, "embedding", 64)
+    return similarity.vector_topk(
         emb,
         "vec_id",
         "embedding",
         emb.filter(F.col("vec_id") == 0),
         k=10,
-        pool=50,
-        dim=64,
+        prerank=similarity.Adc(lambda v: quantization.sq8_reconstruct(v, mins, scales), pool=50),
     )
 
 
@@ -187,16 +187,15 @@ def llm_sim_topk_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table_fanned(spark, sf_dir, "embeddings")
     rows = _quantizer_rows(emb, fixture="ivf_centroids_k8", k=8, iterations=2)
-    return quantization.ivf_sq8_topk(
+    mins, scales = quantization.sq8_train(emb, "embedding", 64)
+    return similarity.vector_topk(
         emb,
         "vec_id",
         "embedding",
         emb.filter(F.col("vec_id") == 0),
-        rows,
         k=10,
-        pool=50,
-        n_probe=3,
-        dim=64,
+        probe=similarity.Ivf(rows, n_probe=3),
+        prerank=similarity.Adc(lambda v: quantization.sq8_reconstruct(v, mins, scales), pool=50),
     )
 
 
@@ -404,14 +403,13 @@ def llm_sim_topk_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     training pass at all. Fully oracled: DuckDB mirrors the MSB-first
     word fold, xor/bit_count Hamming, and both rank cuts."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return quantization.binary_sign_topk(
+    return similarity.vector_topk(
         emb,
         "vec_id",
         "embedding",
         emb.filter(F.col("vec_id") == 0),
         k=10,
-        pool=100,
-        dim=64,
+        prerank=similarity.Hamming(dim=64, pool=100),
     )
 
 
@@ -575,21 +573,20 @@ def llm_sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine top-50 scan, exact rerank to top-10. Map-only scan + two
     TakeOrdered heaps — the corpus never shuffles, and at 4 bits per
     subspace the stored index is 64x smaller than the float32 vectors
-    (`operators/quantization.pq_topk`)."""
+    (`operators/similarity.vector_topk`)."""
     codebooks = quantization.fixture_pq_codebooks()
     if codebooks is None:
         raise RuntimeError(
             "missing fixtures/pq_codebooks_m8_k16.parquet — run tools/gen_pq_fixture.py"
         )
     emb = load_table_fanned(spark, sf_dir, "embeddings")
-    return quantization.pq_topk(
+    return similarity.vector_topk(
         emb,
         "vec_id",
         "embedding",
         emb.filter(F.col("vec_id") == 0),
-        codebooks,
         k=10,
-        pool=50,
+        prerank=similarity.Adc(lambda v: quantization.pq_reconstruct(v, codebooks), pool=50),
     )
 
 
@@ -668,16 +665,14 @@ def llm_sim_topk_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     emb = load_table_fanned(spark, sf_dir, "embeddings")
     rows = _quantizer_rows(emb, fixture="ivf_centroids_k8", k=8, iterations=2)
-    return quantization.ivf_pq_topk(
+    return similarity.vector_topk(
         emb,
         "vec_id",
         "embedding",
         emb.filter(F.col("vec_id") == 0),
-        rows,
-        codebooks,
         k=10,
-        pool=50,
-        n_probe=3,
+        probe=similarity.Ivf(rows, n_probe=3),
+        prerank=similarity.Adc(lambda v: quantization.pq_reconstruct(v, codebooks), pool=50),
     )
 
 

@@ -30,7 +30,7 @@ import urllib.request
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_with_spark_kafka_spark.plans.pipeline import SinkSpec
+from data_pipeline_with_spark_kafka_spark.plans.pipeline import SinkSpec, kafka_connector_hint
 from data_pipeline_with_spark_kafka_spark.session import get_spark
 from data_pipeline_with_spark_kafka_spark.sources.readers import (
     csv_source,
@@ -89,24 +89,15 @@ def build_producer_frame(spark: SparkSession, csv_path: str) -> DataFrame:
 def cmd_produce(spark: SparkSession, args: argparse.Namespace) -> None:
     payload = build_producer_frame(spark, _fetch_csv(args.input))
     if args.kafka_servers:
-        try:
+        with kafka_connector_hint(
+            spark, "omit --kafka-servers to publish to a file-stream dir instead."
+        ):
             (
                 payload.write.format("kafka")
                 .option("kafka.bootstrap.servers", args.kafka_servers)
                 .option("topic", args.topic)
                 .save()
             )
-        except Exception as exc:
-            if "kafka" in str(exc).lower() or "DATA_SOURCE" in str(exc):
-                scala = spark.sparkContext._jvm.scala.util.Properties.versionNumberString()
-                scala_bin = ".".join(scala.split(".")[:2])
-                raise RuntimeError(
-                    "Kafka connector not on the classpath. Launch with "
-                    f"--packages org.apache.spark:spark-sql-kafka-0-10_{scala_bin}:"
-                    f"{spark.version}, or omit --kafka-servers to publish to "
-                    "a file-stream dir instead."
-                ) from exc
-            raise
         return
     # Broker-less stand-in: one JSON file per micro-batch; the consumer's
     # file-stream source replays them with maxFilesPerTrigger=1.

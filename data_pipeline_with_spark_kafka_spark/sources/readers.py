@@ -39,29 +39,6 @@ def csv_source(
     return reader.csv(path)
 
 
-def json_source(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | str,
-    *,
-    options: dict[str, str] | None = None,
-) -> DataFrame:
-    """JSON-lines scan with an explicit schema. Same rule as CSV: never
-    infer on a big corpus (inference is a full extra pass), and an explicit
-    schema turns missing keys into typed NULLs instead of schema drift
-    between input files."""
-    reader = spark.read.schema(schema)
-    for k, v in (options or {}).items():
-        reader = reader.option(k, v)
-    return reader.json(path)
-
-
-def orc_source(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — columnar like parquet: column pruning and predicate
-    pushdown reach the stripe/row-group level for free."""
-    return spark.read.orc(path)
-
-
 def binary_file_source(
     spark: SparkSession,
     path: str,

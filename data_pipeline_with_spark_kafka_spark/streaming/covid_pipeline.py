@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_pipeline_with_spark_kafka_spark.plans.pipeline import Pipeline, SinkSpec, SourceSpec
+from data_pipeline_with_spark_kafka_spark.sources.readers import from_kafka_payload
 
 # Wire schema of one event message (explicit — never inferred on a stream).
 EVENT_SCHEMA = T.StructType(
@@ -46,16 +47,16 @@ DIM_SCHEMA = "location string, population long, continent string"
 
 
 def parse_events(raw: DataFrame) -> DataFrame:
-    """value(json string) -> typed columns; malformed/missing -> dropped
-    (the reference's drop-silently policy, made explicit here)."""
-    data = F.from_json(F.col("value"), EVENT_SCHEMA)
+    """value(json, string or Kafka's binary) -> typed columns;
+    malformed/missing -> dropped (the reference's drop-silently policy,
+    made explicit here)."""
     return (
-        raw.withColumn("data", data)
+        from_kafka_payload(raw, EVENT_SCHEMA)
         .select(
-            F.to_timestamp("data.event_time").alias("event_time"),
-            F.col("data.location").alias("location"),
-            F.col("data.new_cases").alias("new_cases"),
-            F.col("data.total_cases").alias("total_cases"),
+            F.to_timestamp("event_time").alias("event_time"),
+            "location",
+            "new_cases",
+            "total_cases",
         )
         .filter(
             F.col("event_time").isNotNull()

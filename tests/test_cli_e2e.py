@@ -136,6 +136,23 @@ def test_produce_writes_microbatch_files(spark, tmp_path, csv_inputs):
     assert {p["location"] for p in payloads} == {"LOC_A", "LOC_B", "LOC_C"}
 
 
+def test_parse_events_reads_kafka_binary_value(spark, csv_inputs):
+    """The Kafka source yields ``value`` as BINARY; ``parse_events`` must
+    decode it to the same typed rows as the file stream's string value."""
+    events_csv, _ = csv_inputs
+    payload = build_producer_frame(spark, events_csv)
+    as_kafka = payload.withColumn("value", payload["value"].cast("binary"))
+    parsed = parse_events(as_kafka)
+    assert dict(parsed.dtypes) == {
+        "event_time": "timestamp",
+        "location": "string",
+        "new_cases": "int",
+        "total_cases": "int",
+    }
+    assert sorted(parsed.collect()) == sorted(parse_events(payload).collect())
+    assert parsed.count() == 7
+
+
 def test_curate_pipeline_end_to_end(spark, sf_dir, tmp_path):
     """`curate` lands a deduped, quality-floored, PII-redacted, split
     corpus partitioned by (lang, split) — and is deterministic."""

@@ -134,8 +134,10 @@ def test_exact_dedup_counts_duplicates(docs):
 
 def test_lsh_topk_recall_vs_brute_force(emb):
     query = emb.filter(F.col("vec_id") == 0)
-    brute = [r.vec_id for r in similarity.brute_force_topk(emb, "vec_id", "embedding", query, k=10).collect()]
-    approx = [r.vec_id for r in similarity.lsh_topk(emb, "vec_id", "embedding", query, k=10, n_planes=6).collect()]
+    brute = [r.vec_id for r in similarity.vector_topk(emb, "vec_id", "embedding", query, k=10).collect()]
+    approx = [r.vec_id for r in similarity.vector_topk(
+        emb, "vec_id", "embedding", query, k=10, probe=similarity.Lsh(similarity.make_planes(64, 6))
+    ).collect()]
     # The query vector itself always lands in its own bucket.
     assert 0 in approx
     # Deterministic seeded planes -> stable recall; require a sane floor
@@ -159,11 +161,11 @@ def test_lsh_topk_md5_planes_and_recall(emb):
     )
 
     query = emb.filter(F.col("vec_id") == 0)
-    brute = [r.vec_id for r in similarity.brute_force_topk(emb, "vec_id", "embedding", query, k=10).collect()]
+    brute = [r.vec_id for r in similarity.vector_topk(emb, "vec_id", "embedding", query, k=10).collect()]
     approx = [
         r.vec_id
-        for r in similarity.lsh_topk(
-            emb, "vec_id", "embedding", query, k=10, n_planes=6, planes=planes
+        for r in similarity.vector_topk(
+            emb, "vec_id", "embedding", query, k=10, probe=similarity.Lsh(planes)
         ).collect()
     ]
     assert 0 in approx

@@ -5,8 +5,9 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
-from data_pipeline_with_spark_kafka_spark.operators import clustering, similarity
+from data_pipeline_with_spark_kafka_spark.operators import clustering, quantization, similarity
 from data_pipeline_with_spark_kafka_spark.operators.skew import (
     choose_sequence_plan,
     dominant_key_share,
@@ -119,25 +120,62 @@ def test_ivf_topk_includes_query_and_overlaps_brute_force(spark, sf_dir):
     rows = clustering.to_centroid_rows(
         clustering.kmeans_verified(emb, "vec_id", "embedding", k=8, iterations=3)
     )
-    ivf = [r.vec_id for r in clustering.ivf_topk(emb, "vec_id", "embedding", query, rows, k=10, n_probe=3).collect()]
-    brute = [r.vec_id for r in similarity.brute_force_topk(emb, "vec_id", "embedding", query, k=10).collect()]
+    ivf = [
+        r.vec_id
+        for r in similarity.vector_topk(
+            emb, "vec_id", "embedding", query, k=10, probe=similarity.Ivf(rows, n_probe=3)
+        ).collect()
+    ]
+    brute = [r.vec_id for r in similarity.vector_topk(emb, "vec_id", "embedding", query, k=10).collect()]
     assert 0 in ivf  # the query's own vector is always in its own cell
     recall = len(set(ivf) & set(brute)) / 10
     assert recall >= 0.1, f"IVF recall collapsed: {recall} (ivf={ivf}, brute={brute})"
 
 
-def test_ivf_topk_plans_no_nested_loop_join(spark, sf_dir):
+@pytest.mark.parametrize("codec", [None, "sq8", "pq"], ids=["ivf", "ivf_sq8", "ivf_pq"])
+def test_ivf_topk_plans_no_nested_loop_join(spark, sf_dir, codec):
     """Members and the query take their cells from the literal-centroid
-    argmin, so the only join is the cell-id equi-join with the probes."""
+    argmin, so the only join is the cell-id equi-join with the probes,
+    with or without a codec pre-rank (IVF, IVF-SQ8, IVF-PQ)."""
     emb = load_table(spark, sf_dir, "embeddings")
     rows = clustering.fixture_centroid_rows("ivf_centroids_k8")
-    out = clustering.ivf_topk(
-        emb, "vec_id", "embedding", emb.filter(F.col("vec_id") == 0), rows, k=10, n_probe=3
+    if codec == "sq8":
+        mins, scales = quantization.sq8_train(emb, "embedding", 64)
+        prerank = similarity.Adc(lambda v: quantization.sq8_reconstruct(v, mins, scales), pool=50)
+    elif codec == "pq":
+        cb = quantization.fixture_pq_codebooks()
+        prerank = similarity.Adc(lambda v: quantization.pq_reconstruct(v, cb), pool=50)
+    else:
+        prerank = None
+    out = similarity.vector_topk(
+        emb,
+        "vec_id",
+        "embedding",
+        emb.filter(F.col("vec_id") == 0),
+        k=10,
+        probe=similarity.Ivf(rows, n_probe=3),
+        prerank=prerank,
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
+
+
+@pytest.mark.parametrize(
+    "probe, prerank",
+    [
+        (similarity.Lsh(similarity.make_planes(64, 6)), similarity.Adc(lambda v: v, pool=50)),
+        (similarity.Lsh(similarity.make_planes(64, 6)), similarity.Hamming(dim=64, pool=100)),
+        (similarity.Ivf([(1, [0.0] * 64)], n_probe=1), similarity.Hamming(dim=64, pool=100)),
+    ],
+)
+def test_vector_topk_rejects_unserved_pairs(spark, sf_dir, probe, prerank):
+    """A pre-rank runs over every row, or ADC over IVF cells; the other
+    probe x pre-rank pairs are refused before any plan is built."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    with pytest.raises(ValueError, match="pre-rank over a"):
+        similarity.vector_topk(emb, "vec_id", "embedding", emb, probe=probe, prerank=prerank)
 
 
 def test_max_block_cache_is_bounded(spark, tmp_path):

@@ -191,7 +191,7 @@ class TestMMR:
         }
         topk = {
             r["vec_id"]
-            for r in s.brute_force_topk(emb, "vec_id", "embedding", q, k=8).collect()
+            for r in s.vector_topk(emb, "vec_id", "embedding", q, k=8).collect()
         }
         vecs = {
             r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
@@ -339,8 +339,16 @@ class TestSQ8:
     def test_topk_recall_vs_brute_force(self, spark, sf_dir):
         emb = load_table(spark, sf_dir, "embeddings")
         q = emb.filter(F.col("vec_id") == 0)
-        sq = quantization.sq8_topk(emb, "vec_id", "embedding", q, k=10, pool=50, dim=64)
-        bf = sim.brute_force_topk(emb, "vec_id", "embedding", q, k=10)
+        mins, scales = quantization.sq8_train(emb, "embedding", 64)
+        sq = sim.vector_topk(
+            emb,
+            "vec_id",
+            "embedding",
+            q,
+            k=10,
+            prerank=sim.Adc(lambda v: quantization.sq8_reconstruct(v, mins, scales), pool=50),
+        )
+        bf = sim.vector_topk(emb, "vec_id", "embedding", q, k=10)
         sq_ids = {r["vec_id"] for r in sq.collect()}
         bf_ids = {r["vec_id"] for r in bf.collect()}
         # 8-bit codes leave ~1e-3 cosine error; with a 5x rerank pool the
@@ -372,10 +380,17 @@ class TestSQ8:
         rows = clustering.to_centroid_rows(
             clustering.kmeans_verified(emb, "vec_id", "embedding", k=8, iterations=2)
         )
-        sq = quantization.ivf_sq8_topk(
-            emb, "vec_id", "embedding", q, rows, k=10, pool=50, n_probe=3, dim=64
+        mins, scales = quantization.sq8_train(emb, "embedding", 64)
+        sq = sim.vector_topk(
+            emb,
+            "vec_id",
+            "embedding",
+            q,
+            k=10,
+            probe=sim.Ivf(rows, n_probe=3),
+            prerank=sim.Adc(lambda v: quantization.sq8_reconstruct(v, mins, scales), pool=50),
         )
-        exact = clustering.ivf_topk(emb, "vec_id", "embedding", q, rows, k=10, n_probe=3)
+        exact = sim.vector_topk(emb, "vec_id", "embedding", q, k=10, probe=sim.Ivf(rows, n_probe=3))
         sq_ids = {r["vec_id"] for r in sq.collect()}
         ex_ids = {r["vec_id"] for r in exact.collect()}
         assert len(sq_ids & ex_ids) / 10 >= 0.9
@@ -399,11 +414,11 @@ class TestSQ8:
         q = emb.filter(F.col("vec_id") == 0)
         got = {
             r["vec_id"]
-            for r in quantization.binary_sign_topk(
-                emb, "vec_id", "embedding", q, k=10, pool=100, dim=64
+            for r in sim.vector_topk(
+                emb, "vec_id", "embedding", q, k=10, prerank=sim.Hamming(dim=64, pool=100)
             ).collect()
         }
-        bf = {r["vec_id"] for r in sim.brute_force_topk(emb, "vec_id", "embedding", q, k=10).collect()}
+        bf = {r["vec_id"] for r in sim.vector_topk(emb, "vec_id", "embedding", q, k=10).collect()}
         assert len(got & bf) / 10 >= 0.8
 
     def test_error_audit_bounds(self, spark, sf_dir):
@@ -448,8 +463,15 @@ class TestPQ:
         cb = quantization.fixture_pq_codebooks()
         emb = load_table(spark, sf_dir, "embeddings")
         q = emb.filter(F.col("vec_id") == 0)
-        pq_res = quantization.pq_topk(emb, "vec_id", "embedding", q, cb, k=10, pool=50)
-        bf = sim.brute_force_topk(emb, "vec_id", "embedding", q, k=10)
+        pq_res = sim.vector_topk(
+            emb,
+            "vec_id",
+            "embedding",
+            q,
+            k=10,
+            prerank=sim.Adc(lambda v: quantization.pq_reconstruct(v, cb), pool=50),
+        )
+        bf = sim.vector_topk(emb, "vec_id", "embedding", q, k=10)
         pq_ids = {r["vec_id"] for r in pq_res.collect()}
         bf_ids = {r["vec_id"] for r in bf.collect()}
         # 4-bit codes are lossier than SQ8; the 5x rerank pool still keeps
@@ -461,7 +483,14 @@ class TestPQ:
         emb = load_table(spark, sf_dir, "embeddings")
         q = emb.filter(F.col("vec_id") == 0)
         plan = (
-            quantization.pq_topk(emb, "vec_id", "embedding", q, cb, k=10, pool=50)
+            sim.vector_topk(
+                emb,
+                "vec_id",
+                "embedding",
+                q,
+                k=10,
+                prerank=sim.Adc(lambda v: quantization.pq_reconstruct(v, cb), pool=50),
+            )
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
@@ -528,13 +557,19 @@ class TestIVFPQ:
         emb = load_table(spark, sf_dir, "embeddings")
         q = emb.filter(F.col("vec_id") == 0)
         rows = _quantizer_rows(emb, fixture="ivf_centroids_k8", k=8, iterations=2)
-        ivf = quantization.ivf_pq_topk(
-            emb, "vec_id", "embedding", q, rows, cb, k=10, pool=50, n_probe=3
+        ivf = sim.vector_topk(
+            emb,
+            "vec_id",
+            "embedding",
+            q,
+            k=10,
+            probe=sim.Ivf(rows, n_probe=3),
+            prerank=sim.Adc(lambda v: quantization.pq_reconstruct(v, cb), pool=50),
         ).collect()
         assert len(ivf) == 10
         bf = {
             r["vec_id"]: r["cosine"]
-            for r in sim.brute_force_topk(
+            for r in sim.vector_topk(
                 emb, "vec_id", "embedding", q, k=200
             ).collect()
         }

@@ -11,8 +11,6 @@ from pyspark.sql import functions as F
 from data_pipeline_with_spark_kafka_spark.sources.readers import (
     csv_source,
     from_kafka_payload,
-    json_source,
-    orc_source,
     to_kafka_payload,
     validate_rows,
     write_batch,
@@ -34,28 +32,18 @@ def test_csv_round_trip(spark, sf_dir, tmp_path):
     assert sorted(back.collect()) == sorted(nation.collect())
 
 
-def test_json_lines_round_trip(spark, sf_dir, tmp_path):
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "source", "n_chars")
-    out = str(tmp_path / "docs_json")
-    docs.write.mode("overwrite").json(out)
-    back = json_source(
-        spark, out, "doc_id long, lang string, source string, n_chars long"
-    )
-    assert sorted(back.collect()) == sorted(docs.collect())
-
-
 def test_orc_round_trip_partitioned(spark, sf_dir, tmp_path):
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     out = str(tmp_path / "docs_orc")
     write_batch(docs, out, fmt="orc", partition_by=["lang"])
-    back = orc_source(spark, out).select("doc_id", "lang", "n_chars")
+    back = spark.read.orc(out).select("doc_id", "lang", "n_chars")
     assert sorted(back.collect(), key=lambda r: r.doc_id) == sorted(
         docs.collect(), key=lambda r: r.doc_id
     )
     # Hive-style layout: a filter on the partition column prunes directories
     # — the scan's partitionFilters carry it, no data file is consulted.
     plan = (
-        orc_source(spark, out)
+        spark.read.orc(out)
         .filter(F.col("lang") == "en")
         ._jdf.queryExecution()
         .executedPlan()
