@@ -322,7 +322,9 @@ def llm_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_with_spark_kafka_spark.functions.rounding import round_to
 
     docs = load_table_fanned(spark, sf_dir, "documents")
-    d = docs.select(
+    # A NULL text has no tokens, so no row (the oracle's UNNEST of a NULL
+    # list yields none).
+    d = docs.filter(F.col("text").isNotNull()).select(
         "doc_id", F.sort_array(F.split("text", " ")).alias("t")
     ).select("doc_id", "t", F.size("t").alias("dl"))
     d = d.withColumn(

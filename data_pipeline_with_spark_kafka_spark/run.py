@@ -30,18 +30,18 @@ import urllib.request
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_with_spark_kafka_spark.plans.pipeline import SinkSpec, kafka_connector_hint
 from data_pipeline_with_spark_kafka_spark.session import get_spark
 from data_pipeline_with_spark_kafka_spark.sources.readers import (
     csv_source,
+    kafka_connector_hint,
     to_kafka_payload,
     validate_rows,
 )
 from data_pipeline_with_spark_kafka_spark.streaming.covid_pipeline import (
     DIM_SCHEMA,
-    build_stream_pipeline,
-    file_stream_source,
-    kafka_source,
+    parse_events,
+    read_events,
+    windowed_enrichment,
 )
 from data_pipeline_with_spark_kafka_spark.streaming.sinks import (
     keyed_upsert_parquet,
@@ -117,24 +117,22 @@ def cmd_consume(spark: SparkSession, args: argparse.Namespace) -> None:
     # spark_consumer_kafka.py:42; closes the M1 parity gap). Trivial for a
     # CSV dim, load-bearing for a JDBC dim at scale.
     dim = csv_source(spark, args.dim, DIM_SCHEMA).cache()
+    # Against a broker the query runs on the reference's 1-minute cadence;
+    # a file-stream dir is drained and the query stops.
     if args.kafka_servers:
-        source = kafka_source(args.kafka_servers, args.topic)
+        raw = read_events(spark, kafka_servers=args.kafka_servers, topic=args.topic)
         trigger = {"processingTime": args.trigger or "1 minute"}
     else:
-        source = file_stream_source(args.input_dir, max_files_per_trigger=1)
+        raw = read_events(spark, input_dir=args.input_dir)
         trigger = {"availableNow": True}
-    pipeline = build_stream_pipeline(
-        source,
-        dim,
-        SinkSpec(
-            kind="foreach-batch",
-            foreach_batch=keyed_upsert_parquet(args.target, ["window_start", "location"]),
-            output_mode="update",
-            trigger=trigger,
-            checkpoint=args.checkpoint,
-        ),
+    query = (
+        windowed_enrichment(dim, audit=True)(parse_events(raw))
+        .writeStream.outputMode("update")
+        .foreachBatch(keyed_upsert_parquet(args.target, ["window_start", "location"]))
+        .option("checkpointLocation", args.checkpoint)
+        .trigger(**trigger)
+        .start()
     )
-    query = pipeline.run(spark)
     query.awaitTermination(args.timeout if args.timeout > 0 else None)
     if query.isActive:
         query.stop()

@@ -11,13 +11,19 @@
 - Kafka payload (de)serialization (ref K4: producer's JSON dict per row,
   ``kafka_producer.py:41-52,79-88``): ``to_json(struct(*))`` produces the
   wire bytes engine-side, vectorized — not a Python loop with a blocking
-  ack per message (the reference's ~100 msg/s ceiling).
+  ack per message (the reference's ~100 msg/s ceiling); the
+  missing-connector error of either direction gets one remediation
+  message (``kafka_connector_hint``).
 - Row validation (ref P7, ``kafka_producer.py:69-77``): essential-field
   drop + numeric coercion with 0-default, as one declarative transform.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -319,10 +325,38 @@ def to_kafka_payload(df: DataFrame, *, key_col: str | None = None) -> DataFrame:
 def from_kafka_payload(raw: DataFrame, schema: T.StructType | str) -> DataFrame:
     """Inverse of ``to_kafka_payload`` for the consumer side (ref
     ``spark_consumer_kafka.py:65-66``): CAST(value AS STRING) -> from_json
-    -> flatten."""
-    return raw.select(
-        F.from_json(F.col("value").cast("string"), schema).alias("data")
-    ).select("data.*")
+    -> flatten. The flatten is ``inline`` of a one-element array, so the
+    parse sits in a Generate: the optimizer cannot push a filter on one
+    field below it as a single-field ``from_json`` of its own, and each
+    value is parsed once. A NULL or malformed value gives a row of NULLs,
+    as ``select("data.*")`` would."""
+    return raw.select(F.inline(F.array(F.from_json(F.col("value").cast("string"), schema))))
+
+
+# The condition of "Failed to find data source: kafka", which Spark raises
+# for format("kafka") without the connector on the classpath.
+_CONNECTOR_MISSING = "_LEGACY_ERROR_TEMP_1140"
+
+
+@contextmanager
+def kafka_connector_hint(spark: SparkSession, alternative: str) -> Iterator[None]:
+    """Turn the missing-Kafka-connector failure inside the block (an
+    AnalysisException whose condition is ``_CONNECTOR_MISSING``) into a
+    RuntimeError naming the ``--packages`` coordinate for this Spark
+    and Scala version, followed by ``alternative``; any other error, a
+    broker that cannot be reached included, propagates unchanged."""
+    try:
+        yield
+    except AnalysisException as exc:
+        if exc.getCondition() != _CONNECTOR_MISSING:
+            raise
+        scala = spark.sparkContext._jvm.scala.util.Properties.versionNumberString()
+        scala_bin = ".".join(scala.split(".")[:2])
+        raise RuntimeError(
+            "Kafka connector not on the classpath. Launch with "
+            f"--packages org.apache.spark:spark-sql-kafka-0-10_{scala_bin}:"
+            f"{spark.version}, or {alternative}"
+        ) from exc
 
 
 def validate_rows(

@@ -1,11 +1,11 @@
-"""The reference pipeline, rebuilt as a declarative streaming plan.
+"""The reference pipeline, rebuilt as one Structured Streaming query.
 
 End-to-end parity with
 ``/root/reference/airflow_home/scripts/spark_consumer_kafka.py``:
 
 | stage                      | reference        | here |
 |----------------------------|------------------|------|
-| Kafka source               | :55-62           | SourceSpec(kind="kafka"), or file-stream stand-in for tests |
+| Kafka source               | :55-62           | ``read_events(kafka_servers=...)``, or the file-stream stand-in ``read_events(input_dir=...)`` |
 | value -> JSON parse        | :65-66 from_json | ``parse_events`` |
 | conjunctive null filter    | :74              | ``parse_events`` |
 | watermark                  | :78 (10 min)     | ``windowed_enrichment(watermark=...)`` |
@@ -15,7 +15,7 @@ End-to-end parity with
 | derived per-million metric | :109-112,126     | DECIMAL(20,4) column |
 | processing_time audit col  | :127             | ``windowed_enrichment(audit=True)`` (sink default) |
 | sink                       | :131-157 (wart)  | idempotent keyed upsert (streaming/sinks.py) |
-| query start + await        | :151-159         | ``run.cmd_consume --kafka-servers`` (cached dim, update mode, 1-minute trigger) |
+| query start + await        | :151-159         | ``run.cmd_consume``, the one ``writeStream`` (cached dim, update mode, 1-minute trigger on Kafka) |
 
 The event payload mirrors the reference's covid schema
 (``{"date","location","new_cases","total_cases"}``,
@@ -26,12 +26,14 @@ every window to midnight — SURVEY.md §2.8 quirk).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from data_pipeline_with_spark_kafka_spark.plans.pipeline import Pipeline, SinkSpec, SourceSpec
-from data_pipeline_with_spark_kafka_spark.sources.readers import from_kafka_payload
+from data_pipeline_with_spark_kafka_spark.sources.readers import (
+    from_kafka_payload,
+    kafka_connector_hint,
+)
 
 # Wire schema of one event message (explicit — never inferred on a stream).
 EVENT_SCHEMA = T.StructType(
@@ -44,6 +46,31 @@ EVENT_SCHEMA = T.StructType(
 )
 
 DIM_SCHEMA = "location string, population long, continent string"
+
+
+def read_events(
+    spark: SparkSession,
+    *,
+    input_dir: str | None = None,
+    kafka_servers: str | None = None,
+    topic: str = "covid_data",
+) -> DataFrame:
+    """The raw event stream, one ``value`` per event. With
+    ``kafka_servers``: the topic from its earliest offsets, tolerating
+    data loss (spark_consumer_kafka.py:55-62). Otherwise the broker-less
+    stand-in: a directory of JSON lines ``{"value": ...}`` replayed one
+    file per micro-batch, so a file is a deterministic trigger."""
+    if kafka_servers:
+        with kafka_connector_hint(spark, "replay a file-stream dir (--input-dir) instead."):
+            return (
+                spark.readStream.format("kafka")
+                .option("kafka.bootstrap.servers", kafka_servers)
+                .option("subscribe", topic)
+                .option("startingOffsets", "earliest")
+                .option("failOnDataLoss", "false")
+                .load()
+            )
+    return spark.readStream.schema("value string").option("maxFilesPerTrigger", 1).json(input_dir)
 
 
 def parse_events(raw: DataFrame) -> DataFrame:
@@ -81,7 +108,7 @@ def windowed_enrichment(
     (``current_timestamp()``, spark_consumer_kafka.py:127) — wall-clock of
     the emitting micro-batch. Off by default: the column is nondeterministic
     by design, so golden/oracle comparisons exclude it while the production
-    sink schema (build_stream_pipeline) carries it."""
+    sink schema (``run.cmd_consume``) carries it."""
 
     def apply(parsed: DataFrame) -> DataFrame:
         agg = (
@@ -119,58 +146,3 @@ def windowed_enrichment(
         )
 
     return apply
-
-
-def build_stream_pipeline(
-    source: SourceSpec,
-    dim: DataFrame,
-    sink: SinkSpec,
-    *,
-    window: str = "1 minute",
-    watermark: str = "10 minutes",
-    audit: bool = True,
-) -> Pipeline:
-    """Assemble the full declarative pipeline (source is swappable: kafka in
-    production, file-stream in tests — SAME transforms and sink). The sink
-    schema carries the ``processing_time`` audit column by default
-    (reference parity); goldens compare against the deterministic columns."""
-    return Pipeline(
-        source=source,
-        transforms=[
-            parse_events,
-            windowed_enrichment(dim, window=window, watermark=watermark, audit=audit),
-        ],
-        sink=sink,
-    )
-
-
-def kafka_source(bootstrap_servers: str, topic: str) -> SourceSpec:
-    """Production source config (parity with spark_consumer_kafka.py:55-62:
-    earliest offsets, tolerate data loss). The payload projection
-    (CAST(value AS STRING)) happens in parse_events via from_json."""
-    return SourceSpec(
-        kind="kafka",
-        streaming=True,
-        options={
-            "kafka.bootstrap.servers": bootstrap_servers,
-            "subscribe": topic,
-            "startingOffsets": "earliest",
-            "failOnDataLoss": "false",
-        },
-    )
-
-
-def file_stream_source(path: str, max_files_per_trigger: int | None = None) -> SourceSpec:
-    """Deterministic replay source for tests: a dir of json files, each file
-    one micro-batch when max_files_per_trigger=1."""
-    options = {"format": "json"}
-    if max_files_per_trigger is not None:
-        options["maxFilesPerTrigger"] = str(max_files_per_trigger)
-    return SourceSpec(
-        kind="file-stream",
-        path=path,
-        schema="value string",
-        options=options,
-        streaming=True,
-    )
-

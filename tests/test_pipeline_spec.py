@@ -1,59 +1,27 @@
-"""Pipeline-spec contract tests: validation errors and the rate source."""
+"""The Kafka source's missing-connector guidance, and what it leaves alone."""
 
 from __future__ import annotations
 
-import time
-
 import pytest
 
-from data_pipeline_with_spark_kafka_spark.plans.pipeline import Pipeline, SinkSpec, SourceSpec
-
-
-def test_unknown_source_kind_raises(spark):
-    with pytest.raises(ValueError, match="unknown source kind"):
-        SourceSpec(kind="carrier-pigeon").load(spark)
-
-
-def test_file_stream_requires_schema(spark, tmp_path):
-    with pytest.raises(ValueError, match="explicit schema"):
-        SourceSpec(kind="file-stream", path=str(tmp_path), streaming=True).load(spark)
-
-
-def test_unknown_sink_kind_raises(spark, sf_dir):
-    p = Pipeline(
-        source=SourceSpec(kind="parquet", path=f"{sf_dir}/nation.parquet"),
-        sink=SinkSpec(kind="postcard"),
-    )
-    with pytest.raises(ValueError, match="unknown batch sink"):
-        p.run(spark)
+from data_pipeline_with_spark_kafka_spark.sources.readers import kafka_connector_hint
+from data_pipeline_with_spark_kafka_spark.streaming.covid_pipeline import read_events
 
 
 def test_kafka_source_missing_connector_gives_guidance(spark):
-    from data_pipeline_with_spark_kafka_spark.streaming.covid_pipeline import kafka_source
-
     with pytest.raises(RuntimeError, match="--packages org.apache.spark:spark-sql-kafka"):
-        kafka_source("localhost:9092", "covid_data").load(spark)
+        read_events(spark, kafka_servers="localhost:9092")
 
 
-def test_rate_source_produces_rows(spark, tmp_path):
-    src = SourceSpec(kind="rate", streaming=True, options={"rowsPerSecond": "50"})
-    df = src.load(spark)
-    assert df.isStreaming
-    assert set(df.columns) == {"timestamp", "value"}
-    q = (
-        df.writeStream.format("memory")
-        .queryName("rate_out")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    try:
-        deadline = time.time() + 120
-        n = 0
-        while time.time() < deadline:
-            n = spark.sql("SELECT COUNT(*) AS n FROM rate_out").collect()[0].n
-            if n > 0:
-                break
-            time.sleep(1)
-        assert n > 0, "rate source produced no rows in 120s"
-    finally:
-        q.stop()
+def test_kafka_hint_passes_other_errors_through(spark):
+    """An error that mentions Kafka but is not the missing connector (say,
+    a broker that cannot be reached) propagates unchanged."""
+    err = ConnectionError("kafka broker localhost:9092 is not reachable")
+    with pytest.raises(ConnectionError) as raised:
+        with kafka_connector_hint(spark, "try later."):
+            raise err
+    assert raised.value is err
+    with pytest.raises(Exception, match="UNRESOLVED_COLUMN") as raised:
+        with kafka_connector_hint(spark, "try later."):
+            spark.range(1).select("kafka_offset").collect()
+    assert not isinstance(raised.value, RuntimeError)

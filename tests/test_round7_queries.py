@@ -250,3 +250,22 @@ def test_erase_cli_applies_cascade_and_is_idempotent(spark, tmp_path, capsys):
     out2 = capsys.readouterr().out
     for t in ("lineitem", "orders", "customer", "events"):
         assert f"{t}: 0 erased" in out2
+
+
+def test_token_entropy_skips_null_text(spark, tmp_path):
+    """A document with NULL text has no tokens, so it has no row: DuckDB's
+    UNNEST of a NULL list yields none."""
+    pd.DataFrame(
+        {
+            "doc_id": pd.Series([1, 2, 3], dtype="int64"),
+            "text": ["a b a", None, "c"],
+            "lang": "en",
+            "source": "web",
+            "n_chars": pd.Series([5, 0, 1], dtype="int64"),
+        }
+    ).to_parquet(tmp_path / "documents.parquet", index=False)
+    sf = str(tmp_path)
+    q = QUERIES["llm_token_entropy"]
+    con = _duck_for(sf, tables=("documents",))
+    assert_matches_oracle(q.builder(spark, sf), con, q.oracle, name="entropy-null-text")
+    assert sorted(r.doc_id for r in q.builder(spark, sf).collect()) == [1, 3]

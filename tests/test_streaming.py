@@ -1,5 +1,5 @@
 """Streaming-semantics golden tests (no streaming oracle exists in DuckDB —
-SURVEY.md §5): replay a fixed event log through the declarative pipeline
+SURVEY.md §5): replay a fixed event log through the consumer's query
 with a file-stream source and pin down
 
 - stream == batch on the same input (exactness of the windowed plan),
@@ -9,6 +9,7 @@ with a file-stream source and pin down
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 import time
@@ -16,11 +17,9 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from data_pipeline_with_spark_kafka_spark.plans.pipeline import Pipeline, SinkSpec
 from data_pipeline_with_spark_kafka_spark.streaming.covid_pipeline import (
-    build_stream_pipeline,
-    file_stream_source,
     parse_events,
+    read_events,
     windowed_enrichment,
 )
 from data_pipeline_with_spark_kafka_spark.streaming.sinks import keyed_upsert_parquet
@@ -54,6 +53,25 @@ def event(minute: int, second: int, loc: str, new: int, total: int) -> str:
 def write_file(path: str, lines: list[str]) -> None:
     with open(path, "w") as f:
         f.write("\n".join(lines) + "\n")
+
+
+def raw_events(spark, src):
+    """The file stream without a per-trigger file cap: one micro-batch
+    takes every file present."""
+    return spark.readStream.schema("value string").json(str(src))
+
+
+def consume(raw, dim, sink, ckpt, *, output_mode="update"):
+    """The consumer's query (``run.cmd_consume``) over ``raw``, drained
+    into the foreachBatch ``sink``."""
+    return (
+        windowed_enrichment(dim, audit=True)(parse_events(raw))
+        .writeStream.outputMode(output_mode)
+        .foreachBatch(sink)
+        .option("checkpointLocation", str(ckpt))
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def run_to_completion(query, timeout=600):
@@ -102,18 +120,8 @@ def test_stream_equals_batch_golden(spark, tmp_path):
     write_file(str(src / "part-000.json"), lines)
 
     dim = make_dim(spark)
-    pipeline = build_stream_pipeline(
-        file_stream_source(str(src)),
-        dim,
-        SinkSpec(
-            kind="foreach-batch",
-            foreach_batch=keyed_upsert_parquet(str(out), ["window_start", "location"]),
-            output_mode="update",
-            trigger={"availableNow": True},
-            checkpoint=str(ckpt),
-        ),
-    )
-    run_to_completion(pipeline.run(spark))
+    upsert = keyed_upsert_parquet(str(out), ["window_start", "location"])
+    run_to_completion(consume(raw_events(spark, src), dim, upsert, ckpt))
 
     streamed = spark.read.parquet(str(out))
 
@@ -149,21 +157,29 @@ def test_watermark_drops_late_data(spark, tmp_path):
     os.utime(str(src / "b-second.json"), (100, 100))
 
     dim = make_dim(spark)
-    pipeline = build_stream_pipeline(
-        file_stream_source(str(src), max_files_per_trigger=1),
-        dim,
-        SinkSpec(
-            kind="foreach-batch",
-            foreach_batch=keyed_upsert_parquet(str(out), ["window_start", "location"]),
-            output_mode="update",
-            trigger={"availableNow": True},
-            checkpoint=str(ckpt),
-        ),
-    )
-    run_to_completion(pipeline.run(spark))
+    upsert = keyed_upsert_parquet(str(out), ["window_start", "location"])
+    run_to_completion(consume(read_events(spark, input_dir=str(src)), dim, upsert, ckpt))
 
     locations = {r.location for r in spark.read.parquet(str(out)).collect()}
     assert locations == {"LOC_A", "LOC_B"}, f"late LOC_C row should be dropped, got {locations}"
+
+
+@pytest.mark.parametrize("value_type", ["string", "binary"])
+def test_parse_events_parses_each_value_once(spark, value_type):
+    """The NOT NULL conditions are not pushed below the parse as
+    single-field ``from_json`` calls of their own: the optimized plan
+    holds one ``from_json``, for Kafka's BINARY value as for the file
+    stream's string."""
+    line = json.loads(event(0, 5, "LOC_A", 10, 100))["value"]
+    raw = spark.createDataFrame([(line,)], "value string").select(
+        F.col("value").cast(value_type).alias("value")
+    )
+    parsed = parse_events(raw)
+    plan = parsed._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("from_json(") == 1, plan
+    assert [tuple(r) for r in parsed.collect()] == [
+        (dt.datetime(2024, 6, 1, 10, 0, 5), "LOC_A", 10, 100)
+    ]
 
 
 def test_keyed_upsert_idempotent_under_replay(spark, tmp_path):
@@ -242,18 +258,12 @@ def test_keyed_upsert_runs_each_batch_once_and_sizes_target_by_bytes(spark, tmp_
         write_file(str(path), [event(i, 10 * j, loc, i + j, 10 * j) for j in range(3) for loc in locs])
         os.utime(str(path), (100 * (i + 1), 100 * (i + 1)))
 
-    pipeline = build_stream_pipeline(
-        file_stream_source(str(src), max_files_per_trigger=1),
+    query = consume(
+        read_events(spark, input_dir=str(src)),
         make_dim(spark),
-        SinkSpec(
-            kind="foreach-batch",
-            foreach_batch=keyed_upsert_parquet(str(out), ["window_start", "location"]),
-            output_mode="update",
-            trigger={"availableNow": True},
-            checkpoint=str(tmp_path / "once_ck"),
-        ),
+        keyed_upsert_parquet(str(out), ["window_start", "location"]),
+        tmp_path / "once_ck",
     )
-    query = pipeline.run(spark)
     run_to_completion(query)
 
     data_batches = [p for p in query.recentProgress if p.numInputRows > 0]
@@ -341,18 +351,8 @@ def test_append_mode_emits_only_finalized_windows(spark, tmp_path):
         emitted.extend((epoch, str(r.window_start), r.location) for r in df.collect())
 
     dim = make_dim(spark)
-    pipeline = build_stream_pipeline(
-        file_stream_source(str(src), max_files_per_trigger=1),
-        dim,
-        SinkSpec(
-            kind="foreach-batch",
-            foreach_batch=collect,
-            output_mode="append",
-            trigger={"availableNow": True},
-            checkpoint=str(ckpt),
-        ),
-    )
-    run_to_completion(pipeline.run(spark))
+    raw = read_events(spark, input_dir=str(src))
+    run_to_completion(consume(raw, dim, collect, ckpt, output_mode="append"))
 
     windows = [(w, loc) for _, w, loc in emitted]
     # only the finalized 10:00 window came out; open windows are withheld
@@ -379,13 +379,7 @@ def test_streaming_kafka_payload_sink(spark, tmp_path):
                          key_col="location").write.mode("append").parquet(str(out))
 
     dim = make_dim(spark)
-    pipeline = build_stream_pipeline(
-        file_stream_source(str(src)),
-        dim,
-        SinkSpec(kind="foreach-batch", foreach_batch=publish, output_mode="update",
-                 trigger={"availableNow": True}, checkpoint=str(ckpt)),
-    )
-    run_to_completion(pipeline.run(spark))
+    run_to_completion(consume(raw_events(spark, src), dim, publish, ckpt))
 
     payloads = spark.read.parquet(str(out)).collect()
     assert {r.key for r in payloads} == {"LOC_A", "LOC_B"}
@@ -537,8 +531,7 @@ def test_drop_duplicates_within_watermark(spark, tmp_path, dedup_within):
                                             "total_cases": 100})})
     write_file(str(src / "dup.json"), [line, line, line])
 
-    source = file_stream_source(str(src))
-    parsed = Pipeline(source=source, transforms=[parse_events]).dataframe(spark)
+    parsed = parse_events(raw_events(spark, src))
     deduped = parsed.withWatermark("event_time", "10 minutes").dropDuplicatesWithinWatermark(
         ["event_time", "location"]
     )
