@@ -20,17 +20,16 @@ Every near-dup operator is assembled from one copy of each stage:
 - ``_prefix_index`` — the persisted hashed-shingle sets, the shingle
   frequency table and the rarest-first prefix (tier 2, both measures);
 - ``band_buckets`` + ``_band_self_join`` — the LSH band index and its
-  candidate self-join (tier 3, both hash families; the band index is
+  candidate self-join (tier 3; the band index is
   also the persisted corpus index of ``operators/incremental.py``);
 - ``verified_pairs`` — joins both shingle-set arrays back onto candidate
   pairs and keeps ``ROUND(measure, 4) >= threshold`` (tiers 2 and 3 and
   the incremental probe).
 
-Tiers 3 and 4 take ``family="xxhash64" | "md5"``. xxhash64 is the fast
-default; md5 is the one string hash every SQL engine computes
-identically, so the md5 family's intermediate values (signatures,
-fingerprints) are reproducible in plain SQL. Both families are
-DuckDB-oracled (xxhash64 through ``queries/xxh64_sql.py``).
+Tiers 3 and 4 hash with xxhash64, the one hash family of this module.
+Its intermediate values (signatures, band buckets, fingerprints) are
+reproducible in plain SQL through the pure-SQL XXH64 port
+(``queries/xxh64_sql.py``), so both tiers are DuckDB-oracled bit for bit.
 
 Design notes for 1000-executor scale:
 - every self-join is preceded by an explode on a key that distributes
@@ -59,7 +58,6 @@ from data_pipeline_with_spark_kafka_spark.operators.iterate import (
 )
 from data_pipeline_with_spark_kafka_spark.operators.text import (
     hashed_shingles,
-    shingles,
     tokens,
 )
 from data_pipeline_with_spark_kafka_spark.functions.rounding import round_to
@@ -287,80 +285,22 @@ def containment_pairs(
     return verified_pairs(candidates, sets, sets, threshold=threshold, measure="containment")
 
 
-def _xxhash64_signatures(
-    df: DataFrame, id_col: str, text_col: str, k: int
+def minhash_signatures(
+    df: DataFrame, id_col: str, text_col: str, *, k: int = 3
 ) -> tuple[DataFrame, DataFrame]:
-    """NUM_HASHES seeded xxhash64 minima over the hashed shingle set. Pure
-    expression tree — evaluated in codegen, no UDF. Shingle strings are
-    hashed to longs ONCE; the per-seed re-hashes then operate on 8-byte
-    values (NUM_HASHES x cheaper than re-hashing strings)."""
+    """(sets, sigs): the per-doc hashed shingle sets (doc, sh) that
+    verification reads, and the NUM_HASHES seeded xxhash64 minima over
+    each set (doc, sh, sig). Pure expression tree, evaluated in codegen,
+    no UDF. Shingle strings are hashed to longs ONCE; the per-seed
+    re-hashes then operate on 8-byte values (NUM_HASHES x cheaper than
+    re-hashing strings). One relation feeding both is persisted (cache
+    contract above), so the corpus is tokenized once."""
     sig = F.transform(
         F.sequence(F.lit(0), F.lit(NUM_HASHES - 1)),
         lambda seed: F.array_min(F.transform(F.col("sh"), lambda h: F.xxhash64(h, seed))),
     )
     sigs = _hashed_sets(df, id_col, text_col, k).select("doc", "sh", sig.alias("sig")).persist()
     return sigs.select("doc", "sh"), sigs
-
-
-def _md5_signatures(
-    df: DataFrame, id_col: str, text_col: str, k: int
-) -> tuple[DataFrame, DataFrame]:
-    """Kirsch-Mitzenmacher double hashing over md5: h1/h2 are the first
-    two 32-bit words of md5(shingle) and ``h_i = (h1 + i*h2) mod 2^32``
-    (Kirsch & Mitzenmacher, ESA 2006: two hashes generate a family with
-    the same asymptotics). ``(h1 + 31*h2) < 2^37``, so the arithmetic is
-    overflow-exact in any engine's 64-bit integers. The sets are the
-    string shingles themselves.
-
-    DISTINCT-SHINGLE-SPACE form (round 6): md5+conv is the expensive
-    per-shingle step, and template-duplicated corpora — the whole reason
-    a dedup pass exists — repeat shingles heavily across docs (sf0.1
-    fixture: 260k occurrences over 27k distinct). Hash once per DISTINCT
-    shingle, equi-join the (h1, h2) pair back to the occurrence stream,
-    and fold the family as NUM_HASHES map-side-combined min aggregates per
-    doc. Measured 3.8 -> 2.1 s at sf0.1 with an identical verified pair
-    set; the per-occurrence expression form had to persist mid-pipeline
-    anyway (seed lambdas re-inline their input), so the persisted sets
-    replace that materialization."""
-    sets = (
-        df.select(F.col(id_col).alias("doc"), shingles(tokens(F.col(text_col)), k).alias("sh"))
-        .filter(F.size("sh") > 0)
-        .persist()
-    )
-    occ = sets.select("doc", F.explode("sh").alias("s"))
-    digest = F.md5(F.col("s"))
-    dist = occ.select("s").distinct().select(
-        "s",
-        F.conv(F.substring(digest, 1, 8), 16, 10).cast("long").alias("h1"),
-        F.conv(F.substring(digest, 9, 8), 16, 10).cast("long").alias("h2"),
-    )
-    mod = F.lit(4294967296)
-    sigs = (
-        occ.join(dist, "s")
-        .groupBy("doc")
-        .agg(
-            *[
-                F.min((F.col("h1") + F.lit(i) * F.col("h2")) % mod).alias(f"_m{i}")
-                for i in range(NUM_HASHES)
-            ]
-        )
-        .select("doc", F.array(*[f"_m{i}" for i in range(NUM_HASHES)]).alias("sig"))
-    )
-    return sets, sigs
-
-
-# hash family -> signature builder
-MINHASH_FAMILIES = {"xxhash64": _xxhash64_signatures, "md5": _md5_signatures}
-
-
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, *, k: int = 3, family: str = "xxhash64"
-) -> tuple[DataFrame, DataFrame]:
-    """(sets, sigs): the per-doc shingle sets (doc, sh) that verification
-    reads, and the NUM_HASHES-wide minhash signatures (doc, sig, ...)
-    under ``family``. One relation feeding both is persisted (cache
-    contract above), so the corpus is tokenized once."""
-    return MINHASH_FAMILIES[family](df, id_col, text_col, k)
 
 
 def band_buckets(sigs: DataFrame) -> DataFrame:
@@ -412,7 +352,6 @@ def minhash_lsh_pairs(
     *,
     k: int = 3,
     threshold: float = 0.8,
-    family: str = "xxhash64",
 ) -> DataFrame:
     """MinHash-LSH candidate generation + exact-Jaccard verification.
 
@@ -420,11 +359,11 @@ def minhash_lsh_pairs(
     iff that slice of their signatures is identical -> candidate. With
     NUM_HASHES=32 hashes / BANDS=16 bands (2 rows per band) the S-curve
     puts P(candidate) = 1-(1-J^2)^16 — ~0.9997 at J>=0.8 (our default
-    threshold), ~50% at J~0.2. Both families verify with the same exact
-    Jaccard, so where the S-curve saturates they return the same pairs
-    (pinned in tests/test_llm_ops.py).
+    threshold), ~50% at J~0.2. Candidates are verified with exact
+    Jaccard, so where the S-curve saturates the pairs equal the exact
+    tier's (recall pinned in tests/test_llm_ops.py).
     """
-    sets, sigs = minhash_signatures(df, id_col, text_col, k=k, family=family)
+    sets, sigs = minhash_signatures(df, id_col, text_col, k=k)
     candidates = _band_self_join(band_buckets(sigs))
     return verified_pairs(candidates, sets, sets, threshold=threshold)
 
@@ -556,22 +495,15 @@ def _component_labels(sym: DataFrame) -> list[tuple] | None:
     return list(zip(docs[moved].tolist(), docs[label[moved]].tolist()))
 
 
-# hash family -> (per-token hash as a SQL expression over token t,
-# fingerprint width in bits). md5's token hash is the first 15 hex digits
-# parsed as an integer: 60 bits, always positive — the same cross-engine
-# hash the winnowing fingerprint uses (queries/text_extra.py).
-SIMHASH_FAMILIES = {
-    "xxhash64": ("xxhash64(t)", 64),
-    "md5": ("CAST(conv(substr(md5(t), 1, 15), 16, 10) AS BIGINT)", 60),
-}
+# SimHash fingerprint width: one bit per bit of the xxhash64 token hash.
+SIMHASH_BITS = 64
 
 
-def simhash(df: DataFrame, id_col: str, text_col: str, *, family: str = "xxhash64") -> DataFrame:
+def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """SimHash fingerprint per doc, fully in expression land:
-    bit_i = sign( sum_tokens (token_hash bit_i ? +1 : -1) ), with the
-    token hash and width from ``SIMHASH_FAMILIES`` (64 bits for xxhash64,
-    60 for md5). Token-hash bit i lands on fingerprint bit
-    (width - 1 - i), which the DuckDB oracles mirror exactly.
+    bit_i = sign( sum_tokens (xxhash64(token) bit_i ? +1 : -1) ). Token-hash
+    bit i lands on fingerprint bit (63 - i), which the DuckDB oracle
+    mirrors exactly.
 
     Written as a SQL lambda because the bit index is itself a lambda
     variable (the Python ``shiftright`` API only takes a literal count).
@@ -579,17 +511,16 @@ def simhash(df: DataFrame, id_col: str, text_col: str, *, family: str = "xxhash6
     into a +-1 bit vector folded into a width-wide count accumulator (the
     naive per-bit formulation re-hashes every token once per bit).
     """
-    token_hash, bits = SIMHASH_FAMILIES[family]
     fingerprint = F.expr(
         f"""
         aggregate(
           transform(
             aggregate(
-              transform(split({text_col}, ' '), t -> {token_hash}),
-              array_repeat(0, {bits}),
+              transform(split({text_col}, ' '), t -> xxhash64(t)),
+              array_repeat(0, {SIMHASH_BITS}),
               (acc, h) -> zip_with(
                 acc,
-                transform(sequence(0, {bits - 1}), i ->
+                transform(sequence(0, {SIMHASH_BITS - 1}), i ->
                   CASE WHEN (shiftright(h, CAST(i AS INT)) & 1L) = 1L THEN 1 ELSE -1 END),
                 (a, b) -> a + b)),
             c -> CASE WHEN c > 0 THEN 1L ELSE 0L END),
@@ -600,17 +531,16 @@ def simhash(df: DataFrame, id_col: str, text_col: str, *, family: str = "xxhash6
 
 
 def simhash_pairs(
-    df: DataFrame, id_col: str, text_col: str, *, max_hamming: int = 6, family: str = "xxhash64"
+    df: DataFrame, id_col: str, text_col: str, *, max_hamming: int = 6
 ) -> DataFrame:
     """SimHash near-dup pairs within a Hamming radius, blocked on the top
     16 bits (docs differing there cannot be near at small radii ~always;
     standard multi-probe tradeoff, recall tested against exact Jaccard)."""
-    _, bits = SIMHASH_FAMILIES[family]
     # Persist (cache contract above): both sides of the self-join read the
     # fingerprint relation — the bit-wide aggregate is the expensive part
     # and must not run twice.
-    sh = simhash(df, id_col, text_col, family=family).withColumn(
-        "block", F.shiftright("simhash", bits - 16)
+    sh = simhash(df, id_col, text_col).withColumn(
+        "block", F.shiftright("simhash", SIMHASH_BITS - 16)
     ).persist()
     a, b = sh.alias("a"), sh.alias("b")
     xor = F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))

@@ -14,8 +14,9 @@ batch is comparatively small. Two tiers:
   ``DataFrame.stat.bloomFilter`` materializes the sketch on the driver
   where only a Python-side ``mightContain`` exists (a per-row round-trip
   — the slow path by construction), so instead the filter is built AS A
-  RELATION: k seeded-hash bit positions per known fingerprint, exploded
-  to (word_index, bit_mask) rows, aggregated with ``bit_or`` into at most
+  RELATION (``runtime_filter.bloom_relation`` over the key (fp, fp2)):
+  k seeded-hash bit positions per known fingerprint, exploded to
+  (word_index, bit_mask) rows, aggregated with ``bit_or`` into at most
   ``m_bits/64`` rows (a 2^20-bit filter is 16 K rows ≈ 128 KB — always
   broadcastable, independent of corpus size). Probing is an equi-join of
   the batch's k probe positions against that broadcast relation: a batch
@@ -39,6 +40,7 @@ from data_pipeline_with_spark_kafka_spark.operators.dedup import (
     minhash_signatures,
     verified_pairs,
 )
+from data_pipeline_with_spark_kafka_spark.operators.runtime_filter import bloom_relation
 
 
 def fingerprints(df: DataFrame, id_col: str, content_col: str) -> DataFrame:
@@ -52,38 +54,6 @@ def fingerprints(df: DataFrame, id_col: str, content_col: str) -> DataFrame:
         F.col(id_col),
         F.xxhash64(c).alias("fp"),
         F.xxhash64(c, F.lit(1)).alias("fp2"),
-    )
-
-
-def bloom_build(known_fp: DataFrame, *, m_bits: int = 1 << 20, k: int = 5) -> DataFrame:
-    """Aggregate known fingerprints into a Bloom relation
-    (word: long, bits: long) of at most ``m_bits / 64`` rows.
-
-    One narrow shuffle over the fingerprint relation; the output size is
-    FIXED by m_bits regardless of corpus row count, which is what makes
-    the probe side broadcastable at any scale.
-    """
-    if m_bits % 64:
-        raise ValueError("m_bits must be a multiple of 64")
-    probes = known_fp.select(
-        F.explode(
-            F.array(*[
-                F.pmod(F.xxhash64(F.col("fp"), F.col("fp2"), F.lit(i)), F.lit(m_bits)) for i in range(k)
-            ])
-        ).alias("pos")
-    )
-    return (
-        probes.select(
-            (F.col("pos") / 64).cast("long").alias("word"),
-            F.expr("shiftleft(1L, cast(pmod(pos, 64) AS INT))").alias("mask"),
-        )
-        .groupBy("word")
-        .agg(F.bit_or("mask").alias("bits"))
-        # Semantic no-op: the aggregate cannot exceed m_bits/64 rows (word
-        # is pmod-bounded), but stating the bound as a LIMIT makes the
-        # boundedness verifiable in the plan itself — the broadcast-hint
-        # lint (tests/test_plans.py) accepts limit-bounded build sides.
-        .limit(m_bits // 64)
     )
 
 
@@ -241,9 +211,8 @@ def incremental_novel(
         known_fp = fingerprints(known, id_col, content_col).select("fp", "fp2").distinct()
 
     if prefilter:
-        flagged = bloom_might_contain(
-            batch_fp, bloom_build(known_fp, m_bits=m_bits, k=k), m_bits=m_bits, k=k
-        )
+        bloom = bloom_relation(known_fp, "fp", "fp2", m_bits=m_bits, k=k)
+        flagged = bloom_might_contain(batch_fp, bloom, m_bits=m_bits, k=k)
         # Definitely-novel docs skip the corpus join entirely; only the
         # might-contain subset is exact-verified against known_fp.
         maybe = flagged.filter("might_contain").drop("might_contain")

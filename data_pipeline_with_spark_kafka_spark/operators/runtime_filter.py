@@ -18,42 +18,31 @@ stays entirely map-side:
   aggregate — ONE narrow shuffle over the (column-pruned) dim keys whose
   partial aggregation bounds the reduce input at partitions x m/64 rows;
   output is at most ``m_bits/64`` rows no matter how large the dim is.
-- **collapse** (``bloom_as_vector``): the (word, bits) relation folded
-  into a SINGLE ROW holding a DENSE ``array<long>`` of ``m_bits/64``
-  words — a 2^18-bit filter is a 4096-long array (32 KB), always
-  broadcastable. Dense array, NOT a map, deliberately: Spark's
+  The key may span several columns (``incremental.incremental_novel``
+  builds its filter over the two fingerprint halves).
+- **probe** (``bloom_prune_literal``): ``bloom_words`` runs the bounded
+  build eagerly and densifies it on the driver into ``m_bits/64`` words
+  — a 2^18-bit filter is a 4096-long array (32 KB). The words ride into
+  the fact plan as a plain array LITERAL, so the k bit tests stay inside
+  WholeStageCodegen (measured at sf0.1, 600 k fact rows: ~0.2 s over
+  the 0.10 s plain count). Dense array, NOT a map, deliberately: Spark's
   ``element_at`` on a map is a LINEAR SCAN of ArrayBasedMapData (k
   probes x m/64 comparisons per fact row turned a measured 0.17 s count
-  into 2.2 s at sf0.1); array ``element_at`` is an O(1) index. The
-  densify runs ONCE at build (a ``transform(sequence(...))`` over the
-  sparse map), so the per-row probe never touches map semantics.
-- **probe**, two tiers measured at sf0.1 (600 k fact rows, plain count
-  0.10 s):
+  into 2.2 s at sf0.1); array ``element_at`` is an O(1) index. One
+  build job per dim content — the same offline-artifact class as the
+  SQ8/PQ codebooks, and allowlisted the same way in the
+  lazy-construction contract. The built literal COLUMN is what
+  ``sources.memo`` keeps (``_bloom_literal``): ``F.lit`` on a 4096-long
+  Python list marshals element-wise over py4j (2.4 s — more than the
+  prune), the ndarray path cuts that ~3x, and the memo makes every
+  construction of the same dim after the first free. (A lazy form that
+  carried the words in as a scalar subquery launched no job at build
+  time, but a Filter holding a subquery expression evaluates on Spark's
+  INTERPRETED predicate path: 1.7 s for the same count.)
 
-  * ``bloom_prune`` — fully LAZY: the vector rides in as a scalar
-    subquery, so constructing the plan launches no jobs and the prune
-    composes like any other DataFrame op. Cost: a Filter containing a
-    subquery expression is evaluated on Spark's INTERPRETED predicate
-    path (measured 1.7 s; even a constant-index ``element_at`` against
-    the subquery value pays 1.4 s — the subquery reference, not the
-    arithmetic, is the cost). Right when the prune guards something
-    scan-dominated or laziness is contractual.
-  * ``bloom_prune_literal`` — the FAST path the registered query uses:
-    ``bloom_words`` runs the bounded build eagerly, embeds the words as a
-    plain array LITERAL, and the k bit tests stay inside
-    WholeStageCodegen (measured ~0.2 s over the 0.10 s plain count —
-    ~8x cheaper than the subquery form). One build job per dim content —
-    the same offline-artifact class as the SQ8/PQ codebooks, and
-    allowlisted the same way in the lazy-construction contract. The
-    built literal COLUMN is what ``sources.memo`` keeps
-    (``bloom_literal_column``): ``F.lit`` on a 4096-long Python list
-    marshals element-wise over py4j (2.4 s — more than the prune), the
-    ndarray path cuts that ~3x, and the memo makes every construction
-    of the same dim after the first free.
-
-  Neither tier explodes, shuffles, or runs a UDF on the fact side: the
-  fact table is touched exactly once, and only surviving rows reach the
-  join's Exchange.
+  The probe does not explode, shuffle, or run a UDF on the fact side:
+  the fact table is touched exactly once, and only surviving rows reach
+  the join's Exchange.
 
 This differs from ``incremental.bloom_might_contain`` deliberately: that
 probe posexplodes the (small) ingest batch and re-groups it — the right
@@ -91,21 +80,21 @@ DEFAULT_M_BITS = 1 << 18  # 32 KB of filter; FPR ~1.5% at 30k keys, k=5
 DEFAULT_K = 5
 
 
-def _positions(key: F.Column, m_bits: int, k: int) -> F.Column:
+def _positions(keys: tuple[str, ...], m_bits: int, k: int) -> F.Column:
     """array of k bit positions in [0, m_bits) for one key value."""
     return F.array(
-        *[F.pmod(F.xxhash64(key, F.lit(i)), F.lit(m_bits)) for i in range(k)]
+        *[F.pmod(F.xxhash64(*keys, F.lit(i)), F.lit(m_bits)) for i in range(k)]
     )
 
 
 def bloom_relation(
-    dim: DataFrame, key_col: str, *, m_bits: int = DEFAULT_M_BITS, k: int = DEFAULT_K
+    dim: DataFrame, *key_cols: str, m_bits: int = DEFAULT_M_BITS, k: int = DEFAULT_K
 ) -> DataFrame:
-    """(word: long, bits: long) Bloom filter over ``dim[key_col]`` —
-    at most ``m_bits/64`` rows regardless of dim row count."""
+    """(word: long, bits: long) Bloom filter over the key ``key_cols`` of
+    ``dim`` — at most ``m_bits/64`` rows regardless of dim row count."""
     if m_bits % 64:
         raise ValueError("m_bits must be a multiple of 64")
-    probes = dim.select(F.explode(_positions(F.col(key_col), m_bits, k)).alias("pos"))
+    probes = dim.select(F.explode(_positions(key_cols, m_bits, k)).alias("pos"))
     return (
         probes.select(
             F.shiftright("pos", 6).alias("word"),
@@ -115,63 +104,6 @@ def bloom_relation(
         .agg(F.bit_or("mask").alias("bits"))
         .limit(m_bits // 64)  # states the pmod bound in the plan itself
     )
-
-
-def bloom_as_vector(bloom_rel: DataFrame, *, m_bits: int = DEFAULT_M_BITS) -> DataFrame:
-    """One row, one column ``__bloom: array<long>`` of exactly
-    ``m_bits/64`` words — the broadcastable, O(1)-probe form of the
-    filter. The sparse (word, bits) rows are densified once here via a
-    map spine; absent words become 0 (no bits set)."""
-    n_words = m_bits // 64
-    sparse = bloom_rel.agg(
-        F.map_from_entries(F.collect_list(F.struct("word", "bits"))).alias("__m")
-    )
-    return sparse.select(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(n_words - 1)),
-            lambda w: F.coalesce(
-                F.element_at(F.col("__m"), w.cast("long")), F.lit(0).cast("long")
-            ),
-        ).alias("__bloom")
-    )
-
-
-def bloom_prune(
-    fact: DataFrame,
-    key_col: str,
-    bloom_vec: DataFrame,
-    *,
-    m_bits: int = DEFAULT_M_BITS,
-    k: int = DEFAULT_K,
-) -> DataFrame:
-    """Keep only fact rows whose key might be in the filter — the LAZY
-    tier: map-side, zero shuffles, zero jobs at construction. A NULL
-    key makes every xxhash64 fold to the seed constant — whether those
-    bits are set only decides if NULL rows die here or in the inner
-    join; the result is identical either way."""
-    # The vector rides in as a SCALAR SUBQUERY (not a crossJoin): a
-    # 1-row broadcast cross would make the bit tests the
-    # BroadcastNestedLoopJoin's CONDITION — the interpreted Predicate
-    # path AND a join node in every consumer's plan. The subquery form
-    # keeps the plan a plain Filter, but note: a filter containing a
-    # subquery expression still evaluates interpreted (measured ~1.7 s
-    # vs the 0.10 s plain count at sf0.1, unchanged between both
-    # shapes). That cost is intrinsic to laziness here; callers on a
-    # hot path use bloom_prune_literal, whose plain-literal filter
-    # compiles into WholeStageCodegen (~0.3 s on the same corpus).
-    pruned = fact.withColumn("__bloom", bloom_vec.select("__bloom").scalar())
-    # element_at(array, i) is 1-based; the repeated xxhash64 per seed
-    # (word index + bit index) is collapsed by whole-stage codegen's
-    # subexpression elimination.
-    keep = None
-    for i in range(k):
-        pos = f"pmod(xxhash64(`{key_col}`, {i}), {m_bits})"
-        bit = F.expr(
-            f"(shiftright(element_at(__bloom, cast(shiftright({pos}, 6) AS INT) + 1), "
-            f"cast({pos} & 63 AS INT)) & 1L) = 1L"
-        )
-        keep = bit if keep is None else keep & bit
-    return pruned.where(keep).drop("__bloom")
 
 
 def bloom_words(
@@ -248,22 +180,15 @@ def bloom_pruned_join(
     how: str = "inner",
     m_bits: int = DEFAULT_M_BITS,
     k: int = DEFAULT_K,
-    literal: bool = False,
 ) -> DataFrame:
     """``fact JOIN dim`` with the fact side bloom-pruned first. Exact for
     inner/semi joins (no false negatives; false positives die in the
     join). Refuses outer joins — pruning a preserved side changes them.
 
-    With ``literal=True`` the filter is built EAGERLY (one bounded job,
-    memoized per dim content) and embedded as a literal — the codegen
-    fast path. Without it, the build stays lazy via the scalar-subquery
-    tier (see the module docstring for the trade)."""
+    The filter is built EAGERLY (one bounded job, memoized per dim
+    content) and embedded as a literal — see the module docstring."""
     if how not in ("inner", "semi", "left_semi", "leftsemi"):
         raise ValueError(f"bloom prune is only exact for inner/semi joins, not {how!r}")
-    if literal:
-        arr = _bloom_literal(dim, dim_key, m_bits, k)
-        pruned = bloom_prune_literal(fact, fact_key, arr, m_bits=m_bits, k=k)
-    else:
-        vec = bloom_as_vector(bloom_relation(dim, dim_key, m_bits=m_bits, k=k), m_bits=m_bits)
-        pruned = bloom_prune(fact, fact_key, vec, m_bits=m_bits, k=k)
+    arr = _bloom_literal(dim, dim_key, m_bits, k)
+    pruned = bloom_prune_literal(fact, fact_key, arr, m_bits=m_bits, k=k)
     return pruned.join(dim, pruned[fact_key] == dim[dim_key], how)

@@ -186,62 +186,6 @@ def llm_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_lsh_pairs(docs, "doc_id", "text", k=3, threshold=0.8)
 
 
-MINHASH_MD5_ORACLE = """
-WITH toks AS (
-    SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), sh AS (
-    SELECT DISTINCT doc_id AS doc,
-           t[CAST(i AS INT)] || ' ' || t[CAST(i AS INT) + 1] || ' ' || t[CAST(i AS INT) + 2] AS shingle
-    FROM toks, UNNEST(range(1, len(t) - 1)) AS r(i)
-), hs AS (
-    SELECT doc,
-           shingle,
-           CAST(('0x' || substr(md5(shingle), 1, 8)) AS BIGINT) AS h1,
-           CAST(('0x' || substr(md5(shingle), 9, 8)) AS BIGINT) AS h2
-    FROM sh
-), mins AS (
-    SELECT doc, s.seed, MIN((h1 + s.seed * h2) % 4294967296) AS mh
-    FROM hs, (SELECT unnest(range(0, 32)) AS seed) s
-    GROUP BY doc, s.seed
-), banded AS (
-    SELECT doc, CAST(seed // 2 AS INT) AS band,
-           STRING_AGG(CAST(mh AS VARCHAR), ':' ORDER BY seed) AS bucket
-    FROM mins GROUP BY doc, CAST(seed // 2 AS INT)
-), cands AS (
-    SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-    FROM banded a
-    JOIN banded b ON a.band = b.band AND a.bucket = b.bucket AND a.doc < b.doc
-), sizes AS (
-    SELECT doc, COUNT(*) AS n_sh FROM sh GROUP BY doc
-), inter AS (
-    SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-    FROM cands c
-    JOIN sh a ON a.doc = c.doc_a
-    JOIN sh b ON b.doc = c.doc_b AND b.shingle = a.shingle
-    GROUP BY 1, 2
-)
-SELECT doc_a, doc_b,
-       ROUND(n_inter * 1.0 / (sa.n_sh + sb.n_sh - n_inter), 4) AS jaccard
-FROM inter
-JOIN sizes sa ON sa.doc = inter.doc_a
-JOIN sizes sb ON sb.doc = inter.doc_b
-WHERE ROUND(n_inter * 1.0 / (sa.n_sh + sb.n_sh - n_inter), 4) >= 0.8
-"""
-
-
-@register("llm_dedup_minhash_lsh_md5", oracle=MINHASH_MD5_ORACLE, tags=("llm", "dedup"))
-def llm_dedup_minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``llm_dedup_minhash_lsh`` under the md5 hash family
-    (Kirsch-Mitzenmacher double hashing over md5, verified on the string
-    shingle sets). The oracle computes the signature minima in plain SQL,
-    without an xxhash64 port, and bands them by the minima themselves; the
-    engine buckets the same minima by their xxhash64, which collides only
-    when the minima do (up to 64-bit hash collisions, which the exact
-    Jaccard check drops), so both produce the same verified pairs."""
-    docs = load_table_fanned(spark, sf_dir, "documents")
-    return dedup.minhash_lsh_pairs(docs, "doc_id", "text", k=3, threshold=0.8, family="md5")
-
-
 @register("llm_dedup_simhash", oracle=simhash_xxh64_oracle(), tags=("llm", "dedup"))
 def llm_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit SimHash fingerprints (expression-only, no UDF).
@@ -250,41 +194,6 @@ def llm_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrence with a pure-SQL XXH64 (queries/xxh64_sql.py) and replays
     the same sign-fold into bit (63 - i)."""
     return dedup.simhash(load_table_fanned(spark, sf_dir, "documents"), "doc_id", "text")
-
-
-SIMHASH_MD5_ORACLE = """
-WITH toks AS (
-    SELECT doc_id AS doc, unnest(string_split(text, ' ')) AS t FROM documents
-), th AS (
-    SELECT doc, CAST(('0x' || substr(md5(t), 1, 15)) AS BIGINT) AS h FROM toks
-), bits AS (
-    SELECT doc, s.i AS i,
-           SUM(CASE WHEN (h >> s.i) & 1 = 1 THEN 1 ELSE -1 END) AS c
-    FROM th, (SELECT unnest(range(0, 60)) AS i) s
-    GROUP BY doc, s.i
-), fp AS (
-    SELECT doc,
-           SUM(CASE WHEN c > 0 THEN (CAST(1 AS BIGINT) << (59 - i)) ELSE 0 END) AS simhash
-    FROM bits GROUP BY doc
-), blocked AS (
-    SELECT doc, simhash, simhash >> 44 AS block FROM fp
-)
-SELECT a.doc AS doc_a, b.doc AS doc_b,
-       CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-FROM blocked a
-JOIN blocked b ON a.block = b.block AND a.doc < b.doc
-WHERE bit_count(xor(a.simhash, b.simhash)) <= 6
-"""
-
-
-@register("llm_dedup_simhash_md5", oracle=SIMHASH_MD5_ORACLE, tags=("llm", "dedup"))
-def llm_dedup_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup PAIRS under the md5 hash family (60-bit
-    fingerprint from md5 token hashes): the oracle mirrors the
-    sign-aggregated fingerprint bit-for-bit in plain SQL, the top-16-bit
-    blocking, and the Hamming filter."""
-    docs = load_table_fanned(spark, sf_dir, "documents")
-    return dedup.simhash_pairs(docs, "doc_id", "text", max_hamming=6, family="md5")
 
 
 EMB_NEARDUP_ORACLE = """
@@ -497,7 +406,7 @@ def _lsh_seeded_planes_oracle() -> str:
     numpy's legacy ``RandomState`` is bit-stable across versions, so
     both sides derive identical planes forever. Everything downstream
     (sign projection, MSB-first bucket fold, radius-1 probe, exact
-    cosine rerank) mirrors SIM_LSH_MD5_ORACLE."""
+    cosine rerank) is plain SQL over the embeddings."""
     planes = similarity.make_planes(64, 6, 42)
     rows = " UNION ALL ".join(
         "SELECT {p} AS p, [{w}]::DOUBLE[] AS w".format(
@@ -547,55 +456,6 @@ def llm_sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") == 0),
         k=10,
         probe=similarity.Lsh(similarity.make_planes(64, 6)),
-    )
-
-
-SIM_LSH_MD5_ORACLE = """
-WITH planes AS (
-    SELECT p.p,
-           list(CASE WHEN CAST(('0x' || substr(md5('hp' || p.p || ':' || d.d), 1, 1)) AS INT) % 2 = 1
-                     THEN 1.0 ELSE -1.0 END ORDER BY d.d) AS w
-    FROM (SELECT unnest(range(0, 6)) AS p) p,
-         (SELECT unnest(range(0, 64)) AS d) d
-    GROUP BY p.p
-), e AS (
-    SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), proj AS (
-    SELECT e.vec_id, pl.p, list_dot_product(e.v, pl.w) AS s
-    FROM e CROSS JOIN planes pl
-), buck AS (
-    SELECT vec_id,
-           CAST(SUM(CASE WHEN s >= 0 THEN (1 << (5 - p)) ELSE 0 END) AS BIGINT) AS bucket
-    FROM proj GROUP BY vec_id
-), q AS (
-    SELECT e.v AS qv, b.bucket AS qbucket
-    FROM e JOIN buck b USING (vec_id) WHERE e.vec_id = 0
-)
-SELECT e.vec_id,
-       ROUND(list_dot_product(e.v, q.qv)
-             / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(q.qv, q.qv))), 6) AS cosine
-FROM e JOIN buck b ON b.vec_id = e.vec_id, q
-WHERE bit_count(xor(b.bucket, q.qbucket)) <= 1
-ORDER BY cosine DESC, e.vec_id
-LIMIT 10
-"""
-
-
-@register("llm_sim_topk_lsh_md5", oracle=SIM_LSH_MD5_ORACLE, tags=("llm", "similarity"))
-def llm_sim_topk_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``llm_sim_topk_lsh`` with an md5-derived Rademacher family
-    (`similarity.make_planes_md5`) instead of seeded-numpy planes: the
-    oracle derives the planes itself in SQL rather than embedding them as
-    literals, then mirrors the sign projections, the bucket fold (plane 0
-    = MSB), the radius-1 probe, and the exact cosine rerank."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.vector_topk(
-        emb,
-        "vec_id",
-        "embedding",
-        emb.filter(F.col("vec_id") == 0),
-        k=10,
-        probe=similarity.Lsh(similarity.make_planes_md5(64, 6)),
     )
 
 

@@ -8,7 +8,7 @@ quality classifier (operators/classifier_train.py).
 
 Both SQL-expressible queries are fully oracled: the backoff model is
 count tables + joins, and the JL planes are the md5-derived Rademacher
-family DuckDB can re-derive in SQL (same trick as llm_sim_topk_lsh_md5).
+family DuckDB can re-derive in SQL (``similarity.make_planes_md5``).
 
 Reference parity: the reference repo (arunbalasundar/
 data-pipeline-with-spark-kafka) has no LM/embedding surface; these are

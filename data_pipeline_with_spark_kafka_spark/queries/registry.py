@@ -148,8 +148,7 @@ _COVERED_IN_OFFICIAL_ARTIFACTS = frozenset({
     "llm_bm25_topk", "llm_classifier_calibration",
     "llm_classifier_eval_auc", "llm_cluster_aware_split",
     "llm_dedup_containment", "llm_dedup_embedding_cosine_ivf",
-    "llm_dedup_incremental_near", "llm_dedup_minhash_lsh_md5",
-    "llm_dedup_simhash_md5", "llm_dsir_importance_topk",
+    "llm_dedup_incremental_near", "llm_dsir_importance_topk",
     "llm_emb_random_projection", "llm_emb_sq8_error",
     "llm_fingerprint_winnowing", "llm_hard_negative_mining",
     "llm_hybrid_rrf", "llm_inverted_index", "llm_knn_join_exact",
@@ -158,7 +157,7 @@ _COVERED_IN_OFFICIAL_ARTIFACTS = frozenset({
     "llm_quality_classifier", "llm_remove_repeated_spans",
     "llm_retrieval_label_precision", "llm_semdedup_prune",
     "llm_sim_topk_binary", "llm_sim_topk_ivf_pq", "llm_sim_topk_ivf_sq8",
-    "llm_sim_topk_lsh_md5", "llm_sim_topk_pq", "llm_sim_topk_sq8",
+    "llm_sim_topk_pq", "llm_sim_topk_sq8",
     "llm_top_p_selection", "llm_weighted_reservoir",
     "privacy_k_anonymity", "scd2_customer_batch", "scd2_temporal_join",
     "sql_filtered_aggregates", "sql_lateral_topk_per_key",
@@ -220,7 +219,7 @@ _SAMPLED_IN_LATEST_ARTIFACT = frozenset({
     "llm_remove_repeated_spans", "llm_repetition_metrics",
     "llm_semdedup_prune", "llm_sequence_packing",
     "llm_shared_span_fraction", "llm_sim_topk_bruteforce",
-    "llm_sim_topk_lsh", "llm_sim_topk_lsh_md5", "llm_text_fingerprint",
+    "llm_sim_topk_lsh", "llm_text_fingerprint",
     "llm_text_normalize_nfc", "llm_token_count_regex", "llm_token_entropy",
     "llm_top_bigrams", "llm_top_pmi_bigrams", "llm_train_quality_classifier",
     "llm_train_val_test_split", "llm_vocab_stats", "llm_zipf_fit",

@@ -704,14 +704,13 @@ def join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     value hash matching it is the proof the prune has no false
     negatives (false positives survive the prune and die in the join).
 
-    Uses the operator's LITERAL tier: the filter build is one bounded
-    aggregate job at construction (output fixed at m_bits/64 = 4096
-    longs regardless of dim size), memoized per dim content — the same
-    offline-artifact class as the SQ8/PQ codebooks, allowlisted the
-    same way in the lazy-construction contract. See
-    operators/runtime_filter for the measured tier trade and for why
-    this beats both key-set broadcast (unbounded) and Spark's injected
-    bloom (optimizer-visibility-limited) at 100 TB."""
+    The filter build is one bounded aggregate job at construction
+    (output fixed at m_bits/64 = 4096 longs regardless of dim size),
+    memoized per dim content — the same offline-artifact class as the
+    SQ8/PQ codebooks, allowlisted the same way in the lazy-construction
+    contract. See operators/runtime_filter for the measured probe cost
+    and for why this beats both key-set broadcast (unbounded) and
+    Spark's injected bloom (optimizer-visibility-limited) at 100 TB."""
     from data_pipeline_with_spark_kafka_spark.operators.runtime_filter import bloom_pruned_join
 
     lineitem = load_table(spark, sf_dir, "lineitem").select(
@@ -722,13 +721,7 @@ def join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderpriority") == "1-URGENT")
         .select("o_orderkey", "o_orderdate")
     )
-    joined = bloom_pruned_join(
-        lineitem,
-        urgent,
-        "l_orderkey",
-        "o_orderkey",
-        literal=True,
-    )
+    joined = bloom_pruned_join(lineitem, urgent, "l_orderkey", "o_orderkey")
     return joined.groupBy(F.date_trunc("month", "o_orderdate").alias("order_month")).agg(
         F.count(F.lit(1)).alias("n_items"),
         round_to(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias(

@@ -2,9 +2,8 @@
 
 These assemble the compiled-XXH64 CTE blocks (``xxh64_sql``) into full
 oracle statements for ``llm_dedup_simhash`` and ``llm_dedup_minhash_lsh``
-— the xxhash64 family of the dedup operators. Structure mirrors the md5
-family's oracles (SIMHASH_MD5_ORACLE / MINHASH_MD5_ORACLE in
-queries/llm.py); only the hash family changes:
+— the one hash family of the dedup operators. Each oracle replays the
+operator stage by stage in plain SQL; the hashes are:
 
 - token/shingle hash: XXH64 over UTF-8 bytes, seed 42
   (``string_hash_ctes`` — recursive stripe loop + closed-form tail);

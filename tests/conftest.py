@@ -49,7 +49,6 @@ SLOW_TESTS = {
     ("test_orchestration.py", "test_cli_orchestrate_runs_pipeline_with_dag_semantics"),
     ("test_plans.py", "test_no_broadcast_hint_on_sf_scaled_table[llm_sim_topk_ivf_sq8]"),
     ("test_plans.py", "test_no_broadcast_hint_on_sf_scaled_table[llm_sim_topk_lsh]"),
-    ("test_plans.py", "test_no_broadcast_hint_on_sf_scaled_table[llm_sim_topk_lsh_md5]"),
     ("test_plans.py", "test_no_broadcast_hint_on_sf_scaled_table[llm_sim_topk_pq]"),
     ("test_plans.py", "test_no_broadcast_hint_on_sf_scaled_table[stats_cohen_kappa]"),
     ("test_property_merge.py", "test_scd2_matches_python_model"),

@@ -50,12 +50,11 @@ ITERATIVE_BUILDERS = {
     # by design — the measured share picks which twin plan to return.
     "events_session_ids_auto",
     "events_markov_transitions_auto",
-    # round-11 bloom join prune, literal tier: ONE bounded aggregate job
-    # (output fixed at m_bits/64 words) memoized per input — the same
-    # offline-artifact class as the SQ8/PQ codebooks above. The lazy
-    # scalar-subquery tier stays job-free; the query uses the literal
-    # tier because a Filter with a subquery expression drops to the
-    # interpreted predicate path (measured 8x slower, see
+    # round-11 bloom join prune: ONE bounded aggregate job (output fixed
+    # at m_bits/64 words) memoized per input — the same offline-artifact
+    # class as the SQ8/PQ codebooks above. The words ride into the fact
+    # plan as a literal because a Filter with a subquery expression drops
+    # to the interpreted predicate path (measured 8x slower, see
     # operators/runtime_filter.py).
     "join_bloom_pruned_urgent_revenue",
 }

@@ -7,11 +7,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_pipeline_with_spark_kafka_spark.operators.incremental import (
-    bloom_build,
     bloom_might_contain,
     fingerprints,
     incremental_novel,
 )
+from data_pipeline_with_spark_kafka_spark.operators.runtime_filter import bloom_relation
 from data_pipeline_with_spark_kafka_spark.sources.tables import load_table
 
 
@@ -28,7 +28,7 @@ def split_docs(spark, sf_dir):
 def test_bloom_relation_is_bounded_by_m_bits(spark, sf_dir):
     _, known = split_docs(spark, sf_dir)
     m_bits = 1 << 12
-    bloom = bloom_build(fingerprints(known, "doc_id", "text").select("fp", "fp2"), m_bits=m_bits)
+    bloom = bloom_relation(fingerprints(known, "doc_id", "text"), "fp", "fp2", m_bits=m_bits)
     n = bloom.count()
     assert n <= m_bits // 64
     # every mask word is within range
@@ -40,7 +40,7 @@ def test_bloom_has_no_false_negatives(spark, sf_dir):
     when probed — the Bloom guarantee the exactness proof rests on."""
     _, known = split_docs(spark, sf_dir)
     kfp = fingerprints(known, "doc_id", "text")
-    bloom = bloom_build(kfp.select("fp", "fp2"), m_bits=1 << 16)
+    bloom = bloom_relation(kfp, "fp", "fp2", m_bits=1 << 16)
     probed = bloom_might_contain(kfp, bloom, m_bits=1 << 16)
     assert probed.filter(~F.col("might_contain")).count() == 0
 
@@ -68,7 +68,7 @@ def test_prefilter_equals_exact_under_tiny_bloom(spark, sf_dir):
 def test_rejects_unaligned_m_bits(spark, sf_dir):
     _, known = split_docs(spark, sf_dir)
     with pytest.raises(ValueError, match="multiple of 64"):
-        bloom_build(fingerprints(known, "doc_id", "text"), m_bits=100)
+        bloom_relation(fingerprints(known, "doc_id", "text"), "fp", "fp2", m_bits=100)
 
 
 def _exact_batch_vs_corpus_near_dups(spark, batch, known, threshold=0.8):

@@ -14,6 +14,7 @@ from pyspark.sql import types as T
 
 from data_pipeline_with_spark_kafka_spark.operators import dedup, multimodal, similarity
 from data_pipeline_with_spark_kafka_spark.sources.tables import load_table
+from tools.xxh64_ref import spark_xxhash64
 
 
 @pytest.fixture(scope="module")
@@ -45,54 +46,36 @@ def test_minhash_lsh_recall_vs_exact(docs):
     assert recall >= 0.9, f"LSH recall too low: {recall} ({len(lsh)}/{len(exact)})"
 
 
-def test_minhash_md5_twin_matches_xxhash_tier(docs):
-    """The md5 (Kirsch-Mitzenmacher) and xxhash64 hash families verify
-    candidates with the same exact Jaccard, so on a corpus where the
-    S-curve saturates both return the SAME pair set."""
-    xx = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in dedup.minhash_lsh_pairs(docs, "doc_id", "text", k=3, threshold=0.8).collect()
-    }
-    md = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in dedup.minhash_lsh_pairs(docs, "doc_id", "text", k=3, threshold=0.8, family="md5").collect()
-    }
-    assert xx == md
-    assert md, "fixture should contain planted near-duplicates"
-
-
-def test_simhash_md5_matches_pure_python(spark):
-    """The md5-family 60-bit fingerprint equals a direct hashlib
-    reference, including the bit-i -> position-(59-i) fold mapping the
-    DuckDB oracle mirrors."""
-    import hashlib
-
+def test_simhash_matches_pure_python(spark):
+    """The 64-bit fingerprint equals a pure-Python reference built on
+    ``tools.xxh64_ref.spark_xxhash64`` token hashes, including the
+    bit-i -> position-(63-i) fold mapping the DuckDB oracle mirrors."""
     texts = ["spark row batch spark", "a", "join join join hash"]
 
     def ref(text):
-        counts = [0] * 60
+        counts = [0] * 64
         for t in text.split(" "):
-            h = int(hashlib.md5(t.encode()).hexdigest()[:15], 16)
-            for i in range(60):
+            h = spark_xxhash64(t)
+            for i in range(64):
                 counts[i] += 1 if (h >> i) & 1 else -1
         fp = 0
-        for i in range(60):  # element i folds to significance 59-i
+        for i in range(64):  # element i folds to significance 63-i
             fp = (fp << 1) | (1 if counts[i] > 0 else 0)
-        return fp
+        return fp - (1 << 64) if fp >= 1 << 63 else fp  # as Spark's signed long
 
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
-    got = {r.doc: r.simhash for r in dedup.simhash(df, "doc_id", "text", family="md5").collect()}
+    got = {r.doc: r.simhash for r in dedup.simhash(df, "doc_id", "text").collect()}
     for i, t in enumerate(texts):
         assert got[i] == ref(t), t
 
 
-def test_simhash_md5_pairs_dup_invariance(docs):
+def test_simhash_pairs_dup_invariance(docs):
     """A duplicated corpus yields hamming-0 pairs for every doc id."""
     dup = docs.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
     both = docs.select("doc_id", "text").unionAll(dup)
     pairs = {
         (r.doc_a, r.doc_b)
-        for r in dedup.simhash_pairs(both, "doc_id", "text", max_hamming=0, family="md5").collect()
+        for r in dedup.simhash_pairs(both, "doc_id", "text", max_hamming=0).collect()
     }
     n = docs.count()
     assert all((i, i + 1_000_000) in pairs for i in {r.doc_id for r in docs.select("doc_id").collect()})
@@ -117,10 +100,8 @@ def test_simhash_pairs_find_planted_duplicates(spark, docs):
     dup = sample.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
     both = sample.unionByName(dup)
     expected = {(i, i + 1_000_000) for i in range(50)}
-    for family in dedup.SIMHASH_FAMILIES:
-        pairs = dedup.simhash_pairs(both, "doc_id", "text", max_hamming=0, family=family)
-        found = {(r.doc_a, r.doc_b) for r in pairs.collect()}
-        assert expected <= found, family
+    pairs = dedup.simhash_pairs(both, "doc_id", "text", max_hamming=0)
+    assert expected <= {(r.doc_a, r.doc_b) for r in pairs.collect()}
 
 
 def test_exact_dedup_counts_duplicates(docs):
@@ -148,7 +129,8 @@ def test_lsh_topk_recall_vs_brute_force(emb):
 
 
 def test_lsh_topk_md5_planes_and_recall(emb):
-    """The md5 plane family (cross-engine oracled tier): entries are
+    """The md5 plane family (re-derived in SQL by the oracle of
+    ``llm_emb_random_projection``): entries are
     exactly +-1 from md5 hex-digit parity, and the tier keeps the same
     self-retrieval + recall-floor contract as the seeded family."""
     import hashlib

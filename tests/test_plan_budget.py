@@ -228,15 +228,8 @@ EXCHANGE_BUDGET = {
     # batch signaturing + bloom + probe joins.
     "llm_dedup_incremental_near_probe": 57,
     "llm_dedup_minhash_lsh": 8,  # r12: + small-scan fan-out exchange(s)
-    # round-6 distinct-shingle-space rewrite: + the distinct aggregate
-    # pair, the hash join-back, and the per-doc signature aggregate —
-    # three extra narrow-row shuffles buying ~10x fewer md5+conv evals
-    # (3.8 -> 2.1 s at sf0.1, identical verified pairs).
-    "llm_dedup_minhash_lsh_md5": 15,  # r12: + small-scan fan-out exchange(s)
     "llm_dedup_ngram_jaccard": 9,
     "llm_dedup_simhash": 1,  # r12: + small-scan fan-out exchange(s)
-    # block self-join over the persisted fingerprint relation (round 6).
-    "llm_dedup_simhash_md5": 3,  # r12: + small-scan fan-out exchange(s)
     "llm_deterministic_shuffle": 6,
     "llm_domain_mixture": 5,
     # scoring is a zero-shuffle expression fold against the 256-bucket
@@ -271,8 +264,6 @@ EXCHANGE_BUDGET = {
     "llm_sim_topk_bruteforce": 2,
     "llm_sim_topk_ivf": 8,  # r12: + small-scan fan-out exchange(s)
     "llm_sim_topk_lsh": 2,
-    # same 1-row broadcast + TakeOrdered shape as the seeded tier (round 6).
-    "llm_sim_topk_lsh_md5": 2,
     # ADC TakeOrdered pool cut + the 50-row exact rerank sort (round 6).
     "llm_sim_topk_sq8": 4,  # r12: + small-scan fan-out exchange(s)
     # Hamming TakeOrdered pool cut + the 100-row rerank sort (round 6).

@@ -3,8 +3,8 @@
 - lossless: the pruned inner join is row-for-row the plain join (the
   registered query's oracle re-proves this as a value hash every run);
 - no false negatives: every fact row with a joining key survives;
-- map-side: the fact branch contributes ZERO exchanges before the join
-  — all shuffles in a prune plan belong to the bounded bloom build;
+- map-side: the prune is one codegen Filter over the fact scan, with
+  ZERO exchanges — the bounded bloom build runs as its own job;
 - edge shapes: NULL fact keys, empty dim, outer-join refusal.
 """
 
@@ -14,10 +14,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_pipeline_with_spark_kafka_spark.operators.runtime_filter import (
-    bloom_as_vector,
-    bloom_prune,
+    bloom_prune_literal,
     bloom_pruned_join,
     bloom_relation,
+    bloom_words,
 )
 from data_pipeline_with_spark_kafka_spark.sources.tables import load_table
 
@@ -47,8 +47,7 @@ def test_pruned_join_equals_plain_join(spark, sf_dir):
 
 def test_no_false_negatives_and_prune_bites(spark, sf_dir):
     fact, dim = _fixture(spark, sf_dir)
-    blm = bloom_as_vector(bloom_relation(dim, "o_orderkey"))
-    pruned = bloom_prune(fact, "l_orderkey", blm)
+    pruned = bloom_prune_literal(fact, "l_orderkey", bloom_words(dim, "o_orderkey"))
     joiners = fact.join(
         dim, fact["l_orderkey"] == dim["o_orderkey"], "left_semi"
     ).count()
@@ -61,38 +60,9 @@ def test_no_false_negatives_and_prune_bites(spark, sf_dir):
     assert (n_pruned - joiners) <= max(1, int(0.05 * non_joiners))
 
 
-def test_fact_branch_adds_no_exchange(spark, sf_dir):
-    """Lazy tier: all exchanges in a prune plan belong to the bounded
-    bloom build (word-agg shuffle + single-partition densify), which
-    rides in as a scalar SUBQUERY — no join node at all. The fact side
-    is scan→filter only — the whole point."""
-    fact, dim = _fixture(spark, sf_dir)
-    spark.catalog.clearCache()
-    blm = bloom_as_vector(bloom_relation(dim, "o_orderkey"))
-    plan = (
-        bloom_prune(fact, "l_orderkey", blm)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # The vector arrives as a scalar subquery; its (bounded) build
-    # subtree prints once per bit-test reference, so count exchanges
-    # only in the fact's own section — the text before the first
-    # subquery print — which must have NONE.
-    assert "Subquery" in plan
-    assert "Join" not in plan
-    fact_section = plan.split("Subquery")[0]
-    assert "Exchange" not in fact_section, plan
-
-
 def test_literal_tier_plan_is_pure_filter(spark, sf_dir):
-    """Fast tier: the embedded literal leaves a plan with ZERO exchanges
-    and no subquery — one codegen Filter over the scan."""
-    from data_pipeline_with_spark_kafka_spark.operators.runtime_filter import (
-        bloom_words,
-        bloom_prune_literal,
-    )
-
+    """The embedded literal leaves a plan with ZERO exchanges and no
+    subquery — one codegen Filter over the scan."""
     fact, dim = _fixture(spark, sf_dir)
     spark.catalog.clearCache()
     words = bloom_words(dim, "o_orderkey")
@@ -100,12 +70,6 @@ def test_literal_tier_plan_is_pure_filter(spark, sf_dir):
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 0, plan
     assert "Subquery" not in plan
-    # literal tier must keep exactly the rows the lazy tier keeps
-    blm = bloom_as_vector(bloom_relation(dim, "o_orderkey"))
-    lazy_rows = sorted(
-        map(tuple, bloom_prune(fact, "l_orderkey", blm).collect())
-    )
-    assert sorted(map(tuple, pruned.collect())) == lazy_rows
 
 
 def test_null_fact_keys_inner_join_exact(spark):
@@ -122,10 +86,9 @@ def test_null_fact_keys_inner_join_exact(spark):
 def test_empty_dim_prunes_everything(spark, sf_dir):
     fact, dim = _fixture(spark, sf_dir)
     empty = dim.filter(F.lit(False))
-    blm = bloom_as_vector(bloom_relation(empty, "o_orderkey"))
     # absent words densify to 0 -> every bit test is false -> all rows
     # dropped: definitely-absent semantics.
-    assert bloom_prune(fact, "l_orderkey", blm).count() == 0
+    assert bloom_prune_literal(fact, "l_orderkey", bloom_words(empty, "o_orderkey")).count() == 0
     assert bloom_pruned_join(fact, empty, "l_orderkey", "o_orderkey").count() == 0
 
 

@@ -71,8 +71,6 @@ HEAVY = [
     "llm_dedup_containment", "llm_semdedup_prune",
     "llm_dedup_embedding_cosine_fast",
     "text_heavy_hitters", "emb_pca_project", "emb_pca_explained_variance",
-    "llm_dedup_minhash_lsh_md5", "llm_dedup_simhash_md5",
-    "llm_sim_topk_lsh_md5",
     "llm_bm25_topk", "llm_inverted_index",
     "llm_token_entropy", "cdc_derive_changes",
     # round-6 selection/quantization additions

@@ -37,10 +37,12 @@ driver-strict comparator. A query that RAISES on an edge corpus while its
 oracle returns rows is recorded as an error (and counted) — robustness
 defects, not just value divergences, are the target.
 
-    python tools/edge_sweep.py               # all four corpora
+    python tools/edge_sweep.py               # every corpus
     python tools/edge_sweep.py empty         # one corpus
 
-Writes CORRECTNESS_EDGE.json next to the official artifacts.
+Writes CORRECTNESS_EDGE.json next to the official artifacts. A run over
+some corpora replaces only their entries; the others keep theirs, and
+the totals are recomputed over all entries.
 """
 
 from __future__ import annotations
@@ -100,7 +102,7 @@ EXPECTED_DIVERGENCES: dict[tuple[str, str], str] = {
         for q in (
             "emb_pca_project", "emb_pca_explained_variance",
             "llm_sim_topk_bruteforce", "llm_knn_join_exact",
-            "llm_sim_topk_lsh_md5", "llm_sim_topk_lsh",
+            "llm_sim_topk_lsh",
             "llm_dedup_embedding_cosine_fast",
             "llm_dedup_embedding_cosine_ivf", "llm_semdedup_prune",
             "llm_emb_random_projection", "llm_hybrid_rrf",
@@ -380,6 +382,7 @@ def run_corpus(spark, qs, kind: str, root: str) -> dict:
 
     from oracle_compare import normalize
 
+    t0 = time.time()
     sf_dir = os.path.join(root, kind)
     build_corpus(kind, sf_dir)
     con = duckdb.connect()
@@ -420,10 +423,32 @@ def run_corpus(spark, qs, kind: str, root: str) -> dict:
           f"{len(expected)} expected-divergence, {len(unexplained)} unexplained",
           flush=True)
     return {
+        "elapsed_sec": round(time.time() - t0, 1),
         "n_queries": len(results),
         "n_match": n_match,
         "expected_divergences": expected,
         "unexplained_failures": unexplained,
+    }
+
+
+def merge_edges(previous: dict, per_edge: dict) -> dict:
+    """The CORRECTNESS_EDGE.json payload after a run: ``per_edge`` (the
+    corpora just run) replaces those entries of ``previous`` (the
+    committed payload, ``{}`` if none), every other corpus keeps its
+    entry, and both totals are recomputed over all entries."""
+    edges = {**previous.get("edges", {}), **per_edge}
+    return {
+        "comparator": "tests/oracle_compare.normalize (driver-strict)",
+        "corpora": "empty / single_row / one_group / all_null / unicode / "
+                   "day_boundary / null_type derivations of the driver "
+                   "sf0.001 tables (tools/edge_sweep.py)",
+        "edges": edges,
+        "total_expected_divergences": sum(
+            len(e["expected_divergences"]) for e in edges.values()
+        ),
+        "total_unexplained_failures": sum(
+            len(e["unexplained_failures"]) for e in edges.values()
+        ),
     }
 
 
@@ -436,7 +461,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     qs = all_queries()
     root = tempfile.mkdtemp(prefix="edge-sweep-")
-    t0 = time.time()
     per_edge: dict = {}
     try:
         for kind in kinds:
@@ -444,25 +468,17 @@ def main() -> None:
     finally:
         shutil.rmtree(root, ignore_errors=True)
         spark.stop()
-    payload = {
-        "comparator": "tests/oracle_compare.normalize (driver-strict)",
-        "corpora": "empty / single_row / one_group / all_null / unicode / "
-                   "day_boundary / null_type derivations of the driver "
-                   "sf0.001 tables (tools/edge_sweep.py)",
-        "elapsed_sec": round(time.time() - t0, 1),
-        "edges": per_edge,
-        "total_expected_divergences": sum(
-            len(e["expected_divergences"]) for e in per_edge.values()
-        ),
-        "total_unexplained_failures": sum(
-            len(e["unexplained_failures"]) for e in per_edge.values()
-        ),
-    }
-    with open(os.path.join(REPO, "CORRECTNESS_EDGE.json"), "w") as f:
+    out = os.path.join(REPO, "CORRECTNESS_EDGE.json")
+    previous: dict = {}
+    if os.path.exists(out):
+        with open(out) as f:
+            previous = json.load(f)
+    payload = merge_edges(previous, per_edge)
+    with open(out, "w") as f:
         json.dump(payload, f, indent=1, sort_keys=True)
         f.write("\n")
     print(
-        f"unexplained failures across {len(kinds)} edge corpora: "
+        f"unexplained failures across {len(payload['edges'])} edge corpora: "
         f"{payload['total_unexplained_failures']} "
         f"(+{payload['total_expected_divergences']} documented input-contract "
         f"divergences) -> CORRECTNESS_EDGE.json"

@@ -5,7 +5,7 @@ for each argument ``hash = XXH64(arg_bytes, seed=hash)`` with a
 type-specific byte layout (long -> 8-byte little-endian, int -> 4-byte,
 string -> UTF-8 bytes). This module mirrors
 ``org.apache.spark.sql.catalyst.expressions.XXH64`` (standard XXH64) so
-the SQL compiler in ``tools/xxh64_sql.py`` can be tested against it, and
+the SQL compiler in ``queries/xxh64_sql.py`` can be tested against it, and
 it against Spark itself (tests/test_xxh64_oracle.py).
 """
 
