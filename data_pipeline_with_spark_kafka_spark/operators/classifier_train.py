@@ -48,6 +48,21 @@ from data_pipeline_with_spark_kafka_spark.sources import memo
 # that differs at ULP level.
 LOOP_PARTITIONS = 8
 
+# Zero-variance rule, shared by both tiers and the DuckDB oracle: a
+# feature whose population deviation is at or below this bound is
+# constant up to summation rounding, and its deviation is taken as
+# infinite, so it standardizes to exactly 0. Dividing the rounding
+# residue of (x - mean) by a floored near-zero deviation instead gives
+# values that depend on the summation order of each engine.
+CONSTANT_STD = 1e-9
+
+
+def feature_scale(std: float | None) -> float:
+    """The deviation a feature is standardized by: ``std``, or infinity
+    when it is at or below ``CONSTANT_STD`` (NULL counts as 0)."""
+    std = float(std or 0.0)
+    return std if std > CONSTANT_STD else math.inf
+
 
 @dataclass(frozen=True)
 class TrainedModel:
@@ -55,7 +70,7 @@ class TrainedModel:
     weights: tuple[float, ...]      # on STANDARDIZED features
     bias: float
     means: tuple[float, ...]        # standardization constants
-    stds: tuple[float, ...]
+    stds: tuple[float, ...]         # inf for a constant feature (CONSTANT_STD)
     losses: tuple[float, ...]       # mean log-loss per iteration (pre-step)
     n_rows: int
     accuracy: float                 # training-set accuracy at threshold 0.5
@@ -76,8 +91,8 @@ def _margin(feature_cols: list[str], weights: list[float], bias: float):
 def standardization_stats(
     df: DataFrame, feature_cols: list[str]
 ) -> tuple[list[float], list[float]]:
-    """One aggregate pass -> (means, stds); std floored at 1e-12 so a
-    constant feature maps to 0 instead of NaN."""
+    """One aggregate pass -> (means, stds), each std through
+    ``feature_scale`` so a constant feature maps to 0 instead of NaN."""
     aggs = []
     for c in feature_cols:
         aggs.append(F.avg(c).alias(f"m_{c}"))
@@ -89,7 +104,7 @@ def standardization_stats(
             "standardization stats are undefined — check the input filter"
         )
     means = [float(row[f"m_{c}"]) for c in feature_cols]
-    stds = [max(float(row[f"s_{c}"] or 0.0), 1e-12) for c in feature_cols]
+    stds = [feature_scale(row[f"s_{c}"]) for c in feature_cols]
     return means, stds
 
 
@@ -219,7 +234,7 @@ def _train_on_driver(table, feature_cols: list[str], iters: int, lr: float) -> T
                 "standardization stats are undefined — check the input filter"
             )
         means.append(float(x[valid].mean()))
-        stds.append(max(float(x[valid].std()), 1e-12))
+        stds.append(feature_scale(x[valid].std()))
         cols.append(x)
         keep = keep & valid
     z_cols = [(x[keep] - m) / s for x, m, s in zip(cols, means, stds)]
@@ -269,7 +284,9 @@ def score_expr(model: TrainedModel, feature_cols: list[str] | None = None):
 def model_to_json(model: TrainedModel) -> dict:
     """Plain-JSON form of the trained model — the versioned deployment
     artifact (weights + standardization constants fold back into a pure
-    expression via ``score_expr``, so scoring needs no Python object)."""
+    expression via ``score_expr``, so scoring needs no Python object).
+    A constant feature's std is written as ``Infinity``, which Python's
+    ``json`` reads back."""
     return {
         "features": list(model.features),
         "weights": [float(w) for w in model.weights],

@@ -12,8 +12,8 @@ Four tiers, all built from public DataFrame APIs:
    banded into buckets; only docs sharing a band bucket become candidate
    pairs, then candidates are verified with exact Jaccard. At 100 TB the
    band join touches only bucket collisions — never all pairs.
-4. **SimHash** — sign-aggregated token-hash fingerprint; near-dups are
-   pairs within Hamming distance d, blocked on the top 16 bits.
+4. **SimHash** — sign-aggregated token-hash fingerprint per doc; near
+   docs differ in few of its bits.
 
 Every near-dup operator is assembled from one copy of each stage:
 
@@ -33,7 +33,7 @@ reproducible in plain SQL through the pure-SQL XXH64 port
 
 Design notes for 1000-executor scale:
 - every self-join is preceded by an explode on a key that distributes
-  (shingle / band bucket / simhash prefix) — no cartesian anywhere;
+  (shingle / band bucket) — no cartesian anywhere;
 - hub shingles (stopword-ish grams shared by thousands of docs) never
   drive candidate generation: the prefix holds each doc's rarest
   shingles, so fan-out is bounded by rare-shingle frequencies;
@@ -528,28 +528,6 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         """
     )
     return df.select(F.col(id_col).alias("doc"), fingerprint.alias("simhash"))
-
-
-def simhash_pairs(
-    df: DataFrame, id_col: str, text_col: str, *, max_hamming: int = 6
-) -> DataFrame:
-    """SimHash near-dup pairs within a Hamming radius, blocked on the top
-    16 bits (docs differing there cannot be near at small radii ~always;
-    standard multi-probe tradeoff, recall tested against exact Jaccard)."""
-    # Persist (cache contract above): both sides of the self-join read the
-    # fingerprint relation — the bit-wide aggregate is the expensive part
-    # and must not run twice.
-    sh = simhash(df, id_col, text_col).withColumn(
-        "block", F.shiftright("simhash", SIMHASH_BITS - 16)
-    ).persist()
-    a, b = sh.alias("a"), sh.alias("b")
-    xor = F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-    return (
-        a.join(b, (F.col("a.block") == F.col("b.block")) & (F.col("a.doc") < F.col("b.doc")))
-        .withColumn("hamming", F.bit_count(xor))
-        .filter(F.col("hamming") <= max_hamming)
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"), "hamming")
-    )
 
 
 @memo.memoized

@@ -72,7 +72,7 @@ this operator is part of the [EXT] scale surface.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from data_pipeline_with_spark_kafka_spark.sources import memo
 
@@ -123,7 +123,7 @@ def bloom_words(
     return words
 
 
-def bloom_literal_column(words: list[int]):
+def bloom_literal_column(words: list[int]) -> Column:
     """``words`` as an ArrayType(Long) literal Column. Goes through a
     numpy int64 array: ``F.lit`` on a plain Python list marshals
     element-by-element over py4j (measured 2.4 s for 4096 longs — more
@@ -143,23 +143,15 @@ def _bloom_literal(dim: DataFrame, dim_key: str, m_bits: int, k: int):
 def bloom_prune_literal(
     fact: DataFrame,
     key_col: str,
-    words,
+    words: Column,
     *,
     m_bits: int = DEFAULT_M_BITS,
     k: int = DEFAULT_K,
 ) -> DataFrame:
-    """The codegen fast path: ``words`` (a list, or a Column already
-    built by ``bloom_literal_column``) embedded as an array literal, so
-    the k bit tests compile into the scan's WholeStageCodegen stage."""
-    from pyspark.sql import Column
-
-    if isinstance(words, Column):
-        arr = words
-    else:
-        if len(words) != m_bits // 64:
-            raise ValueError(f"words must have m_bits/64 = {m_bits // 64} entries")
-        arr = bloom_literal_column(words)
-    pruned = fact.withColumn("__bloom", arr)
+    """The codegen fast path: ``words``, the array literal Column that
+    ``bloom_literal_column`` built, is embedded in the fact plan, so the
+    k bit tests compile into the scan's WholeStageCodegen stage."""
+    pruned = fact.withColumn("__bloom", words)
     keep = None
     for i in range(k):
         pos = f"pmod(xxhash64(`{key_col}`, {i}), {m_bits})"

@@ -6,9 +6,8 @@ no Python). Single-query search is one filter-and-refine top-k,
 
 - **probe** (which rows are candidates): every row, the exact baseline
   every ANN variant is recall-tested against; random-hyperplane **LSH**,
-  deterministic sign projections (``make_planes`` / ``make_planes_md5``
-  as array literals) with the query's bucket and its neighbours within a
-  sign-bit radius; or **IVF** cells, a learned coarse quantizer (k-means
+  deterministic sign projections (``make_planes`` as array literals) with
+  the query's bucket and its neighbours within a sign-bit radius; or **IVF** cells, a learned coarse quantizer (k-means
   centroid rows) whose assignment is ``clustering.cell_multi_assign``.
 - **pre-rank** (how candidates are cut before the exact rerank): none;
   ADC cosine over a codec's reconstruction (SQ8 / PQ,
@@ -84,21 +83,20 @@ def make_planes(dim: int, n_planes: int = 8, seed: int = 42) -> np.ndarray:
     return rng.choice([-1.0, 1.0], size=(n_planes, dim))
 
 
-def make_planes_md5(dim: int, n_planes: int, prefix: str = "hp") -> np.ndarray:
+def make_planes_md5(dim: int, n_planes: int) -> np.ndarray:
     """CROSS-ENGINE Rademacher hyperplanes: sign(p, d) from the parity of
-    the first hex digit of md5('{prefix}{p}:{d}') — the same derivation
-    DuckDB reproduces in SQL (substr(md5(...), 1, 1) parity), which makes
-    the whole LSH pipeline oracle-able. Hash-derived Rademacher entries
-    have the same JL/angle-preservation guarantees as seeded-RNG ones.
-    ``prefix`` namespaces independent families (LSH buckets vs the JL
-    projection in queries/llm_lm_extra.py) so they never share signs."""
+    the first hex digit of md5('rp{p}:{d}') — the same derivation DuckDB
+    reproduces in SQL (substr(md5(...), 1, 1) parity), which makes the
+    JL projection of queries/llm_lm_extra.py oracle-able. Hash-derived
+    Rademacher entries have the same JL/angle-preservation guarantees as
+    seeded-RNG ones."""
     import hashlib
 
     return np.array(
         [
             [
                 1.0
-                if int(hashlib.md5(f"{prefix}{p}:{d}".encode()).hexdigest()[0], 16) % 2
+                if int(hashlib.md5(f"rp{p}:{d}".encode()).hexdigest()[0], 16) % 2
                 else -1.0
                 for d in range(dim)
             ]

@@ -1,59 +1,19 @@
-"""Skew-mitigation join helpers (SURVEY.md §4.2 [EXT]).
+"""Key-skew probes and the sequence-family router (SURVEY.md §4.2 [EXT]).
 
-AQE's skew-join handling covers sort-merge joins at runtime; explicit key
-salting remains the tool when (a) the skewed side feeds a *broadcast-less*
-shuffle join on a pathological hot key, or (b) an aggregation needs a
-two-stage reduce. Both helpers are pure DataFrame transformations —
-results are provably identical to the unsalted plan (tested).
+AQE's skew-join split covers sort-merge joins at runtime and stays near
+flat as a hot key grows (BASELINE.md "skew crossover"), so no query salts
+its keys. What AQE cannot fix is a window partition: a lifetime
+``Window.partitionBy(user)`` puts one hot user's rows in one task. The
+probes here measure that skew (the hottest key's share of rows, and how
+much of it falls on one calendar day) and ``choose_sequence_plan`` uses
+them to pick the lifetime, day-bucketed or hour-bucketed twin of the
+attribution, Markov and session queries.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_join(
-    skewed: DataFrame,
-    dim: DataFrame,
-    key: str,
-    *,
-    salt_buckets: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join a skewed fact against a (small-ish but not broadcastable)
-    dim with salted keys: the fact side gets a random salt in [0, B), the
-    dim side is replicated B times, and the join key becomes (key, salt) —
-    a hot key's rows spread across B tasks instead of one straggler.
-
-    The salt uses a hash of the full fact row id-columns, not rand(), so
-    the plan stays deterministic and retry-safe.
-    """
-    salt = (F.abs(F.xxhash64(*skewed.columns)) % salt_buckets).cast("int").alias("__salt")
-    fact = skewed.withColumn("__salt", salt)
-    salts = dim.sparkSession.range(salt_buckets).select(F.col("id").cast("int").alias("__salt"))
-    replicas = dim.crossJoin(F.broadcast(salts))
-    return fact.join(replicas, [key, "__salt"], how).drop("__salt")
-
-
-def two_stage_agg(
-    df: DataFrame,
-    key: str,
-    value: str,
-    *,
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Skew-safe sum: partial aggregate on (key, salt) then final on key.
-    Spark's hash aggregate already does map-side partials; this adds an
-    intermediate REDUCE level for keys so hot that even the merge side of
-    a single reducer partition saturates (the classic two-stage trick)."""
-    salt = (F.abs(F.xxhash64(F.col(value).cast("string"))) % salt_buckets).alias("__salt")
-    partial = (
-        df.withColumn("__salt", salt)
-        .groupBy(key, "__salt")
-        .agg(F.sum(value).alias("__partial"))
-    )
-    return partial.groupBy(key).agg(F.sum("__partial").alias(f"sum_{value}"))
 
 
 def dominant_key_share(

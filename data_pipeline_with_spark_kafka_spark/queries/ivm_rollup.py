@@ -80,8 +80,7 @@ def ivm_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # deltas on BOTH sides. The maintenance identity
 #   (A u dA) >< (B u dB) = V  u  dA><B  u  A><dB  u  dA><dB
 # means the engine appends three delta terms and NEVER recomputes V —
-# each term joins a small delta against a base relation (bucketed/
-# co-located at deployment: sources/layout.bucketed), so maintenance
+# each term joins a small delta against a base relation, so maintenance
 # cost scales with |delta|, not |history|. The oracle derives the same
 # append set from first principles: the widened join MINUS the old view
 # = rows where NOT both sides are old.

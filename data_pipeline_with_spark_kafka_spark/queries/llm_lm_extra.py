@@ -274,7 +274,7 @@ def llm_emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     that makes downstream ANN/dedup tiers 4x narrower at 100 TB. PCA
     (emb_pca_project) is the data-dependent alternative; JL is what you
     use when you can't afford the covariance pass."""
-    planes = similarity.make_planes_md5(_JL_DIM, _JL_K, prefix="rp")
+    planes = similarity.make_planes_md5(_JL_DIM, _JL_K)
     emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     # Bind each projected component to an attribute BEFORE consuming them
@@ -329,7 +329,9 @@ def _train_logreg_oracle(iters: int = _TRAIN_ITERS, lr: float = _TRAIN_LR) -> st
     chained CTE stages (the pattern that oracled BPE and MMR): stage i
     holds the 1-row weight state w{i}; g{i} recomputes the k+2 gradient
     scalars from the standardized feature relation; w{i+1} applies the
-    step. Cross-engine float safety: the feature inputs are bit-identical
+    step. A constant feature standardizes to 0 by the trainer's
+    zero-variance rule (``classifier_train.feature_scale``). Cross-engine
+    float safety: the feature inputs are bit-identical
     (gopher metrics are 4dp-rounded on both engines; log10 of the same
     integer agrees to the ulp), the margin sums in the same left-to-right
     feature order as operators/classifier_train._margin, and the GD map
@@ -337,7 +339,11 @@ def _train_logreg_oracle(iters: int = _TRAIN_ITERS, lr: float = _TRAIN_LR) -> st
     partial-aggregation-order ulps never grow past the 4dp output
     rounding. Verified hash-MATCH at sf0.001/sf0.01/sf0.1 and across the
     3 fuzz seeds."""
+    from data_pipeline_with_spark_kafka_spark.operators.classifier_train import CONSTANT_STD
     from data_pipeline_with_spark_kafka_spark.queries.text_extra import GOPHER_ORACLE
+
+    def scale(d: str) -> str:  # classifier_train.feature_scale
+        return f"CASE WHEN {d} > {CONSTANT_STD!r} THEN {d} ELSE 'inf'::DOUBLE END"
 
     sql = [f"""
 WITH feats AS MATERIALIZED (
@@ -347,13 +353,19 @@ WITH feats AS MATERIALIZED (
            CAST(dup_bigram_ratio AS DOUBLE) AS f3,
            CAST(top_token_ratio AS DOUBLE) AS f4
     FROM ({GOPHER_ORACLE})
-), stats AS MATERIALIZED (
-    SELECT AVG(f1) AS m1, GREATEST(STDDEV_POP(f1), 1e-12) AS s1,
-           AVG(f2) AS m2, GREATEST(STDDEV_POP(f2), 1e-12) AS s2,
-           AVG(f3) AS m3, GREATEST(STDDEV_POP(f3), 1e-12) AS s3,
-           AVG(f4) AS m4, GREATEST(STDDEV_POP(f4), 1e-12) AS s4,
+), moments AS MATERIALIZED (
+    SELECT AVG(f1) AS m1, STDDEV_POP(f1) AS d1,
+           AVG(f2) AS m2, STDDEV_POP(f2) AS d2,
+           AVG(f3) AS m3, STDDEV_POP(f3) AS d3,
+           AVG(f4) AS m4, STDDEV_POP(f4) AS d4,
            CAST(COUNT(*) AS DOUBLE) AS n
     FROM feats
+), stats AS MATERIALIZED (
+    SELECT m1, {scale('d1')} AS s1,
+           m2, {scale('d2')} AS s2,
+           m3, {scale('d3')} AS s3,
+           m4, {scale('d4')} AS s4, n
+    FROM moments
 ), z AS MATERIALIZED (
     SELECT y,
            (f1 - (SELECT m1 FROM stats)) / (SELECT s1 FROM stats) AS z1,

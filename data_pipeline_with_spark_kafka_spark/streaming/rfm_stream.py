@@ -16,6 +16,9 @@ over the per-customer aggregate.
 
 Design notes:
 
+- the base is one update-mode ``groupBy("o_custkey").agg(max, count,
+  sum)``: Spark's built-in streaming aggregation keeps the state, so no
+  custom state fold (``applyInPandasWithState``) is needed;
 - state per customer = (last_order_days, frequency, monetary_cents):
   O(1) per KEY; total state is bounded by |customers| (the dimension),
   never by order volume — there is NO eviction horizon because lifetime
@@ -43,53 +46,24 @@ surface.
 
 from __future__ import annotations
 
-from collections.abc import Iterable
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-STATE_SCHEMA = "last_days long, frequency long, cents long"
-OUTPUT_SCHEMA = "o_custkey long, last_order_days long, frequency long, monetary_cents long"
-
-_EPOCH = pd.Timestamp("1970-01-01")
-
-
-def _update(
-    key: tuple, batches: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
-    (custkey,) = key
-    last_days, freq, cents = state.get if state.exists else (None, 0, 0)
-    for pdf in batches:
-        for r in pdf.itertuples(index=False):
-            days = int((pd.Timestamp(r.o_orderdate).normalize() - _EPOCH).days)
-            last_days = days if last_days is None else max(last_days, days)
-            freq += 1
-            # each order price is an exact 2-dp value: cents are exact ints
-            cents += int(round(float(r.o_totalprice) * 100))
-    if last_days is not None:
-        state.update((last_days, freq, cents))
-        yield pd.DataFrame(
-            [(custkey, last_days, freq, cents)],
-            columns=["o_custkey", "last_order_days", "frequency", "monetary_cents"],
-        )
-
 
 def rfm_base_stream(orders: DataFrame) -> DataFrame:
-    """Update-mode stream of ABSOLUTE per-customer RFM base rows.
+    """Update-mode stream of ABSOLUTE per-customer RFM base rows:
+    (o_custkey, last_order_days, frequency, monetary_cents), all long.
 
     ``orders`` must carry (o_orderkey, o_orderdate timestamp,
     o_custkey, o_totalprice) — the fixture schema with the order date as
-    the event time. No watermark/timeout: lifetime aggregates never
-    expire, and state is customer-bounded by construction."""
-    keyed = orders.select("o_custkey", "o_orderdate", "o_totalprice").groupBy("o_custkey")
-    return keyed.applyInPandasWithState(
-        _update,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    the event time. One built-in streaming aggregation: max, count and
+    sum are the state Spark's own update-mode ``groupBy`` keeps, so the
+    stream starts no Python worker. No watermark: lifetime aggregates
+    never expire, and state is customer-bounded by construction."""
+    return orders.groupBy("o_custkey").agg(
+        F.max(F.unix_date(F.to_date("o_orderdate"))).cast("long").alias("last_order_days"),
+        F.count(F.lit(1)).alias("frequency"),
+        # each order price is an exact 2-dp value: cents are exact ints
+        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("monetary_cents"),
     )
 
 

@@ -11,8 +11,7 @@ Every foreachBatch handler in ``streaming/`` follows one rule,
 ``materialized``: the micro-batch's plan (source scan, parse, state-store
 restore and commit, dim join) executes exactly once, and an empty batch
 is skipped without a write. The handler persists what it reads more than
-once, probes emptiness on that cache, and always releases it, but never
-a DataFrame its caller had already cached.
+once, probes emptiness on that cache, and always releases it.
 
 Every writer that rewrites a parquet target (the keyed-upsert sink, and
 the CLI's ``maintain``, ``maintain-incremental`` and ``erase``) goes
@@ -55,7 +54,6 @@ import uuid
 from collections.abc import Iterator
 from contextlib import contextmanager
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 
@@ -65,17 +63,12 @@ def materialized(df: DataFrame) -> Iterator[DataFrame | None]:
 
     The emptiness probe fills the cache the block then reads, so it is
     the plan's one execution, not an extra one. ``df`` is unpersisted on
-    exit, also when the block raises, unless the caller had cached it
-    already: ``fanout_sink``'s batch stays cached for the sinks after the
-    one that called this."""
-    owned = df.storageLevel == StorageLevel.NONE
-    if owned:
-        df.persist()
+    exit, also when the block raises."""
+    df.persist()
     try:
         yield None if df.count() == 0 else df
     finally:
-        if owned:
-            df.unpersist()
+        df.unpersist()
 
 
 def _remove(path: str) -> None:
@@ -194,27 +187,3 @@ def keyed_upsert_parquet(target_dir: str, key_cols: list[str]):
 
     return upsert
 
-
-def fanout_sink(*sinks):
-    """foreachBatch callback that dispatches ONE computed micro-batch to
-    several sinks (e.g. parquet archive + JDBC serving table + Kafka
-    downstream) without recomputing the upstream plan per sink.
-
-    Spark's writeStream supports one sink per query; the naive
-    alternative — N parallel queries over the same source — recomputes
-    the whole pipeline N times and triples source read traffic at
-    100 TB. Here the batch is ``materialized`` once (an empty batch
-    reaches no sink) and always unpersisted, even when a sink raises:
-    the epoch then fails and replays as a whole, which is why each
-    individual sink must stay idempotent (keyed_upsert_parquet above is;
-    blind appends are not).
-    """
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        with materialized(batch_df) as batch:
-            if batch is None:
-                return
-            for sink in sinks:
-                sink(batch, epoch_id)
-
-    return write

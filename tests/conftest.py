@@ -65,8 +65,6 @@ SLOW_TESTS = {
     ("test_sketches.py", "test_heavy_hitters_property_exact"),
     ("test_state_store.py", "test_rocksdb_provider_same_results_and_bounded_state"),
     ("test_state_store.py", "test_watermark_eviction_bounds_state"),
-    ("test_stateful_streaming.py", "test_stream_stream_left_outer_emits_null_after_eviction"),
-    ("test_stateful_streaming.py", "test_stream_stream_left_outer_state_survives_checkpoint_restart"),
     ("test_streaming.py", "test_append_mode_emits_only_finalized_windows"),
     ("test_streaming.py", "test_stream_equals_batch_golden"),
     ("test_streaming.py", "test_watermark_drops_late_data"),

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_pipeline_with_spark_kafka_spark.operators.classifier_train import (
+    CONSTANT_STD,
     TrainedModel,
     score_expr,
     train_logreg,
@@ -26,7 +27,8 @@ def _numpy_logreg(X: np.ndarray, y: np.ndarray, iters: int, lr: float):
     """The reference implementation: standardize, then full-batch GD with
     avg-gradient steps — mirrors train_logreg exactly."""
     mu = X.mean(axis=0)
-    sd = np.maximum(X.std(axis=0), 1e-12)  # population std
+    sd = X.std(axis=0)  # population std; a constant feature standardizes to 0
+    sd = np.where(sd > CONSTANT_STD, sd, np.inf)
     Z = (X - mu) / sd
     w = np.zeros(X.shape[1])
     b = 0.0
@@ -138,13 +140,30 @@ def test_cache_memoizes(spark, sf_dir, feats):
 
 def test_constant_feature_gets_zero_weight(spark):
     """A zero-variance feature standardizes to 0 everywhere, so its weight
-    must stay exactly 0 (no NaN from the std floor)."""
+    must stay exactly 0 (no NaN from a zero deviation)."""
     df = spark.createDataFrame(
         [(float(i % 2), float(i), 7.0) for i in range(40)], "label double, f double, c double"
     )
     model = train_logreg(df, ["f", "c"], "label", iters=5, lr=0.5)
     assert model.weights[1] == 0.0
     assert all(np.isfinite(model.weights)) and np.isfinite(model.bias)
+
+
+def test_near_constant_feature_gets_zero_weight(spark, distributed_tier):
+    """A feature equal on every row can still get a tiny nonzero deviation
+    from the rounding of its mean (numpy: ~7e-18 for 120 x 0.0455). At or
+    below ``CONSTANT_STD`` it standardizes to exactly 0 on both tiers, so
+    its weight stays exactly 0 instead of fitting the rounding residue."""
+    df = spark.createDataFrame(
+        [(float(i % 2), float(i), 0.0455) for i in range(120)],
+        "label double, f double, c double",
+    )
+    driver = train_logreg(df, ["f", "c"], "label", iters=5, lr=0.5)
+    with distributed_tier():
+        distributed = train_logreg(df, ["f", "c"], "label", iters=5, lr=0.5)
+    for model in (driver, distributed):
+        assert model.weights[1] == 0.0
+        assert model.stds[1] == float("inf")
 
 
 def _cache_is_empty(spark) -> bool:

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import json
 import os
-import time
 
 from pyspark.sql import functions as F
 
@@ -14,6 +13,7 @@ from data_pipeline_with_spark_kafka_spark.operators.incremental import increment
 from data_pipeline_with_spark_kafka_spark.streaming.incremental_stream import (
     novel_document_stream,
 )
+from tests.test_streaming import run_to_completion
 
 DOC_SCHEMA = "doc_id long, ingest_ts timestamp, text string"
 
@@ -27,18 +27,6 @@ def doc(doc_id: int, minute: int, text: str) -> str:
     return json.dumps(
         {"doc_id": doc_id, "ingest_ts": f"2024-06-01 10:{minute:02d}:00", "text": text}
     )
-
-
-def drain(q, timeout=600):
-    deadline = time.time() + timeout
-    while q.isActive and time.time() < deadline:
-        q.awaitTermination(2)
-    if q.isActive:
-        status = q.status
-        q.stop()
-        raise AssertionError(f"stream did not drain in {timeout}s; status={status}")
-    if q.exception() is not None:
-        raise AssertionError(f"stream failed: {q.exception()}")
 
 
 def test_stream_admits_only_novel_and_matches_batch(spark, tmp_path):
@@ -67,7 +55,7 @@ def test_stream_admits_only_novel_and_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    drain(q)
+    run_to_completion(q)
     rows = spark.sql("SELECT doc_id, text FROM inc_novel_out").collect()
     # corpus-known (1, 5) dropped; in-stream dup (3) dropped; novel kept.
     assert {r.doc_id for r in rows} == {2, 4}

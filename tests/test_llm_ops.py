@@ -69,19 +69,6 @@ def test_simhash_matches_pure_python(spark):
         assert got[i] == ref(t), t
 
 
-def test_simhash_pairs_dup_invariance(docs):
-    """A duplicated corpus yields hamming-0 pairs for every doc id."""
-    dup = docs.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
-    both = docs.select("doc_id", "text").unionAll(dup)
-    pairs = {
-        (r.doc_a, r.doc_b)
-        for r in dedup.simhash_pairs(both, "doc_id", "text", max_hamming=0).collect()
-    }
-    n = docs.count()
-    assert all((i, i + 1_000_000) in pairs for i in {r.doc_id for r in docs.select("doc_id").collect()})
-    assert len(pairs) >= n
-
-
 def test_simhash_identical_text_same_fingerprint(spark, docs):
     """A duplicated corpus (ids offset) yields pairwise-identical simhashes."""
     dup = docs.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
@@ -93,15 +80,6 @@ def test_simhash_identical_text_same_fingerprint(spark, docs):
         .filter(F.col("a.simhash") != F.col("b.simhash"))
     )
     assert joined.count() == 0
-
-
-def test_simhash_pairs_find_planted_duplicates(spark, docs):
-    sample = docs.filter(F.col("doc_id") < 50).select("doc_id", "text")
-    dup = sample.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
-    both = sample.unionByName(dup)
-    expected = {(i, i + 1_000_000) for i in range(50)}
-    pairs = dedup.simhash_pairs(both, "doc_id", "text", max_hamming=0)
-    assert expected <= {(r.doc_a, r.doc_b) for r in pairs.collect()}
 
 
 def test_exact_dedup_counts_duplicates(docs):
@@ -126,33 +104,6 @@ def test_lsh_topk_recall_vs_brute_force(emb):
     # LSH recall is modest by construction — the oracle tier is brute force).
     recall = len(set(brute) & set(approx)) / 10
     assert recall >= 0.1, f"ANN recall collapsed: {recall} (brute={brute}, approx={approx})"
-
-
-def test_lsh_topk_md5_planes_and_recall(emb):
-    """The md5 plane family (re-derived in SQL by the oracle of
-    ``llm_emb_random_projection``): entries are
-    exactly +-1 from md5 hex-digit parity, and the tier keeps the same
-    self-retrieval + recall-floor contract as the seeded family."""
-    import hashlib
-
-    planes = similarity.make_planes_md5(64, 6)
-    assert planes.shape == (6, 64)
-    assert set(planes.ravel().tolist()) <= {-1.0, 1.0}
-    assert planes[2][5] == (
-        1.0 if int(hashlib.md5(b"hp2:5").hexdigest()[0], 16) % 2 else -1.0
-    )
-
-    query = emb.filter(F.col("vec_id") == 0)
-    brute = [r.vec_id for r in similarity.vector_topk(emb, "vec_id", "embedding", query, k=10).collect()]
-    approx = [
-        r.vec_id
-        for r in similarity.vector_topk(
-            emb, "vec_id", "embedding", query, k=10, probe=similarity.Lsh(planes)
-        ).collect()
-    ]
-    assert 0 in approx
-    recall = len(set(brute) & set(approx)) / 10
-    assert recall >= 0.1, f"md5-plane ANN recall collapsed: {recall}"
 
 
 def test_multimodal_decode_features_contract(docs):

@@ -97,7 +97,7 @@ def test_train_half_never_backs_off(spark):
 
 
 def test_jl_planes_match_hashlib_derivation():
-    planes = similarity.make_planes_md5(64, _JL_K, prefix="rp")
+    planes = similarity.make_planes_md5(64, _JL_K)
     assert planes.shape == (_JL_K, 64)
     for p in (0, 7, 15):
         for d in (0, 13, 63):

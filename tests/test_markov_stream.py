@@ -9,7 +9,7 @@ import os
 from data_pipeline_with_spark_kafka_spark.streaming.markov_stream import (
     transitions_stream,
 )
-from tests.test_stateful_streaming import drain
+from tests.test_streaming import run_to_completion
 
 SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double"
 
@@ -50,7 +50,7 @@ def _run(spark, src, ckpt, **kw):
         .trigger(availableNow=True)
         .start()
     )
-    drain(q)
+    run_to_completion(q)
     return emitted
 
 

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_pipeline_with_spark_kafka_spark.operators.runtime_filter import (
+    bloom_literal_column,
     bloom_prune_literal,
     bloom_pruned_join,
     bloom_relation,
@@ -47,7 +48,9 @@ def test_pruned_join_equals_plain_join(spark, sf_dir):
 
 def test_no_false_negatives_and_prune_bites(spark, sf_dir):
     fact, dim = _fixture(spark, sf_dir)
-    pruned = bloom_prune_literal(fact, "l_orderkey", bloom_words(dim, "o_orderkey"))
+    pruned = bloom_prune_literal(
+        fact, "l_orderkey", bloom_literal_column(bloom_words(dim, "o_orderkey"))
+    )
     joiners = fact.join(
         dim, fact["l_orderkey"] == dim["o_orderkey"], "left_semi"
     ).count()
@@ -65,7 +68,7 @@ def test_literal_tier_plan_is_pure_filter(spark, sf_dir):
     subquery — one codegen Filter over the scan."""
     fact, dim = _fixture(spark, sf_dir)
     spark.catalog.clearCache()
-    words = bloom_words(dim, "o_orderkey")
+    words = bloom_literal_column(bloom_words(dim, "o_orderkey"))
     pruned = bloom_prune_literal(fact, "l_orderkey", words)
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 0, plan
@@ -88,7 +91,8 @@ def test_empty_dim_prunes_everything(spark, sf_dir):
     empty = dim.filter(F.lit(False))
     # absent words densify to 0 -> every bit test is false -> all rows
     # dropped: definitely-absent semantics.
-    assert bloom_prune_literal(fact, "l_orderkey", bloom_words(empty, "o_orderkey")).count() == 0
+    words = bloom_literal_column(bloom_words(empty, "o_orderkey"))
+    assert bloom_prune_literal(fact, "l_orderkey", words).count() == 0
     assert bloom_pruned_join(fact, empty, "l_orderkey", "o_orderkey").count() == 0
 
 

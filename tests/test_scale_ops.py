@@ -1,6 +1,5 @@
-"""Tests for the scale-hardening operators: salted joins / two-stage aggs
-(result-identical to the plain plans) and k-means + IVF search
-(deterministic, sane recall vs brute force)."""
+"""Tests for the scale-hardening operators: the skew router and k-means +
+IVF search (deterministic, sane recall vs brute force)."""
 
 from __future__ import annotations
 
@@ -11,36 +10,9 @@ from data_pipeline_with_spark_kafka_spark.operators import clustering, quantizat
 from data_pipeline_with_spark_kafka_spark.operators.skew import (
     choose_sequence_plan,
     dominant_key_share,
-    salted_join,
-    two_stage_agg,
 )
 from data_pipeline_with_spark_kafka_spark.sources import memo
 from data_pipeline_with_spark_kafka_spark.sources.tables import load_table
-
-
-def test_salted_join_equals_plain_join(spark, sf_dir):
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    fact = orders.select(F.col("o_custkey").alias("c_custkey"), "o_orderkey")
-
-    plain = fact.join(cust, "c_custkey").select("o_orderkey", "c_mktsegment")
-    salted = salted_join(fact, cust, "c_custkey", salt_buckets=8).select(
-        "o_orderkey", "c_mktsegment"
-    )
-    assert sorted(plain.collect()) == sorted(salted.collect())
-
-
-def test_two_stage_agg_equals_plain_sum(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem")
-    plain = {
-        r.l_returnflag: round(r.s, 2)
-        for r in li.groupBy("l_returnflag").agg(F.sum("l_quantity").alias("s")).collect()
-    }
-    staged = {
-        r.l_returnflag: round(r.sum_l_quantity, 2)
-        for r in two_stage_agg(li, "l_returnflag", "l_quantity").collect()
-    }
-    assert plain == staged
 
 
 def test_hyperplane_signs_expression_tree_stays_bounded(spark):

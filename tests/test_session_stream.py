@@ -12,7 +12,7 @@ import os
 from data_pipeline_with_spark_kafka_spark.streaming.session_stream import (
     session_ids_stream,
 )
-from tests.test_stateful_streaming import drain
+from tests.test_streaming import run_to_completion
 
 SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double"
 
@@ -58,7 +58,7 @@ def _run(spark, src, ckpt, **kw):
         .trigger(availableNow=True)
         .start()
     )
-    drain(q)
+    run_to_completion(q)
     return table
 
 

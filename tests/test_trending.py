@@ -7,7 +7,7 @@ import json
 import os
 
 from data_pipeline_with_spark_kafka_spark.streaming.trending import trending_items
-from tests.test_stateful_streaming import drain
+from tests.test_streaming import run_to_completion
 
 
 def _line(ts: str, item: str) -> str:
@@ -36,7 +36,7 @@ def _run(spark, src, ckpt, **kw):
         .trigger(availableNow=True)
         .start()
     )
-    drain(q)
+    run_to_completion(q)
     return emitted
 
 
