@@ -7,8 +7,9 @@ no Python). Single-query search is one filter-and-refine top-k,
 - **probe** (which rows are candidates): every row, the exact baseline
   every ANN variant is recall-tested against; random-hyperplane **LSH**,
   deterministic sign projections (``make_planes`` as array literals) with
-  the query's bucket and its neighbours within a sign-bit radius; or **IVF** cells, a learned coarse quantizer (k-means
-  centroid rows) whose assignment is ``clustering.cell_multi_assign``.
+  the query's bucket and its neighbours within a sign-bit radius; or
+  **IVF** cells, a learned coarse quantizer (k-means centroid rows) whose
+  assignment is ``clustering.cell_multi_assign``.
 - **pre-rank** (how candidates are cut before the exact rerank): none;
   ADC cosine over a codec's reconstruction (SQ8 / PQ,
   ``operators/quantization.py``); or Hamming over packed sign words.

@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+
 def rfm_base_stream(orders: DataFrame) -> DataFrame:
     """Update-mode stream of ABSOLUTE per-customer RFM base rows:
     (o_custkey, last_order_days, frequency, monetary_cents), all long.

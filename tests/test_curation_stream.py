@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import json
 import os
-import time
 
 from pyspark.sql import functions as F
 
@@ -18,6 +17,7 @@ from data_pipeline_with_spark_kafka_spark.streaming.curation_stream import (
     curate_document_stream,
 )
 from data_pipeline_with_spark_kafka_spark.streaming.sinks import keyed_upsert_parquet
+from tests.test_streaming import run_to_completion
 
 DOC_SCHEMA = "doc_id long, ingest_ts timestamp, lang string, text string"
 
@@ -61,15 +61,7 @@ def test_stream_curation_matches_batch_on_same_log(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    deadline = time.time() + 600
-    while q.isActive and time.time() < deadline:
-        q.awaitTermination(2)
-    if q.isActive:
-        status = q.status
-        q.stop()
-        raise AssertionError(f"stream did not drain in 600s; status={status}")
-    if q.exception() is not None:
-        raise AssertionError(f"stream failed: {q.exception()}")
+    run_to_completion(q)
 
     out = spark.read.parquet(target)
     rows = out.collect()

@@ -14,6 +14,7 @@ from data_pipeline_with_spark_kafka_spark.streaming.near_dup_ingest import (
     BASE_EPOCH,
     NearDupIngest,
 )
+from tests.test_streaming import run_to_completion
 
 DOC_SCHEMA = "doc_id long, text string"
 
@@ -30,14 +31,6 @@ def _write_file(path, rows, mtime):
     with open(path, "w") as f:
         f.write("\n".join(json.dumps({"doc_id": i, "text": t}) for i, t in rows))
     os.utime(path, (mtime, mtime))  # file source orders by mtime — pin it
-
-
-def _drain(q, timeout=600):
-    deadline = time.time() + timeout
-    while q.isActive and time.time() < deadline:
-        q.awaitTermination(2)
-    assert not q.isActive, "stream did not drain"
-    assert q.exception() is None, f"stream failed: {q.exception()}"
 
 
 @pytest.fixture()
@@ -71,7 +64,7 @@ def test_stream_rejects_known_near_and_cross_batch(spark, tmp_path, corpus):
         .trigger(availableNow=True)
         .start()
     )
-    _drain(q)
+    run_to_completion(q)
 
     admitted = {r["doc_id"]: r["text"] for r in sink.admitted(spark).collect()}
     # doc 3 keeps X (min-id within batch), 5 keeps Y, 8 keeps Z; everything
